@@ -59,8 +59,10 @@ VALUE = "value"
 ORD = "__ord__"
 
 
-def _spark_type_for(value: Any) -> T.DataType | None:
-    """Best-effort Spark type for a sampled Python value; None = not native."""
+def _infer_type(value: Any) -> T.DataType | None:
+    """Spark type of one Python value; None = not native.  An empty list
+    has no element to type, so it infers ``array<null>``: a placeholder
+    that `_merge_types` resolves against any other array type."""
     if isinstance(value, bool):
         return T.BooleanType()
     if isinstance(value, int):
@@ -77,12 +79,43 @@ def _spark_type_for(value: Any) -> T.DataType | None:
         return T.TimestampType()
     if isinstance(value, datetime.date):
         return T.DateType()
-    if isinstance(value, (list, tuple)) and value and not isinstance(value, dict):
-        inner = _spark_type_for(value[0])
-        if inner is not None and all(_spark_type_for(v).__class__ is inner.__class__ for v in value):
-            return T.ArrayType(inner)
-        return None
+    if isinstance(value, (list, tuple)):
+        inner: T.DataType | None = T.NullType()
+        for v in value:
+            inner = _merge_types(inner, _infer_type(v))
+            if inner is None:
+                return None
+        return T.ArrayType(inner)
     return None
+
+
+def _merge_types(a: T.DataType | None, b: T.DataType | None) -> T.DataType | None:
+    """The one type both values fit, or None when they differ: NullType
+    (an empty list's element) matches anything, arrays merge by element."""
+    if a is None or b is None:
+        return None
+    if isinstance(a, T.NullType):
+        return b
+    if isinstance(b, T.NullType):
+        return a
+    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
+        inner = _merge_types(a.elementType, b.elementType)
+        return None if inner is None else T.ArrayType(inner)
+    return a if a == b else None
+
+
+def _resolved(t: T.DataType | None) -> T.DataType | None:
+    """``t`` unless it still holds an empty list's placeholder element."""
+    inner = t
+    while isinstance(inner, T.ArrayType):
+        inner = inner.elementType
+    return None if isinstance(inner, T.NullType) else t
+
+
+def _spark_type_for(value: Any) -> T.DataType | None:
+    """Best-effort Spark type for a sampled Python value; None = not native
+    (an empty list alone does not say what its elements would be)."""
+    return _resolved(_infer_type(value))
 
 
 def _contiguous_repartition(df: "DataFrame", npartitions: int) -> "DataFrame":
@@ -182,15 +215,13 @@ class ObjectFrame:
             except Exception:
                 pass
         else:
-            typ = _spark_type_for(first)
-
-            def _same_type(x):
-                t = _spark_type_for(x)
-                return t is not None and type(t) is type(typ)
-
-            # all items must map to the same Spark type — the Arrow ingest
-            # path silently coerces mismatches to string otherwise
-            if typ is not None and all(_same_type(x) for x in items):
+            # all items must map to one Spark type — the Arrow ingest path
+            # silently coerces mismatches to string otherwise.  Typing the
+            # items as one list merges them: empty lists fit any array
+            # type, so the element type comes from the non-empty ones
+            whole = _infer_type(items)
+            typ = None if whole is None else _resolved(whole.elementType)
+            if typ is not None:
                 try:
                     schema = T.StructType([T.StructField(VALUE, typ)])
                     return spark.createDataFrame([(x,) for x in items], schema=schema), False

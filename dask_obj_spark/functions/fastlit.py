@@ -58,11 +58,17 @@ def lit_double_matrix(rows: Iterable[Iterable[float]]) -> Column:
     codebook out of whole-stage-codegen source size (r16: per-codeword
     literal expressions at k=64 codewords × m=8 subspaces generated a
     multi-MiB codegen method that Janino chewed on for minutes per
-    stage)."""
-    return F.expr(
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(sql_double(v) for v in r) + ")" for r in rows
-        )
-        + ")"
-    )
+    stage).
+
+    An empty matrix or an empty row raises ``ValueError``: ``array()``
+    parses as ``array<void>``, not ``array<double>``, so it would fail
+    later, far from the caller, or silently change the column type."""
+    texts = []
+    for r in rows:
+        vals = [sql_double(v) for v in r]
+        if not vals:
+            raise ValueError(f"lit_double_matrix: row {len(texts)} is empty")
+        texts.append("array(" + ", ".join(vals) + ")")
+    if not texts:
+        raise ValueError("lit_double_matrix: empty matrix")
+    return F.expr("array(" + ", ".join(texts) + ")")

@@ -33,11 +33,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dask_obj_spark.functions.fastlit import sql_double
 from dask_obj_spark.operators.similarity import (
     CENTROID_MOD,
     DIM,
     NPROBE,
     _duck_base,
+    cosine_ranked_raw,
+    cosine_sim_w,
     cosine_topk_brute,
     cosine_topk_ivf,
     duck_cosine,
@@ -287,52 +290,77 @@ def mmr_rerank(
     diversification pass over an ANN result (top-k lists are often
     near-duplicate clusters; MMR spreads them).
 
-    ``cand``: (pid, cid, rel); ``pair_sim``: (pid, c1, c2, sim) pairwise
-    similarities WITHIN each probe's candidate list (k² per probe, never
-    corpus-scale).  The greedy loop is inherently sequential in `picks`,
-    so it runs as `picks` rounds of keyed joins/windows — each round is
-    one hash join + one argmax window, all partitioned by probe; the
-    picked set is localCheckpointed per round (the iterative-operator
-    contract).  Every score is bit-exact algebra over the exact cosine
-    values, so the greedy trajectory is reproducible cross-engine."""
-    w = Window.partitionBy("pid").orderBy(F.desc("rel"), F.asc("cid"))
-    picked = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+    ``cand``: (pid, cid, rel), one row per (pid, cid); ``pair_sim``:
+    (pid, c1, c2, sim), one row per ordered pair WITHIN a probe's
+    candidate list (k² per probe, never corpus-scale).
+
+    The greedy loop is sequential in `picks` but independent across
+    probes, so it runs locally per probe (the partition-local greedy of
+    distributed diversified top-k): each candidate carries its row of
+    `pair_sim` as a ``map<cid, sim>``, the probe's candidates are
+    gathered into one array by a single aggregate keyed by ``pid``, and
+    the rounds run as one higher-order ``aggregate`` over that array.
+    Round 1 is the argmax by (rel desc, cid asc); every later round
+    scores the remaining candidates against the picks so far and takes
+    the argmax by (score desc, cid asc).  No per-round jobs and no
+    pins: the plan is at most one shuffle keyed by ``pid`` per input
+    (none when an input already arrives partitioned by ``pid``) plus
+    an interpreted per-probe step bounded by cand·picks² map lookups,
+    independent of corpus size and vector width.  Every score is
+    bit-exact algebra over the exact cosine values, so the greedy
+    trajectory is reproducible cross-engine."""
+    if picks < 1:
+        raise ValueError(f"mmr_rerank: picks must be >= 1, got {picks}")
+    lam_s, rest_s = sql_double(lam), sql_double(1 - lam)
+    # one row per probe: its candidates, each carrying its row of
+    # `pair_sim` as a map<cid, sim>.  Every aggregate and the join are
+    # keyed by pid, so input already partitioned by pid is not shuffled
+    sims = (
+        pair_sim.groupBy("pid", "c1")
+        .agg(F.map_from_entries(F.collect_list(F.struct("c2", "sim"))).alias("m"))
+        .groupBy("pid")
+        .agg(F.map_from_entries(F.collect_list(F.struct("c1", "m"))).alias("sm"))
+    )
+    groups = (
+        cand.groupBy("pid")
+        .agg(F.collect_list(F.struct("cid", "rel")).alias("cs"))
+        .join(sims, "pid", "left")
         .select(
             "pid",
-            "cid",
-            (F.lit(lam) * F.col("rel")).alias("score"),
-            F.lit(1).alias("pick_order"),
+            F.expr(
+                "transform(cs, c -> named_struct("
+                "'cid', c.cid, 'rel', c.rel, 'sims', sm[c.cid]))"
+            ).alias("cs"),
         )
-        .localCheckpoint(eager=True)
     )
-    for r in range(2, picks + 1):
-        remaining = cand.join(picked.select("pid", "cid"), ["pid", "cid"], "left_anti")
-        maxsim = (
-            pair_sim.join(
-                picked.select(F.col("pid"), F.col("cid").alias("c2")),
-                ["pid", "c2"],
-            )
-            .groupBy("pid", F.col("c1").alias("cid"))
-            .agg(F.max("sim").alias("ms"))
+    # a pick is (key, -cid, cid, score, pick_order): array_max over the
+    # leading (key, -cid) pair is the argmax by (key desc, cid asc); an
+    # empty candidate pool gives NULL, which the filter drops, so a probe
+    # with fewer than `picks` candidates emits only its real picks
+    first = (
+        "filter(array(array_max(transform(cs, c -> named_struct("
+        f"'k', c.rel, 'nc', -c.cid, 'cid', c.cid, 'score', {lam_s} * c.rel, "
+        "'pick_order', 1)))), x -> x IS NOT NULL)"
+    )
+    if picks == 1:
+        chosen = first  # sequence(2, 1) would count down, not be empty
+    else:
+        score = (
+            f"{lam_s} * c.rel - {rest_s} * "
+            "coalesce(array_max(transform(acc, p -> c.sims[p.cid])), 0.0D)"
         )
-        scored = remaining.join(maxsim, ["pid", "cid"], "left").select(
-            "pid",
-            "cid",
-            (
-                F.lit(lam) * F.col("rel")
-                - F.lit(1 - lam) * F.coalesce(F.col("ms"), F.lit(0.0))
-            ).alias("score"),
+        step = (
+            "array_max(transform(transform("
+            "filter(cs, c -> NOT exists(acc, p -> p.cid = c.cid)), "
+            f"c -> named_struct('s', {score}, 'cid', c.cid)), "
+            "x -> named_struct('k', x.s, 'nc', -x.cid, 'cid', x.cid, "
+            "'score', x.s, 'pick_order', r)))"
         )
-        ww = Window.partitionBy("pid").orderBy(F.desc("score"), F.asc("cid"))
-        nxt = (
-            scored.withColumn("rn", F.row_number().over(ww))
-            .filter(F.col("rn") == 1)
-            .select("pid", "cid", "score", F.lit(r).alias("pick_order"))
+        chosen = (
+            f"aggregate(sequence(2, {int(picks)}), {first}, "
+            f"(acc, r) -> concat(acc, filter(array({step}), x -> x IS NOT NULL)))"
         )
-        picked = picked.union(nxt).localCheckpoint(eager=True)
-    return picked.select(
+    return groups.select("pid", F.inline(F.expr(chosen))).select(
         F.col("pid").alias("id1"),
         F.col("cid").alias("id2"),
         "pick_order",
@@ -411,36 +439,26 @@ def sim_mmr_topk_q(spark, sf_dir):
         F.col("vec_id").alias("vid"),
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    topk = cosine_topk_brute(emb, "vec_id", "embedding", probe_mod=50, k=MMR_CAND)
-    # re-attach vectors and RAW (unrounded) relevance for the re-rank:
-    # the greedy argmax must run on exact values on both engines
-    probes = base.filter(F.col("vid") % 50 == 0).select(
-        F.col("vid").alias("pid"), F.col("v").alias("pv")
+    # RAW (unrounded) relevance for the re-rank: the greedy argmax must
+    # run on exact values on both engines.  `cos_raw` is the same
+    # dot/(‖p‖·‖v‖) chain `cosine_sim_w` builds, so it is bit-identical
+    top = cosine_ranked_raw(emb, "vec_id", "embedding", probe_mod=50).filter(
+        F.col("rank") <= MMR_CAND
     )
-    cand_ids = topk.select(F.col("id1").alias("pid"), F.col("id2").alias("cid"))
-    cvec = cand_ids.join(
-        base.select(F.col("vid").alias("cid"), "v"), "cid"
+    cand = top.select(
+        F.col("id1").alias("pid"), F.col("id2").alias("cid"), F.col("cos_raw").alias("rel")
     )
-    from dask_obj_spark.operators.similarity import DIM, cosine_sim_w
-
+    cvec = cand.select("pid", "cid").join(base.withColumnRenamed("vid", "cid"), "cid")
+    a = cvec.select("pid", F.col("cid").alias("c1"), F.col("v").alias("va"))
+    b = cvec.select("pid", F.col("cid").alias("c2"), F.col("v").alias("vb"))
     # codegen'd fixed-width cosine (similarity.dot notes): bit-identical
     # to the HOF fold, no interpreted per-pair lambda evaluation
-    cand = cvec.join(F.broadcast(probes), "pid").select(
-        "pid", "cid", "v", cosine_sim_w("pv", "v", DIM).alias("rel")
-    ).localCheckpoint(eager=True)
-    a = cand.select("pid", F.col("cid").alias("c1"), F.col("v").alias("va"))
-    b = cand.select("pid", F.col("cid").alias("c2"), F.col("v").alias("vb"))
-    # materialize the k²-per-probe pair table ONCE: every greedy round
-    # joins against it, and without the checkpoint each round's eager
-    # localCheckpoint re-ran the full self-join + 64-dot cosine fold
-    # (guide §5 localCheckpoint note; measured 5x recompute at picks=5)
     pair_sim = (
         a.join(b, "pid")
         .filter(F.col("c1") != F.col("c2"))
         .select("pid", "c1", "c2", cosine_sim_w("va", "vb", DIM).alias("sim"))
-        .localCheckpoint(eager=True)
     )
-    return mmr_rerank(cand.select("pid", "cid", "rel"), pair_sim)
+    return mmr_rerank(cand, pair_sim)
 
 
 # -- ColBERT-style late interaction (MaxSim) ----------------------------------

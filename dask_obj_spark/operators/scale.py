@@ -696,13 +696,6 @@ def _duck_rho_chain() -> str:
     )
 
 
-def _duck_est_x1000(zs: str) -> str:
-    return (
-        f"CAST(floor({_HLL_ALPHA_MM!r} / (CAST({zs} AS DOUBLE) / {_TWO_53!r})"
-        f" * 1000.0) AS BIGINT)"
-    )
-
-
 def _duck_raw_est(zs: str) -> str:
     return f"({_HLL_ALPHA_MM!r} / (CAST({zs} AS DOUBLE) / {_TWO_53!r}))"
 

@@ -127,8 +127,9 @@ def l2_norm_w(a: str, dim: int) -> Column:
 
 
 def cosine_sim_w(a: str, b: str, dim: int) -> Column:
-    """Width-guarded codegen'd twin of `cosine_sim` (same sub-trees;
-    see `dot_w` for the guard rationale)."""
+    """Width-guarded codegen'd cosine ``dot(a, b) / (‖a‖·‖b‖)``: the
+    `sql_dot`/`sql_norm` chains when both arrays are ``dim`` wide, else
+    the `dot`/`l2_norm` HOF folds (see `dot_w` for the guard rationale)."""
     return F.expr(
         f"CASE WHEN size({a}) = {dim} AND size({b}) = {dim} "
         f"THEN {sql_dot(a, b, dim)} / ({sql_norm(a, dim)} * {sql_norm(b, dim)}) "
@@ -245,10 +246,6 @@ def sql_sqdist_const(a: str, cent: list[float]) -> str:
         for i, c in enumerate(cent)
     )
     return f"(0.0D + {terms})"
-
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def duck_dot(a: str, b: str, dim: int) -> str:

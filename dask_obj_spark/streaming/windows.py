@@ -27,7 +27,7 @@ O(open sessions), not O(history).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dask_obj_spark.operators import dedup as _dd
@@ -1251,6 +1251,28 @@ def stream_hll_hourly_users_q(spark, sf_dir):
     )
 
 
+def _top_terms_observed(counted: DataFrame, n: int) -> tuple[DataFrame, Observation]:
+    """The top-``n`` (term, c) rows by (c desc, term asc), and an
+    `Observation` that receives the exact ``SUM(c)`` over ALL rows when
+    the frame's action runs.  The sum is observed on the pre-limit
+    frame, so the top-k collect and the total are one action, and no
+    whole-relation window funnels the term table into one partition."""
+    obs = Observation()
+    top = (
+        counted.observe(obs, F.sum("c").alias("total"))
+        .orderBy(F.desc("c"), F.asc("term"))
+        .limit(n)
+    )
+    return top, obs
+
+
+def _collect_top_terms(counted: DataFrame, n: int) -> tuple[list, int]:
+    """One action per micro-batch: (top-``n`` rows, exact batch total)."""
+    top, obs = _top_terms_observed(counted, n)
+    rows = top.collect()
+    return rows, int(obs.get["total"] or 0)
+
+
 def stream_heavy_hitters(
     spark: SparkSession,
     stream: DataFrame,
@@ -1309,18 +1331,7 @@ def stream_heavy_hitters(
             F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("term")
         ).filter(F.col("term") != "")
         counted = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-        # one job per batch (r16, guide §1.2, same fusion as
-        # stream_decayed_topk): the exact batch total rides every
-        # collected row via a whole-relation window over the batch's
-        # bounded distinct-term table (the former separate agg job also
-        # computed a `v` column nothing consumed)
-        top = (
-            counted.withColumn("_n", F.sum("c").over(Window.partitionBy()))
-            .orderBy(F.desc("c"), F.asc("term"))
-            .limit(counters + 1)
-            .collect()
-        )
-        batch_n = int(top[0]["_n"]) if top else 0
+        top, batch_n = _collect_top_terms(counted, counters + 1)
         # the batch's own MG summary: keep top `counters`, subtract the
         # (counters+1)-th largest count (0 if the vocab fits)
         cut0 = int(top[counters]["c"]) if len(top) > counters else 0
@@ -1568,17 +1579,7 @@ def stream_decayed_topk(
             F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("term")
         ).filter(F.col("term") != "")
         counted = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-        # one job per batch (r16, guide §1.2): the exact batch total
-        # rides every collected row via a whole-relation window over the
-        # batch's (bounded) distinct-term table, fusing the former
-        # separate SUM job into the top-(counters+1) TakeOrdered collect
-        top = (
-            counted.withColumn("_t", F.sum("c").over(Window.partitionBy()))
-            .orderBy(F.desc("c"), F.asc("term"))
-            .limit(counters + 1)
-            .collect()
-        )
-        batch_n = int(top[0]["_t"]) if top else 0
+        top, batch_n = _collect_top_terms(counted, counters + 1)
         state = _decayed_mg_merge(
             state, [(r["term"], r["c"]) for r in top], batch_n, batch_id, counters
         )

@@ -137,6 +137,24 @@ def test_flatten_with_empty_inner(spark):
     assert sorted(of.flatten(compute=True)) == [1, 2, 3, 4, 5, 6]
 
 
+def test_empty_lists_keep_nested_input_native(spark):
+    """An empty list fits any array type: the element type comes from
+    the non-empty lists, so one empty list no longer sends the whole
+    frame down the pickled path.  Mixed element types still do."""
+    from collections import Counter
+
+    of = ObjectFrame([[1, 2], [], [3]], spark)
+    assert not of.is_pickled
+    flat = of.flatten()
+    assert flat.counts() == Counter({1: 1, 2: 1, 3: 1})
+    assert flat.fold(lambda a, b: a + b) == 6
+    assert not ObjectFrame([[], [[1]], [[], [2, 3]]], spark).is_pickled
+    assert ObjectFrame([[1], [], ["a"]], spark).is_pickled
+    assert ObjectFrame([[1], [], [2.5]], spark).is_pickled
+    assert ObjectFrame([[[1]], [["a"]]], spark).is_pickled
+    assert ObjectFrame([[], []], spark).is_pickled  # no element type at all
+
+
 def test_compute_flatten_flag(spark):
     of = ObjectFrame([[1], [2, 3]], spark)
     assert sorted(of.compute(flatten=True)) == [1, 2, 3]

@@ -459,3 +459,18 @@ def test_sql_double_rejects_non_finite():
     for bad in (math.inf, -math.inf, math.nan):
         with pytest.raises(ValueError, match="non-finite"):
             sql_double(bad)
+
+
+def test_lit_double_matrix_rejects_empty(spark):
+    """An empty matrix or an empty row has no array<array<double>>
+    literal: fail at build time, like sql_double on inf/nan."""
+    from dask_obj_spark.functions.fastlit import lit_double_matrix
+
+    for bad in ([], [[]], [[1.0, 2.0], []], iter([])):
+        with pytest.raises(ValueError, match="lit_double_matrix"):
+            lit_double_matrix(bad)
+    with pytest.raises(ValueError, match="non-finite"):
+        lit_double_matrix([[1.0], [math.nan]])
+    got = spark.range(1).select(lit_double_matrix([[1.5, -0.0], [2.0, 3.0]]).alias("m"))
+    assert got.schema["m"].dataType.simpleString() == "array<array<double>>"
+    assert got.first().m == [[1.5, -0.0], [2.0, 3.0]]

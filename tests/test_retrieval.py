@@ -107,6 +107,93 @@ def test_mmr_penalizes_redundancy(spark):
     assert picks == {1: 1, 2: 3}  # pure relevance would pick 2 second
 
 
+def _py_mmr(cands, sims, picks, lam=0.7):
+    """Plain-Python greedy MMR: the reference trajectory per probe."""
+    out = []
+    for pid, cs in cands.items():
+        picked = []
+        while len(picked) < picks:
+            taken = {cid for cid, _ in picked}
+            rem = [(cid, rel) for cid, rel in cs if cid not in taken]
+            if not rem:
+                break
+            if not picked:
+                cid, rel = max(rem, key=lambda c: (c[1], -c[0]))
+                picked.append((cid, lam * rel))
+                continue
+
+            def score(c):
+                ms = [sims[pid, c[0], p] for p, _ in picked if (pid, c[0], p) in sims]
+                return lam * c[1] - (1 - lam) * (max(ms) if ms else 0.0)
+
+            best = max(rem, key=lambda c: (score(c), -c[0]))
+            picked.append((best[0], score(best)))
+        out += [(pid, cid, i + 1, s) for i, (cid, s) in enumerate(picked)]
+    return sorted(out)
+
+
+def test_mmr_edge_cases_match_python_greedy_without_per_round_jobs(spark):
+    """One per-probe aggregate, checked against a plain-Python greedy on:
+    seeded random probes, a 2-candidate probe asked for 3 picks (only
+    its real picks, no null rows), a first-round rel tie and a later
+    exact score tie (both broken by cid asc, whatever the input order),
+    and picks=1 (no greedy rounds at all).  The whole greedy runs in
+    one plan: picks=5 must not run more Spark jobs than picks=2."""
+    import random
+
+    rng = random.Random(7)
+    cands = {
+        pid: [(pid * 100 + j, rng.random()) for j in range(6)] for pid in range(4)
+    }
+    cands[10] = [(1002, 0.9), (1001, 0.4)]  # fewer candidates than picks
+    # probe 20: rel tie between 2003 and 2001 in round 1; 2005 and 2004
+    # tie exactly on score in round 2 (same rel, same sim to the pick)
+    cands[20] = [(2003, 0.6), (2001, 0.6), (2005, 0.5), (2004, 0.5)]
+    sims = {}
+    for pid, cs in cands.items():
+        for a, _ in cs:
+            for b, _ in cs:
+                if a < b:
+                    sims[pid, a, b] = sims[pid, b, a] = rng.random()
+    sims[20, 2005, 2001] = sims[20, 2001, 2005] = 0.25
+    sims[20, 2004, 2001] = sims[20, 2001, 2004] = 0.25
+    sims[20, 2003, 2001] = sims[20, 2001, 2003] = 0.99
+    cand = spark.createDataFrame(
+        [(pid, cid, rel) for pid, cs in cands.items() for cid, rel in cs],
+        "pid long, cid long, rel double",
+    )
+    sim = spark.createDataFrame(
+        [(pid, a, b, v) for (pid, a, b), v in sims.items()],
+        "pid long, c1 long, c2 long, sim double",
+    )
+    sc = spark.sparkContext
+    jobs = {}
+    for picks in (1, 2, 3, 5):
+        group = f"mmr_edge_picks_{picks}"
+        sc.setJobGroup(group, group)
+        try:
+            got = sorted(tuple(r) for r in mmr_rerank(cand, sim, picks=picks).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[picks] = len(sc.statusTracker().getJobIdsForGroup(group))
+        want = _py_mmr(cands, sims, picks)
+        assert [r[:3] for r in got] == [r[:3] for r in want], picks
+        for g, w in zip(got, want):
+            assert abs(g[3] - w[3]) < 1e-6
+        assert all(None not in r for r in got)
+        per_probe = {pid: sum(r[0] == pid for r in got) for pid in cands}
+        assert per_probe == {pid: min(picks, len(cs)) for pid, cs in cands.items()}
+    first = {r.id1: r.id2 for r in mmr_rerank(cand, sim, picks=1).collect()}
+    assert first[20] == 2001  # rel tie: lower cid
+    second = {
+        r.id1: r.id2
+        for r in mmr_rerank(cand, sim, picks=2).collect()
+        if r.pick_order == 2
+    }
+    assert second[20] == 2004  # exact score tie: lower cid
+    assert jobs[5] <= jobs[2]
+
+
 def test_maxsim_topk_probe_cap_fails_loudly(spark, monkeypatch):
     """r7-verdict #3: maxsim_topk's probe side is N/probe_mod — linear
     in the corpus — so it must carry the same MAX_PROBES loud-failure

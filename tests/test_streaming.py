@@ -482,6 +482,30 @@ def test_stream_heavy_hitters_state_bounded_and_replay_safe(spark, tmp_path):
     assert got == {"hot": 600}  # 600*5 >= 1400; every rare word fails
 
 
+def test_top_terms_total_is_observed_not_windowed(spark):
+    """The per-batch top-k collect of the heavy-hitter sinks carries the
+    exact batch total through `observe()` on the pre-limit frame: one
+    action, no whole-relation window, so no SinglePartition exchange.
+    An empty batch observes a total of 0."""
+    from dask_obj_spark.plans.inspect import explain_str
+    from dask_obj_spark.streaming.windows import (
+        _collect_top_terms,
+        _top_terms_observed,
+    )
+
+    counted = spark.createDataFrame(
+        [(f"t{i}", i % 7 + 1) for i in range(50)], "term string, c long"
+    ).repartition(4)
+    top, _ = _top_terms_observed(counted, 3)
+    plan = explain_str(top)
+    assert "SinglePartition" not in plan and "Window" not in plan
+    rows, total = _collect_top_terms(counted, 3)
+    assert total == sum(i % 7 + 1 for i in range(50))
+    assert [(r["term"], r["c"]) for r in rows] == [("t13", 7), ("t20", 7), ("t27", 7)]
+    empty = counted.filter(F.col("c") < 0)
+    assert _collect_top_terms(empty, 3) == ([], 0)
+
+
 def test_decayed_mg_merge_replay_bound_and_decay():
     """Pure-state contract of the decayed weighted-MG merge: a replayed
     batch_id is a no-op, slots never exceed `counters`, the weighted
