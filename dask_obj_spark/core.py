@@ -45,11 +45,12 @@ _dumps = _cloudpickle.dumps
 from collections.abc import Iterable, Sequence
 from typing import Any, Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dask_obj_spark.expr import Expr, compile_expr
+from dask_obj_spark.expr import CompileError, Expr, compile_expr
 from dask_obj_spark.functions.dispatch import dispatch_method
 
 VALUE = "value"
@@ -57,6 +58,9 @@ VALUE = "value"
 # is settled driver-side at materialize (compute/take), never by a
 # distributed global sort
 ORD = "__ord__"
+# the errors that mean "this Expr has no Catalyst form", so the Python
+# path runs instead; anything else is a real failure and propagates
+_NO_CATALYST_FORM = (CompileError, AnalysisException)
 
 
 def _infer_type(value: Any) -> T.DataType | None:
@@ -507,7 +511,7 @@ class ObjectFrame:
         root = F.col(VALUE) if self.is_scalar else F.struct(*self._df.columns)
         try:
             return self._select_value(compile_expr(e, root))
-        except Exception:
+        except _NO_CATALYST_FORM:
             pass
         try:
             inferred = _spark_type_for(e.eval(self._head_element()))
@@ -737,7 +741,7 @@ class ObjectFrame:
             try:
                 root = F.col(VALUE) if self.is_scalar else F.struct(*self._df.columns)
                 return compile_expr(pred, root)
-            except Exception:
+            except _NO_CATALYST_FORM:
                 return None
         return None
 

@@ -271,6 +271,16 @@ class CompileError(ValueError):
     fallback return type was provided."""
 
 
+def _jvm(build: Callable[[], Column], what: Any) -> Column:
+    """Run one Column-building step.  py4j raises AttributeError (or
+    pyspark a TypeError) for a Python value it cannot convert to a JVM
+    literal; that means no Catalyst form, so it becomes CompileError."""
+    try:
+        return build()
+    except (AttributeError, TypeError) as e:
+        raise CompileError(f"{what!r} has no JVM literal form") from e
+
+
 def _operand_to_column(operand: Any, root: Column):
     if isinstance(operand, Expr):
         # an operand with its own concrete root (named column / literal)
@@ -298,7 +308,7 @@ def compile_expr(expr: Expr, root: Column | str | None = None, fallback_type=Non
         elif expr.root is NO_VALUE:
             raise CompileError("cannot compile: symbolic root and no root column given")
         else:
-            col = F.lit(expr.root)
+            col = _jvm(lambda: F.lit(expr.root), expr.root)
     elif isinstance(root, str):
         col = F.col(root)
     else:
@@ -333,12 +343,12 @@ def compile_expr(expr: Expr, root: Column | str | None = None, fallback_type=Non
             elif isinstance(key, slice):
                 col = slice_column(col, key)
             else:
-                col = col.getItem(key)
+                col = _jvm(lambda: col.getItem(key), key)
         elif kind == "op":
             _, opname, operand, reflected = frame
             other = _operand_to_column(operand, root_col)
             fn = _COLUMN_BINARY[opname]
-            col = fn(other, col) if reflected else fn(col, other)
+            col = _jvm(lambda: fn(other, col) if reflected else fn(col, other), operand)
         elif kind == "unary":
             col = _COLUMN_UNARY[frame[1]](col)
         elif kind in ("call", "func"):

@@ -56,6 +56,7 @@ from dask_obj_spark.functions.hashing import (
     word_ngrams,
     word_shingles,
 )
+from dask_obj_spark.functions.vec import DUCK, cosine_sql, fixed_dot, fixed_norm
 from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
 
@@ -2169,13 +2170,12 @@ def semantic_contamination(
     Returns (vid, eval_vid, cos_x1m): flagged train docs with their
     single closest eval doc (ties by lowest eval id).
     """
-    from dask_obj_spark.operators.similarity import DIM, dot_w, l2_norm_w
+    from dask_obj_spark.operators.similarity import DIM
 
-    # r15: fixed-width codegen'd kernels (similarity.dot notes) — the
-    # unrolled chains are node-for-node the HOF folds, bit-identical
+    # r15: width-guarded unrolled kernels (functions/vec.py)
     base = df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("vn", l2_norm_w("v", DIM))
+    ).withColumn("vn", fixed_norm("v", DIM))
     if centroids is not None:
         # trained constant-k path (kmeans_fit output): the centroid
         # table is bounded by k regardless of corpus size, so the
@@ -2184,7 +2184,7 @@ def semantic_contamination(
             centroids.select(
                 F.col("cid"),
                 F.col("cv").cast("array<double>").alias("cv"),
-            ).withColumn("cn", l2_norm_w("cv", DIM))
+            ).withColumn("cn", fixed_norm("cv", DIM))
         )
     else:
         # modular oracle-replay set: N/cell_mod rows — GROWS with the
@@ -2200,7 +2200,7 @@ def semantic_contamination(
             "vid",
             "v",
             "vn",
-            (dot_w("v", "cv", DIM) / (F.col("vn") * F.col("cn"))).alias("cs"),
+            (fixed_dot("v", "cv", DIM) / (F.col("vn") * F.col("cn"))).alias("cs"),
             "cid",
         )
         .withColumn("rn", F.row_number().over(aw))
@@ -2220,7 +2220,7 @@ def semantic_contamination(
             "vid",
             "eval_vid",
             F.floor(
-                (dot_w("v", "ev", DIM) / (F.col("vn") * F.col("en")))
+                (fixed_dot("v", "ev", DIM) / (F.col("vn") * F.col("en")))
                 * F.lit(1000000.0)
             )
             .cast("bigint")
@@ -2240,9 +2240,8 @@ def _semantic_contamination_oracle(
     eval_mod: int, eval_rem: int, tau_x1m: int, cell_mod: int, dim: int
 ) -> str:
     from dask_obj_spark.operators.dedup import _semantic_cells_ctes
-    from dask_obj_spark.operators.similarity import duck_cosine
 
-    cos = duck_cosine("a.v", "b.v", dim)
+    cos = cosine_sql("a.v", "b.v", dim, DUCK)
     return (
         _semantic_cells_ctes(0.35, cell_mod, dim)
         + f""", pairs AS (

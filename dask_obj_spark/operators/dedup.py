@@ -26,14 +26,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from dask_obj_spark.operators.similarity import DIM as _SIM_DIM
-from dask_obj_spark.operators.similarity import duck_cosine
 from dask_obj_spark.functions.hashing import (
     duck_porthash,
     duck_word_shingles,
     porthash,
     word_shingles,
 )
+from dask_obj_spark.functions.vec import DUCK, cosine_sql, fixed_dot, fixed_norm
+from dask_obj_spark.operators.similarity import DIM as _SIM_DIM
 from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
 
@@ -298,19 +298,17 @@ def embedding_near_dups(
 ) -> DataFrame:
     """Cosine near-dups of probe vectors (id % probe_mod == 0) against the
     corpus: broadcast the small probe side, JVM fold for the dot product."""
-    from dask_obj_spark.operators.similarity import dot_w, l2_norm_w
-
     # norms factored out before the pair join: identical subexpressions,
-    # bit-identical results, 1 fold per pair instead of 3; r15: fixed-
-    # width codegen'd kernels (similarity.dot notes), bit-identical
+    # bit-identical results, 1 fold per pair instead of 3; r15:
+    # width-guarded unrolled kernels (functions/vec.py)
     base = df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("vn", l2_norm_w("v", _SIM_DIM))
+    ).withColumn("vn", fixed_norm("v", _SIM_DIM))
     probes = base.filter(F.col("vid") % probe_mod == 0).select(
         F.col("vid").alias("pid"), F.col("v").alias("pv"), F.col("vn").alias("pn")
     )
     pairs = base.join(F.broadcast(probes), F.col("pid") < F.col("vid"))
-    sim = F.round(dot_w("pv", "v", _SIM_DIM) / (F.col("pn") * F.col("vn")), 6)
+    sim = F.round(fixed_dot("pv", "v", _SIM_DIM) / (F.col("pn") * F.col("vn")), 6)
     return pairs.select(
         F.col("pid").alias("id1"), F.col("vid").alias("id2"), sim.alias("cosine")
     ).filter(F.col("cosine") >= threshold)
@@ -575,18 +573,15 @@ def _semantic_cells(
     assignment's broadcast/no-cartesian shape directly: in
     `semantic_dedup` this subplan is pinned behind a `localCheckpoint`,
     which truncates it out of the final query plan."""
-    from dask_obj_spark.operators.similarity import dot_w, l2_norm_w
-
     # norms are computed ONCE per vector/centroid before the pair joins:
     # `dot/(‖a‖·‖b‖)` evaluates the identical sqrt-fold subexpressions,
     # so values (and the oracle hash) are bit-unchanged, but per-pair
     # interpreted work drops from 3 folds to 1 (same trick as
     # cosine_topk_brute; measured ~2.5× on this operator at sf0.1).
-    # r15: fixed-width codegen'd kernels (similarity.dot notes) — the
-    # unrolled chains are node-for-node the HOF folds, bit-identical
+    # r15: width-guarded unrolled kernels (functions/vec.py)
     base = df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("vn", l2_norm_w("v", _SIM_DIM))
+    ).withColumn("vn", fixed_norm("v", _SIM_DIM))
     if centroids is not None:
         # trained constant-k path (kmeans_fit output): bounded by k
         # regardless of corpus size — the broadcast HINT is safe
@@ -594,7 +589,7 @@ def _semantic_cells(
             centroids.select(
                 F.col("cid"),
                 F.col("cv").cast("array<double>").alias("cv"),
-            ).withColumn("cn", l2_norm_w("cv", _SIM_DIM))
+            ).withColumn("cn", fixed_norm("cv", _SIM_DIM))
         )
     else:
         # modular oracle-replay set: N/cell_mod rows grows with the
@@ -610,7 +605,7 @@ def _semantic_cells(
             "vid",
             "v",
             "vn",
-            (dot_w("v", "cv", _SIM_DIM) / (F.col("vn") * F.col("cn"))).alias("cs"),
+            (fixed_dot("v", "cv", _SIM_DIM) / (F.col("vn") * F.col("cn"))).alias("cs"),
             "cid",
         )
         .withColumn("rn", F.row_number().over(aw))
@@ -648,8 +643,6 @@ def semantic_dedup(
     (vid % cell_mod == 1) so the DuckDB oracle replays the exact index.
     Deletion rate is tuned by ``tau`` exactly as in the paper.
     """
-    from dask_obj_spark.operators.similarity import dot_w
-
     cells = _semantic_cells(df, id_col, vec_col, cell_mod, centroids)
     if centroids is None:
         # materialize the modular cell assignment ONCE (optimization
@@ -674,7 +667,7 @@ def semantic_dedup(
         .filter(F.col("vid2") < F.col("vid"))
         .filter(
             F.round(
-                dot_w("v", "v2", _SIM_DIM) / (F.col("vn") * F.col("vn2")), 6
+                fixed_dot("v", "v2", _SIM_DIM) / (F.col("vn") * F.col("vn2")), 6
             )
             >= tau
         )
@@ -693,8 +686,8 @@ def _semantic_cells_ctes(tau: float, cell_mod: int, dim: int) -> str:
     replaying `semantic_dedup`'s deterministic cell index — shared by
     the dedup oracle and the capstone pipeline oracle in
     operators/corpus.py so the replay logic exists exactly once."""
-    cos_assign = duck_cosine("b.v", "c.cv", dim)
-    cos_pair = duck_cosine("a.v", "b.v", dim)
+    cos_assign = cosine_sql("b.v", "c.cv", dim, DUCK)
+    cos_pair = cosine_sql("a.v", "b.v", dim, DUCK)
     return f"""
     WITH base AS (
       SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_obj_spark.functions.vec import DUCK, cosine_sql
 from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
 
@@ -420,9 +421,9 @@ def knn_classify(
 
 
 def _duck_knn_classify_oracle(probe_mod: int, k: int) -> str:
-    from dask_obj_spark.operators.similarity import DIM, duck_cosine
+    from dask_obj_spark.operators.similarity import DIM
 
-    cos = duck_cosine("p.v", "c.v", DIM)
+    cos = cosine_sql("p.v", "c.v", DIM, DUCK)
     return f"""
 WITH base AS MATERIALIZED (
   SELECT vec_id AS vid, embedding::DOUBLE[] AS v, label FROM embeddings

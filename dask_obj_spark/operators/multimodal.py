@@ -40,6 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from dask_obj_spark.functions.vec import DUCK, l2_norm, norm_sql
 from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
 
@@ -340,10 +341,9 @@ def mm_resize_q(spark, sf_dir):
       SELECT count(*) AS nn FROM emb
     ), norms AS (
       SELECT vec_id,
-             round(sqrt("""
-    + "(0.0 + "
-    + " + ".join(f"v[{i}]*v[{i}]" for i in range(1, 65))
-    + """)), 6) AS l2
+             round("""
+    + norm_sql("v", 64, DUCK)
+    + """, 6) AS l2
       FROM emb
     ), media AS (
       SELECT doc_id, octet_length(encode(text)) AS n_bytes FROM documents
@@ -371,8 +371,6 @@ def mm_clip_pairs_q(spark, sf_dir):
     offset is pure arithmetic, so negatives need no shuffle of their
     own (same trick as corpus_contrastive_negatives).  At 100 TB both
     sides are bucketed by id and the joins are co-partitioned."""
-    from dask_obj_spark.operators.similarity import l2_norm
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     media = decode_media(as_multimodal(docs, "doc_id", "text")).select(

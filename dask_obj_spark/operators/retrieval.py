@@ -23,7 +23,7 @@ Spark-first design notes:
 
 Cross-engine determinism: every ranking is computed over either
 bit-identical floats (the cosine leg: left-associated fold, see
-similarity.py:59) or 6-dp-rounded scores (the BM25 leg), with the doc
+functions/vec.py) or 6-dp-rounded scores (the BM25 leg), with the doc
 id as the final tie-break, so Spark and DuckDB rank identically; the
 discounted-gain sums are ≤ k terms and rounded to 6 dp.
 """
@@ -34,16 +34,23 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dask_obj_spark.functions.fastlit import sql_double
+from dask_obj_spark.functions.vec import (
+    DUCK,
+    SPARK,
+    Dialect,
+    cosine_sql,
+    dot_sql,
+    fixed_cosine,
+    norm_sql,
+)
 from dask_obj_spark.operators.similarity import (
     CENTROID_MOD,
     DIM,
     NPROBE,
     _duck_base,
     cosine_ranked_raw,
-    cosine_sim_w,
     cosine_topk_brute,
     cosine_topk_ivf,
-    duck_cosine,
 )
 from dask_obj_spark.operators.text import bm25_topk
 from dask_obj_spark.queries import query
@@ -88,7 +95,7 @@ _RRF_TOPN = 20  # depth of each leg's list entering the fusion
 
 def _duck_rrf_oracle() -> str:
     terms = ", ".join(f"'{t}'" for t in _RRF_TERMS)
-    cos = duck_cosine("pv", "v", DIM)
+    cos = cosine_sql("pv", "v", DIM, DUCK)
     return f"""
     WITH dl AS (
       SELECT doc_id, len(string_split_regex(trim(text), '\\s+')) AS dl
@@ -205,7 +212,7 @@ def ndcg_at_k(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
 
 
 def _duck_ivf_ndcg_oracle() -> str:
-    cos = duck_cosine("pv", "v", DIM)
+    cos = cosine_sql("pv", "v", DIM, DUCK)
     return (
         _duck_base(50)
         + f"""
@@ -222,7 +229,7 @@ def _duck_ivf_ndcg_oracle() -> str:
       SELECT vid AS cid, v AS cv FROM base WHERE vid % {CENTROID_MOD} = 1
     ), assign AS (
       SELECT b.vid, b.v, c.cid,
-             {duck_cosine("b.v", "c.cv", DIM)} AS cs
+             {cosine_sql("b.v", "c.cv", DIM, DUCK)} AS cs
       FROM base b, cents c
     ), ranked_assign AS (
       SELECT vid, v, cid, cs,
@@ -369,8 +376,8 @@ def mmr_rerank(
 
 
 def _duck_mmr_oracle(probe_mod: int, cand_k: int, picks: int, lam: float) -> str:
-    cos = duck_cosine("pv", "v", DIM)
-    csim = duck_cosine("a.v", "b.v", DIM)
+    cos = cosine_sql("pv", "v", DIM, DUCK)
+    csim = cosine_sql("a.v", "b.v", DIM, DUCK)
     ctes = [
         _duck_base(probe_mod).replace("WITH ", "").strip(),
         f"""scored AS MATERIALIZED (
@@ -441,7 +448,7 @@ def sim_mmr_topk_q(spark, sf_dir):
     )
     # RAW (unrounded) relevance for the re-rank: the greedy argmax must
     # run on exact values on both engines.  `cos_raw` is the same
-    # dot/(‖p‖·‖v‖) chain `cosine_sim_w` builds, so it is bit-identical
+    # dot/(‖p‖·‖v‖) chain `fixed_cosine` builds, so it is bit-identical
     top = cosine_ranked_raw(emb, "vec_id", "embedding", probe_mod=50).filter(
         F.col("rank") <= MMR_CAND
     )
@@ -451,12 +458,12 @@ def sim_mmr_topk_q(spark, sf_dir):
     cvec = cand.select("pid", "cid").join(base.withColumnRenamed("vid", "cid"), "cid")
     a = cvec.select("pid", F.col("cid").alias("c1"), F.col("v").alias("va"))
     b = cvec.select("pid", F.col("cid").alias("c2"), F.col("v").alias("vb"))
-    # codegen'd fixed-width cosine (similarity.dot notes): bit-identical
-    # to the HOF fold, no interpreted per-pair lambda evaluation
+    # width-guarded unrolled cosine (functions/vec.py): no interpreted
+    # per-pair lambda evaluation
     pair_sim = (
         a.join(b, "pid")
         .filter(F.col("c1") != F.col("c2"))
-        .select("pid", "c1", "c2", cosine_sim_w("va", "vb", DIM).alias("sim"))
+        .select("pid", "c1", "c2", fixed_cosine("va", "vb", DIM).alias("sim"))
     )
     return mmr_rerank(cand, pair_sim)
 
@@ -467,56 +474,47 @@ MAXSIM_TOKENS = 8  # reinterpret the dim-64 fixture vector as 8 tokens x 8 dims
 MAXSIM_K = 5
 
 
-def _token_dot_sql(a: str, b: str, t: int, s: int, sub: int) -> str:
-    """``0.0 + a[t*sub+1]*b[s*sub+1] + ...`` — the duck_dot left-assoc
-    convention over one token-pair slice, as codegen'd element_at chains
-    (NOT the F.aggregate HOF — 64 interpreted folds per pair would be
-    the exact hot-path trap the verify notes ban).
-
-    Generated as ONE SQL string (``0.0D`` is the double literal, ``+``
-    parses left-assoc — the parsed tree is node-for-node the tree the
-    old per-term Column loop built) because building the 64-dot MaxSim
-    tree through py4j cost ~1500 driver round-trips per query at
-    several ms each (OPTIMIZATION_r15.md: b32 construction was ~3.8 s
-    of pure driver time; one ``F.expr`` parse is sub-ms)."""
-    terms = " + ".join(
-        f"element_at({a}, {t * sub + k + 1}) * element_at({b}, {s * sub + k + 1})"
+def _token_norm_elems(v: str, tokens: int, sub: int, d: Dialect) -> list[str]:
+    """Elements of the flattened per-token-normalized copy of a
+    (tokens*sub)-dim vector: out[t*sub + k] = v[t*sub + k] / ||token_t||."""
+    return [
+        f"{d.elem(v, t * sub + k + 1)} / {norm_sql(v, sub, d, lo=t * sub + 1)}"
+        for t in range(tokens)
         for k in range(sub)
-    )
-    return f"(0.0D + {terms})"
+    ]
+
+
+def _maxsim_sql(a: str, b: str, tokens: int, sub: int, d: Dialect) -> list[str]:
+    """Per probe token, ``greatest`` over its unrolled dot against every
+    doc token (unrolled chains, NOT the HOF fold: 64 interpreted folds
+    per pair would be the hot-path trap the verify notes ban)."""
+    return [
+        "greatest("
+        + ", ".join(
+            dot_sql(a, b, sub, d, lo=t * sub + 1, blo=s * sub + 1)
+            for s in range(tokens)
+        )
+        + ")"
+        for t in range(tokens)
+    ]
 
 
 def normalize_token_array(v: str, tokens: int, sub: int) -> Column:
-    """Flattened per-token-normalized copy of a (tokens*sub)-dim vector:
-    out[t*sub + k] = v[t*sub + k] / ||token_t||.  One narrow projection
-    per ROW, so the pair stage's MaxSim cosines collapse to plain dots
-    (no norms recomputed per candidate).  ``v`` is a SQL expression
-    string; the whole array is one ``F.expr`` parse (same tree, ~400
-    fewer py4j round-trips — see ``_token_dot_sql``)."""
-    elems = []
-    for t in range(tokens):
-        n_terms = " + ".join(
-            f"element_at({v}, {t * sub + k + 1}) * element_at({v}, {t * sub + k + 1})"
-            for k in range(sub)
-        )
-        n = f"SQRT(0.0D + {n_terms})"
-        for k in range(sub):
-            elems.append(f"element_at({v}, {t * sub + k + 1}) / {n}")
-    return F.expr("array(" + ", ".join(elems) + ")")
+    """Per-token-normalized copy of a (tokens*sub)-dim vector, one narrow
+    projection per ROW, so the pair stage's MaxSim cosines collapse to
+    plain dots (no norms recomputed per candidate).  ``v`` is a SQL
+    expression string; the whole array is one ``F.expr`` parse (building
+    it term by term through py4j cost ~400 driver round-trips)."""
+    return F.expr("array(" + ", ".join(_token_norm_elems(v, tokens, sub, SPARK)) + ")")
 
 
 def _maxsim_score(pnv: str, dnv: str, tokens: int, sub: int) -> Column:
     """MaxSim (Khattab & Zaharia, SIGIR 2020): sum over probe tokens of
     the best cosine against any doc token — fixed ``greatest`` over a
     left-assoc term chain, bit-replayable in SQL.  Column names in, one
-    ``F.expr`` parse out (see ``_token_dot_sql``)."""
-    bests = [
-        "greatest("
-        + ", ".join(_token_dot_sql(pnv, dnv, t, s, sub) for s in range(tokens))
-        + ")"
-        for t in range(tokens)
-    ]
-    return F.expr(" + ".join(bests))
+    ``F.expr`` parse out (the 64-dot tree through py4j cost ~1500 driver
+    round-trips, OPTIMIZATION_r15.md: ~3.8 s of b32 construction)."""
+    return F.expr(" + ".join(_maxsim_sql(pnv, dnv, tokens, sub, SPARK)))
 
 
 def maxsim_topk(
@@ -587,45 +585,18 @@ def maxsim_topk(
     )
 
 
-def _duck_token_dot(a: str, b: str, t: int, s: int, sub: int) -> str:
-    return (
-        "(0.0 + "
-        + " + ".join(
-            f"{a}[{t*sub+k+1}]*{b}[{s*sub+k+1}]" for k in range(sub)
-        )
-        + ")"
-    )
-
-
 def _duck_nb_cte(tokens: int, sub: int) -> str:
-    """``nb`` CTE: per-token-normalized flattened vectors, mirroring
-    `normalize_token_array` expression-for-expression."""
-    elems = []
-    for t in range(tokens):
-        n = (
-            "sqrt(0.0 + "
-            + " + ".join(
-                f"v[{t*sub+k+1}]*v[{t*sub+k+1}]" for k in range(sub)
-            )
-            + ")"
-        )
-        for k in range(sub):
-            elems.append(f"v[{t*sub+k+1}] / {n}")
+    """``nb`` CTE: per-token-normalized flattened vectors, the
+    `normalize_token_array` elements in DuckDB text."""
     return f"""
     nb AS (
-      SELECT vid, [{", ".join(elems)}] AS nv
+      SELECT vid, [{", ".join(_token_norm_elems("v", tokens, sub, DUCK))}] AS nv
       FROM base
     )"""
 
 
 def _duck_maxsim_expr(a: str, b: str, tokens: int, sub: int) -> str:
-    terms = [
-        "greatest("
-        + ", ".join(_duck_token_dot(a, b, t, s, sub) for s in range(tokens))
-        + ")"
-        for t in range(tokens)
-    ]
-    return "(" + " + ".join(terms) + ")"
+    return "(" + " + ".join(_maxsim_sql(a, b, tokens, sub, DUCK)) + ")"
 
 
 def _duck_maxsim_brute_oracle(probe_mod: int, k: int) -> str:
@@ -669,7 +640,7 @@ MAXSIM_CAND = 20  # first-stage depth entering the MaxSim re-rank
 
 def _duck_maxsim_rerank_oracle() -> str:
     sub = DIM // MAXSIM_TOKENS
-    cos = duck_cosine("pv", "v", DIM)
+    cos = cosine_sql("pv", "v", DIM, DUCK)
     ms = _duck_maxsim_expr("p.nv", "d.nv", MAXSIM_TOKENS, sub)
     return (
         _duck_base(50)
@@ -678,7 +649,7 @@ def _duck_maxsim_rerank_oracle() -> str:
       SELECT vid AS cid, v AS cv FROM base WHERE vid % {CENTROID_MOD} = 1
     ), assign AS (
       SELECT b.vid, b.v, c.cid,
-             {duck_cosine("b.v", "c.cv", DIM)} AS cs
+             {cosine_sql("b.v", "c.cv", DIM, DUCK)} AS cs
       FROM base b, cents c
     ), ranked_assign AS (
       SELECT vid, v, cid, cs,

@@ -16,10 +16,8 @@ Built Spark-first:
   bucket-size-bounded, and the join is a plain shuffled/broadcast hash
   join Catalyst already knows how to plan.
 
-Oracle determinism: every float expression is generated with the SAME
-left-to-right association in Spark (`F.aggregate` fold) and DuckDB
-(explicit `a[1]*b[1] + a[2]*b[2] + ...` chain), both over float64, so
-results are bit-identical — rankings compare without tolerance.
+Oracle determinism: every vector kernel, Spark and DuckDB alike, is
+rendered by `functions/vec.py` (its docstring has the argument).
 
 100 TB notes: brute-force is the *per-probe-batch* building block (probe
 batches broadcast in ~64 MB chunks); LSH is the standing-index path —
@@ -36,242 +34,26 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dask_obj_spark.functions.fastlit import (
-    lit_double_array,
-    lit_double_matrix,
-    lit_long_array,
+from dask_obj_spark.functions.fastlit import lit_double_array, lit_double_matrix
+from dask_obj_spark.functions.vec import (
+    DUCK,
+    chain,
+    chained_prefix_dots,
+    cosine_sql,
+    dot,
+    dot_sql,
+    fixed_dot,
+    fixed_hamming,
+    fixed_norm,
+    l2_norm,
+    norm_sql,
+    sqdist,
+    sqdist_sql,
+    sqdiff,
+    sqnum_sql,
 )
 from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
-
-# -- cosine kernel ------------------------------------------------------------
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two array columns — JVM-side left fold.
-
-    NOTE (optimization r15, guide §1.2 step 2 / §4.1): `F.aggregate` /
-    `F.zip_with` are CodegenFallback expressions — every pair pays an
-    INTERPRETED 64-step fold with per-element lambda binding.  Hot pair
-    stages over the fixed-width embedding fixture should use
-    :func:`dot_w` instead: the unrolled `element_at` chain is the
-    node-for-node left-assoc tree (bit-identical doubles, same oracle
-    hashes) but whole-stage-codegen compiles it to straight-line double
-    arithmetic (measured ~5x on the brute-kNN scoring stage), and the
-    single `F.expr` parse costs ONE driver round-trip instead of ~130.
-    This HOF form stays for width-generic call sites."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def sql_dot(a: str, b: str, dim: int, lo: int = 1) -> str:
-    """Spark-SQL text of the SAME left-assoc dot fold `dot` builds, over
-    elements ``lo..lo+dim-1`` of two array expressions: ``0.0D`` is the
-    double literal seed, `+` parses left-associated, so the parsed tree
-    is node-for-node the `F.aggregate` fold's — bit-identical float64
-    results (the exactness argument `duck_dot` already documents for
-    the DuckDB twin; ``lo`` replays a `slice(x, lo, dim)` prefix/window
-    without materializing the slice)."""
-    return (
-        "(0.0D + "
-        + " + ".join(
-            f"element_at({a}, {i}) * element_at({b}, {i})"
-            for i in range(lo, lo + dim)
-        )
-        + ")"
-    )
-
-
-def sql_norm(a: str, dim: int, lo: int = 1) -> str:
-    """SQL text of `l2_norm`'s sqrt-of-self-dot over a fixed width."""
-    return f"SQRT{sql_dot(a, a, dim, lo)}"
-
-
-SQL_DOT_HOF = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-"""SQL text of the width-generic `dot` fold — parses to the identical
-ArrayAggregate/ZipWith tree `F.aggregate`/`F.zip_with` build (0.0D is
-the double seed `F.lit(0.0)` produces), so results are bit-identical."""
-
-
-def _sql_dot_hof(a: str, b: str) -> str:
-    return SQL_DOT_HOF.format(a=a, b=b)
-
-
-def dot_w(a: str, b: str, dim: int) -> Column:
-    """Width-guarded codegen'd dot product (see `dot` docstring): the
-    unrolled left-assoc chain when both arrays are exactly ``dim`` wide
-    (the fixture case — whole-stage codegen'd straight-line doubles),
-    else the width-generic HOF fold `dot` builds.  Both branches are
-    node-for-node the `F.aggregate` fold at their width, so results are
-    bit-identical for every input; one `F.expr` parse total.  The guard
-    exists because ANSI `element_at` past the array end is an ERROR
-    where the HOF fold just folds the actual width (unit-tested API
-    behavior on arbitrary-width vectors)."""
-    return F.expr(
-        f"CASE WHEN size({a}) = {dim} AND size({b}) = {dim} "
-        f"THEN {sql_dot(a, b, dim)} ELSE {_sql_dot_hof(a, b)} END"
-    )
-
-
-def l2_norm_w(a: str, dim: int) -> Column:
-    """Width-guarded codegen'd L2 norm twin of `l2_norm` (see `dot_w`)."""
-    return F.expr(
-        f"CASE WHEN size({a}) = {dim} THEN {sql_norm(a, dim)} "
-        f"ELSE SQRT({_sql_dot_hof(a, a)}) END"
-    )
-
-
-def cosine_sim_w(a: str, b: str, dim: int) -> Column:
-    """Width-guarded codegen'd cosine ``dot(a, b) / (‖a‖·‖b‖)``: the
-    `sql_dot`/`sql_norm` chains when both arrays are ``dim`` wide, else
-    the `dot`/`l2_norm` HOF folds (see `dot_w` for the guard rationale)."""
-    return F.expr(
-        f"CASE WHEN size({a}) = {dim} AND size({b}) = {dim} "
-        f"THEN {sql_dot(a, b, dim)} / ({sql_norm(a, dim)} * {sql_norm(b, dim)}) "
-        f"ELSE {_sql_dot_hof(a, b)} / "
-        f"(SQRT({_sql_dot_hof(a, a)}) * SQRT({_sql_dot_hof(b, b)})) END"
-    )
-
-
-def dot_prefix_w(a: str, b: str, m: int) -> Column:
-    """Prefix-dot over the first ``m`` elements: unrolled chain when the
-    arrays are at least ``m`` wide, else the HOF fold over
-    ``slice(x, 1, m)`` — exactly `dot(F.slice(a,1,m), F.slice(b,1,m))`'s
-    tree (matryoshka semantics), bit-identical at every width."""
-    sa, sb = f"slice({a}, 1, {m})", f"slice({b}, 1, {m})"
-    return F.expr(
-        f"CASE WHEN size({a}) >= {m} AND size({b}) >= {m} "
-        f"THEN {sql_dot(a, b, m)} ELSE {_sql_dot_hof(sa, sb)} END"
-    )
-
-
-def l2_norm_prefix_w(a: str, m: int) -> Column:
-    """Prefix-norm twin of `dot_prefix_w`."""
-    sa = f"slice({a}, 1, {m})"
-    return F.expr(
-        f"CASE WHEN size({a}) >= {m} THEN {sql_norm(a, m)} "
-        f"ELSE SQRT({_sql_dot_hof(sa, sa)}) END"
-    )
-
-
-def chained_prefix_dots(
-    frame: DataFrame, a: str, b: str, widths: tuple[int, ...], prefix: str
-) -> tuple[DataFrame, dict[int, str]]:
-    """Project one prefix-dot column per width, each chain EXTENDING the
-    previous width's column instead of re-unrolling from element 1
-    (optimization r16, guide §7.3 plan size / §1.2 step 2): the fold is
-    left-associated, so the m₂-prefix sum IS the m₁-prefix sum followed
-    by terms m₁+1..m₂ — ``(0.0D + t1 + ... + t_m1) + t_{m1+1} + ...``
-    parses to the node-for-node identical tree `dot_prefix_w` unrolls in
-    full, but the total unrolled term count across widths drops from
-    Σwidths to max(widths) (120 → 64 at the matryoshka fixture widths),
-    and whole-stage codegen evaluates each shared prefix ONCE per row.
-
-    Guard semantics are `dot_prefix_w`'s, width by width: under the
-    ``size() >= m`` guard the previous column takes its own unrolled
-    branch (its guard is implied), reproducing the full left-assoc
-    chain bit-identically; outside it the slice-HOF fallback folds the
-    actual width exactly as `dot_prefix_w` does.  Returns the frame
-    plus {width: column name}."""
-    cols: dict[int, str] = {}
-    prev: tuple[int, str] | None = None
-    for m in sorted(widths):
-        name = f"__{prefix}d{m}"
-        if prev is None:
-            frame = frame.withColumn(name, dot_prefix_w(a, b, m))
-        else:
-            pm, pname = prev
-            tail = " + ".join(
-                f"element_at({a}, {i}) * element_at({b}, {i})"
-                for i in range(pm + 1, m + 1)
-            )
-            sa, sb = f"slice({a}, 1, {m})", f"slice({b}, 1, {m})"
-            frame = frame.withColumn(
-                name,
-                F.expr(
-                    f"CASE WHEN size({a}) >= {m} AND size({b}) >= {m} "
-                    f"THEN (`{pname}` + {tail}) "
-                    f"ELSE {_sql_dot_hof(sa, sb)} END"
-                ),
-            )
-        cols[m] = name
-        prev = (m, name)
-    return frame, cols
-
-
-SQL_HAM_HOF = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x ^ y)), 0, "
-    "(acc, x) -> acc + x)"
-)
-"""SQL text of the width-generic Hamming fold — parses to the identical
-ArrayAggregate/ZipWith tree ``F.aggregate(F.zip_with(a, b, (x, y) ->
-bit_count(x.bitwiseXOR(y))), F.lit(0), +)`` builds (integer seed, int
-adds), so results are identical at every width."""
-
-
-def hamming_w(a: str, b: str, nwords: int) -> Column:
-    """Width-guarded codegen'd Hamming distance over packed sign-bit
-    words (see `dot_w` for the guard rationale): the unrolled
-    xor→bit_count chain when both arrays are exactly ``nwords`` wide —
-    whole-stage-codegen'd straight-line integer ops — else the
-    width-generic HOF fold.  Integer adds are associative and cannot
-    overflow (≤ 64 per word), so both branches are value-identical to
-    the legacy interpreted fold for every input."""
-    chain = " + ".join(
-        f"bit_count(element_at({a}, {i}) ^ element_at({b}, {i}))"
-        for i in range(1, nwords + 1)
-    )
-    return F.expr(
-        f"CASE WHEN size({a}) = {nwords} AND size({b}) = {nwords} "
-        f"THEN (0 + {chain}) ELSE {SQL_HAM_HOF.format(a=a, b=b)} END"
-    )
-
-
-def sql_sqdist_const(a: str, cent: list[float]) -> str:
-    """SQL text of the squared-euclidean fold against a LITERAL centroid
-    — the codegen'd twin of ``aggregate(zip_with(v, lit_array, (x,y) ->
-    (x-y)*(x-y)), 0.0, +)``: same left-assoc tree, `sql_double`'s
-    repr round-trip makes each centroid literal bit-identical to
-    `F.lit`'s (fastlit exactness note)."""
-    from dask_obj_spark.functions.fastlit import sql_double
-
-    terms = " + ".join(
-        f"(element_at({a}, {i + 1}) - {sql_double(c)}) * "
-        f"(element_at({a}, {i + 1}) - {sql_double(c)})"
-        for i, c in enumerate(cent)
-    )
-    return f"(0.0D + {terms})"
-
-
-def duck_dot(a: str, b: str, dim: int) -> str:
-    """DuckDB expression computing the identical left-associated dot sum.
-    ``0.0 + x1 + x2 + ...`` parses left-assoc — same FP op order as the
-    Spark ``F.aggregate`` fold, hence bit-identical float64 results."""
-    return "(0.0 + " + " + ".join(f"{a}[{i}]*{b}[{i}]" for i in range(1, dim + 1)) + ")"
-
-
-def duck_cosine(a: str, b: str, dim: int) -> str:
-    return (
-        f"{duck_dot(a, b, dim)} / "
-        f"(sqrt({duck_dot(a, a, dim)}) * sqrt({duck_dot(b, b, dim)}))"
-    )
-
-
-def duck_sqdist(a: str, b: str, dim: int) -> str:
-    """DuckDB expression for :func:`sqdist`'s left-assoc squared-distance
-    fold — ``0.0 + (a1-b1)*(a1-b1) + ...``, bit-identical to Spark's."""
-    return (
-        "(0.0 + "
-        + " + ".join(
-            f"({a}[{i}]-{b}[{i}])*({a}[{i}]-{b}[{i}])" for i in range(1, dim + 1)
-        )
-        + ")"
-    )
 
 
 # -- brute-force top-k --------------------------------------------------------
@@ -359,7 +141,7 @@ def cosine_ranked_raw(
     )
     # codegen'd fixed-width kernels (see `dot`): bit-identical to the
     # HOF folds, ~5x on the pair stage, 3 driver round-trips total
-    base = raw0.repartition(ncores).withColumn("vn", l2_norm_w("v", DIM))
+    base = raw0.repartition(ncores).withColumn("vn", fixed_norm("v", DIM))
     # one scan serves both the MAX_PROBES guard and the probe
     # materialization (the maxsim_topk/heavy_hitters pattern): collect
     # ≤ MAX_PROBES+1 probe rows once — within the cap the collected set
@@ -371,7 +153,7 @@ def cosine_ranked_raw(
     )
     probes = (
         df.sparkSession.createDataFrame(probe_rows, raw0.schema)
-        .withColumn("vn", l2_norm_w("v", DIM))
+        .withColumn("vn", fixed_norm("v", DIM))
         .select(
             F.col("vid").alias("pid"), F.col("v").alias("pv"), F.col("vn").alias("pn")
         )
@@ -380,7 +162,7 @@ def cosine_ranked_raw(
     scored = pairs.select(
         F.col("pid").alias("id1"),
         F.col("vid").alias("id2"),
-        (dot_w("pv", "v", DIM) / (F.col("pn") * F.col("vn"))).alias("cos_raw"),
+        (fixed_dot("pv", "v", DIM) / (F.col("pn") * F.col("vn"))).alias("cos_raw"),
     )
     w = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
     return scored.withColumn("rank", F.row_number().over(w))
@@ -654,17 +436,17 @@ def knn_graph_ann(
     # chains it does help are 10x heavier per row).
     base = df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("vn", l2_norm_w("v", DIM))
+    ).withColumn("vn", fixed_norm("v", DIM))
     if centroid_mod is not None:
         # oracle-replay path (quadratic; see docstring).  Scoring uses
         # the codegen'd width-guarded kernels (optimization r16, guide
         # §4.1): this corpus×centroid stage and the candidate re-rank
         # below were the two interpreted-HOF sites the r15 kernel
-        # migration missed — bit-identical by the dot_w guard contract.
+        # migration missed — bit-identical by the `fixed_dot` guard contract.
         cents = base.filter(F.col("vid") % centroid_mod == 1).select(
             F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("vn").alias("cn")
         )
-        sim = dot_w("v", "cv", DIM) / (F.col("vn") * F.col("cn"))
+        sim = fixed_dot("v", "cv", DIM) / (F.col("vn") * F.col("cn"))
         aw = Window.partitionBy("vid").orderBy(F.desc("cs"), F.asc("cid"))
         assign = (
             base.join(F.broadcast(cents))
@@ -727,7 +509,7 @@ def knn_graph_ann(
     scored = cand.select(
         F.col("pid").alias("id1"),
         F.col("vid").alias("id2"),
-        (dot_w("pv", "v", DIM) / (F.col("pn") * F.col("vn"))).alias("cos_raw"),
+        (fixed_dot("pv", "v", DIM) / (F.col("pn") * F.col("vn"))).alias("cos_raw"),
     )
     w = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
     ranked = scored.withColumn("rank", F.row_number().over(w)).filter(
@@ -745,6 +527,10 @@ def knn_graph_ann(
 
 
 # -- mini k-means (iterative; feeds production IVF) ---------------------------
+
+
+# most centroids kmeans_fit unrolls: 2·k·dim nodes bloat plan + codegen method
+KMEANS_UNROLL_MAX = 16
 
 
 def kmeans_fit(
@@ -782,20 +568,16 @@ def kmeans_fit(
     cents = [list(r.v) for r in base.orderBy("vid").limit(k).collect()]
 
     def assign_for(cent_rows: list[list[float]]) -> DataFrame:
-        # few-centroid models: one-parse codegen'd argmin chains (see
-        # `sql_sqdist_const` / the `dot` r15 notes) — bit-identical to
-        # the interpreted zip_with folds, straight-line doubles per
-        # corpus row.  Many-centroid models (r16, the k=64 codebook
-        # fits): the unrolled chains put 2·k·dim expression nodes into
-        # codegen source — inflating parse/analysis per Lloyd round and
-        # at larger k·dim blowing the generated-method size entirely
-        # (the PQ-stall failure mode) — so the centroids ride as ONE
-        # array<array<double>> Literal and the argmin is the identical
-        # fold per centroid (array_min over struct(dist, cell), index
-        # == enumeration order; same values both ways).
-        if len(cent_rows) <= 16:
+        # few-centroid models: one-parse unrolled argmin chains
+        # (functions/vec.py forms), straight-line doubles per corpus
+        # row.  Many-centroid models (r16, the k=64 codebook fits): the
+        # centroids ride as ONE array<array<double>> Literal and the
+        # argmin is the identical fold per centroid (array_min over
+        # struct(dist, cell), index == enumeration order; same values
+        # both ways — see KMEANS_UNROLL_MAX).
+        if len(cent_rows) <= KMEANS_UNROLL_MAX:
             arms = ", ".join(
-                f"struct({sql_sqdist_const('v', cent)} AS dist, {i} AS cell)"
+                f"struct({sqdist_sql('v', cent, len(cent))} AS dist, {i} AS cell)"
                 for i, cent in enumerate(cent_rows)
             )
             cell = F.expr(f"array_min(array({arms})).cell")
@@ -892,23 +674,11 @@ def kmeans_fit_quantized(
     init = base.orderBy("vid").limit(k).collect()
     state: list[tuple[list[int], int]] = [(list(r.xq), 1) for r in init]
 
-    def _sq_num_sql(s: list[int], n: int) -> str:
-        # codegen'd twin of the exact-BIGINT fold: (xq_d·n − s_d)²
-        # summed left-assoc from a CAST(0 AS BIGINT) seed — integer ops,
-        # so order is immaterial anyway; overflow still raises (ANSI),
-        # same loud bound as the interpreted fold it replaces
-        terms = " + ".join(
-            f"(element_at(xq, {d + 1}) * {int(n)}L - {int(c)}L) * "
-            f"(element_at(xq, {d + 1}) * {int(n)}L - {int(c)}L)"
-            for d, c in enumerate(s)
-        )
-        return f"(CAST(0 AS BIGINT) + {terms})"
-
     def assign_for(st: list[tuple[list[int], int]]) -> DataFrame:
-        # one-parse codegen'd argmin (see `sql_sqdist_const` notes); the
+        # one-parse codegen'd argmin over exact BIGINT numerators; the
         # single final division per cell stays the identical IEEE op
         arms = ", ".join(
-            f"struct(CAST({_sq_num_sql(s, n)} AS DOUBLE) / {float(n * n)!r}D"
+            f"struct(CAST({sqnum_sql('xq', s, n)} AS DOUBLE) / {float(n * n)!r}D"
             f" AS dist, {i} AS cell)"
             for i, (s, n) in enumerate(st)
         )
@@ -1024,12 +794,9 @@ def _nearest_cells(vec: str, cents: list[list[float]], nprobe: int) -> Column:
     into the plan, no join needed for assignment.
 
     ``vec`` is the array column's NAME; the whole k-way argsort is ONE
-    `F.expr` parse of codegen'd unrolled chains (see `sql_sqdist_const`
-    and the `dot` r15 notes) — bit-identical to the interpreted
-    zip_with/aggregate folds it replaces, ~k·dim fewer driver
-    round-trips and straight-line double math per row."""
+    `F.expr` parse of unrolled `sqdist_sql` chains (functions/vec.py)."""
     arms = ", ".join(
-        f"struct({sql_sqdist_const(vec, cent)} AS dist, {i} AS cell)"
+        f"struct({sqdist_sql(vec, cent, len(cent))} AS dist, {i} AS cell)"
         for i, cent in enumerate(cents)
     )
     return F.expr(f"slice(array_sort(array({arms})), 1, {nprobe}).cell")
@@ -1119,7 +886,7 @@ def _duck_base(probe_mod: int) -> str:
 
 
 def _duck_topk_ctes() -> str:
-    cos = duck_cosine("pv", "v", DIM)
+    cos = cosine_sql("pv", "v", DIM, DUCK)
     return f"""
     , scored AS (
       SELECT pid AS id1, vid AS id2, {cos} AS cos_raw
@@ -1145,10 +912,8 @@ def _duck_bits_cte() -> str:
     half = NBITS // 2
     bit_exprs = []
     for bi, plane in enumerate(HYPERPLANES):
-        terms = "(0.0 + " + " + ".join(
-            f"v[{i + 1}]*({plane[i]})" for i in range(DIM)
-        ) + ")"
-        bit_exprs.append(f"CASE WHEN {terms} >= 0 THEN 1 ELSE 0 END AS b{bi}")
+        d = dot_sql("v", plane, DIM, DUCK)
+        bit_exprs.append(f"CASE WHEN {d} >= 0 THEN 1 ELSE 0 END AS b{bi}")
     lo = " + ".join(f"b{i} * {2 ** (half - 1 - i)}" for i in range(half))
     hi = " + ".join(f"b{half + i} * {2 ** (half - 1 - i)}" for i in range(half))
     return f"""
@@ -1184,7 +949,7 @@ def sim_cosine_topk_brute_q(spark, sf_dir):
       ) p ON c.bucket = p.bucket AND p.pid <> c.vid
     ), scored AS (
       SELECT pid AS id1, vid AS id2, """
-    + duck_cosine("pv", "v", DIM)
+    + cosine_sql("pv", "v", DIM, DUCK)
     + """ AS cos_raw FROM cand
     ), ranked AS (
       SELECT id1, id2, cos_raw,
@@ -1229,7 +994,7 @@ def sim_cosine_topk_numpy_q(spark, sf_dir):
       SELECT vid AS cid, v AS cv FROM base WHERE vid % {CENTROID_MOD} = 1
     ), assign AS (
       SELECT b.vid, b.v, c.cid,
-             {duck_cosine("b.v", "c.cv", DIM)} AS cs
+             {cosine_sql("b.v", "c.cv", DIM, DUCK)} AS cs
       FROM base b, cents c
     ), ranked_assign AS (
       SELECT vid, v, cid, cs,
@@ -1244,7 +1009,7 @@ def sim_cosine_topk_numpy_q(spark, sf_dir):
       SELECT DISTINCT p.pid, p.pv, c.vid, c.v
       FROM pcells p JOIN cells c ON p.cid = c.cid AND p.pid <> c.vid
     ), scored AS (
-      SELECT pid AS id1, vid AS id2, {duck_cosine("pv", "v", DIM)} AS cos_raw
+      SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
       FROM cand
     ), rank2 AS (
       SELECT id1, id2, cos_raw,
@@ -1271,7 +1036,7 @@ def _duck_ivf_knn_ctes(probe_mod: int, k: int) -> str:
       SELECT vid AS cid, v AS cv FROM base WHERE vid % {CENTROID_MOD} = 1
     ), assign AS (
       SELECT b.vid, b.v, c.cid,
-             {duck_cosine("b.v", "c.cv", DIM)} AS cs
+             {cosine_sql("b.v", "c.cv", DIM, DUCK)} AS cs
       FROM base b, cents c
     ), ranked_assign AS (
       SELECT vid, v, cid, cs,
@@ -1286,7 +1051,7 @@ def _duck_ivf_knn_ctes(probe_mod: int, k: int) -> str:
       SELECT DISTINCT p.pid, p.pv, c.vid, c.v
       FROM pcells p JOIN cells c ON p.cid = c.cid AND p.pid <> c.vid
     ), scored AS (
-      SELECT pid AS id1, vid AS id2, {duck_cosine("pv", "v", DIM)} AS cos_raw
+      SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
       FROM cand
     ), rank2 AS (
       SELECT id1, id2, cos_raw,
@@ -1405,7 +1170,7 @@ def ann_recall(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
     oracle=_duck_base(50)
     + f"""
     , t_scored AS (
-      SELECT pid AS id1, vid AS id2, {duck_cosine("pv", "v", DIM)} AS cos_raw
+      SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
       FROM base JOIN probes ON pid <> vid
     ), t_ranked AS (
       SELECT id1, id2,
@@ -1417,7 +1182,7 @@ def ann_recall(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
       SELECT vid AS cid, v AS cv FROM base WHERE vid % {CENTROID_MOD} = 1
     ), assign AS (
       SELECT b.vid, b.v, c.cid,
-             {duck_cosine("b.v", "c.cv", DIM)} AS cs
+             {cosine_sql("b.v", "c.cv", DIM, DUCK)} AS cs
       FROM base b, cents c
     ), ranked_assign AS (
       SELECT vid, v, cid, cs,
@@ -1432,7 +1197,7 @@ def ann_recall(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
       SELECT DISTINCT p.pid, p.pv, c.vid, c.v
       FROM pcells p JOIN cells c ON p.cid = c.cid AND p.pid <> c.vid
     ), a_scored AS (
-      SELECT pid AS id1, vid AS id2, {duck_cosine("pv", "v", DIM)} AS cos_raw
+      SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
       FROM cand
     ), a_ranked AS (
       SELECT id1, id2,
@@ -1461,7 +1226,7 @@ def sim_ivf_recall_q(spark, sf_dir):
     WITH base AS (
       SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
     )
-    SELECT vid, round(sqrt({duck_dot("v", "v", DIM)}), 6) AS l2
+    SELECT vid, round({norm_sql("v", DIM, DUCK)}, 6) AS l2
     FROM base
     """,
 )
@@ -2368,17 +2133,6 @@ PQ_MOD = 11  # deterministic codebook: subvectors of vids with vid % 11 == 1
 PQ_CB_CAP = 512
 
 
-def sqdist(a: Column, b: Column) -> Column:
-    """Squared euclidean distance of two array columns — the same
-    JVM-side left fold as :func:`dot`, so the DuckDB left-assoc chain
-    ``0.0 + (a1-b1)*(a1-b1) + ...`` reproduces it bit-for-bit."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def pq_fit(
     df: DataFrame,
     id_col: str,
@@ -2477,13 +2231,9 @@ def _duck_pq_oracle(m: int, mod: int, dim: int) -> str:
     sub = dim // m
     arms = []
     for s in range(m):
-        off = s * sub
-        chain = "0.0 + " + " + ".join(
-            f"(b.v[{off + i}]-c.cv[{off + i}])*(b.v[{off + i}]-c.cv[{off + i}])"
-            for i in range(1, sub + 1)
-        )
+        dist = sqdist_sql("b.v", "c.cv", sub, DUCK, lo=s * sub + 1)
         arms.append(
-            f"SELECT b.vid, {s} AS s, c.cid, ({chain}) AS dist FROM base b CROSS JOIN cw c"
+            f"SELECT b.vid, {s} AS s, c.cid, {dist} AS dist FROM base b CROSS JOIN cw c"
         )
     codes = ",\n           ".join(
         f"max(CASE WHEN s = {s} THEN cid END) AS code{s}" for s in range(m)
@@ -2584,20 +2334,13 @@ def _duck_pq_adc_ctes(m: int, mod: int, dim: int, probe_mod: int) -> str:
     sub = dim // m
     enc_arms, probe_arms = [], []
     for s in range(m):
-        off = s * sub
-        chain = "0.0 + " + " + ".join(
-            f"(b.v[{off + i}]-c.cv[{off + i}])*(b.v[{off + i}]-c.cv[{off + i}])"
-            for i in range(1, sub + 1)
-        )
+        dist = sqdist_sql("b.v", "c.cv", sub, DUCK, lo=s * sub + 1)
         enc_arms.append(
-            f"SELECT b.vid, {s} AS s, c.cid, ({chain}) AS dist FROM pq_nbase b CROSS JOIN cw c"
+            f"SELECT b.vid, {s} AS s, c.cid, {dist} AS dist FROM pq_nbase b CROSS JOIN cw c"
         )
-        pchain = "0.0 + " + " + ".join(
-            f"(p.v[{off + i}]-c.cv[{off + i}])*(p.v[{off + i}]-c.cv[{off + i}])"
-            for i in range(1, sub + 1)
-        )
+        pd = sqdist_sql("p.v", "c.cv", sub, DUCK, lo=s * sub + 1)
         probe_arms.append(
-            f"SELECT p.vid AS pid, {s} AS s, c.cid, ({pchain}) AS pd "
+            f"SELECT p.vid AS pid, {s} AS s, c.cid, {pd} AS pd "
             f"FROM pq_probes p CROSS JOIN cw c"
         )
     melt = " UNION ALL ".join(
@@ -2606,10 +2349,10 @@ def _duck_pq_adc_ctes(m: int, mod: int, dim: int, probe_mod: int) -> str:
     adc2 = "max(CASE WHEN pt.s = 0 THEN pd END)"
     for s in range(1, m):
         adc2 = f"({adc2} + max(CASE WHEN pt.s = {s} THEN pd END))"
-    ndot = duck_dot("v", "v", dim)
+    norm = norm_sql("v", dim, DUCK)
     return f"""
     , pq_nbase AS (
-      SELECT vid, list_transform(v, x -> x / sqrt({ndot})) AS v FROM base
+      SELECT vid, list_transform(v, x -> x / {norm}) AS v FROM base
     ), pq_probes AS (
       SELECT vid, v FROM pq_nbase WHERE vid % {probe_mod} = 0
     ), cw AS (
@@ -2676,7 +2419,7 @@ def pq_adc_ranked(
     # the probe expansion and the candidate surface (r16; see
     # ivfpq_topk)
     base = (
-        raw.withColumn("_vn", l2_norm_w("v", dim))
+        raw.withColumn("_vn", fixed_norm("v", dim))
         .select(
             "vid",
             F.transform(F.col("v"), lambda x: x / F.col("_vn")).alias("v"),
@@ -2808,7 +2551,7 @@ def sim_pq_adc_topk_q(spark, sf_dir):
     oracle=_duck_base(50)
     + f"""
     , t_scored AS (
-      SELECT pid AS id1, vid AS id2, {duck_cosine("pv", "v", DIM)} AS cos_raw
+      SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
       FROM base JOIN probes ON pid <> vid
     ), t_ranked AS (
       SELECT id1, id2,
@@ -2825,7 +2568,7 @@ def sim_pq_adc_topk_q(spark, sf_dir):
       SELECT id1, id2 FROM pq_ranked WHERE rank <= 50
     ), re_scored AS (
       SELECT sl.id1, sl.id2,
-             {duck_cosine("p.v", "b.v", DIM)} AS cos_raw
+             {cosine_sql("p.v", "b.v", DIM, DUCK)} AS cos_raw
       FROM shortlist sl
       JOIN base p ON p.vid = sl.id1
       JOIN base b ON b.vid = sl.id2
@@ -2945,8 +2688,8 @@ def matryoshka_recall(
         # (optimization r16, guide §7.3: the r15 per-width unrolled
         # norms re-unrolled every width from element 1 — Σwidths terms
         # per side; the chain shares each prefix, max(widths) terms).
-        # SQRT over the chained CASE column is value-identical to
-        # l2_norm_prefix_w's CASE-of-SQRTs: same branch, same fold.
+        # SQRT over the chained CASE column takes the same branch and
+        # the same fold as a per-width prefix norm would.
         frame, sq_cols = chained_prefix_dots(frame, "v", "v", widths, pfx + "sq")
         for m in widths:
             frame = frame.withColumn(
@@ -3045,8 +2788,7 @@ def _matryoshka_oracle(
 ) -> str:
     widths = tuple(dims) + (full_dim,)
     cs_cols = ",\n             ".join(
-        f"{duck_dot('pv', 'v', m)} / (sqrt({duck_dot('pv', 'pv', m)}) * "
-        f"sqrt({duck_dot('v', 'v', m)})) AS cs{m}"
+        f"{cosine_sql('pv', 'v', m, DUCK)} AS cs{m}"
         for m in widths
     )
     melt = " UNION ALL ".join(
@@ -3139,7 +2881,7 @@ def pq_adc_trained_topk(
     # (encode, probes, re-rank join-backs) otherwise re-evaluates
     # cast+normalize inline (r16; see ivfpq_topk)
     base = (
-        raw.withColumn("_vn", l2_norm_w("v", dim))
+        raw.withColumn("_vn", fixed_norm("v", dim))
         .select(
             "vid", F.transform(F.col("v"), lambda x: x / F.col("_vn")).alias("v")
         )
@@ -3298,7 +3040,7 @@ def ivfpq_topk(
     # single-task Cast.castArray under BinaryArithmetic.eval).  Values
     # identical; the b13/b19 pin discipline (guide §5/§3.3).
     base = (
-        raw.withColumn("_vn", l2_norm_w("v", dim))
+        raw.withColumn("_vn", fixed_norm("v", dim))
         .select(
             "vid", F.transform(F.col("v"), lambda x: x / F.col("_vn")).alias("nv")
         )
@@ -3447,7 +3189,7 @@ def sim_pq_tuned_recall_rowsonly_q(spark, sf_dir):
     # (r16, guide §4.1 — see pq_adc_ranked)
     norm = (
         emb.select("vec_id", F.col("embedding").cast("array<double>").alias("_v"))
-        .withColumn("_vn", l2_norm_w("_v", DIM))
+        .withColumn("_vn", fixed_norm("_v", DIM))
         .select(
             "vec_id",
             F.transform(F.col("_v"), lambda x: x / F.col("_vn")).alias("nv"),
@@ -3586,19 +3328,11 @@ def random_project(v: Column) -> Column:
 def _duck_rp_oracle(probe_mod: int, other_mod: int) -> str:
     scale = 1.0 / (RP_DIM ** 0.5)
 
-    def proj(vec: str, k: int) -> str:
-        terms = " + ".join(
-            f"{vec}[{i + 1}]*({RP_PLANES[k][i]})" for i in range(DIM)
-        )
-        return f"((0.0 + {terms}) * {scale})"
+    def proj(vec: str) -> list[str]:
+        return [f"({dot_sql(vec, p, DIM, DUCK)} * {scale})" for p in RP_PLANES]
 
-    orig = "(0.0 + " + " + ".join(
-        f"(a.v[{i}] - b.v[{i}])*(a.v[{i}] - b.v[{i}])" for i in range(1, DIM + 1)
-    ) + ")"
-    projd = "(0.0 + " + " + ".join(
-        f"({proj('a.v', k)} - {proj('b.v', k)})*({proj('a.v', k)} - {proj('b.v', k)})"
-        for k in range(RP_DIM)
-    ) + ")"
+    orig = sqdist_sql("a.v", "b.v", DIM, DUCK)
+    projd = chain(map(sqdiff, proj("a.v"), proj("b.v")), DUCK.seed)
     return f"""
     WITH base AS (
       SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
@@ -3760,7 +3494,7 @@ def graph_assortativity_q(spark, sf_dir):
     , lab AS (
       SELECT vec_id AS vid, label FROM embeddings
     ), scored AS (
-      SELECT p.pid, b.vid, {duck_cosine("p.pv", "b.v", DIM)} AS cs,
+      SELECT p.pid, b.vid, {cosine_sql("p.pv", "b.v", DIM, DUCK)} AS cs,
              la.label AS alabel, lb.label AS blabel
       FROM base b
         JOIN probes p ON p.pid <> b.vid
@@ -3965,7 +3699,7 @@ def graph_label_modularity_q(spark, sf_dir):
       ) p ON c.bucket = p.bucket AND p.pid <> c.vid
     ), a_scored AS (
       SELECT pid AS id1, vid AS id2, """
-    + duck_cosine("pv", "v", DIM)
+    + cosine_sql("pv", "v", DIM, DUCK)
     + """ AS cos_raw FROM cand
     ), a_ranked AS (
       SELECT id1, id2,
@@ -3973,7 +3707,7 @@ def graph_label_modularity_q(spark, sf_dir):
       FROM a_scored
     ), t_scored AS (
       SELECT pid AS id1, vid AS id2, """
-    + duck_cosine("pv", "v", DIM)
+    + cosine_sql("pv", "v", DIM, DUCK)
     + """ AS cos_raw
       FROM base JOIN probes ON pid <> vid
     ), t_ranked AS (
@@ -4192,9 +3926,9 @@ def kcenter_coreset(
         # one-parse codegen'd least-of-sqdist chain, nested in pick
         # order exactly like the F.least fold it replaces (and like the
         # oracle's unrolled rounds) — bit-identical doubles
-        mind_sql = sql_sqdist_const("v", centers[0][1])
+        mind_sql = sqdist_sql("v", centers[0][1], len(centers[0][1]))
         for _, vec, _ in centers[1:]:
-            mind_sql = f"least({mind_sql}, {sql_sqdist_const('v', vec)})"
+            mind_sql = f"least({mind_sql}, {sqdist_sql('v', vec, len(vec))})"
         mind = F.expr(mind_sql)
         pick = (
             base.select("vid", "v", mind.alias("mind"))
@@ -4222,9 +3956,9 @@ def _duck_kcenter_sql(k: int, dim: int) -> str:
         "p1 AS MATERIALIZED (SELECT vid, v FROM base ORDER BY vid LIMIT 1)",
     ]
     for r in range(2, k + 1):
-        mind = duck_sqdist("b.v", "p1.v", dim)
+        mind = sqdist_sql("b.v", "p1.v", dim, DUCK)
         for j in range(2, r):
-            mind = f"least({mind}, {duck_sqdist('b.v', f'p{j}.v', dim)})"
+            mind = f"least({mind}, {sqdist_sql('b.v', f'p{j}.v', dim, DUCK)})"
         froms = ", ".join(["base b"] + [f"p{j}" for j in range(1, r)])
         ctes.append(
             f"""p{r} AS MATERIALIZED (
@@ -4385,7 +4119,7 @@ def binary_hamming_topk(
     # unrolled xor→bit_count chain is value-identical (integer adds)
     # and whole-stage-codegen'd
     nwords = (dim + 31) // 32
-    ham = hamming_w("pwords", "words", nwords).cast("bigint")
+    ham = fixed_hamming("pwords", "words", nwords).cast("bigint")
     cand = (
         index.join(F.broadcast(probes), F.col("pid") != F.col("vid"))
         .select("pid", "vid", ham.alias("hamming"))
@@ -4400,11 +4134,11 @@ def binary_hamming_topk(
     # runs once per vector instead of once per shortlist pair, and the
     # pair projection shrinks to a single unrolled dot chain —
     # dot / (pnorm * rnorm) is the same sqrt-then-multiply-then-divide
-    # tree cosine_sim_w builds, so cos_x1m is bit-identical
+    # tree `fixed_cosine` builds, so cos_x1m is bit-identical
     raw = df.select(
         F.col(id_col).alias("rvid"),
         F.col(vec_col).cast("array<double>").alias("rv"),
-    ).withColumn("rnorm", l2_norm_w("rv", dim))
+    ).withColumn("rnorm", fixed_norm("rv", dim))
     p = raw.select(
         F.col("rvid").alias("pvid"),
         F.col("rv").alias("pv"),
@@ -4418,7 +4152,7 @@ def binary_hamming_topk(
             "vid",
             "hamming",
             F.floor(
-                dot_w("pv", "rv", dim)
+                fixed_dot("pv", "rv", dim)
                 / (F.col("pnorm") * F.col("rnorm"))
                 * F.lit(1000000.0)
             ).cast("bigint").alias("cos_x1m"),
@@ -4440,7 +4174,7 @@ def binary_hamming_topk(
 
 def _duck_binary_hamming_oracle(probe_mod: int, k: int, shortlist: int, dim: int) -> str:
     nwords = (dim + 31) // 32
-    cos = duck_cosine("p.v", "c.v", dim)
+    cos = cosine_sql("p.v", "c.v", dim, DUCK)
     return f"""
 WITH base AS MATERIALIZED (
   SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
@@ -4559,13 +4293,7 @@ def _duck_random_projection_oracle(out_dim: int, dim: int) -> str:
 
     signs = _rp_signs(out_dim, dim)
     inv = repr(1.0 / math.sqrt(out_dim))
-    chains = [
-        "(0.0 + "
-        + " + ".join(f"({row[j]!r})*v[{j + 1}]" for j in range(dim))
-        + ")"
-        for row in signs
-    ]
-    ys = ", ".join(f"(({c}) * {inv})" for c in chains)
+    ys = ", ".join(f"(({dot_sql('v', row, dim, DUCK)}) * {inv})" for row in signs)
     return f"""
 WITH base AS (
   SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
@@ -4674,7 +4402,7 @@ def _rbo_oracle(k: int = 10, p: float = RBO_P) -> str:
         WHERE kk.vid % 50 = 0
       ) pp ON c.bucket = pp.bucket AND pp.pid <> c.vid
     ), lsh_scored AS (
-      SELECT pid AS id1, vid AS id2, {duck_cosine('pv', 'v', DIM)} AS cos_raw
+      SELECT pid AS id1, vid AS id2, {cosine_sql('pv', 'v', DIM, DUCK)} AS cos_raw
       FROM cand
     ), lsh_ranked AS (
       SELECT id1, id2,

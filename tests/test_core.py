@@ -279,6 +279,30 @@ def test_filter_expr_predicate(nums):
     assert sorted(nums.filter(e).compute()) == [2, 2]
 
 
+def test_compile_expr_failure_propagates(nums, monkeypatch):
+    """Only 'no Catalyst form' errors switch to the Python path; any other
+    failure inside compile_expr surfaces instead of being swallowed."""
+    import dask_obj_spark.core as core
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("compiler bug")
+
+    monkeypatch.setattr(core, "compile_expr", broken)
+    with pytest.raises(RuntimeError, match="compiler bug"):
+        nums.filter(Expr() % 2 == 0)
+    with pytest.raises(RuntimeError, match="compiler bug"):
+        nums.map(Expr() * 2)
+
+
+class Opaque:
+    """A value py4j cannot turn into a JVM literal."""
+
+
+def test_unconvertible_literal_takes_python_path(nums):
+    assert nums.filter(Expr() == Opaque()).compute() == []
+    assert nums.map(Expr() == Opaque()).compute() == [False] * 6
+
+
 def test_remove(nums):
     assert sorted(nums.remove(lambda v: v == 3).compute()) == [1, 2, 2]
 

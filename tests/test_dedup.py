@@ -239,6 +239,34 @@ def test_kmeans_recovers_separated_clusters(spark):
     assert got == again
 
 
+@pytest.mark.parametrize("k", [16, 17])
+def test_kmeans_argmin_forms_agree_across_unroll_threshold(spark, monkeypatch, k):
+    """kmeans_fit's two argmin forms — per-centroid unrolled sqdist
+    chains (k <= KMEANS_UNROLL_MAX) and the literal-matrix HOF fold —
+    pick identical cells and centroids on either side of the switch."""
+    import random
+
+    from dask_obj_spark.operators import similarity as sim
+
+    rng = random.Random(16)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(6)]) for i in range(120)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def fit(unroll_max):
+        monkeypatch.setattr(sim, "KMEANS_UNROLL_MAX", unroll_max)
+        cents, assigned = sim.kmeans_fit(df, "vec_id", "embedding", k=k, iters=2)
+        plan = assigned._jdf.queryExecution().analyzed().toString()
+        return cents, {r.vid: r.cell for r in assigned.collect()}, "element_at" in plan
+
+    c_chain, cells_chain, unrolled = fit(k)
+    assert unrolled
+    c_matrix, cells_matrix, unrolled = fit(k - 1)
+    assert not unrolled
+    assert cells_chain == cells_matrix
+    assert c_chain == c_matrix
+    assert len(set(cells_chain.values())) > 1
+
+
 def test_kmeans_quantized_partition_order_invariant(spark):
     """The quantized variant's integer centroid state must make the
     trained assignment identical under any repartitioning (the raw
@@ -582,7 +610,7 @@ def test_chained_prefix_dots_bit_identical_to_hof_at_every_width(spark):
     mixed-width pairs."""
     from pyspark.sql import functions as F
 
-    from dask_obj_spark.operators.similarity import chained_prefix_dots, dot
+    from dask_obj_spark.functions.vec import chained_prefix_dots, dot
 
     import random
 

@@ -180,6 +180,15 @@ def test_compile_symbolic_root_requires_column():
         compile_expr(Expr() + 1)
 
 
+def test_compile_unconvertible_operand_is_compile_error(df):
+    class Opaque:
+        pass
+
+    for e in (Expr("id") == Opaque(), Expr("s")[Opaque()], Expr(Opaque()).x):
+        with pytest.raises(CompileError, match="no JVM literal form"):
+            compile_expr(e)
+
+
 # -- property test: compiled Column ≡ Python replay ---------------------------
 
 
