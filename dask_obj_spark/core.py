@@ -6,16 +6,30 @@ through ``use_bag_attrs``/``items`` (SURVEY.md Tier D), re-expressed
 Catalyst-first:
 
 - Three storage modes, chosen at ingest and tracked explicitly:
-  *struct* (multi-column DataFrame; element = Row), *scalar* (single
+  *struct* (multi-column DataFrame; element = ``Row``), *scalar* (single
   ``value`` column of a native Spark type), *pickled* (single
   ``value BINARY`` column holding pickled arbitrary objects — the
   "any Python object" contract of the reference, kept columnar via
-  Arrow-batched ``mapInPandas``).
+  Arrow-batched Python UDFs).
+- One typing rule at ingest (:func:`_infer_type`): bool, 64-bit int,
+  float, str, bytes, date and datetime are atomic; a list is an array of
+  its merged element type (an empty list fits any); a tuple is a struct
+  ``_1, _2, …``; a dict is a struct of its (string) keys when it is the
+  element itself and a map when it is nested.  Every element must give
+  the same type.  That type is the explicit schema of the one
+  ``createDataFrame`` call — a struct type makes a struct frame, any
+  other a scalar frame.  Whatever the rule cannot type (None, ints past
+  64 bits, user objects, mixed types, dicts with other keys) goes
+  pickled, never coerced, so it round-trips exactly.
 - Broadcast semantics: attribute access / item access / ``call`` /
-  operators map element-wise (reference ``core.py:62-76``,
-  ``core.py:180-220``) — compiled to Column expressions whenever the
-  element type is native, so they run JVM-side under codegen; the pickled
-  mode replays per element in Arrow batches (the documented slow path).
+  operators / ``map`` map element-wise (reference ``core.py:62-76``,
+  ``core.py:180-220``).  Each records an :class:`Expr` and runs it
+  through one ladder (``_apply_expr``): ``compile_expr`` to a Column,
+  so it runs JVM-side under codegen; else a Python UDF whose result
+  type is sampled from one element, so the frame stays columnar; else
+  the pickled replay per element in Arrow batches (the documented slow
+  path).  Python code sees each element in the form ``compute()``
+  returns: a ``Row`` on struct frames.
 - Deliberate upgrades (SURVEY.md Appendix A — reference defects NOT
   replicated): unknown attributes raise eagerly instead of becoming
   silent lazy failures; default partitioning is Spark's, not
@@ -32,6 +46,7 @@ materializes to the driver.
 
 from __future__ import annotations
 
+import datetime
 import functools
 import pickle
 from collections import Counter
@@ -50,8 +65,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dask_obj_spark.expr import CompileError, Expr, compile_expr
-from dask_obj_spark.functions.dispatch import dispatch_method
+from dask_obj_spark.expr import (
+    _BINARY_OPS,
+    CompileError,
+    Expr,
+    compile_expr,
+    install_operators,
+    replay_udf,
+    replayer,
+)
 
 VALUE = "value"
 # companion position column on zip-derived frames: the positional contract
@@ -61,65 +83,101 @@ ORD = "__ord__"
 # the errors that mean "this Expr has no Catalyst form", so the Python
 # path runs instead; anything else is a real failure and propagates
 _NO_CATALYST_FORM = (CompileError, AnalysisException)
+# the atomic types, by exact Python type: a subclass (an IntEnum, a numpy
+# float) would come back as its base type, so it is not native
+_ATOMIC = {
+    bool: T.BooleanType(),
+    int: T.LongType(),
+    float: T.DoubleType(),
+    str: T.StringType(),
+    bytes: T.BinaryType(),
+    bytearray: T.BinaryType(),
+    datetime.datetime: T.TimestampType(),
+    datetime.date: T.DateType(),
+}
+_VOID = T.NullType()  # an empty list's or dict's element: fits any type
 
 
-def _infer_type(value: Any) -> T.DataType | None:
-    """Spark type of one Python value; None = not native.  An empty list
-    has no element to type, so it infers ``array<null>``: a placeholder
-    that `_merge_types` resolves against any other array type."""
-    if isinstance(value, bool):
-        return T.BooleanType()
-    if isinstance(value, int):
-        return T.LongType()
-    if isinstance(value, float):
-        return T.DoubleType()
-    if isinstance(value, str):
-        return T.StringType()
-    if isinstance(value, (bytes, bytearray)):
-        return T.BinaryType()
-    import datetime
-
-    if isinstance(value, datetime.datetime):
-        return T.TimestampType()
-    if isinstance(value, datetime.date):
-        return T.DateType()
-    if isinstance(value, (list, tuple)):
-        inner: T.DataType | None = T.NullType()
-        for v in value:
-            inner = _merge_types(inner, _infer_type(v))
-            if inner is None:
-                return None
-        return T.ArrayType(inner)
+def _infer_type(value: Any, element: bool = False) -> Any:
+    """The type of one Python value as a hashable shape (an atomic Spark
+    type, or ``("array", e)``, ``("map", k, v)``, ``("struct", names,
+    types)``); None = not native.  ``element`` marks the collection
+    element itself, whose dict is a struct of its keys (a nested dict is
+    a map).  An empty list or dict has ``_VOID`` parts that
+    `_merge_types` resolves against any other type."""
+    atomic = _ATOMIC.get(type(value))
+    if atomic is not None:
+        if type(value) is int and not -(2**63) <= value < 2**63:
+            return None
+        return atomic
+    if type(value) is list:
+        inner = _merge_all(value)
+        return None if inner is None else ("array", inner)
+    if type(value) is tuple:
+        return _struct(tuple(f"_{i + 1}" for i in range(len(value))), value)
+    if type(value) is dict:
+        if element:
+            return _struct(tuple(value), value.values())
+        keys, values = _merge_all(value), _merge_all(value.values())
+        return None if keys is None or values is None else ("map", keys, values)
     return None
 
 
-def _merge_types(a: T.DataType | None, b: T.DataType | None) -> T.DataType | None:
-    """The one type both values fit, or None when they differ: NullType
-    (an empty list's element) matches anything, arrays merge by element."""
+def _struct(names: tuple, values: Iterable[Any]) -> Any:
+    types = tuple(_infer_type(v) for v in values)
+    if not names or None in types or not all(type(n) is str for n in names):
+        return None
+    return ("struct", names, types)
+
+
+def _merge_all(values: Iterable[Any], element: bool = False) -> Any:
+    """The one type every value fits (``_VOID`` when there are none)."""
+    merged = _VOID
+    for v in values:
+        merged = _merge_types(merged, _infer_type(v, element))
+        if merged is None:
+            return None
+    return merged
+
+
+def _merge_types(a: Any, b: Any) -> Any:
+    """The one type both values fit, or None when they differ: ``_VOID``
+    matches anything; arrays, maps and structs with the same field names
+    in the same order merge part by part."""
     if a is None or b is None:
         return None
-    if isinstance(a, T.NullType):
-        return b
-    if isinstance(b, T.NullType):
+    if a == b:
         return a
-    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
-        inner = _merge_types(a.elementType, b.elementType)
-        return None if inner is None else T.ArrayType(inner)
-    return a if a == b else None
+    if a is _VOID:
+        return b
+    if b is _VOID:
+        return a
+    if type(a) is not tuple or type(b) is not tuple or a[0] != b[0]:
+        return None
+    if a[0] == "struct":
+        if a[1] != b[1]:
+            return None
+        parts = tuple(_merge_types(x, y) for x, y in zip(a[2], b[2]))
+        return None if None in parts else ("struct", a[1], parts)
+    parts = tuple(_merge_types(x, y) for x, y in zip(a[1:], b[1:]))
+    return None if None in parts else (a[0],) + parts
 
 
-def _resolved(t: T.DataType | None) -> T.DataType | None:
-    """``t`` unless it still holds an empty list's placeholder element."""
-    inner = t
-    while isinstance(inner, T.ArrayType):
-        inner = inner.elementType
-    return None if isinstance(inner, T.NullType) else t
-
-
-def _spark_type_for(value: Any) -> T.DataType | None:
-    """Best-effort Spark type for a sampled Python value; None = not native
-    (an empty list alone does not say what its elements would be)."""
-    return _resolved(_infer_type(value))
+def _spark_type(shape: Any) -> T.DataType | None:
+    """The Spark type of a shape; None while any ``_VOID`` part is left."""
+    if shape is None or shape is _VOID:
+        return None
+    if type(shape) is not tuple:
+        return shape
+    parts = shape[2] if shape[0] == "struct" else shape[1:]
+    types = [_spark_type(p) for p in parts]
+    if None in types:
+        return None
+    if shape[0] == "array":
+        return T.ArrayType(types[0])
+    if shape[0] == "map":
+        return T.MapType(*types)
+    return T.StructType([T.StructField(n, t) for n, t in zip(shape[1], types)])
 
 
 def _contiguous_repartition(df: "DataFrame", npartitions: int) -> "DataFrame":
@@ -204,38 +262,18 @@ class ObjectFrame:
 
     @staticmethod
     def _ingest(spark: SparkSession, items: Sequence[Any] | Iterable[Any]) -> tuple[DataFrame, bool]:
+        """One typing rule (module docstring), one ``createDataFrame``."""
         items = list(items)
-        if not items:
-            return spark.createDataFrame([], schema=T.StructType([T.StructField(VALUE, T.NullType())])), False
-        first = items[0]
-        if isinstance(first, dict):
-            try:
-                return spark.createDataFrame(items), False
-            except Exception:
-                pass
-        elif isinstance(first, tuple) and not isinstance(first, bool):
-            try:
-                return spark.createDataFrame(items), False
-            except Exception:
-                pass
-        else:
-            # all items must map to one Spark type — the Arrow ingest path
-            # silently coerces mismatches to string otherwise.  Typing the
-            # items as one list merges them: empty lists fit any array
-            # type, so the element type comes from the non-empty ones
-            whole = _infer_type(items)
-            typ = None if whole is None else _resolved(whole.elementType)
-            if typ is not None:
-                try:
-                    schema = T.StructType([T.StructField(VALUE, typ)])
-                    return spark.createDataFrame([(x,) for x in items], schema=schema), False
-                except Exception:
-                    pass
-        # opaque / heterogeneous → pickled binary column (reference's
-        # "any object" contract; SURVEY.md §1.2)
-        pdf = [(_dumps(x),) for x in items]
-        schema = T.StructType([T.StructField(VALUE, T.BinaryType())])
-        return spark.createDataFrame(pdf, schema=schema), True
+        typ = _spark_type(_merge_all(items, element=True))
+        pickled = typ is None and bool(items)
+        if pickled:
+            # opaque / heterogeneous → pickled binary column (reference's
+            # "any object" contract; SURVEY.md §1.2)
+            items, typ = [_dumps(x) for x in items], T.BinaryType()
+        if not isinstance(typ, T.StructType):
+            items = [(x,) for x in items]
+            typ = T.StructType([T.StructField(VALUE, typ or T.NullType())])
+        return spark.createDataFrame(items, schema=typ), pickled
 
     @classmethod
     def from_df(cls, df: DataFrame, **kw) -> "ObjectFrame":
@@ -288,86 +326,23 @@ class ObjectFrame:
             return self._df.rdd.map(lambda r: r[0])
         return self._df.rdd
 
-    def _head_element(self) -> Any:
-        rows = self._df.take(1)
-        if not rows:
-            raise ValueError("empty collection")
-        r = rows[0]
-        if self._pickled:
-            return pickle.loads(bytes(r[0]))
-        return r[0] if self.is_scalar else r
-
     def _map_objects(self, fn: Callable[[Any], Any]) -> "ObjectFrame":
-        """Element→element map in pickled mode (Arrow-batched).  A zip
-        position column rides along so downstream materialize stays
-        order-correct."""
-        import pandas as pd
-
-        has_ord = ORD in self._df.columns
-
-        def gen(batches):
-            for pdf in batches:
-                out = [_dumps(fn(pickle.loads(bytes(b)))) for b in pdf[VALUE]]
-                cols = {VALUE: out}
-                if has_ord:
-                    cols[ORD] = pdf[ORD]
-                yield pd.DataFrame(cols)
-
-        schema = f"{VALUE} binary" + (f", {ORD} long" if has_ord else "")
-        return self._make(self._df.mapInPandas(gen, schema), pickled=True)
+        """Element→element map into pickled mode (Arrow-batched), from any
+        mode.  A zip position column rides along so downstream
+        materialize stays order-correct."""
+        out = replay_udf(lambda v: _dumps(fn(v)), T.BinaryType(), self._pickled)(self._root())
+        keep = [ORD] if ORD in self._df.columns else []
+        return self._make(self._df.select(out.alias(VALUE), *keep), pickled=True)
 
     def _to_pickled(self) -> "ObjectFrame":
-        if self._pickled:
-            return self
-        import pandas as pd
+        """The same elements, pickled: a ``Row`` per struct-frame row."""
+        return self if self._pickled else self._map_objects(lambda v: v)
 
-        scalar = self.is_scalar
-        cols = self._df.columns
-
-        def gen(batches):
-            for pdf in batches:
-                if scalar:
-                    out = [_dumps(v) for v in pdf[VALUE]]
-                else:
-                    out = [_dumps(dict(zip(cols, t))) for t in pdf.itertuples(index=False, name=None)]
-                yield pd.DataFrame({VALUE: out})
-
-        return self._make(self._df.mapInPandas(gen, f"{VALUE} binary"), pickled=True)
-
-    def _python_elementwise(self, fn: Callable[[Any], Any]) -> "ObjectFrame":
-        """Apply an arbitrary Python function per element.
-
-        Samples one element to infer a native result type (schema fixed at
-        ingest — SURVEY.md §1.2); falls back to pickled mode when the
-        result is not Spark-native.
-        """
-        if self._pickled:
-            return self._map_objects(fn)
-        sample = self._head_element()
-        try:
-            probe = fn(sample)
-            out_type = _spark_type_for(probe)
-        except Exception:
-            out_type = None
-        if out_type is None:
-            return self._to_pickled()._map_objects(fn)
-        import pandas as pd
-
-        scalar = self.is_scalar
-        cols = self._df.columns
-        schema = T.StructType([T.StructField(VALUE, out_type)])
-
-        def gen(batches):
-            for pdf in batches:
-                if scalar:
-                    vals = [fn(v) for v in pdf[VALUE]]
-                else:
-                    from pyspark.sql import Row
-
-                    vals = [fn(Row(**dict(zip(cols, t)))) for t in pdf.itertuples(index=False, name=None)]
-                yield pd.DataFrame({VALUE: vals})
-
-        return self._make(self._df.mapInPandas(gen, schema), pickled=False)
+    def _root(self) -> Column:
+        """The element as one Column: the value, or a struct of the row."""
+        if self._pickled or self.is_scalar:
+            return F.col(VALUE)
+        return F.struct(*[self._df[c] for c in self._df.columns])
 
     def _value_column(self) -> Column:
         if not self.is_scalar:
@@ -385,80 +360,41 @@ class ObjectFrame:
         # use_bag_attrs passthrough (reference core.py:62-66): DataFrame wins
         if object.__getattribute__(self, "_use_df_attrs") and hasattr(self._df, name):
             return getattr(self._df, name)
-        if self._pickled:
-            import operator as op
-
-            return self._map_objects(op.attrgetter(name))
-        if name in self._df.columns and not self.is_scalar:
-            return self._select_value(F.col(name))
-        if self.is_scalar:
-            vtype = self._df.schema[VALUE].dataType
-            if isinstance(vtype, T.StructType) and name in vtype.fieldNames():
-                return self._select_value(F.col(VALUE).getField(name))
-            if isinstance(vtype, T.MapType):
+        if not self._pickled:
+            if self.is_scalar:
+                vtype = self._df.schema[VALUE].dataType
                 # dict-shaped elements infer as MapType: attr ≡ key lookup
-                return self._select_value(F.col(VALUE).getItem(name))
-        raise AttributeError(
-            f"{name!r} is not a column/field of {self._df.columns}; "
-            "(unknown names raise eagerly — deliberate upgrade over the reference)"
-        )
+                known = isinstance(vtype, T.MapType) or (
+                    isinstance(vtype, T.StructType) and name in vtype.fieldNames()
+                )
+            else:
+                known = name in self._df.columns
+            if not known:
+                raise AttributeError(
+                    f"{name!r} is not a column/field of {self._df.columns}; "
+                    "(unknown names raise eagerly — deliberate upgrade over the reference)"
+                )
+        return self._apply_expr(Expr(frames=(("attr", name),)))
 
     def __getitem__(self, key: Any) -> "ObjectFrame":
-        if self._pickled:
-            import operator as op
-
-            return self._map_objects(op.itemgetter(key))
-        if isinstance(key, (list, tuple)):
-            if not self.is_scalar:
-                return self._select_value(F.struct(*[F.col(k) for k in key]))
-            return self._select_value(F.struct(*[F.col(VALUE).getItem(k) for k in key]))
-        if not self.is_scalar:
-            if key in self._df.columns:
-                return self._select_value(F.col(key))
-            raise KeyError(key)
-        vtype = self._df.schema[VALUE].dataType
-        if isinstance(vtype, T.ArrayType) and isinstance(key, int):
-            # Python 0-based indexing
-            return self._select_value(F.get(F.col(VALUE), key))
-        if isinstance(key, slice):
-            if isinstance(vtype, T.ArrayType):
-                from dask_obj_spark.expr import slice_column
-
-                return self._select_value(slice_column(F.col(VALUE), key))
-            import operator as op
-
-            return self._python_elementwise(op.itemgetter(key))
-        return self._select_value(F.element_at(F.col(VALUE), F.lit(key)))
+        if isinstance(key, tuple):
+            key = list(key)  # a tuple of keys plucks, like a list
+        if not self._pickled and not self.is_scalar:
+            for k in key if isinstance(key, list) else [key]:
+                if k not in self._df.columns:
+                    raise KeyError(k)
+        return self._apply_expr(Expr()[key])
 
     # -- broadcast invocation (A4/A5) ----------------------------------------
 
     def call(self, method: str, *args, **kwargs) -> "ObjectFrame":
         """Per-element method call (reference ``core.py:74-76``): JVM
         dispatch table first, Python replay as the explicit fallback."""
-        import operator as op
-
-        caller = op.methodcaller(method, *args, **kwargs)
-        if not self._pickled and self.is_scalar:
-            col = dispatch_method(method, self._value_column(), *args, **kwargs)
-            if col is not None:
-                return self._select_value(col)
-            # unknown method: sample one element to infer the result type,
-            # then run the call as an Arrow-batched pandas UDF — columnar
-            # storage survives; the pickled path is the LAST resort
-            try:
-                inferred = _spark_type_for(caller(self._head_element()))
-            except Exception:
-                inferred = None
-            if inferred is not None:
-                def _replay(s, _c=caller):
-                    return s.map(_c)
-
-                return self._select_value(F.pandas_udf(inferred)(_replay)(F.col(VALUE)))
-        return self._python_elementwise(lambda o: caller(o))
+        return self._apply_expr(Expr(frames=(("attr", method), ("call", args, kwargs))))
 
     def __call__(self, *args, **kwargs) -> "ObjectFrame":
         """Collection of callables: invoke each with shared args (A4)."""
-        return self._python_elementwise(lambda fn: fn(*args, **kwargs))
+        return self._apply_expr(Expr()(*args, **kwargs))
 
     # -- map / flatten / materialize (A6-A9) ----------------------------------
 
@@ -495,31 +431,43 @@ class ObjectFrame:
         elif isinstance(func, Expr):
             out = self._apply_expr(func)
         else:
-            out = self._python_elementwise(lambda o: func(o, *args, **kwargs))
+            out = self._apply_expr(Expr().F(func, *args, **kwargs))
         return out.compute() if compute else out
 
     def _apply_expr(self, e: Expr) -> "ObjectFrame":
-        """Run a recorded :class:`Expr` columnar when native, replayed when pickled.
+        """Run a recorded :class:`Expr` element-wise: the one broadcast path.
 
-        Failure ladder: (1) pure-Column compile; (2) compile with a
-        SAMPLED ``fallback_type`` — one element is evaluated driver-side
-        to infer the result's Spark type, so the undispatchable tail runs
-        as an Arrow-batched pandas UDF while the frame STAYS columnar;
-        (3) only then the pickled replay path."""
-        if self._pickled:
-            return self._map_objects(e.eval)
-        root = F.col(VALUE) if self.is_scalar else F.struct(*self._df.columns)
+        Failure ladder: (1) pure-Column compile; (2) one element is
+        evaluated driver-side to infer the result's Spark type, then the
+        undispatchable tail (or, when the compiled part does not analyse,
+        the whole expression) runs as an Arrow-batched Python UDF while
+        the frame STAYS columnar; (3) only then the pickled replay."""
+        fn = replayer(e)
+        if not self._pickled:
+            root = self._root()
+            try:
+                return self._select_value(compile_expr(e, root))
+            except _NO_CATALYST_FORM:
+                pass
+            out_type = self._sampled_type(fn)
+            if out_type is not None:
+                try:
+                    return self._select_value(compile_expr(e, root, fallback_type=out_type))
+                except _NO_CATALYST_FORM:
+                    return self._select_value(replay_udf(fn, out_type)(root))
+        return self._map_objects(fn)
+
+    def _sampled_type(self, fn: Callable[[Any], Any]) -> T.DataType | None:
+        """The Spark type of ``fn`` on the first element of a native frame;
+        None → pickled (an empty frame has nothing to sample)."""
+        rows = self._df.take(1)
+        if not rows:
+            return None
         try:
-            return self._select_value(compile_expr(e, root))
-        except _NO_CATALYST_FORM:
-            pass
-        try:
-            inferred = _spark_type_for(e.eval(self._head_element()))
-            if inferred is not None:
-                return self._select_value(compile_expr(e, root, fallback_type=inferred))
-        except Exception:
-            pass
-        return self._python_elementwise(e.eval)
+            sample = fn(rows[0][0] if self.is_scalar else rows[0])
+        except Exception:  # user code failing on the sample: pickled replay
+            return None
+        return _spark_type(_infer_type(sample))
 
     def _indexed_pickled(self) -> DataFrame:
         """(value binary, __ord__ long): the element with its position.
@@ -550,42 +498,17 @@ class ObjectFrame:
         left = self._indexed_pickled().withColumnRenamed(VALUE, "__lv__")
         right = other._indexed_pickled().withColumnRenamed(VALUE, "__rv__")
         joined = left.join(right.hint("SHUFFLE_HASH"), ORD)
-
-        def gen(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                out = [
-                    _dumps((pickle.loads(bytes(a)), pickle.loads(bytes(b))))
-                    for a, b in zip(pdf["__lv__"], pdf["__rv__"])
-                ]
-                yield pd.DataFrame({VALUE: out, ORD: pdf[ORD]})
-
-        merged = joined.mapInPandas(gen, f"{VALUE} binary, {ORD} long")
-        return self._make(merged, pickled=True)
+        pair = F.udf(lambda a, b: _dumps((pickle.loads(a), pickle.loads(b))), T.BinaryType(), useArrow=True)
+        return self._make(joined.select(pair("__lv__", "__rv__").alias(VALUE), ORD), pickled=True)
 
     def flatten(self, compute: bool = False) -> Any:
         """One-level flatten (reference ``core.py:93-96``) → ``explode``."""
-        if self._pickled:
-            out = self._flat_map_objects(lambda o: o)
-        elif self.is_scalar and isinstance(self._df.schema[VALUE].dataType, T.ArrayType):
+        if not self._pickled and self.is_scalar and isinstance(self._df.schema[VALUE].dataType, T.ArrayType):
             out = self._select_value(F.explode(F.col(VALUE)))
         else:
-            out = self._to_pickled()._flat_map_objects(lambda o: o)
+            items = replay_udf(lambda o: [_dumps(x) for x in o], T.ArrayType(T.BinaryType()), self._pickled)
+            out = self._make(self._df.select(F.explode(items(self._root())).alias(VALUE)), pickled=True)
         return out.compute() if compute else out
-
-    def _flat_map_objects(self, fn: Callable[[Any], Iterable[Any]]) -> "ObjectFrame":
-        import pandas as pd
-
-        def gen(batches):
-            for pdf in batches:
-                out = []
-                for b in pdf[VALUE]:
-                    for item in fn(pickle.loads(bytes(b))):
-                        out.append(_dumps(item))
-                yield pd.DataFrame({VALUE: out})
-
-        return self._make(self._df.mapInPandas(gen, f"{VALUE} binary"), pickled=True)
 
     def compute(self, flatten: bool = False) -> list:
         """Materialize to a Python list (reference ``core.py:84-88``)."""
@@ -734,52 +657,27 @@ class ObjectFrame:
 
     # -- Tier D relational surface -------------------------------------------
 
-    def _predicate(self, pred: Any) -> Column | None:
-        if isinstance(pred, Column):
-            return pred
+    def _where(self, pred: Any, keep: bool) -> "ObjectFrame":
+        """Rows where ``pred`` is ``keep``: a Column, an Expr compiled when
+        it has a Catalyst form, else a Python UDF over the elements."""
         if isinstance(pred, Expr):
-            try:
-                root = F.col(VALUE) if self.is_scalar else F.struct(*self._df.columns)
-                return compile_expr(pred, root)
-            except _NO_CATALYST_FORM:
-                return None
-        return None
+            if not self._pickled:
+                try:
+                    col = compile_expr(pred, self._root())
+                    return self._make(self._df.filter(col if keep else ~col))
+                except _NO_CATALYST_FORM:
+                    pass
+            pred = replayer(pred)
+        if not isinstance(pred, Column):
+            fn = pred
+            pred = replay_udf(lambda v: bool(fn(v)), T.BooleanType(), self._pickled)(self._root())
+        return self._make(self._df.filter(pred if keep else ~pred))
 
     def filter(self, pred: Any) -> "ObjectFrame":
-        col = None if self._pickled else self._predicate(pred)
-        if col is not None:
-            return self._make(self._df.filter(col))
-        # python predicate over elements (any mode)
-        import pandas as pd
-
-        pickled = self._pickled
-        scalar = self.is_scalar
-        cols = self._df.columns
-        p = pred.eval if isinstance(pred, Expr) else pred
-
-        def gen(batches):
-            from pyspark.sql import Row
-
-            for pdf in batches:
-                if pickled:
-                    mask = [bool(p(pickle.loads(bytes(b)))) for b in pdf[VALUE]]
-                elif scalar:
-                    mask = [bool(p(v)) for v in pdf[VALUE]]
-                else:
-                    mask = [
-                        bool(p(Row(**dict(zip(cols, t)))))
-                        for t in pdf.itertuples(index=False, name=None)
-                    ]
-                yield pdf[pd.Series(mask, index=pdf.index)]
-
-        return self._make(self._df.mapInPandas(gen, self._df.schema))
+        return self._where(pred, True)
 
     def remove(self, pred: Any) -> "ObjectFrame":
-        col = None if self._pickled else self._predicate(pred)
-        if col is not None:
-            return self._make(self._df.filter(~col))
-        p = pred.eval if isinstance(pred, Expr) else pred
-        return self.filter(lambda o: not p(o))
+        return self._where(pred, False)
 
     def distinct(self, key: str | None = None) -> "ObjectFrame":
         if key is None:
@@ -984,50 +882,25 @@ def _merge_counters(a: Counter, b: Counter) -> Counter:
 # uniform operator broadcasting (documented deviation: the reference's
 # DaskObjects lacks dunders — special-method lookup bypasses __getattr__,
 # SURVEY.md Appendix A; we support them uniformly like DaskDelayedObjects
-# core.py:180-220)
+# core.py:180-220).  Against a scalar the operator is one recorded Expr
+# frame on the broadcast path; between two frames it zips them.
 def _of_make_binary(opname: str, reflected: bool):
-    import operator as op
-
-    from dask_obj_spark.expr import _BINARY_OPS, _COLUMN_BINARY
-
     pyfn = _BINARY_OPS[opname]
-    colfn = _COLUMN_BINARY[opname]
 
     def method(self: ObjectFrame, other: Any):
-        if not self._pickled and self.is_scalar and not isinstance(other, ObjectFrame):
-            col = colfn(other, self._value_column()) if reflected else colfn(self._value_column(), other)
-            return self._select_value(col)
         if isinstance(other, ObjectFrame):
             zipped = self.zip(other)
             return zipped._map_objects(lambda t: pyfn(t[1], t[0]) if reflected else pyfn(t[0], t[1]))
-        return self._python_elementwise(
-            (lambda o: pyfn(other, o)) if reflected else (lambda o: pyfn(o, other))
-        )
+        return self._apply_expr(Expr(frames=(("op", opname, other, reflected),)))
 
-    method.__name__ = f"__{'r' if reflected else ''}{opname}__"
     return method
 
 
 def _of_make_unary(opname: str):
-    from dask_obj_spark.expr import _UNARY_OPS, _COLUMN_UNARY
-
-    pyfn = _UNARY_OPS[opname]
-    colfn = _COLUMN_UNARY[opname]
-
     def method(self: ObjectFrame):
-        if not self._pickled and self.is_scalar:
-            return self._select_value(colfn(self._value_column()))
-        return self._python_elementwise(pyfn)
+        return self._apply_expr(Expr(frames=(("unary", opname),)))
 
-    method.__name__ = f"__{opname}__"
     return method
 
 
-from dask_obj_spark.expr import _BINARY_OPS as _BIN, _UNARY_OPS as _UN  # noqa: E402
-
-for _name in _BIN:
-    setattr(ObjectFrame, f"__{_name}__", _of_make_binary(_name, False))
-    if _name not in ("lt", "le", "eq", "ne", "gt", "ge"):
-        setattr(ObjectFrame, f"__r{_name}__", _of_make_binary(_name, True))
-for _name in _UN:
-    setattr(ObjectFrame, f"__{_name}__", _of_make_unary(_name))
+install_operators(ObjectFrame, _of_make_binary, _of_make_unary)

@@ -26,7 +26,7 @@ import threading
 from concurrent.futures import Future, ThreadPoolExecutor, as_completed
 from typing import Any, Callable, Iterator
 
-from dask_obj_spark.expr import _BINARY_OPS, _UNARY_OPS
+from dask_obj_spark.expr import _BINARY_OPS, _UNARY_OPS, install_operators
 
 
 class _Task:
@@ -199,7 +199,6 @@ def _do_make_binary(opname: str, reflected: bool):
             return DelayedObjects([], eager=self._eager, max_workers=self._max_workers, _tasks=tasks)
         return self._derive((lambda o: fn(other, o)) if reflected else (lambda o: fn(o, other)))
 
-    method.__name__ = f"__{'r' if reflected else ''}{opname}__"
     return method
 
 
@@ -209,13 +208,7 @@ def _do_make_unary(opname: str):
     def method(self: DelayedObjects):
         return self._derive(fn)
 
-    method.__name__ = f"__{opname}__"
     return method
 
 
-for _name in _BINARY_OPS:
-    setattr(DelayedObjects, f"__{_name}__", _do_make_binary(_name, False))
-    if _name not in ("lt", "le", "eq", "ne", "gt", "ge"):
-        setattr(DelayedObjects, f"__r{_name}__", _do_make_binary(_name, True))
-for _name in _UNARY_OPS:
-    setattr(DelayedObjects, f"__{_name}__", _do_make_unary(_name))
+install_operators(DelayedObjects, _do_make_binary, _do_make_unary)

@@ -13,8 +13,8 @@ field resolution, method calls hit the JVM dispatch table
 (:mod:`dask_obj_spark.functions.dispatch`), operators become Column
 operators — so the recorded computation runs columnar under whole-stage
 codegen instead of row-at-a-time ``getattr`` interpretation.  Frames with
-no JVM mapping fall back to an Arrow-batched pandas UDF replaying
-``eval`` per element (the documented slow path).
+no JVM mapping fall back to an Arrow-batched Python UDF replaying the
+frames per element (the documented slow path).
 
 Design notes / deliberate deviations from the reference:
 
@@ -29,18 +29,31 @@ Design notes / deliberate deviations from the reference:
 - Real API members (``eval``, ``F``, ``frames``, …) resolve normally, as
   in the reference (``hasattr_`` over the MRO, ``expr.py:33-39``); they
   are consequently not capturable as element-attribute names.
+- One replay, one compile, the same answers.  ``eval``, the UDF
+  fallback and ``ObjectFrame``'s pickled path all run one replay
+  function (:func:`replayer`), built by a module-level factory from
+  nested defs and stdlib ``operator`` only: cloudpickle ships it by
+  value, so it runs on Python workers that cannot import this package.
+  ``compile_expr`` gives the replay's Python semantics: an ``int`` index
+  into an array counts from the end when negative and raises when out
+  of range; a list key plucks (``tuple(x[k] for k in key)`` in Python,
+  a struct of the items in Catalyst).
+- ``ObjectFrame`` records every element-wise broadcast (attribute, item,
+  ``call``, operators, ``map``) as an ``Expr`` and runs it through one
+  ladder: ``compile_expr``; then a Python UDF typed from one sampled
+  element; then the pickled replay.
 """
 
 from __future__ import annotations
 
 import operator as _op
+import pickle
 from typing import Any, Callable
 
-import pandas as pd  # module-level: pandas_udf type hints resolve against module globals
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from dask_obj_spark.functions.dispatch import COLUMN_METHODS
+from dask_obj_spark.functions.dispatch import dispatch_method
 
 
 class _NoValue:
@@ -82,6 +95,8 @@ _UNARY_OPS: dict[str, Callable[[Any], Any]] = {
     "abs": _op.abs,
     "invert": _op.invert,
 }
+# comparisons have no reflected dunder: Python swaps them itself
+_COMPARISONS = frozenset({"lt", "le", "eq", "ne", "gt", "ge"})
 _OP_SYMBOL = {
     "add": "+", "sub": "-", "mul": "*", "truediv": "/", "floordiv": "//",
     "mod": "%", "pow": "**", "lshift": "<<", "rshift": ">>", "and": "&",
@@ -196,45 +211,113 @@ class Expr:
         access returns the attribute (bound methods are NOT auto-invoked;
         a following call frame invokes them).
         """
-        if value is NO_VALUE:
-            root = self._root
-            if root is NO_VALUE:
-                raise ValueError("no value to evaluate: expression has a symbolic root")
-            cur = root() if callable(root) and not isinstance(root, Expr) else root
-        else:
+        return _run(_program(self), value, value is not NO_VALUE)
+
+
+def _make_replay(binary: dict, unary: dict):
+    """Build the one replay of recorded frames: ``(run, bind)``.
+
+    Nested defs over stdlib ``operator`` callables only, with no reference
+    into this package: cloudpickle pickles them by value (``<locals>``
+    qualname), so a shipped replay runs on Python workers that cannot
+    import ``dask_obj_spark``.  They run a *program* — an :class:`Expr`
+    lowered by :func:`_program` to tuples, strings and user values — never
+    an ``Expr`` instance, whose class would pickle by reference."""
+
+    def operand(x, value, given):
+        return run(x[1], value, given) if x[0] == "expr" else x[1]
+
+    def run(program, value, given):
+        mode, root, frames = program
+        if given:
             cur = value
-        for frame in self._frames:
+        elif mode == "symbolic":
+            raise ValueError("no value to evaluate: expression has a symbolic root")
+        else:
+            cur = root() if mode == "thunk" else root
+        for frame in frames:
             kind = frame[0]
             if kind == "attr":
                 cur = getattr(cur, frame[1])
             elif kind == "getitem":
-                key = frame[1]
-                key = key.eval(value) if isinstance(key, Expr) else key
-                cur = cur[key]
-            elif kind == "call":
-                args = tuple(a.eval(value) if isinstance(a, Expr) else a for a in frame[1])
-                kwargs = {k: (v.eval(value) if isinstance(v, Expr) else v) for k, v in frame[2].items()}
-                cur = cur(*args, **kwargs)
-            elif kind == "func":
-                _, func, args, kwargs = frame
-                args = tuple(a.eval(value) if isinstance(a, Expr) else a for a in args)
-                kwargs = {k: (v.eval(value) if isinstance(v, Expr) else v) for k, v in kwargs.items()}
-                cur = func(cur, *args, **kwargs)
+                key = operand(frame[1], value, given)
+                # a list key plucks, as compile_expr's struct of the items
+                cur = tuple(cur[k] for k in key) if isinstance(key, list) else cur[key]
+            elif kind in ("call", "func"):
+                args = tuple(operand(a, value, given) for a in frame[-2])
+                kwargs = {k: operand(v, value, given) for k, v in frame[-1].items()}
+                cur = cur(*args, **kwargs) if kind == "call" else frame[1](cur, *args, **kwargs)
             elif kind == "op":
-                _, opname, operand, reflected = frame
-                other = operand.eval(value) if isinstance(operand, Expr) else operand
-                fn = _BINARY_OPS[opname]
+                _, opname, other, reflected = frame
+                other = operand(other, value, given)
+                fn = binary[opname]
                 cur = fn(other, cur) if reflected else fn(cur, other)
-            elif kind == "unary":
-                cur = _UNARY_OPS[frame[1]](cur)
+            else:  # "unary"
+                cur = unary[frame[1]](cur)
         return cur
+
+    def bind(program):
+        def element(value):
+            return run(program, value, True)
+
+        return element
+
+    return run, bind
+
+
+_run, _bind = _make_replay(_BINARY_OPS, _UNARY_OPS)
+
+
+def _program(expr: Expr) -> tuple:
+    """Lower ``expr`` to the plain tuples :func:`_make_replay`'s ``run``
+    executes: ``(root mode, root, frames)``, every operand tagged
+    ``("expr", program)`` or ``("lit", value)``."""
+
+    def operand(x):
+        return ("expr", _program(x)) if isinstance(x, Expr) else ("lit", x)
+
+    frames = []
+    for frame in expr.frames:
+        kind = frame[0]
+        if kind == "getitem":
+            frame = (kind, operand(frame[1]))
+        elif kind in ("call", "func"):
+            args = tuple(operand(a) for a in frame[-2])
+            kwargs = {k: operand(v) for k, v in frame[-1].items()}
+            frame = frame[:-2] + (args, kwargs)
+        elif kind == "op":
+            frame = (kind, frame[1], operand(frame[2]), frame[3])
+        frames.append(frame)
+    root = expr.root
+    if root is NO_VALUE:
+        return "symbolic", None, tuple(frames)  # NO_VALUE would pickle by reference
+    return ("thunk" if callable(root) and not isinstance(root, Expr) else "value"), root, tuple(frames)
+
+
+def replayer(expr: Expr) -> Callable[[Any], Any]:
+    """``expr.eval`` as a worker-safe function of one element."""
+    return _bind(_program(expr))
+
+
+def install_operators(cls: type, binary: Callable, unary: Callable) -> None:
+    """Install the 34 operator dunders on ``cls``: ``binary(opname,
+    reflected)`` and ``unary(opname)`` build each method."""
+    for name in _BINARY_OPS:
+        reflections = (False,) if name in _COMPARISONS else (False, True)
+        for reflected in reflections:
+            method = binary(name, reflected)
+            method.__name__ = f"__{'r' if reflected else ''}{name}__"
+            setattr(cls, method.__name__, method)
+    for name in _UNARY_OPS:
+        method = unary(name)
+        method.__name__ = f"__{name}__"
+        setattr(cls, method.__name__, method)
 
 
 def _make_binary(opname: str, reflected: bool):
     def method(self: Expr, other: Any) -> Expr:
         return self._extend(("op", opname, other, reflected))
 
-    method.__name__ = f"__{'r' if reflected else ''}{opname}__"
     return method
 
 
@@ -242,16 +325,10 @@ def _make_unary(opname: str):
     def method(self: Expr) -> Expr:
         return self._extend(("unary", opname))
 
-    method.__name__ = f"__{opname}__"
     return method
 
 
-for _name in _BINARY_OPS:
-    setattr(Expr, f"__{_name}__", _make_binary(_name, False))
-    if _name not in ("lt", "le", "eq", "ne", "gt", "ge"):
-        setattr(Expr, f"__r{_name}__", _make_binary(_name, True))
-for _name in _UNARY_OPS:
-    setattr(Expr, f"__{_name}__", _make_unary(_name))
+install_operators(Expr, _make_binary, _make_unary)
 
 
 # -- re-rooting ---------------------------------------------------------------
@@ -274,7 +351,12 @@ class CompileError(ValueError):
 def _jvm(build: Callable[[], Column], what: Any) -> Column:
     """Run one Column-building step.  py4j raises AttributeError (or
     pyspark a TypeError) for a Python value it cannot convert to a JVM
-    literal; that means no Catalyst form, so it becomes CompileError."""
+    literal; that means no Catalyst form, so it becomes CompileError.
+    A tuple, dict or set converts (to a Java collection) but has no
+    literal Spark accepts, and Spark says so only at analysis, outside
+    this step: those are refused here."""
+    if isinstance(what, (tuple, dict, set, frozenset)):
+        raise CompileError(f"{what!r} has no JVM literal form")
     try:
         return build()
     except (AttributeError, TypeError) as e:
@@ -297,8 +379,9 @@ def compile_expr(expr: Expr, root: Column | str | None = None, fallback_type=Non
 
     Mapping (SURVEY.md §3.3): attr → struct ``getField`` (or, when
     followed by a call frame, the JVM method dispatch table);
+    ``[i]`` with an ``int`` → :func:`index_column` (Python list indexing);
     ``[k]`` → ``getItem``; operators → Column operators; ``F(func)`` and
-    undispatchable methods → pandas-UDF replay of ``eval`` (requires
+    undispatchable methods → Python-UDF replay of ``eval`` (requires
     ``fallback_type``; raises :class:`CompileError` otherwise so the slow
     path is always an explicit, visible choice).
     """
@@ -326,15 +409,12 @@ def compile_expr(expr: Expr, root: Column | str | None = None, fallback_type=Non
             if nxt is not None and nxt[0] == "call":
                 args = tuple(_operand_to_column(a, root_col) for a in nxt[1])
                 kwargs = {k: _operand_to_column(v, root_col) for k, v in nxt[2].items()}
-                fn = COLUMN_METHODS.get(name)
-                if fn is not None:
-                    try:
-                        col = fn(col, *args, **kwargs)
-                        i += 2
-                        continue
-                    except TypeError:
-                        pass
-                return _fallback_udf(expr, frames[:i], col, fallback_type, name)
+                dispatched = dispatch_method(name, col, *args, **kwargs)
+                if dispatched is None:
+                    return _fallback_udf(expr, frames[:i], col, fallback_type, name)
+                col = dispatched
+                i += 2
+                continue
             col = col.getField(name)
         elif kind == "getitem":
             key = frame[1]
@@ -342,6 +422,8 @@ def compile_expr(expr: Expr, root: Column | str | None = None, fallback_type=Non
                 col = F.struct(*[col.getItem(k) for k in key])
             elif isinstance(key, slice):
                 col = slice_column(col, key)
+            elif isinstance(key, int) and not isinstance(key, bool):
+                col = index_column(col, key)
             else:
                 col = _jvm(lambda: col.getItem(key), key)
         elif kind == "op":
@@ -378,19 +460,38 @@ def slice_column(col: Column, key: slice) -> Column:
     return F.slice(col, st + 1, F.greatest(en - st, F.lit(0)))
 
 
+def index_column(col: Column, i: int) -> Column:
+    """Python ``seq[i]`` over an ArrayType column: a negative ``i`` counts
+    from the end and an index out of range raises, whatever the session's
+    ANSI setting; a null array gives null.  ``array_size`` fails analysis
+    on anything but an array, which the callers treat as 'take the replay
+    path' (a map's int key, a string's character)."""
+    n = F.array_size(col)
+    pos = F.lit(i) if i >= 0 else n + i
+    return F.when((pos >= 0) & (pos < n), F.get(col, pos)).when(
+        col.isNotNull(), F.raise_error(F.lit(f"list index {i} out of range"))
+    )
+
+
+def replay_udf(fn: Callable[[Any], Any], out_type, pickled: bool = False) -> Callable[..., Column]:
+    """``fn`` over each element of a column, returning ``out_type``: an
+    Arrow-batched Python UDF, which hands ``fn`` each value in the form
+    ``collect()`` gives (a struct as a ``Row``, an array as a list);
+    ``pickled`` columns hold pickled objects."""
+    if pickled:
+        return F.udf(lambda b: fn(pickle.loads(b)), out_type, useArrow=True)
+    return F.udf(fn, out_type, useArrow=True)
+
+
 def _fallback_udf(expr: Expr, done_frames: list, col: Column, fallback_type, what: str) -> Column:
-    """Replay the *remaining* frames per element via a pandas UDF."""
+    """Replay the *remaining* frames per element via a Python UDF."""
     if fallback_type is None:
         raise CompileError(
             f"frame {what!r} has no JVM mapping; pass fallback_type=<spark type> "
-            "to allow the pandas-UDF slow path"
+            "to allow the Python-UDF slow path"
         )
     remaining = Expr.from_frames(NO_VALUE, tuple(expr.frames[len(done_frames):]))
-
-    def _replay(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: remaining.eval(v))
-
-    return F.pandas_udf(fallback_type)(_replay)(col)
+    return replay_udf(replayer(remaining), fallback_type)(col)
 
 
 def _col_floordiv(a, b):

@@ -11,8 +11,7 @@ Exactness: ``repr(float)`` is the shortest digit string that round-trips
 to the same IEEE double in Python, and Spark's SQL lexer parses the
 ``...D`` double literal with correctly-rounded semantics, so the parsed
 Literal is BIT-IDENTICAL to what ``F.lit(c)`` would have produced
-(verified for subnormals, extremes and exponent forms).  Integers are
-exact by construction (``L`` = SQL bigint suffix).
+(verified for subnormals, extremes and exponent forms).
 """
 
 from __future__ import annotations
@@ -44,11 +43,6 @@ def sql_double(x: float) -> str:
 def lit_double_array(vals: Iterable[float]) -> Column:
     """``array<double>`` literal column in one py4j round-trip."""
     return F.expr("array(" + ", ".join(sql_double(v) for v in vals) + ")")
-
-
-def lit_long_array(vals: Iterable[int]) -> Column:
-    """``array<bigint>`` literal column in one py4j round-trip."""
-    return F.expr("array(" + ", ".join(f"{int(v)}L" for v in vals) + ")")
 
 
 def lit_double_matrix(rows: Iterable[Iterable[float]]) -> Column:

@@ -23,7 +23,7 @@ trick (drop shingles appearing in too many docs; they carry no signal).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dask_obj_spark.functions.hashing import (

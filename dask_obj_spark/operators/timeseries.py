@@ -185,8 +185,6 @@ def ewma(
     self-contained (imports inside) so it ships to vanilla executors."""
 
     def _ewma_group(pdf):
-        import pandas as pd  # noqa: F401  (self-contained worker closure)
-
         pdf = pdf.sort_values([ts_col, order_tiebreak])
         s = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
         return pdf.assign(ewma=s.round(6))[[key_col, order_tiebreak, "ewma"]]
