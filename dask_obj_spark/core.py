@@ -16,7 +16,10 @@ Catalyst-first:
   its merged element type (an empty list fits any); a tuple is a struct
   ``_1, _2, …``; a dict is a struct of its (string) keys when it is the
   element itself and a map when it is nested.  Every element must give
-  the same type.  That type is the explicit schema of the one
+  the same type; element dicts may list their keys in any order, and
+  the first element's order names the fields.  A result sampled on the
+  broadcast path types its atomic values by isinstance instead (a numpy
+  float is a double).  That type is the explicit schema of the one
   ``createDataFrame`` call — a struct type makes a struct frame, any
   other a scalar frame.  Whatever the rule cannot type (None, ints past
   64 bits, user objects, mixed types, dicts with other keys) goes
@@ -83,8 +86,10 @@ ORD = "__ord__"
 # the errors that mean "this Expr has no Catalyst form", so the Python
 # path runs instead; anything else is a real failure and propagates
 _NO_CATALYST_FORM = (CompileError, AnalysisException)
-# the atomic types, by exact Python type: a subclass (an IntEnum, a numpy
-# float) would come back as its base type, so it is not native
+# the atomic types.  Ingest types by exact Python type: a subclass (an
+# IntEnum, a numpy float) would come back as its base type, so it is not
+# native.  A sampled result types by isinstance, as the Python UDF that
+# returns it converts the value to the base type anyway.
 _ATOMIC = {
     bool: T.BooleanType(),
     int: T.LongType(),
@@ -98,43 +103,47 @@ _ATOMIC = {
 _VOID = T.NullType()  # an empty list's or dict's element: fits any type
 
 
-def _infer_type(value: Any, element: bool = False) -> Any:
+def _infer_type(value: Any, element: bool = False, exact: bool = True) -> Any:
     """The type of one Python value as a hashable shape (an atomic Spark
     type, or ``("array", e)``, ``("map", k, v)``, ``("struct", names,
     types)``); None = not native.  ``element`` marks the collection
     element itself, whose dict is a struct of its keys (a nested dict is
-    a map).  An empty list or dict has ``_VOID`` parts that
+    a map).  ``exact=False`` types atomic values by isinstance (see
+    ``_ATOMIC``).  An empty list or dict has ``_VOID`` parts that
     `_merge_types` resolves against any other type."""
-    atomic = _ATOMIC.get(type(value))
+    if exact:
+        atomic = _ATOMIC.get(type(value))
+    else:
+        atomic = next((t for c, t in _ATOMIC.items() if isinstance(value, c)), None)
     if atomic is not None:
-        if type(value) is int and not -(2**63) <= value < 2**63:
+        if atomic is _ATOMIC[int] and not -(2**63) <= value < 2**63:
             return None
         return atomic
     if type(value) is list:
-        inner = _merge_all(value)
+        inner = _merge_all(value, exact=exact)
         return None if inner is None else ("array", inner)
     if type(value) is tuple:
-        return _struct(tuple(f"_{i + 1}" for i in range(len(value))), value)
+        return _struct(tuple(f"_{i + 1}" for i in range(len(value))), value, exact)
     if type(value) is dict:
         if element:
-            return _struct(tuple(value), value.values())
-        keys, values = _merge_all(value), _merge_all(value.values())
+            return _struct(tuple(value), value.values(), exact)
+        keys, values = _merge_all(value, exact=exact), _merge_all(value.values(), exact=exact)
         return None if keys is None or values is None else ("map", keys, values)
     return None
 
 
-def _struct(names: tuple, values: Iterable[Any]) -> Any:
-    types = tuple(_infer_type(v) for v in values)
+def _struct(names: tuple, values: Iterable[Any], exact: bool) -> Any:
+    types = tuple(_infer_type(v, exact=exact) for v in values)
     if not names or None in types or not all(type(n) is str for n in names):
         return None
     return ("struct", names, types)
 
 
-def _merge_all(values: Iterable[Any], element: bool = False) -> Any:
+def _merge_all(values: Iterable[Any], element: bool = False, exact: bool = True) -> Any:
     """The one type every value fits (``_VOID`` when there are none)."""
     merged = _VOID
     for v in values:
-        merged = _merge_types(merged, _infer_type(v, element))
+        merged = _merge_types(merged, _infer_type(v, element, exact))
         if merged is None:
             return None
     return merged
@@ -142,8 +151,9 @@ def _merge_all(values: Iterable[Any], element: bool = False) -> Any:
 
 def _merge_types(a: Any, b: Any) -> Any:
     """The one type both values fit, or None when they differ: ``_VOID``
-    matches anything; arrays, maps and structs with the same field names
-    in the same order merge part by part."""
+    matches anything; arrays and maps merge part by part, and structs
+    with the same field names (in any order: a dict row converts by
+    name) merge field by field in ``a``'s order."""
     if a is None or b is None:
         return None
     if a == b:
@@ -155,9 +165,10 @@ def _merge_types(a: Any, b: Any) -> Any:
     if type(a) is not tuple or type(b) is not tuple or a[0] != b[0]:
         return None
     if a[0] == "struct":
-        if a[1] != b[1]:
+        if set(a[1]) != set(b[1]):
             return None
-        parts = tuple(_merge_types(x, y) for x, y in zip(a[2], b[2]))
+        fields = dict(zip(b[1], b[2]))
+        parts = tuple(_merge_types(x, fields[n]) for n, x in zip(a[1], a[2]))
         return None if None in parts else ("struct", a[1], parts)
     parts = tuple(_merge_types(x, y) for x, y in zip(a[1:], b[1:]))
     return None if None in parts else (a[0],) + parts
@@ -344,6 +355,10 @@ class ObjectFrame:
             return F.col(VALUE)
         return F.struct(*[self._df[c] for c in self._df.columns])
 
+    def _root_type(self) -> T.DataType:
+        """The Spark type of :meth:`_root` on a native frame."""
+        return self._df.schema[VALUE].dataType if self.is_scalar else self._df.schema
+
     def _value_column(self) -> Column:
         if not self.is_scalar:
             raise TypeError("operation requires a single-value collection; project a column first")
@@ -377,8 +392,6 @@ class ObjectFrame:
         return self._apply_expr(Expr(frames=(("attr", name),)))
 
     def __getitem__(self, key: Any) -> "ObjectFrame":
-        if isinstance(key, tuple):
-            key = list(key)  # a tuple of keys plucks, like a list
         if not self._pickled and not self.is_scalar:
             for k in key if isinstance(key, list) else [key]:
                 if k not in self._df.columns:
@@ -444,15 +457,15 @@ class ObjectFrame:
         the frame STAYS columnar; (3) only then the pickled replay."""
         fn = replayer(e)
         if not self._pickled:
-            root = self._root()
+            root, root_type = self._root(), self._root_type()
             try:
-                return self._select_value(compile_expr(e, root))
+                return self._select_value(compile_expr(e, root, root_type=root_type))
             except _NO_CATALYST_FORM:
                 pass
             out_type = self._sampled_type(fn)
             if out_type is not None:
                 try:
-                    return self._select_value(compile_expr(e, root, fallback_type=out_type))
+                    return self._select_value(compile_expr(e, root, out_type, root_type))
                 except _NO_CATALYST_FORM:
                     return self._select_value(replay_udf(fn, out_type)(root))
         return self._map_objects(fn)
@@ -467,7 +480,7 @@ class ObjectFrame:
             sample = fn(rows[0][0] if self.is_scalar else rows[0])
         except Exception:  # user code failing on the sample: pickled replay
             return None
-        return _spark_type(_infer_type(sample))
+        return _spark_type(_infer_type(sample, exact=False))
 
     def _indexed_pickled(self) -> DataFrame:
         """(value binary, __ord__ long): the element with its position.
@@ -663,7 +676,7 @@ class ObjectFrame:
         if isinstance(pred, Expr):
             if not self._pickled:
                 try:
-                    col = compile_expr(pred, self._root())
+                    col = compile_expr(pred, self._root(), root_type=self._root_type())
                     return self._make(self._df.filter(col if keep else ~col))
                 except _NO_CATALYST_FORM:
                     pass

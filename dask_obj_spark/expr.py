@@ -37,7 +37,10 @@ Design notes / deliberate deviations from the reference:
   ``compile_expr`` gives the replay's Python semantics: an ``int`` index
   into an array counts from the end when negative and raises when out
   of range; a list key plucks (``tuple(x[k] for k in key)`` in Python,
-  a struct of the items in Catalyst).
+  a struct of the items in Catalyst), while a tuple key is one key.  A
+  map lookup compiles to ``getItem`` for any key type when the caller
+  passes the root's Spark type; a missing key gives null (Spark's
+  semantics, not Python's ``KeyError``).
 - ``ObjectFrame`` records every element-wise broadcast (attribute, item,
   ``call``, operators, ``map``) as an ``Expr`` and runs it through one
   ladder: ``compile_expr``; then a Python UDF typed from one sampled
@@ -46,12 +49,14 @@ Design notes / deliberate deviations from the reference:
 
 from __future__ import annotations
 
+import functools
 import operator as _op
 import pickle
 from typing import Any, Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dask_obj_spark.functions.dispatch import dispatch_method
 
@@ -215,7 +220,7 @@ class Expr:
 
 
 def _make_replay(binary: dict, unary: dict):
-    """Build the one replay of recorded frames: ``(run, bind)``.
+    """Build the one replay of recorded frames, ``run(program, value, given)``.
 
     Nested defs over stdlib ``operator`` callables only, with no reference
     into this package: cloudpickle pickles them by value (``<locals>``
@@ -256,16 +261,10 @@ def _make_replay(binary: dict, unary: dict):
                 cur = unary[frame[1]](cur)
         return cur
 
-    def bind(program):
-        def element(value):
-            return run(program, value, True)
-
-        return element
-
-    return run, bind
+    return run
 
 
-_run, _bind = _make_replay(_BINARY_OPS, _UNARY_OPS)
+_run = _make_replay(_BINARY_OPS, _UNARY_OPS)
 
 
 def _program(expr: Expr) -> tuple:
@@ -296,7 +295,7 @@ def _program(expr: Expr) -> tuple:
 
 def replayer(expr: Expr) -> Callable[[Any], Any]:
     """``expr.eval`` as a worker-safe function of one element."""
-    return _bind(_program(expr))
+    return functools.partial(_run, _program(expr), given=True)
 
 
 def install_operators(cls: type, binary: Callable, unary: Callable) -> None:
@@ -363,27 +362,44 @@ def _jvm(build: Callable[[], Column], what: Any) -> Column:
         raise CompileError(f"{what!r} has no JVM literal form") from e
 
 
-def _operand_to_column(operand: Any, root: Column):
+def _operand_to_column(operand: Any, root: Column, root_type: Any):
     if isinstance(operand, Expr):
         # an operand with its own concrete root (named column / literal)
         # compiles against that root; only symbolic-rooted operands bind
         # to the enclosing expression's root column
         if operand.root is NO_VALUE:
-            return compile_expr(operand, root)
+            return compile_expr(operand, root, root_type=root_type)
         return compile_expr(operand, None)
     return operand
 
 
-def compile_expr(expr: Expr, root: Column | str | None = None, fallback_type=None) -> Column:
+def _part_type(dtype: Any, name: Any) -> Any:
+    """The type of field or item ``name`` of a ``dtype`` value; None when
+    either is unknown."""
+    if isinstance(dtype, T.StructType):
+        return dtype[name].dataType if name in dtype.fieldNames() else None
+    if isinstance(dtype, T.ArrayType):
+        return dtype.elementType
+    if isinstance(dtype, T.MapType):
+        return dtype.valueType
+    return None
+
+
+def compile_expr(
+    expr: Expr, root: Column | str | None = None, fallback_type=None, root_type: T.DataType | None = None
+) -> Column:
     """Compile recorded frames to a ``pyspark.sql.Column``.
 
     Mapping (SURVEY.md §3.3): attr → struct ``getField`` (or, when
     followed by a call frame, the JVM method dispatch table);
-    ``[i]`` with an ``int`` → :func:`index_column` (Python list indexing);
-    ``[k]`` → ``getItem``; operators → Column operators; ``F(func)`` and
-    undispatchable methods → Python-UDF replay of ``eval`` (requires
-    ``fallback_type``; raises :class:`CompileError` otherwise so the slow
-    path is always an explicit, visible choice).
+    ``[i]`` with an ``int`` → :func:`index_column` (Python list indexing),
+    unless the value is known to be a map; ``[k]`` → ``getItem`` (a map
+    key that is missing gives null, as in Spark); operators → Column
+    operators; ``F(func)`` and undispatchable methods → Python-UDF replay
+    of ``eval`` (requires ``fallback_type``; raises :class:`CompileError`
+    otherwise so the slow path is always an explicit, visible choice).
+    ``root_type``, the root Column's Spark type, is followed through
+    field and item access so a map's ``int`` key compiles as a key.
     """
     if root is None:
         if isinstance(expr.root, str):
@@ -396,7 +412,7 @@ def compile_expr(expr: Expr, root: Column | str | None = None, fallback_type=Non
         col = F.col(root)
     else:
         col = root
-    root_col = col
+    root_col, dtype = col, root_type
 
     frames = list(expr.frames)
     i = 0
@@ -407,32 +423,32 @@ def compile_expr(expr: Expr, root: Column | str | None = None, fallback_type=Non
             name = frame[1]
             nxt = frames[i + 1] if i + 1 < len(frames) else None
             if nxt is not None and nxt[0] == "call":
-                args = tuple(_operand_to_column(a, root_col) for a in nxt[1])
-                kwargs = {k: _operand_to_column(v, root_col) for k, v in nxt[2].items()}
+                args = tuple(_operand_to_column(a, root_col, root_type) for a in nxt[1])
+                kwargs = {k: _operand_to_column(v, root_col, root_type) for k, v in nxt[2].items()}
                 dispatched = dispatch_method(name, col, *args, **kwargs)
                 if dispatched is None:
                     return _fallback_udf(expr, frames[:i], col, fallback_type, name)
-                col = dispatched
+                col, dtype = dispatched, None
                 i += 2
                 continue
-            col = col.getField(name)
+            col, dtype = col.getField(name), _part_type(dtype, name)
         elif kind == "getitem":
             key = frame[1]
             if isinstance(key, list):
-                col = F.struct(*[col.getItem(k) for k in key])
+                col, dtype = F.struct(*[col.getItem(k) for k in key]), None
             elif isinstance(key, slice):
                 col = slice_column(col, key)
-            elif isinstance(key, int) and not isinstance(key, bool):
-                col = index_column(col, key)
+            elif isinstance(key, int) and not isinstance(key, bool) and not isinstance(dtype, T.MapType):
+                col, dtype = index_column(col, key), _part_type(dtype, key)
             else:
-                col = _jvm(lambda: col.getItem(key), key)
+                col, dtype = _jvm(lambda: col.getItem(key), key), _part_type(dtype, key)
         elif kind == "op":
             _, opname, operand, reflected = frame
-            other = _operand_to_column(operand, root_col)
+            other = _operand_to_column(operand, root_col, root_type)
             fn = _COLUMN_BINARY[opname]
-            col = _jvm(lambda: fn(other, col) if reflected else fn(col, other), operand)
+            col, dtype = _jvm(lambda: fn(other, col) if reflected else fn(col, other), operand), None
         elif kind == "unary":
-            col = _COLUMN_UNARY[frame[1]](col)
+            col, dtype = _COLUMN_UNARY[frame[1]](col), None
         elif kind in ("call", "func"):
             return _fallback_udf(expr, frames[:i], col, fallback_type, kind)
         else:  # pragma: no cover

@@ -7,6 +7,7 @@ import os
 import subprocess
 import sys
 
+import numpy as np
 import pytest
 from pyspark import cloudpickle
 
@@ -37,16 +38,26 @@ SCALAR_INTS = [3, 5, 7]
 ARRAYS = [[1, 2, 3], [4, 5]]
 STRS = ["ab", "cD"]
 DICTS = [{"a": 1, "b": "xy", "p": (1, 2)}, {"a": 2, "b": "zw", "p": (3, 4)}]
-NESTED_DDL = "value struct<x: bigint, y: string, q: struct<z: bigint>>"
-NESTED = [((1, "u", (10,)),), ((2, "v", (20,)),)]  # struct values with named fields
+# (rows, DDL): frames built from a DataFrame
+NESTED = ([((1, "u", (10,)),), ((2, "v", (20,)),)], "value struct<x: bigint, y: string, q: struct<z: bigint>>")
+MAPS = ([({1: "a", 2: "b"},), ({2: "c"},)], "value map<bigint, string>")
+STR_MAPS = ([({"k": 1},), ({"j": 2},)], "value map<string, bigint>")
+NESTED_MAPS = ([(1, {1: "a"}), (2, {3: "c"})], "a long, m map<bigint, string>")
 FLAT = [{"a": 1, "b": "xy"}, {"a": 2, "b": "zw"}]
 POINTS = [P(3, 4, P(1)), P(6, 8, P(2))]
 MIXED = [[1, "a", 2.5], [2, "b"]]  # mixed element types: pickled lists
 PDICTS = [{"a": 1, "b": P(1)}, {"a": 2, "b": P(2)}]
+TUPLE_KEYED = [{(0, 1): "a", 0: "z"}, {(0, 1): "b", 0: "y"}]  # non-str keys: pickled
+GRIDS = [np.arange(6).reshape(2, 3), np.arange(6, 12).reshape(2, 3)]
 
 
 def pluck(keys):
     return lambda x: tuple(x[k] for k in keys)
+
+
+def get(key):
+    """A map lookup: a missing key gives None, as Spark's ``getItem``."""
+    return lambda x: x.get(key)
 
 
 def call(name, *args):
@@ -88,6 +99,9 @@ CASES = {
         ("slice-neg", ARRAYS, None, *same(lambda x: x[-2:-1]), None),
         ("str-slice", STRS, None, *same(lambda x: x[:1]), None),
         ("pluck", NESTED, None, *same(lambda x: x[["y", "x"]]), pluck(["y", "x"])),
+        ("map-int-key", MAPS, None, *same(lambda x: x[2]), None),
+        ("map-int-key-missing", MAPS, None, *same(lambda x: x[1]), get(1)),
+        ("map-str-key-missing", STR_MAPS, None, *same(lambda x: x["k"]), get("k")),
         ("method-known", STRS, None, *call("upper"), None),
         ("method-known-args", STRS, None, *call("find", "D"), None),
         ("method-unknown", STRS, None, *call("swapcase"), None),
@@ -96,7 +110,8 @@ CASES = {
     ],
     "struct": [
         ("attr", DICTS, None, *same(lambda x: x.a), None),
-        ("nested-attr", "a long, q struct<z: bigint>", None, *same(lambda x: x.q.z), None),
+        ("nested-attr", ([(1, (10,)), (2, (20,))], "a long, q struct<z: bigint>"), None, *same(lambda x: x.q.z), None),
+        ("nested-map-int-key", NESTED_MAPS, None, *same(lambda x: x.m[1]), lambda x: x.m.get(1)),
         ("item", DICTS, None, *same(lambda x: x["b"]), None),
         ("pluck", DICTS, None, *same(lambda x: x[["b", "a"]]), pluck(["b", "a"])),
         ("method-known-name", FLAT, None, *call("count", 1), None),
@@ -112,6 +127,8 @@ CASES = {
         ("item-out-of-range", MIXED, None, *same(lambda x: x[5]), None),
         ("slice", MIXED, None, *same(lambda x: x[1:]), None),
         ("pluck", PDICTS, None, *same(lambda x: x[["b", "a"]]), pluck(["b", "a"])),
+        ("tuple-key", TUPLE_KEYED, None, *same(lambda x: x[0, 1]), None),
+        ("tuple-key-grid", GRIDS, None, *same(lambda x: x[1, 2]), None),
         ("method-known", [Str("ab"), Str("cD")], None, *call("upper"), None),
         ("method-unknown", POINTS, None, *call("norm"), None),
         *_ops([Int(3), Int(5), Int(7)]),
@@ -131,10 +148,8 @@ def _outcome(thunk):
 
 @pytest.mark.parametrize("mode,items,project,on_frame,on_elem,reference", PARAMS)
 def test_broadcast_parity(spark, mode, items, project, on_frame, on_elem, reference):
-    if items is NESTED:
-        frame = ObjectFrame(spark.createDataFrame(NESTED, NESTED_DDL))
-    elif isinstance(items, str):
-        frame = ObjectFrame(spark.createDataFrame([(1, (10,)), (2, (20,))], items))
+    if isinstance(items, tuple):
+        frame = ObjectFrame(spark.createDataFrame(*items))
     else:
         frame = ObjectFrame(items, spark)
     if project is not None:
@@ -154,9 +169,36 @@ def test_native_forms_stay_columnar(spark):
     """The forms with a Catalyst or sampled-type form never go pickled."""
     arrays = ObjectFrame(ARRAYS, spark)
     strs = ObjectFrame(STRS, spark)
-    nested = ObjectFrame(spark.createDataFrame(NESTED, NESTED_DDL))
+    nested = ObjectFrame(spark.createDataFrame(*NESTED))
     for out in (arrays[-1], arrays[1:], strs[0], strs.call("swapcase"), nested.q.z, nested[["y", "x"]]):
         assert not out.is_pickled
+
+
+def _plan(frame):
+    return frame.df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_map_lookups_run_in_catalyst(spark):
+    """A map's key compiles to ``getItem`` whatever the key's type, so no
+    lookup runs as a Python UDF."""
+    maps = ObjectFrame(spark.createDataFrame(*MAPS))
+    nested = ObjectFrame(spark.createDataFrame(*NESTED_MAPS))
+    for out in (maps[1], maps.map(Expr()[2]), nested.m[1], nested.map(Expr().m[3])):
+        assert not out.is_pickled
+        assert "EvalPython" not in _plan(out)
+    assert maps[1].compute() == ["a", None]
+
+
+def test_numpy_results_stay_columnar(spark):
+    """A sampled result types by isinstance: a numpy float is a double."""
+    roots = ObjectFrame([1.0, 4.0], spark).map(np.sqrt)
+    assert not roots.is_pickled
+    assert roots.df.schema[0].dataType.simpleString() == "double"
+    assert roots.sum() == 3.0
+    assert roots.compute() == [1.0, 2.0]
+    lists = ObjectFrame([1.0, 4.0], spark).map(lambda v: [np.float64(v)])
+    assert lists.df.schema[0].dataType.simpleString() == "array<double>"
+    assert lists.compute() == [[1.0], [4.0]]
 
 
 def test_unknown_names_still_raise_eagerly(spark):
@@ -193,7 +235,7 @@ def test_broadcast_over_empty_frame(spark):
         [2**70, 1],
         [{"a": 2**64}],
         [{"a": None}],
-        [{"b": 1, "a": 2}, {"a": 3, "b": 4}],
+        [{"a": 1}, {"a": 2, "b": 3}],
         [{"a": {"k": 1}}, {"a": {"k": "v"}}],
         [Int(1), 2],
     ],
@@ -224,6 +266,20 @@ def test_typed_ingest_schema(spark, items, schema):
     assert frame.df.schema.simpleString() == schema
     # struct frames come back as Rows, which compare as tuples
     assert frame.compute() == [tuple(x.values()) if isinstance(x, dict) else x for x in items]
+
+
+def test_reordered_dict_keys_stay_native(spark):
+    """Dicts convert to struct rows by key, so key order does not decide
+    the mode; the first element's order names the fields."""
+    frame = ObjectFrame([{"b": 1, "a": 2, "p": (1, "x")}, {"a": 3, "p": (2, "y"), "b": 4}], spark)
+    assert not frame.is_pickled
+    assert frame.df.schema.simpleString() == "struct<b:bigint,a:bigint,p:struct<_1:bigint,_2:string>>"
+    rows = frame.compute()
+    assert [r.asDict(recursive=True) for r in rows] == [
+        {"b": 1, "a": 2, "p": {"_1": 1, "_2": "x"}},
+        {"b": 4, "a": 3, "p": {"_1": 2, "_2": "y"}},
+    ]
+    assert frame.a.compute() == [2, 3]
 
 
 def test_benchmark_dict_schema_unchanged(spark):
