@@ -145,19 +145,19 @@ def _registration_rank(name: str) -> int:
 def load_all_queries() -> None:
     """Import every module that registers queries (idempotent)."""
     import dask_obj_spark.queries_core  # noqa: F401
+    import dask_obj_spark.queries_similarity  # noqa: F401
     import dask_obj_spark.queries_relational  # noqa: F401
     import dask_obj_spark.queries_tpch  # noqa: F401
     import dask_obj_spark.queries_tierd  # noqa: F401
-    import dask_obj_spark.operators.corpus  # noqa: F401
-    import dask_obj_spark.operators.dedup  # noqa: F401
-    import dask_obj_spark.operators.similarity  # noqa: F401
-    import dask_obj_spark.operators.scale  # noqa: F401
-    import dask_obj_spark.operators.text  # noqa: F401
-    import dask_obj_spark.operators.timeseries  # noqa: F401
-    import dask_obj_spark.operators.multimodal  # noqa: F401
-    import dask_obj_spark.operators.retrieval  # noqa: F401
-    import dask_obj_spark.operators.ml  # noqa: F401
-    import dask_obj_spark.streaming.windows  # noqa: F401
+    import dask_obj_spark.queries_corpus  # noqa: F401
+    import dask_obj_spark.queries_dedup  # noqa: F401
+    import dask_obj_spark.queries_scale  # noqa: F401
+    import dask_obj_spark.queries_text  # noqa: F401
+    import dask_obj_spark.queries_timeseries  # noqa: F401
+    import dask_obj_spark.queries_multimodal  # noqa: F401
+    import dask_obj_spark.queries_retrieval  # noqa: F401
+    import dask_obj_spark.queries_ml  # noqa: F401
+    import dask_obj_spark.queries_streaming  # noqa: F401
 
     ordered = sorted(QUERIES, key=_registration_rank)  # stable within rank
     if list(QUERIES) != ordered:

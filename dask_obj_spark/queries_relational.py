@@ -1314,7 +1314,7 @@ def sqlrec_components(spark, sf_dir):
 def _attach_sqlrec_oracle() -> None:
     """The oracle is the corpus module's recursive-CTE cluster SQL —
     attached lazily to avoid a circular import at module load."""
-    from dask_obj_spark.operators.corpus import _clusters_oracle
+    from dask_obj_spark.queries_corpus import _clusters_oracle
     from dask_obj_spark.queries import ORACLE
 
     ORACLE["sqlrec_components"] = _clusters_oracle()
