@@ -35,11 +35,22 @@ def duck_porthash(expr: str, salt: str = "") -> str:
     return f"('0x' || substr(md5({e}), 1, 15))::BIGINT"
 
 
+def ws_tokens(col: Column | str) -> Column:
+    """Whitespace tokens of a text column: ``split(trim(col), '\\s+')``.
+    The one Spark tokenizer every word-level operator shares."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.split(F.trim(c), r"\s+")
+
+
+def duck_ws_tokens(expr: str) -> str:
+    """The identical tokenization as a DuckDB SQL expression string."""
+    return f"string_split_regex(trim({expr}), '\\s+')"
+
+
 def word_shingles(col: Column | str, n: int) -> Column:
     """Distinct word n-gram shingles of a text column (JVM-side, no UDF):
     split on whitespace → slide an n-window via sequence+transform."""
-    c = F.col(col) if isinstance(col, str) else col
-    words = F.split(F.trim(c), r"\s+")
+    words = ws_tokens(col)
     return F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
@@ -51,8 +62,7 @@ def word_shingles(col: Column | str, n: int) -> Column:
 def word_ngrams(col: Column | str, n: int) -> Column:
     """ALL word n-grams (non-distinct, corpus-frequency semantics) —
     `word_shingles` minus the per-doc distinct."""
-    c = F.col(col) if isinstance(col, str) else col
-    words = F.split(F.trim(c), r"\s+")
+    words = ws_tokens(col)
     return F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
         lambda i: F.array_join(F.slice(words, i + 1, n), " "),
@@ -61,7 +71,7 @@ def word_ngrams(col: Column | str, n: int) -> Column:
 
 def duck_word_ngrams(expr: str, n: int) -> str:
     """Identical non-distinct n-grams as a DuckDB SQL expression string."""
-    words = f"string_split_regex(trim({expr}), '\\s+')"
+    words = duck_ws_tokens(expr)
     return (
         f"list_transform("
         f"range(greatest(len({words}) - {n}, 0) + 1), "
@@ -71,7 +81,7 @@ def duck_word_ngrams(expr: str, n: int) -> str:
 
 def duck_word_shingles(expr: str, n: int) -> str:
     """Identical shingling as a DuckDB SQL expression string."""
-    words = f"string_split_regex(trim({expr}), '\\s+')"
+    words = duck_ws_tokens(expr)
     return (
         f"list_distinct(list_transform("
         f"range(greatest(len({words}) - {n}, 0) + 1), "

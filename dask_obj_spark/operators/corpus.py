@@ -52,6 +52,7 @@ from dask_obj_spark.functions.hashing import (
     porthash,
     word_ngrams,
     word_shingles,
+    ws_tokens,
 )
 from dask_obj_spark.functions.vec import fixed_dot, fixed_norm
 
@@ -251,7 +252,7 @@ def pack_bins(
     """Contiguous token-budget packing: within each stream (ordered by
     id), bin = exclusive-prefix token count // budget.  All integer
     arithmetic — bit-exact on any engine."""
-    n_tok = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+    n_tok = F.size(ws_tokens(F.col(text_col)))
     w = (
         Window.partitionBy(stream_col)
         .orderBy(id_col)
@@ -285,7 +286,7 @@ def pack_payload(
     ordering is imposed by `array_sort` over (id, text) structs, so the
     result is deterministic regardless of partitioning/arrival order
     (never rely on collect_list order)."""
-    n_tok = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+    n_tok = F.size(ws_tokens(F.col(text_col)))
     w = (
         Window.partitionBy(stream_col)
         .orderBy(id_col)
@@ -402,7 +403,7 @@ def doc_distinct_shingles(
     ncores = df.sparkSession.sparkContext.defaultParallelism
     words = df.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("pos", "w"),
+        F.posexplode(ws_tokens(F.col(text_col))).alias("pos", "w"),
     ).repartition(ncores, F.col("doc_id"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     grams = [F.col("w")] + [F.lead("w", i).over(w) for i in range(1, shingle_n)]
@@ -737,7 +738,7 @@ def bpe_learn_merges(
     sym = _bpe_pair_w2(
         df.select(
             F.col(id_col).alias("doc_id"),
-            F.posexplode(ws_tokens_corpus(text_col)).alias("i", "s"),
+            F.posexplode(ws_tokens(text_col)).alias("i", "s"),
         )
     ).localCheckpoint(eager=True)
     rows = []
@@ -753,13 +754,6 @@ def bpe_learn_merges(
     return spark.createDataFrame(
         rows, "round INT, w1 STRING, w2 STRING, n BIGINT"
     )
-
-
-def ws_tokens_corpus(c):
-    """Whitespace tokens (local copy to avoid a cross-module import in
-    the worker closure)."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.split(F.trim(col), r"\s+")
 
 
 # -- triangle counting --------------------------------------------------------
@@ -842,7 +836,7 @@ def bpe_apply_stats(
     sym = _bpe_pair_w2(
         df.select(
             F.col(id_col).alias("doc_id"),
-            F.posexplode(ws_tokens_corpus(text_col)).alias("i", "s"),
+            F.posexplode(ws_tokens(text_col)).alias("i", "s"),
         )
     ).localCheckpoint(eager=True)
     before = sym.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tokens"))
@@ -1265,7 +1259,7 @@ def bpe_char_fit(
     builder whose output feeds `bpe_char_encode`.
     """
     word_counts = (
-        df.select(F.explode(ws_tokens_corpus(text_col)).alias("w"))
+        df.select(F.explode(ws_tokens(text_col)).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1477,7 +1471,7 @@ def bpe_char_roundtrip(
     src = df.select(
         F.col(id_col).alias("doc_id"),
         F.filter(
-            ws_tokens_corpus(F.coalesce(F.col(text_col), F.lit(""))),
+            ws_tokens(F.coalesce(F.col(text_col), F.lit(""))),
             lambda w: w != "",
         ).alias("words"),
     )
@@ -1789,7 +1783,7 @@ def epoch_schedule(
 
     Returns (source, n_tokens, weight_x1m, epochs_x1m, eff_tokens,
     regime)."""
-    n_tok = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+    n_tok = F.size(ws_tokens(F.col(text_col)))
     per = (
         df.select(F.col(source_col).alias("source"), n_tok.alias("nt"))
         .groupBy("source")
@@ -2020,7 +2014,7 @@ def fim_transform(
     Guarantees pinned in tests: prefix/middle/suffix are non-empty for
     fim = 1 rows, and ``prefix + middle + suffix`` re-concatenates to
     the whitespace-normalized source (lossless)."""
-    words = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
+    words = ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
     n = F.size(words)
     h1 = porthash(F.col(id_col).cast("string"), "fim1")
     h2 = porthash(F.col(id_col).cast("string"), "fim2")
@@ -2079,7 +2073,7 @@ def span_corruption(
     array_sort(collect_list(struct(i, piece))).  Nothing all-pairs, no
     UDF, no driver state."""
     words = F.filter(
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
+        ws_tokens(F.coalesce(F.col(text_col), F.lit(""))),
         lambda x: x != "",
     )
     toks = df.select(
@@ -2291,7 +2285,7 @@ def pack_segments(
     chains both windows and the final aggregate behind one Exchange.
     The segment string assembles order-exactly via
     array_sort(collect_list(struct)) — never raw collect_list order."""
-    n_tok = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+    n_tok = F.size(ws_tokens(F.col(text_col)))
     w = (
         Window.partitionBy(stream_col)
         .orderBy(id_col)
@@ -2431,7 +2425,7 @@ def length_histogram(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     one ≤64-row aggregate; token sums exact BIGINTs."""
     n = F.size(
         F.filter(
-            F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
+            ws_tokens(F.coalesce(F.col(text_col), F.lit(""))),
             lambda x: x != "",
         )
     ).cast("bigint")
@@ -2481,7 +2475,7 @@ def decontam_impact(
         F.col(source_col).alias("source"),
         F.size(
             F.filter(
-                F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
+                ws_tokens(F.coalesce(F.col(text_col), F.lit(""))),
                 lambda x: x != "",
             )
         )

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dask_obj_spark.functions.hashing import porthash, word_shingles
+from dask_obj_spark.functions.hashing import porthash, word_shingles, ws_tokens
 from dask_obj_spark.functions.vec import fixed_dot, fixed_norm
 from dask_obj_spark.operators.similarity import DIM as _SIM_DIM
 
@@ -220,7 +220,7 @@ def simhash_fingerprint(df: DataFrame, id_col: str, text_col: str, bits: int = S
     expressions are generated, all codegen'd."""
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
+        F.explode(ws_tokens(F.col(text_col))).alias("tok"),
     ).withColumn("h", porthash(F.col("tok"), "sim"))
     votes = toks.groupBy("doc_id").agg(
         *[
@@ -491,7 +491,7 @@ def prefix_jaccard_pairs(
     candidate-bounded; the prefix guarantees no true pair is lost
     (sound, not heuristic)."""
     toks = (
-        df.select(F.col(id_col).alias("id"), F.explode_outer(F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))).alias("w"))
+        df.select(F.col(id_col).alias("id"), F.explode_outer(F.array_distinct(ws_tokens(F.col(text_col)))).alias("w"))
         .distinct()
         .localCheckpoint(eager=True)
     )

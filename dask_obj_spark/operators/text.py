@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from dask_obj_spark.functions.hashing import porthash
+from dask_obj_spark.functions.hashing import porthash, ws_tokens
 
 # Shared stopword profiles (tiny on purpose: they ride inside the plan as
 # literal arrays — at 100 TB these become a broadcast dict, same plan shape).
@@ -50,11 +50,6 @@ LANG_PROFILES: dict[str, list[str]] = {
 STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "it", "for", "on"]
 
 BPE_TOKEN_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
-
-
-def ws_tokens(c: Column | str) -> Column:
-    c = F.col(c) if isinstance(c, str) else c
-    return F.split(F.trim(c), r"\s+")
 
 
 def bpe_tokens(c: Column | str) -> Column:
@@ -298,7 +293,7 @@ def remove_boilerplate_segments(
     linear in the corpus — so it carries no broadcast hint (AQE
     broadcasts at demo scale, shuffles the anti-join beyond); the
     string form here keeps the DuckDB oracle replayable verbatim."""
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = ws_tokens(F.col(text_col))
     nseg = F.floor((F.size(words) - 1) / seg_words) + 1
     segs = F.transform(
         F.sequence(F.lit(0), nseg - 1),
@@ -914,7 +909,7 @@ def readability_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     cross-engine.  Sentence count is max(1, [.!?]+ runs); empty docs
     emit zero counts and the degenerate score of the constant term."""
     t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.size(F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != ""))
+    words = F.size(F.filter(ws_tokens(t), lambda x: x != ""))
     sents = F.greatest(
         F.lit(1), F.size(F.regexp_extract_all(t, F.lit(r"[.!?]+"), 0))
     )
@@ -955,7 +950,7 @@ def code_detect(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
     indented = F.size(F.regexp_extract_all(t, F.lit(r"(?m)^(?:    |\t)"), 0))
     words = F.greatest(
-        F.size(F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != "")),
+        F.size(F.filter(ws_tokens(t), lambda x: x != "")),
         F.lit(1),
     )
     score = (

@@ -9,6 +9,7 @@ from dask_obj_spark.functions.hashing import (
     duck_porthash,
     duck_word_ngrams,
     duck_word_shingles,
+    duck_ws_tokens,
     porthash,
     word_ngrams,
 )
@@ -113,10 +114,10 @@ def corpus_dedup_clusters_q(spark, sf_dir):
 
 @query(
     "corpus_pack_bins",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id, source,
-             len(string_split_regex(trim(text), '\\s+')) AS n_tokens
+             len({duck_ws_tokens("text")}) AS n_tokens
       FROM documents
     ), c AS (
       SELECT doc_id, source, n_tokens,
@@ -140,14 +141,14 @@ def corpus_pack_bins_q(spark, sf_dir):
 @query(
     "pipeline_pack_export",
     oracle=_clusters_ctes()
-    + """
+    + f"""
     , keepers AS (
       SELECT d.doc_id, d.source, d.text
       FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
       WHERE coalesce(c.cluster_id, d.doc_id) = d.doc_id
     ), kt AS (
       SELECT doc_id, source, text,
-             len(string_split_regex(trim(text), '\\s+')) AS n_tokens
+             len({duck_ws_tokens("text")}) AS n_tokens
       FROM keepers
     ), kc AS (
       SELECT doc_id, source, text, n_tokens,
@@ -187,10 +188,10 @@ def pipeline_pack_export_q(spark, sf_dir):
 
 @query(
     "corpus_pack_payload",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id, source, text,
-             len(string_split_regex(trim(text), '\\s+')) AS n_tokens
+             len({duck_ws_tokens("text")}) AS n_tokens
       FROM documents
     ), c AS (
       SELECT doc_id, source, text, n_tokens,
@@ -567,7 +568,7 @@ _CAPSTONE_CHUNK, _CAPSTONE_STRIDE, _CAPSTONE_BUDGET = 32, 24, 256
 
 def _capstone_semantic_oracle() -> str:
     """Composed from the SAME oracle builders the component queries use
-    (`_semantic_cells_ctes` from operators/dedup.py, `_chunk_ctes`
+    (`_semantic_cells_ctes` from queries_dedup.py, `_chunk_ctes`
     above) — changing an operator's replay logic changes the capstone
     replay with it."""
     from dask_obj_spark.queries_dedup import _semantic_cells_ctes
@@ -681,10 +682,10 @@ def _bpe_oracle(rounds: int) -> str:
     """Generate the EXACT k-round BPE oracle as chained CTE stages —
     the same windows/gaps-and-islands algorithm, unrolled."""
     ctes = [
-        """sym0 AS (
+        f"""sym0 AS (
       SELECT doc_id,
-             generate_subscripts(string_split_regex(trim(text), '\\s+'), 1) AS i,
-             unnest(string_split_regex(trim(text), '\\s+')) AS s
+             generate_subscripts({duck_ws_tokens("text")}, 1) AS i,
+             unnest({duck_ws_tokens("text")}) AS s
       FROM documents
     )"""
     ]
@@ -1062,7 +1063,7 @@ def _semantic_contamination_oracle(
         + f""", pairs AS (
       SELECT a.vid AS vid, b.vid AS eval_vid,
              floor(({cos}) * 1000000.0)::BIGINT AS cos_x1m
-      FROM cells a JOIN cells b ON a.cell = b.cell
+      FROM cells a JOIN cells b ON a.cid = b.cid
       WHERE a.vid % {eval_mod} <> {eval_rem} AND b.vid % {eval_mod} = {eval_rem}
     )
     SELECT vid, eval_vid, cos_x1m FROM (
@@ -1101,11 +1102,11 @@ def corpus_bpe_encode_rowsonly_q(spark, sf_dir):
 
 @query(
     "corpus_bpe_roundtrip",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT doc_id,
              list_filter(
-               string_split_regex(trim(coalesce(text, '')), '\\s+'),
+               {duck_ws_tokens("coalesce(text, '')")},
                x -> x <> ''
              ) AS ws
       FROM documents
@@ -1310,7 +1311,7 @@ def _epoch_schedule_oracle(budget_mult: int, rstar: float) -> str:
     return f"""
     WITH per AS (
       SELECT source,
-             sum(len(string_split_regex(trim(text), '\\s+')))::BIGINT AS n_s
+             sum(len({duck_ws_tokens("text")}))::BIGINT AS n_s
       FROM documents GROUP BY source
     ), w AS (
       SELECT source, n_s,
@@ -1458,7 +1459,7 @@ def _fim_oracle() -> str:
     return f"""
     WITH w AS (
       SELECT doc_id,
-             string_split_regex(trim(coalesce(text, '')), '\\s+') AS ws
+             {duck_ws_tokens("coalesce(text, '')")} AS ws
       FROM documents
     ), cuts AS (
       SELECT doc_id, ws, len(ws) AS n,
@@ -1502,7 +1503,7 @@ def _span_corruption_oracle(start_mod: int = 7, span_len: int = 3) -> str:
     return f"""
     WITH w AS (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
+             list_filter({duck_ws_tokens("coalesce(text, '')")},
                          x -> x <> '') AS ws
       FROM documents
     ), toks AS (
@@ -1653,10 +1654,10 @@ def corpus_leakage_safe_split_q(spark, sf_dir):
 
 @query(
     "corpus_pack_segments",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id, source,
-             len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_tokens
+             len({duck_ws_tokens("text")})::BIGINT AS n_tokens
       FROM documents
     ), binned AS (
       SELECT doc_id, source, n_tokens,
@@ -1752,7 +1753,7 @@ def _length_hist_oracle() -> str:
     return f"""
     WITH t AS (
       SELECT len(list_filter(
-               string_split_regex(trim(coalesce(text, '')), '\\s+'),
+               {duck_ws_tokens("coalesce(text, '')")},
                x -> x <> ''))::BIGINT AS n
       FROM documents
     ), b AS (
@@ -1788,8 +1789,7 @@ def corpus_length_histogram_q(spark, sf_dir):
       WHERE s.doc_id % 20 <> 0
     ), train AS (
       SELECT d.doc_id, d.source,
-             len(list_filter(string_split_regex(trim(coalesce(d.text, '')),
-                 '\\s+'), x -> x <> ''))::BIGINT AS n_tokens,
+             len(list_filter({duck_ws_tokens("coalesce(d.text, '')")}, x -> x <> ''))::BIGINT AS n_tokens,
              CASE WHEN f.doc_id IS NULL THEN 0 ELSE 1 END AS dropped
       FROM documents d LEFT JOIN flagged f ON d.doc_id = f.doc_id
       WHERE d.doc_id % 20 <> 0

@@ -4,7 +4,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dask_obj_spark.functions.hashing import duck_porthash, duck_word_shingles
+from dask_obj_spark.functions.hashing import (
+    duck_porthash,
+    duck_word_shingles,
+    duck_ws_tokens,
+)
 from dask_obj_spark.functions.vec import DUCK, cosine_sql
 from dask_obj_spark.operators.dedup import (
     SIMHASH_BITS,
@@ -27,6 +31,7 @@ from dask_obj_spark.operators.dedup import (
 )
 from dask_obj_spark.operators.similarity import DIM as _SIM_DIM
 from dask_obj_spark.queries import query
+from dask_obj_spark.queries_similarity import _duck_ivf_cells
 from dask_obj_spark.sources import load_table
 
 
@@ -123,17 +128,33 @@ def dedup_minhash_pairs_q(spark, sf_dir):
     return minhash_candidate_pairs(docs, "doc_id", "text", 16, 4, 4, 0.5)
 
 
+def _duck_shingle_sizes(n: int, max_freq: int | None = None) -> str:
+    """CTEs ``sh(doc_id, shingle)`` — each document's distinct word
+    n-gram shingles, minus those in more than ``max_freq`` documents when
+    given (the `max_shingle_freq` skew guard) — and ``sizes(doc_id,
+    n_sh)``, the operands of every exact shingle-Jaccard oracle."""
+    shingles = f"""
+      SELECT DISTINCT doc_id, unnest({duck_word_shingles("text", n)}) AS shingle
+      FROM documents
+    """
+    if max_freq is None:
+        head = f"sh AS ({shingles})"
+    else:
+        head = f"""sh0 AS ({shingles}), hot AS (
+      SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > {max_freq}
+    ), sh AS (
+      SELECT doc_id, shingle FROM sh0 WHERE shingle NOT IN (SELECT shingle FROM hot)
+    )"""
+    return head + """, sizes AS (
+      SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
+    )"""
+
+
 @query(
     "dedup_ngram_jaccard",
-    oracle="""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, unnest("""
-    + duck_word_shingles("text", 4)
-    + """) AS shingle
-      FROM documents
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
+    oracle="WITH "
+    + _duck_shingle_sizes(4)
+    + """, inter AS (
       SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_common
       FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
       GROUP BY a.doc_id, b.doc_id
@@ -153,19 +174,9 @@ def dedup_ngram_jaccard_q(spark, sf_dir):
 
 @query(
     "dedup_ngram_jaccard_capped",
-    oracle="""
-    WITH sh0 AS (
-      SELECT DISTINCT doc_id, unnest("""
-    + duck_word_shingles("text", 4)
-    + """) AS shingle
-      FROM documents
-    ), hot AS (
-      SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > 2
-    ), sh AS (
-      SELECT doc_id, shingle FROM sh0 WHERE shingle NOT IN (SELECT shingle FROM hot)
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
+    oracle="WITH "
+    + _duck_shingle_sizes(4, max_freq=2)
+    + """, inter AS (
       SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_common
       FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
       GROUP BY a.doc_id, b.doc_id
@@ -189,9 +200,9 @@ def dedup_ngram_jaccard_capped_q(spark, sf_dir):
 # fingerprint computation as a DuckDB CTE chain, shared by the fingerprint
 # and near-pair oracles (ends with the `fp` relation: doc_id, fingerprint)
 _DUCK_SIMHASH_FP = (
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
+      SELECT doc_id, unnest({duck_ws_tokens("text")}) AS tok
       FROM documents
     ), hashed AS (
       SELECT doc_id, """
@@ -266,28 +277,17 @@ def dedup_embedding_cosine_q(spark, sf_dir):
 
 
 def _semantic_cells_ctes(tau: float, cell_mod: int, dim: int) -> str:
-    """The WITH-chain (base → cents → assign → ranked → cells → dropped)
-    replaying `semantic_dedup`'s deterministic cell index — shared by
-    the dedup oracle and the capstone pipeline oracle in
-    operators/corpus.py so the replay logic exists exactly once."""
-    cos_assign = cosine_sql("b.v", "c.cv", dim, DUCK)
+    """The WITH-chain (base → IVF cells → dropped) replaying
+    `semantic_dedup`'s deterministic cell index — shared by the dedup
+    oracle and the capstone pipeline oracle in queries_corpus.py so the
+    replay logic exists exactly once."""
     cos_pair = cosine_sql("a.v", "b.v", dim, DUCK)
     return f"""
     WITH base AS (
       SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-    ), cents AS (
-      SELECT vid AS cid, v AS cv FROM base WHERE vid % {cell_mod} = 1
-    ), assign AS (
-      SELECT b.vid, b.v, c.cid, {cos_assign} AS cs FROM base b, cents c
-    ), ranked AS (
-      SELECT vid, v, cid,
-             row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn
-      FROM assign
-    ), cells AS (
-      SELECT vid, v, cid AS cell FROM ranked WHERE rn = 1
-    ), dropped AS (
+    ), {_duck_ivf_cells(cell_mod, dim)}, dropped AS (
       SELECT DISTINCT a.vid
-      FROM cells a JOIN cells b ON a.cell = b.cell AND b.vid < a.vid
+      FROM cells a JOIN cells b ON a.cid = b.cid AND b.vid < a.vid
       WHERE round({cos_pair}, 6) >= {tau}
     )"""
 
@@ -296,7 +296,7 @@ def _semantic_dedup_oracle(tau: float, cell_mod: int, dim: int) -> str:
     return (
         _semantic_cells_ctes(tau, cell_mod, dim)
         + """
-    SELECT c.vid, c.cell, d.vid IS NULL AS keep
+    SELECT c.vid, c.cid AS cell, d.vid IS NULL AS keep
     FROM cells c LEFT JOIN dropped d ON c.vid = d.vid
     """
     )
@@ -331,10 +331,10 @@ def dedup_fuzzy_names_q(spark, sf_dir):
 
 @query(
     "dedup_prefix_jaccard",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT DISTINCT doc_id AS id,
-             unnest(list_distinct(string_split_regex(trim(text), '\\s+'))) AS w
+             unnest(list_distinct({duck_ws_tokens("text")})) AS w
       FROM documents
     ), sizes AS (
       SELECT id, count(*) AS sz FROM toks GROUP BY id
@@ -395,14 +395,9 @@ def dedup_prefix_jaccard_q(spark, sf_dir):
     ), cand AS (
       SELECT DISTINCT least(doc_id, nbr) AS id1, greatest(doc_id, nbr) AS id2
       FROM cand0
-    ), sh AS (
-      SELECT DISTINCT doc_id, unnest("""
-    + duck_word_shingles("text", 4)
-    + """) AS shingle
-      FROM documents
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
+    ), """
+    + _duck_shingle_sizes(4)
+    + """, inter AS (
       SELECT c.id1, c.id2, count(*) AS n_common
       FROM cand c
         JOIN sh a ON a.doc_id = c.id1
@@ -427,14 +422,9 @@ def dedup_sorted_neighborhood_q(spark, sf_dir):
     "dedup_minhash_est_error",
     oracle=_duck_pairs_sql(16, 4, 0.5)
     + """
-    , sh AS (
-      SELECT DISTINCT doc_id, unnest("""
-    + duck_word_shingles("text", 4)
-    + """) AS shingle
-      FROM documents
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
+    , """
+    + _duck_shingle_sizes(4)
+    + """, inter AS (
       SELECT p.id1, p.id2, count(*) AS n_common
       FROM pairs p
         JOIN sh a ON a.doc_id = p.id1
@@ -463,15 +453,9 @@ def dedup_minhash_est_error_q(spark, sf_dir):
 
 @query(
     "dedup_containment_pairs",
-    oracle="""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, unnest("""
-    + duck_word_shingles("text", 4)
-    + """) AS shingle
-      FROM documents
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
+    oracle="WITH "
+    + _duck_shingle_sizes(4)
+    + """, inter AS (
       SELECT a.doc_id AS id_from, b.doc_id AS id_to, count(*) AS n_common
       FROM sh a JOIN sh b
         ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
@@ -494,14 +478,9 @@ def dedup_containment_pairs_q(spark, sf_dir):
     "dedup_lsh_precision_recall",
     oracle=_duck_pairs_sql(16, 4, 0.0)
     + """
-    , sh AS (
-      SELECT DISTINCT doc_id, unnest("""
-    + duck_word_shingles("text", 4)
-    + """) AS shingle
-      FROM documents
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
+    , """
+    + _duck_shingle_sizes(4)
+    + """, inter AS (
       SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_common
       FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
       GROUP BY a.doc_id, b.doc_id

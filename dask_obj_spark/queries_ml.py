@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_obj_spark.functions.hashing import duck_ws_tokens, ws_tokens
 from dask_obj_spark.functions.vec import DUCK, cosine_sql
 from dask_obj_spark.operators.ml import (
     GD_STEPS,
@@ -23,14 +24,14 @@ def _docs_features(docs: DataFrame) -> DataFrame:
         "doc_id",
         F.lit(1.0).alias("x0"),
         (F.col("n_chars") / 1000.0).alias("x1"),
-        (F.size(F.split(F.trim("text"), r"\s+")) / 100.0).alias("x2"),
+        (F.size(ws_tokens("text")) / 100.0).alias("x2"),
         (F.col("lang") == "en").cast("int").alias("y"),
     )
 
 
-_DUCK_FEATS = """
+_DUCK_FEATS = f"""
       SELECT doc_id, 1.0 AS x0, n_chars / 1000.0 AS x1,
-             len(string_split_regex(trim(text), '\\s+')) / 100.0 AS x2,
+             len({duck_ws_tokens("text")}) / 100.0 AS x2,
              CAST(lang = 'en' AS INT) AS y
       FROM documents
 """
@@ -155,10 +156,10 @@ def ml_calibration_bins_q(spark, sf_dir):
 
 @query(
     "ml_ols_normal_equations",
-    oracle="""
+    oracle=f"""
     WITH feats AS (
       SELECT n_chars / 1000.0 AS y,
-             len(string_split_regex(trim(text), '\\s+')) / 100.0 AS x
+             len({duck_ws_tokens("text")}) / 100.0 AS x
       FROM documents
     ), sums AS (
       SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
@@ -195,7 +196,7 @@ def ml_ols_normal_equations_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     feats = docs.select(
         (F.col("n_chars") / 1000.0).alias("y"),
-        (F.size(F.split(F.trim("text"), r"\s+")) / 100.0).alias("x"),
+        (F.size(ws_tokens("text")) / 100.0).alias("x"),
     ).localCheckpoint(eager=True)
     s = feats.agg(
         F.count(F.lit(1)).alias("n"),

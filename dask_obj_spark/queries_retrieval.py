@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from dask_obj_spark.functions.hashing import duck_ws_tokens
 from dask_obj_spark.functions.vec import DUCK, cosine_sql, fixed_cosine
 from dask_obj_spark.operators.retrieval import (
     MAXSIM_K,
@@ -30,7 +31,7 @@ from dask_obj_spark.operators.similarity import (
 )
 from dask_obj_spark.operators.text import bm25_topk
 from dask_obj_spark.queries import query
-from dask_obj_spark.queries_similarity import _duck_base
+from dask_obj_spark.queries_similarity import _duck_base, _duck_ivf_cells
 from dask_obj_spark.sources import load_table
 
 
@@ -44,12 +45,12 @@ def _duck_rrf_oracle() -> str:
     cos = cosine_sql("pv", "v", DIM, DUCK)
     return f"""
     WITH dl AS (
-      SELECT doc_id, len(string_split_regex(trim(text), '\\s+')) AS dl
+      SELECT doc_id, len({duck_ws_tokens("text")}) AS dl
       FROM documents
     ), stats AS (
       SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl
     ), toks AS (
-      SELECT doc_id, lower(unnest(string_split_regex(trim(text), '\\s+'))) AS term
+      SELECT doc_id, lower(unnest({duck_ws_tokens("text")})) AS term
       FROM documents
     ), posting AS (
       SELECT doc_id, term, count(*) AS tf FROM toks
@@ -136,25 +137,7 @@ def _duck_ivf_ndcg_oracle() -> str:
       FROM t_scored
     ), truth AS (
       SELECT id1, id2, rank FROM t_ranked WHERE rank <= 10
-    ), cents AS (
-      SELECT vid AS cid, v AS cv FROM base WHERE vid % {CENTROID_MOD} = 1
-    ), assign AS (
-      SELECT b.vid, b.v, c.cid,
-             {cosine_sql("b.v", "c.cv", DIM, DUCK)} AS cs
-      FROM base b, cents c
-    ), ranked_assign AS (
-      SELECT vid, v, cid, cs,
-             row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn
-      FROM assign
-    ), cells AS (
-      SELECT vid, v, cid FROM ranked_assign WHERE rn = 1
-    ), pcells AS (
-      SELECT vid AS pid, v AS pv, cid
-      FROM ranked_assign WHERE rn <= {NPROBE} AND vid % 50 = 0
-    ), cand AS (
-      SELECT DISTINCT p.pid, p.pv, c.vid, c.v
-      FROM pcells p JOIN cells c ON p.cid = c.cid AND p.pid <> c.vid
-    ), a_scored AS (
+    ), {_duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50)}, a_scored AS (
       SELECT pid AS id1, vid AS id2, {cos} AS cos_raw
       FROM cand
     ), a_ranked AS (
@@ -345,25 +328,7 @@ def _duck_maxsim_rerank_oracle() -> str:
     return (
         _duck_base(50)
         + f"""
-    , cents AS (
-      SELECT vid AS cid, v AS cv FROM base WHERE vid % {CENTROID_MOD} = 1
-    ), assign AS (
-      SELECT b.vid, b.v, c.cid,
-             {cosine_sql("b.v", "c.cv", DIM, DUCK)} AS cs
-      FROM base b, cents c
-    ), ranked_assign AS (
-      SELECT vid, v, cid, cs,
-             row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn
-      FROM assign
-    ), cells AS (
-      SELECT vid, v, cid FROM ranked_assign WHERE rn = 1
-    ), pcells AS (
-      SELECT vid AS pid, v AS pv, cid
-      FROM ranked_assign WHERE rn <= {NPROBE} AND vid % 50 = 0
-    ), cand AS (
-      SELECT DISTINCT p.pid, p.pv, c.vid, c.v
-      FROM pcells p JOIN cells c ON p.cid = c.cid AND p.pid <> c.vid
-    ), a_scored AS (
+    , {_duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50)}, a_scored AS (
       SELECT pid AS id1, vid AS id2, {cos} AS cos_raw
       FROM cand
     ), a_ranked AS (

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from dask_obj_spark.functions.hashing import duck_ws_tokens
 from dask_obj_spark.operators.scale import (
     _HLL_ALPHA_MM,
     _HLL_M,
@@ -420,7 +421,7 @@ def sketch_hll_sliding_users_q(spark, sf_dir):
 def _duck_heavy_hitters_oracle(k: int) -> str:
     return f"""
 WITH toks AS MATERIALIZED (
-  SELECT unnest(string_split_regex(trim(text), '\\s+')) AS term
+  SELECT unnest({duck_ws_tokens("text")}) AS term
   FROM documents
 ),
 n AS (SELECT count(*)::BIGINT AS n FROM toks),
@@ -435,7 +436,7 @@ def sketch_heavy_hitters_q(spark, sf_dir):
     """Exact 1/50-heavy-hitter terms over the documents token stream:
     Misra-Gries bounded-state candidates, broadcast semi-join, exact
     second-pass counts — never a full-vocabulary shuffle."""
-    from dask_obj_spark.operators.text import ws_tokens
+    from dask_obj_spark.functions.hashing import ws_tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(ws_tokens("text")).alias("term"))

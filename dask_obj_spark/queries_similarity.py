@@ -155,6 +155,42 @@ def _duck_base(probe_mod: int) -> str:
     )"""
 
 
+def _duck_ivf_cells(
+    mod: int, dim: int, probe_mod: int | None = None, materialized: bool = False
+) -> str:
+    """The IVF cell-assignment CTE chain, continuing a WITH that defines
+    ``base(vid, v)``: ``cents`` (the vectors with ``vid % mod = 1`` are
+    the centroids), ``assign``/``ranked_assign`` (each vector's
+    centroids by cosine, ties to the lower id) and ``cells(vid, v, cid)``
+    (its nearest one).  With ``probe_mod``, also ``pcells(pid, pv,
+    cid)`` — the NPROBE nearest cells of every probe — and ``cand(pid,
+    pv, vid, v)``, the vectors sharing a probed cell.  ``materialized``
+    pins ``cells`` and ``pcells`` for oracles that reuse them."""
+    mat = " MATERIALIZED" if materialized else ""
+    ctes = f"""cents AS (
+      SELECT vid AS cid, v AS cv FROM base WHERE vid % {mod} = 1
+    ), assign AS (
+      SELECT b.vid, b.v, c.cid,
+             {cosine_sql("b.v", "c.cv", dim, DUCK)} AS cs
+      FROM base b, cents c
+    ), ranked_assign AS (
+      SELECT vid, v, cid, cs,
+             row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn
+      FROM assign
+    ), cells AS{mat} (
+      SELECT vid, v, cid FROM ranked_assign WHERE rn = 1
+    )"""
+    if probe_mod is None:
+        return ctes
+    return ctes + f""", pcells AS{mat} (
+      SELECT vid AS pid, v AS pv, cid
+      FROM ranked_assign WHERE rn <= {NPROBE} AND vid % {probe_mod} = 0
+    ), cand AS (
+      SELECT DISTINCT p.pid, p.pv, c.vid, c.v
+      FROM pcells p JOIN cells c ON p.cid = c.cid AND p.pid <> c.vid
+    )"""
+
+
 def _duck_topk_ctes() -> str:
     cos = cosine_sql("pv", "v", DIM, DUCK)
     return f"""
@@ -260,25 +296,7 @@ def sim_cosine_topk_numpy_q(spark, sf_dir):
     "sim_cosine_topk_ivf",
     oracle=_duck_base(50)
     + f"""
-    , cents AS (
-      SELECT vid AS cid, v AS cv FROM base WHERE vid % {CENTROID_MOD} = 1
-    ), assign AS (
-      SELECT b.vid, b.v, c.cid,
-             {cosine_sql("b.v", "c.cv", DIM, DUCK)} AS cs
-      FROM base b, cents c
-    ), ranked_assign AS (
-      SELECT vid, v, cid, cs,
-             row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn
-      FROM assign
-    ), cells AS (
-      SELECT vid, v, cid FROM ranked_assign WHERE rn = 1
-    ), pcells AS (
-      SELECT vid AS pid, v AS pv, cid
-      FROM ranked_assign WHERE rn <= {NPROBE} AND vid % 50 = 0
-    ), cand AS (
-      SELECT DISTINCT p.pid, p.pv, c.vid, c.v
-      FROM pcells p JOIN cells c ON p.cid = c.cid AND p.pid <> c.vid
-    ), scored AS (
+    , {_duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50)}, scored AS (
       SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
       FROM cand
     ), rank2 AS (
@@ -302,25 +320,7 @@ def _duck_ivf_knn_ctes(probe_mod: int, k: int) -> str:
     `knn_graph_ann` (deterministic centroids, nprobe cells, exact
     re-rank).  Starts after a `base` CTE; caller appends the SELECT."""
     return f"""
-    , cents AS (
-      SELECT vid AS cid, v AS cv FROM base WHERE vid % {CENTROID_MOD} = 1
-    ), assign AS (
-      SELECT b.vid, b.v, c.cid,
-             {cosine_sql("b.v", "c.cv", DIM, DUCK)} AS cs
-      FROM base b, cents c
-    ), ranked_assign AS (
-      SELECT vid, v, cid, cs,
-             row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn
-      FROM assign
-    ), cells AS MATERIALIZED (
-      SELECT vid, v, cid FROM ranked_assign WHERE rn = 1
-    ), pcells AS MATERIALIZED (
-      SELECT vid AS pid, v AS pv, cid
-      FROM ranked_assign WHERE rn <= {NPROBE} AND vid % {probe_mod} = 0
-    ), cand AS (
-      SELECT DISTINCT p.pid, p.pv, c.vid, c.v
-      FROM pcells p JOIN cells c ON p.cid = c.cid AND p.pid <> c.vid
-    ), scored AS (
+    , {_duck_ivf_cells(CENTROID_MOD, DIM, probe_mod, materialized=True)}, scored AS (
       SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
       FROM cand
     ), rank2 AS (
@@ -365,28 +365,22 @@ def graph_knn_ann_edges_q(spark, sf_dir):
     )
 
 
-def _duck_bfs_ann_oracle(rounds: int, probe_mod: int, k: int, seed_mod: int) -> str:
-    """Unrolled BFS oracle over the IVF-built kNN graph: the
-    `_duck_bfs_oracle` min-merge rounds fed by `_duck_ivf_knn_ctes`
-    instead of the brute-force ranked CTE."""
-    ctes = [
-        _duck_base(probe_mod).replace("WITH ", "").strip(),
-        _duck_ivf_knn_ctes(probe_mod, k).strip().lstrip(",").strip(),
-        f"""knn AS MATERIALIZED (
-      SELECT DISTINCT least(id1, id2) AS u, greatest(id1, id2) AS v
-      FROM rank2
-    ), ed AS MATERIALIZED (
-      SELECT u, v FROM knn UNION ALL SELECT v, u FROM knn
-    ), d0 AS MATERIALIZED (
-      SELECT vec_id AS id, 0 AS dist FROM embeddings WHERE vec_id % {seed_mod} = 0
-    )""",
-    ]
+def _duck_knn_bfs(
+    ctes: list[str], rounds: int, step: str = "1", out_col: str = "dist"
+) -> str:
+    """Unrolled min-merge BFS oracle over a kNN graph.  ``ctes`` are the
+    WITH entries ending in the edge list ``ed(u, v[, w])`` and the seed
+    distances ``d0(id, dist)``; round r keeps each vertex's least
+    distance over ``d{r-1}`` and every neighbour's ``dist + step``
+    (equivalent to the frontier form: BFS first touches a vertex at its
+    minimum hop).  Every ``base`` vertex is reported, unreached = -1."""
+    ctes = list(ctes)
     for r in range(1, rounds + 1):
         ctes.append(f"""d{r} AS MATERIALIZED (
       SELECT id, min(dist) AS dist FROM (
         SELECT id, dist FROM d{r-1}
         UNION ALL
-        SELECT e.v AS id, d.dist + 1 AS dist
+        SELECT e.v AS id, d.dist + {step} AS dist
         FROM ed e JOIN d{r-1} d ON d.id = e.u
       ) GROUP BY id
     )""")
@@ -394,9 +388,39 @@ def _duck_bfs_ann_oracle(rounds: int, probe_mod: int, k: int, seed_mod: int) -> 
         "WITH "
         + ",\n    ".join(ctes)
         + f"""
-    SELECT b.vid AS id, CAST(coalesce(d.dist, -1) AS BIGINT) AS dist
+    SELECT b.vid AS id, CAST(coalesce(d.dist, -1) AS BIGINT) AS {out_col}
     FROM base b LEFT JOIN d{rounds} d ON d.id = b.vid
     """
+    )
+
+
+def _duck_hop_bfs(
+    graph_ctes: str, knn_from: str, rounds: int, probe_mod: int, seed_mod: int
+) -> str:
+    """Hop-count BFS from the ``vec_id % seed_mod = 0`` seeds over the
+    undirected kNN graph whose (id1, id2) edges come ``FROM
+    {knn_from}``, a relation of ``graph_ctes``."""
+    return _duck_knn_bfs(
+        [
+            _duck_base(probe_mod).replace("WITH ", "").strip(),
+            graph_ctes.strip().lstrip(",").strip(),
+            f"""knn AS MATERIALIZED (
+      SELECT DISTINCT least(id1, id2) AS u, greatest(id1, id2) AS v
+      FROM {knn_from}
+    ), ed AS MATERIALIZED (
+      SELECT u, v FROM knn UNION ALL SELECT v, u FROM knn
+    ), d0 AS MATERIALIZED (
+      SELECT vec_id AS id, 0 AS dist FROM embeddings WHERE vec_id % {seed_mod} = 0
+    )""",
+        ],
+        rounds,
+    )
+
+
+def _duck_bfs_ann_oracle(rounds: int, probe_mod: int, k: int, seed_mod: int) -> str:
+    """BFS over the IVF-built kNN graph (`_duck_ivf_knn_ctes`)."""
+    return _duck_hop_bfs(
+        _duck_ivf_knn_ctes(probe_mod, k), "rank2", rounds, probe_mod, seed_mod
     )
 
 
@@ -433,25 +457,7 @@ def graph_bfs_ann_q(spark, sf_dir):
       FROM t_scored
     ), truth AS (
       SELECT id1, id2 FROM t_ranked WHERE rank <= 10
-    ), cents AS (
-      SELECT vid AS cid, v AS cv FROM base WHERE vid % {CENTROID_MOD} = 1
-    ), assign AS (
-      SELECT b.vid, b.v, c.cid,
-             {cosine_sql("b.v", "c.cv", DIM, DUCK)} AS cs
-      FROM base b, cents c
-    ), ranked_assign AS (
-      SELECT vid, v, cid, cs,
-             row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn
-      FROM assign
-    ), cells AS (
-      SELECT vid, v, cid FROM ranked_assign WHERE rn = 1
-    ), pcells AS (
-      SELECT vid AS pid, v AS pv, cid
-      FROM ranked_assign WHERE rn <= {NPROBE} AND vid % 50 = 0
-    ), cand AS (
-      SELECT DISTINCT p.pid, p.pv, c.vid, c.v
-      FROM pcells p JOIN cells c ON p.cid = c.cid AND p.pid <> c.vid
-    ), a_scored AS (
+    ), {_duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50)}, a_scored AS (
       SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
       FROM cand
     ), a_ranked AS (
@@ -801,38 +807,9 @@ def sim_knn_kcore_q(spark, sf_dir):
 
 
 def _duck_bfs_oracle(rounds: int, probe_mod: int, topk: int, seed_mod: int) -> str:
-    """Unrolled BFS oracle: per round, min-merge of the previous distance
-    table with every neighbor's dist+1 (equivalent to the frontier form:
-    BFS first touches a vertex at its minimum hop)."""
-    ctes = [
-        _duck_base(probe_mod).replace("WITH ", "").strip(),
-        _duck_topk_ctes().strip().lstrip(",").strip(),
-        f"""knn AS MATERIALIZED (
-      SELECT DISTINCT least(id1, id2) AS u, greatest(id1, id2) AS v
-      FROM ranked WHERE rank <= {topk}
-    ), ed AS MATERIALIZED (
-      SELECT u, v FROM knn UNION ALL SELECT v, u FROM knn
-    ), d0 AS MATERIALIZED (
-      SELECT vec_id AS id, 0 AS dist FROM embeddings WHERE vec_id % {seed_mod} = 0
-    )""",
-    ]
-    for r in range(1, rounds + 1):
-        ctes.append(f"""d{r} AS MATERIALIZED (
-      SELECT id, min(dist) AS dist FROM (
-        SELECT id, dist FROM d{r-1}
-        UNION ALL
-        SELECT e.v AS id, d.dist + 1 AS dist
-        FROM ed e JOIN d{r-1} d ON d.id = e.u
-      ) GROUP BY id
-    )""")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT b.vid AS id, CAST(coalesce(d.dist, -1) AS BIGINT) AS dist
-    FROM base b LEFT JOIN d{rounds} d ON d.id = b.vid
-    """
-    )
+    """BFS over the brute-force kNN graph (`_duck_topk_ctes`)."""
+    knn_from = f"ranked WHERE rank <= {topk}"
+    return _duck_hop_bfs(_duck_topk_ctes(), knn_from, rounds, probe_mod, seed_mod)
 
 
 @query("graph_bfs_hops", oracle=_duck_bfs_oracle(4, 5, 10, 50))
@@ -873,23 +850,7 @@ def _duck_sssp_oracle(rounds: int, probe_mod: int, topk: int, seed_mod: int) -> 
       WHERE vec_id % {seed_mod} = 0
     )""",
     ]
-    for r in range(1, rounds + 1):
-        ctes.append(f"""d{r} AS MATERIALIZED (
-      SELECT id, min(dist) AS dist FROM (
-        SELECT id, dist FROM d{r-1}
-        UNION ALL
-        SELECT e.v AS id, d.dist + e.w AS dist
-        FROM ed e JOIN d{r-1} d ON d.id = e.u
-      ) GROUP BY id
-    )""")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT b.vid AS id, CAST(coalesce(d.dist, -1) AS BIGINT) AS dist_micro
-    FROM base b LEFT JOIN d{rounds} d ON d.id = b.vid
-    """
-    )
+    return _duck_knn_bfs(ctes, rounds, step="e.w", out_col="dist_micro")
 
 
 @query("graph_weighted_sssp", oracle=_duck_sssp_oracle(4, 5, 10, 50))

@@ -1,12 +1,24 @@
-"""Query registrations and DuckDB oracles for ``streaming/windows.py``."""
+"""Query registrations and DuckDB oracles for ``streaming/windows.py``.
+
+The stream queries replay a table as a few ordered micro-batch files
+(``staged_stream``) and drain them with ``availableNow``; each oracle is
+the batch relation the drained stream must equal.
+"""
 
 from __future__ import annotations
 
-from pyspark.sql import Window
+import os
+import shutil
+import uuid
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dask_obj_spark.queries_dedup import _duck_bands_select, _duck_sig_cte
+from dask_obj_spark.functions.hashing import duck_ws_tokens
 from dask_obj_spark.queries import query
+from dask_obj_spark.queries_dedup import _duck_bands_select, _duck_sig_cte
 from dask_obj_spark.sources import load_table
 from dask_obj_spark.sources.tables import normalize_timestamps
 from dask_obj_spark.streaming.windows import (
@@ -32,6 +44,49 @@ from dask_obj_spark.streaming.windows import (
     stream_tumbling_counts,
     tumbling_agg,
 )
+
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_MTIME0 = 1_700_000_000  # any fixed base; only relative order matters
+
+
+@contextmanager
+def staged_stream(spark: SparkSession, tag: str, batches):
+    """Stage ``batches`` — ``(file_name, frame)`` pairs in arrival order —
+    as one parquet file each in ``<repo>/.scratch/<tag>_<hex8>/in``, with
+    mtimes 100 s apart, and yield ``(scratch, read)``.  ``read()`` opens
+    a file-source stream over them that takes one file per trigger, so
+    each file is one micro-batch, in mtime order.  The writes are
+    independent jobs and overlap on a thread pool; the explicit mtimes
+    make their completion order irrelevant.  The scratch dir is removed
+    on exit."""
+    scratch = os.path.join(_REPO_ROOT, ".scratch", f"{tag}_{uuid.uuid4().hex[:8]}")
+    in_dir = os.path.join(scratch, "in")
+
+    def write(arg) -> None:
+        i, (name, frame) = arg
+        sub = os.path.join(scratch, f"b{i}")
+        frame.coalesce(1).write.parquet(sub)
+        (part,) = [p for p in os.listdir(sub) if p.endswith(".parquet")]
+        dst = os.path.join(in_dir, name)
+        shutil.move(os.path.join(sub, part), dst)
+        os.utime(dst, (_MTIME0 + 100 * i, _MTIME0 + 100 * i))
+
+    schema = batches[0][1].schema
+
+    def read() -> DataFrame:
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
+        )
+
+    try:
+        os.makedirs(in_dir)
+        with ThreadPoolExecutor(max_workers=len(batches)) as pool:
+            list(pool.map(write, enumerate(batches)))
+        yield scratch, read
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(
@@ -72,10 +127,6 @@ def stream_outer_join_late_q(spark, sf_dir):
     The oracle is the plain batch LEFT JOIN — the hash match proves the
     stream emitted exactly the matched pairs plus exactly one null-side
     row per unconverted click, no duplicates and no stragglers."""
-    import os
-    import shutil
-    import uuid
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
@@ -94,44 +145,17 @@ def stream_outer_join_late_q(spark, sf_dir):
             ),
         )
 
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    batches = (
+        ("00_real.parquet", ev),
+        ("01_push1.parquet", sentinel(1, -1)),
+        ("02_push2.parquet", sentinel(2, -2)),
     )
-    scratch = os.path.join(repo_root, ".scratch", f"soj_{uuid.uuid4().hex[:8]}")
-    try:
-        splits = (
-            ("a", "00_real.parquet", ev),
-            ("b", "01_push1.parquet", sentinel(1, -1)),
-            ("c", "02_push2.parquet", sentinel(2, -2)),
-        )
-        in_dir = os.path.join(scratch, "in")
-        os.makedirs(in_dir)
-        now = 1_700_000_000  # any fixed base; only relative order matters
-        for i, (sub, name, part_df) in enumerate(splits):
-            part_df.coalesce(1).write.parquet(os.path.join(scratch, sub))
-            (part,) = [
-                p
-                for p in os.listdir(os.path.join(scratch, sub))
-                if p.endswith(".parquet")
-            ]
-            dst = os.path.join(in_dir, name)
-            shutil.move(os.path.join(scratch, sub, part), dst)
-            os.utime(dst, (now + 100 * i, now + 100 * i))
-
-        def side():
-            return (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
-            )
-
-        out = stream_click_purchase_outer(side(), side(), "10 minutes")
+    with staged_stream(spark, "soj", batches) as (_, read):
+        out = stream_click_purchase_outer(read(), read(), "10 minutes")
         st = run_stream_to_memory(
             spark, out, f"soj_{uuid.uuid4().hex[:8]}", mode="append"
         )
         return st.filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(
@@ -224,8 +248,6 @@ def stream_join_click_purchase_q(spark, sf_dir):
     against the plain batch join SQL: with availableNow over one input
     file nothing is late, so stream ≡ batch exactly — the oracle row the
     unit-only parity test could not give the driver."""
-    import uuid
-
     out = stream_click_purchase_join(
         events_stream(spark, sf_dir), events_stream(spark, sf_dir), "10 minutes"
     )
@@ -270,41 +292,19 @@ def stream_late_data_drop_q(spark, sf_dir):
     compares whole epoch-SECONDS on both engines (Spark unix_timestamp
     truncates; DuckDB floor(epoch()) — ns-vs-µs sub-second precision
     never decides membership)."""
-    import os
-    import shutil
-    import uuid
-
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
     mx_sec = ev.agg(F.max(F.unix_timestamp("ts"))).first()[0]
     cutoff = mx_sec - 86400
     adv = mx_sec - 600
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    scratch = os.path.join(repo_root, ".scratch", f"late_drop_{uuid.uuid4().hex[:8]}")
-    try:
-        tsec = F.unix_timestamp("ts")
-        splits = (
-            ("a", "00_bulk.parquet", ev.filter((tsec > cutoff) & (tsec <= adv))),
-            ("b", "01_advance.parquet", ev.filter(tsec > adv)),
-            ("c", "02_late.parquet", ev.filter(tsec <= cutoff)),
-        )
-        in_dir = os.path.join(scratch, "in")
-        os.makedirs(in_dir)
-        now = 1_700_000_000  # any fixed base; only relative order matters
-        for i, (sub, name, part_df) in enumerate(splits):
-            part_df.coalesce(1).write.parquet(os.path.join(scratch, sub))
-            (part,) = [
-                p for p in os.listdir(os.path.join(scratch, sub)) if p.endswith(".parquet")
-            ]
-            dst = os.path.join(in_dir, name)
-            shutil.move(os.path.join(scratch, sub, part), dst)
-            os.utime(dst, (now + 100 * i, now + 100 * i))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    tsec = F.unix_timestamp("ts")
+    batches = (
+        ("00_bulk.parquet", ev.filter((tsec > cutoff) & (tsec <= adv))),
+        ("01_advance.parquet", ev.filter(tsec > adv)),
+        ("02_late.parquet", ev.filter(tsec <= cutoff)),
+    )
+    with staged_stream(spark, "late_drop", batches) as (_, read):
         agg = (
-            stream.withWatermark("ts", "10 minutes")
+            read().withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.unix_timestamp("w.start").alias("w_start"), "event_type", "n")
@@ -315,8 +315,6 @@ def stream_late_data_drop_q(spark, sf_dir):
         # update mode re-emits a (window, key) row per batch it changes in;
         # n is monotone, so max() is the final value whatever the split
         return st.groupBy("w_start", "event_type").agg(F.max("n").alias("n"))
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(
@@ -330,8 +328,6 @@ def stream_stateful_counts_q(spark, sf_dir):
     availableNow.  Update mode may emit one row per (user, micro-batch);
     the count is monotone, so max() per user is the final state whatever
     the batch split — deterministic and batch-equivalent."""
-    import uuid
-
     st = run_stream_to_memory(
         spark,
         stream_stateful_user_counts(events_stream(spark, sf_dir)),
@@ -373,8 +369,6 @@ def stream_sessionize_q(spark, sf_dir):
     event stream, drained complete-mode — per-user inactivity-gap
     sessions, batch-equivalent to the gaps-and-islands SQL (same oracle
     as the batch query; this row proves the streaming operator)."""
-    import uuid
-
     st = normalize_timestamps(events_stream(spark, sf_dir))
     sess = (
         st.withWatermark("ts", "10 minutes")
@@ -408,50 +402,21 @@ def stream_dedup_exact_q(spark, sf_dir):
     dropped.  Scale: per batch the anti-join probes the standing target;
     bucket the target by content_hash (operators/scale.py) and the probe
     is exchange-free however large the history grows."""
-    import os
-    import shutil
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    b1 = docs.filter(F.col("doc_id") % 2 == 0)
+    b2 = docs.filter(F.col("doc_id") % 2 == 1).unionByName(
+        docs.filter(F.col("doc_id") % 10 == 0)  # redelivered slice
     )
-    scratch = os.path.join(repo_root, ".scratch", f"sde_{uuid.uuid4().hex[:8]}")
-    try:
-        b1 = docs.filter(F.col("doc_id") % 2 == 0)
-        b2 = docs.filter(F.col("doc_id") % 2 == 1).unionByName(
-            docs.filter(F.col("doc_id") % 10 == 0)  # redelivered slice
-        )
-        in_dir = os.path.join(scratch, "in")
-        os.makedirs(in_dir)
-        now = 1_700_000_000
-        for i, (sub, name, part_df) in enumerate(
-            (("a", "00_first.parquet", b1), ("b", "01_retry.parquet", b2))
-        ):
-            part_df.coalesce(1).write.parquet(os.path.join(scratch, sub))
-            (part,) = [
-                p
-                for p in os.listdir(os.path.join(scratch, sub))
-                if p.endswith(".parquet")
-            ]
-            dst = os.path.join(in_dir, name)
-            shutil.move(os.path.join(scratch, sub, part), dst)
-            os.utime(dst, (now + 100 * i, now + 100 * i))
-        stream = (
-            spark.readStream.schema(b1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    batches = (("00_first.parquet", b1), ("01_retry.parquet", b2))
+    with staged_stream(spark, "sde", batches) as (scratch, read):
         target = os.path.join(scratch, "target")
-        stream_dedup_upsert(spark, stream, target)
+        stream_dedup_upsert(spark, read(), target)
         # materialize (executor-side) before the scratch dir is deleted
         return (
             spark.read.parquet(target)
             .select("content_hash")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(
@@ -479,61 +444,17 @@ def stream_neardup_minhash_q(spark, sf_dir):
     relation "shares a band with a smaller-id doc".  A single
     double-insert (anti-join miss on the redelivered slice) or a lost
     cross-batch match (band-history miss) fails rows_match."""
-    import os
-    import shutil
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     mid = docs.agg((F.max("doc_id") / 2).cast("bigint").alias("m")).collect()[0]["m"]
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    b1 = docs.filter(F.col("doc_id") <= mid)
+    b2 = docs.filter(F.col("doc_id") > mid).unionByName(
+        docs.filter((F.col("doc_id") <= mid) & (F.col("doc_id") % 10 == 0))
     )
-    scratch = os.path.join(repo_root, ".scratch", f"snd_{uuid.uuid4().hex[:8]}")
-    try:
-        b1 = docs.filter(F.col("doc_id") <= mid)
-        b2 = docs.filter(F.col("doc_id") > mid).unionByName(
-            docs.filter((F.col("doc_id") <= mid) & (F.col("doc_id") % 10 == 0))
-        )
-        in_dir = os.path.join(scratch, "in")
-        os.makedirs(in_dir)
-        now = 1_700_000_000
-
-        # overlap the two independent batch-file writes (guide §2.6);
-        # mtime staggering is explicit, so completion order is free
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_batch(arg) -> None:
-            i, sub, name, part_df = arg
-            part_df.coalesce(1).write.parquet(os.path.join(scratch, sub))
-            (part,) = [
-                p
-                for p in os.listdir(os.path.join(scratch, sub))
-                if p.endswith(".parquet")
-            ]
-            dst = os.path.join(in_dir, name)
-            shutil.move(os.path.join(scratch, sub, part), dst)
-            os.utime(dst, (now + 100 * i, now + 100 * i))
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(
-                pool.map(
-                    _write_batch,
-                    (
-                        (0, "a", "00_low.parquet", b1),
-                        (1, "b", "01_high_retry.parquet", b2),
-                    ),
-                )
-            )
-        stream = (
-            spark.readStream.schema(b1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    batches = (("00_low.parquet", b1), ("01_high_retry.parquet", b2))
+    with staged_stream(spark, "snd", batches) as (scratch, read):
         target = os.path.join(scratch, "flags")
-        stream_neardup_minhash(spark, stream, target)
+        stream_neardup_minhash(spark, read(), target)
         return spark.read.parquet(target).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(
@@ -564,8 +485,6 @@ def stream_window_topk_q(spark, sf_dir):
     Update-mode re-emissions fold by max(n) per (window, key) — n is
     monotone — before ranking, so the result is batch-equivalent and
     the oracle is the plain batch top-k."""
-    import uuid
-
     agg = stream_tumbling_counts(events_stream(spark, sf_dir))
     st = run_stream_to_memory(
         spark, agg, f"swt_{uuid.uuid4().hex[:8]}", mode="update"
@@ -634,8 +553,6 @@ def stream_hll_hourly_users_q(spark, sf_dir):
     estimates with the identical engine-stable arithmetic as
     sketch_hll_distinct.  Proves the sketch survives the streaming
     path end-to-end with a full value hash, not just a unit test."""
-    import uuid
-
     from dask_obj_spark.operators.scale import _HLL_ALPHA_MM, _HLL_M, _TWO_53
 
     regs_stream = stream_hll_hourly_registers(events_stream(spark, sf_dir))
@@ -690,60 +607,31 @@ def stream_heavy_hitters_q(spark, sf_dir):
     output equals the batch GROUP BY/HAVING relation, which is the
     oracle.  The superset guarantee (not the sketch estimates) is
     what the stream contributes, so the oracle pairing is exact."""
-    import os
-    import shutil
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     qs = docs.approxQuantile("doc_id", [0.33, 0.66], 0.0)
     lo, hi = int(qs[0]), int(qs[1])
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    batches = (
+        ("00_low.parquet", docs.filter(F.col("doc_id") <= lo)),
+        (
+            "01_mid.parquet",
+            docs.filter((F.col("doc_id") > lo) & (F.col("doc_id") <= hi)),
+        ),
+        ("02_high.parquet", docs.filter(F.col("doc_id") > hi)),
     )
-    scratch = os.path.join(repo_root, ".scratch", f"shh_{uuid.uuid4().hex[:8]}")
-    try:
-        parts = [
-            ("a", "00_low.parquet", docs.filter(F.col("doc_id") <= lo)),
-            (
-                "b",
-                "01_mid.parquet",
-                docs.filter((F.col("doc_id") > lo) & (F.col("doc_id") <= hi)),
-            ),
-            ("c", "02_high.parquet", docs.filter(F.col("doc_id") > hi)),
-        ]
-        in_dir = os.path.join(scratch, "in")
-        os.makedirs(in_dir)
-        now = 1_700_000_000
-        for i, (sub, name, part_df) in enumerate(parts):
-            part_df.coalesce(1).write.parquet(os.path.join(scratch, sub))
-            (part,) = [
-                p
-                for p in os.listdir(os.path.join(scratch, sub))
-                if p.endswith(".parquet")
-            ]
-            dst = os.path.join(in_dir, name)
-            shutil.move(os.path.join(scratch, sub, part), dst)
-            os.utime(dst, (now + 100 * i, now + 100 * i))
-        stream = (
-            spark.readStream.schema(parts[0][2].schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    with staged_stream(spark, "shh", batches) as (scratch, read):
         target = os.path.join(scratch, "hh")
-        stream_heavy_hitters(spark, stream, target, k=50)
+        stream_heavy_hitters(spark, read(), target, k=50)
         out = stream_heavy_hitters_confirm(
             spark, docs, target + "_mg.json", k=50
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def _decayed_topk_oracle(k: int) -> str:
     return f"""
 WITH toks AS MATERIALIZED (
   SELECT (1::BIGINT << (doc_id % 3)::INTEGER) AS wt,
-         unnest(string_split_regex(trim(text), '\\s+')) AS term
+         unnest({duck_ws_tokens("text")}) AS term
   FROM documents
 ), t2 AS (SELECT wt, term FROM toks WHERE term <> ''),
 w AS (SELECT sum(wt)::BIGINT AS w FROM t2),
@@ -763,43 +651,14 @@ def stream_decayed_topk_q(spark, sf_dir):
     scores the candidates exactly (weight 2^(doc_id % 3) replays the
     arrival order), so the output equals the weighted GROUP BY/HAVING
     relation — the oracle."""
-    import os
-    import shutil
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    scratch = os.path.join(repo_root, ".scratch", f"dtk_{uuid.uuid4().hex[:8]}")
-    try:
-        in_dir = os.path.join(scratch, "in")
-        os.makedirs(in_dir)
-        now = 1_700_000_000
-
-        # the three batch-file writes are independent jobs — submit them
-        # from a thread pool so they overlap (guide §2.6) instead of
-        # paying three sequential scan+write walls; the mtime staggering
-        # is explicit utime, so completion order is irrelevant
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_batch(b: int) -> None:
-            sub = os.path.join(scratch, f"b{b}")
-            docs.filter(F.col("doc_id") % 3 == b).coalesce(1).write.parquet(sub)
-            (part,) = [p for p in os.listdir(sub) if p.endswith(".parquet")]
-            dst = os.path.join(in_dir, f"{b:02d}_batch.parquet")
-            shutil.move(os.path.join(sub, part), dst)
-            os.utime(dst, (now + 100 * b, now + 100 * b))
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            list(pool.map(_write_batch, range(3)))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    batches = [
+        (f"{b:02d}_batch.parquet", docs.filter(F.col("doc_id") % 3 == b))
+        for b in range(3)
+    ]
+    with staged_stream(spark, "dtk", batches) as (scratch, read):
         target = os.path.join(scratch, "dtk")
-        stream_decayed_topk(spark, stream, target, k=40)
+        stream_decayed_topk(spark, read(), target, k=40)
         out = stream_decayed_topk_confirm(
             spark,
             docs,
@@ -808,8 +667,6 @@ def stream_decayed_topk_q(spark, sf_dir):
             k=40,
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def _stream_psi_oracle() -> str:
@@ -867,36 +724,15 @@ def stream_quality_psi_q(spark, sf_dir):
     the batch monitor's exact scale-free smoothing — so the reference
     batch reads EXACTLY 0 and the second batch's drift equals the
     oracle's parity-split PSI."""
-    import os
-    import shutil
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    scratch = os.path.join(repo_root, ".scratch", f"sqp_{uuid.uuid4().hex[:8]}")
-    try:
-        in_dir = os.path.join(scratch, "in")
-        os.makedirs(in_dir)
-        now = 1_700_000_000
-        for b in range(2):
-            sub = os.path.join(scratch, f"b{b}")
-            docs.filter(F.col("doc_id") % 2 == b).coalesce(1).write.parquet(sub)
-            (part,) = [p for p in os.listdir(sub) if p.endswith(".parquet")]
-            dst = os.path.join(in_dir, f"{b:02d}_batch.parquet")
-            shutil.move(os.path.join(sub, part), dst)
-            os.utime(dst, (now + 100 * b, now + 100 * b))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    batches = [
+        (f"{b:02d}_batch.parquet", docs.filter(F.col("doc_id") % 2 == b))
+        for b in range(2)
+    ]
+    with staged_stream(spark, "sqp", batches) as (scratch, read):
         target = os.path.join(scratch, "hist")
-        stream_quality_psi_sink(spark, stream, target)
+        stream_quality_psi_sink(spark, read(), target)
         return quality_psi_vs_frozen(spark, target).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def _stream_contamination_oracle() -> str:
@@ -925,19 +761,19 @@ def stream_contamination_guard_q(spark, sf_dir):
     inventory is frozen and flagging is per-doc, the drained
     quarantine list equals the batch contamination relation — the
     oracle."""
-    import os
-    import shutil
-    import uuid
-
     from dask_obj_spark.operators.corpus import doc_distinct_shingles
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    train = docs.filter(F.col("doc_id") % 20 != 0)
+    mid = train.agg(
+        (F.max("doc_id") / 2).cast("bigint").alias("m")
+    ).collect()[0]["m"]
+    batches = (
+        ("00_batch.parquet", train.filter(F.col("doc_id") <= mid)),
+        ("01_batch.parquet", train.filter(F.col("doc_id") > mid)),
     )
-    scratch = os.path.join(repo_root, ".scratch", f"scg_{uuid.uuid4().hex[:8]}")
-    try:
-        # frozen benchmark inventory, built before any crawl arrives
+    with staged_stream(spark, "scg", batches) as (scratch, read):
+        # frozen benchmark inventory, built before the stream is drained
         inv_dir = os.path.join(scratch, "inventory")
         (
             doc_distinct_shingles(
@@ -947,35 +783,9 @@ def stream_contamination_guard_q(spark, sf_dir):
             .distinct()
             .write.parquet(inv_dir)
         )
-        train = docs.filter(F.col("doc_id") % 20 != 0)
-        mid = train.agg(
-            (F.max("doc_id") / 2).cast("bigint").alias("m")
-        ).collect()[0]["m"]
-        in_dir = os.path.join(scratch, "in")
-        os.makedirs(in_dir)
-        now = 1_700_000_000
-        for b, part_df in enumerate(
-            (
-                train.filter(F.col("doc_id") <= mid),
-                train.filter(F.col("doc_id") > mid),
-            )
-        ):
-            sub = os.path.join(scratch, f"b{b}")
-            part_df.coalesce(1).write.parquet(sub)
-            (part,) = [p for p in os.listdir(sub) if p.endswith(".parquet")]
-            dst = os.path.join(in_dir, f"{b:02d}_batch.parquet")
-            shutil.move(os.path.join(sub, part), dst)
-            os.utime(dst, (now + 100 * b, now + 100 * b))
-        stream = (
-            spark.readStream.schema(train.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         target = os.path.join(scratch, "quarantine")
-        stream_contamination_sink(spark, stream, target, inv_dir)
+        stream_contamination_sink(spark, read(), target, inv_dir)
         return spark.read.parquet(target).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(
@@ -995,44 +805,18 @@ def stream_source_quota_q(spark, sf_dir):
     arrival order = id order (the id-range-batch precedent), the
     drained accepted set equals the batch relation row_number() per
     source ≤ 15, which is the oracle."""
-    import os
-    import shutil
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mid = docs.agg(
+        (F.max("doc_id") / 2).cast("bigint").alias("m")
+    ).collect()[0]["m"]
+    batches = (
+        ("00_batch.parquet", docs.filter(F.col("doc_id") <= mid)),
+        ("01_batch.parquet", docs.filter(F.col("doc_id") > mid)),
     )
-    scratch = os.path.join(repo_root, ".scratch", f"ssq_{uuid.uuid4().hex[:8]}")
-    try:
-        mid = docs.agg(
-            (F.max("doc_id") / 2).cast("bigint").alias("m")
-        ).collect()[0]["m"]
-        in_dir = os.path.join(scratch, "in")
-        os.makedirs(in_dir)
-        now = 1_700_000_000
-        for b, part_df in enumerate(
-            (
-                docs.filter(F.col("doc_id") <= mid),
-                docs.filter(F.col("doc_id") > mid),
-            )
-        ):
-            sub = os.path.join(scratch, f"b{b}")
-            part_df.coalesce(1).write.parquet(sub)
-            (part,) = [p for p in os.listdir(sub) if p.endswith(".parquet")]
-            dst = os.path.join(in_dir, f"{b:02d}_batch.parquet")
-            shutil.move(os.path.join(sub, part), dst)
-            os.utime(dst, (now + 100 * b, now + 100 * b))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    with staged_stream(spark, "ssq", batches) as (scratch, read):
         target = os.path.join(scratch, "accepted")
-        stream_source_quota_sink(spark, stream, target, quota=15)
+        stream_source_quota_sink(spark, read(), target, quota=15)
         return spark.read.parquet(target).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 _LATE_DELAY = 600
@@ -1072,42 +856,16 @@ def stream_late_audit_q(spark, sf_dir):
     straggler slice), batch 1 delivers the tail plus the stragglers —
     whose old timestamps land behind the running watermark and are
     counted as would-be-dropped.  Bounded one-row-per-batch state."""
-    import os
-    import shutil
-    import uuid
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mid = ev.agg(
+        (F.max("event_id") / 2).cast("bigint").alias("m")
+    ).collect()[0]["m"]
+    straggler = F.col("event_id") % 97 == 3
+    batches = (
+        ("00_batch.parquet", ev.filter((F.col("event_id") <= mid) & ~straggler)),
+        ("01_batch.parquet", ev.filter((F.col("event_id") > mid) | straggler)),
     )
-    scratch = os.path.join(repo_root, ".scratch", f"sla_{uuid.uuid4().hex[:8]}")
-    try:
-        mid = ev.agg(
-            (F.max("event_id") / 2).cast("bigint").alias("m")
-        ).collect()[0]["m"]
-        straggler = F.col("event_id") % 97 == 3
-        in_dir = os.path.join(scratch, "in")
-        os.makedirs(in_dir)
-        now = 1_700_000_000
-        for b, part_df in enumerate(
-            (
-                ev.filter((F.col("event_id") <= mid) & ~straggler),
-                ev.filter((F.col("event_id") > mid) | straggler),
-            )
-        ):
-            sub = os.path.join(scratch, f"b{b}")
-            part_df.coalesce(1).write.parquet(sub)
-            (part,) = [p for p in os.listdir(sub) if p.endswith(".parquet")]
-            dst = os.path.join(in_dir, f"{b:02d}_batch.parquet")
-            shutil.move(os.path.join(sub, part), dst)
-            os.utime(dst, (now + 100 * b, now + 100 * b))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    with staged_stream(spark, "sla", batches) as (scratch, read):
         target = os.path.join(scratch, "audit")
-        stream_late_audit_sink(spark, stream, target, _LATE_DELAY)
+        stream_late_audit_sink(spark, read(), target, _LATE_DELAY)
         return spark.read.parquet(target).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)

@@ -8,8 +8,10 @@ from pyspark.sql import functions as F
 from dask_obj_spark.functions.hashing import (
     duck_porthash,
     duck_word_shingles,
+    duck_ws_tokens,
     porthash,
     word_shingles,
+    ws_tokens,
 )
 from dask_obj_spark.operators.text import (
     BPE_TOKEN_RE,
@@ -40,13 +42,9 @@ from dask_obj_spark.operators.text import (
     token_stats,
     winnow_fingerprints,
     word_entropy,
-    ws_tokens,
 )
 from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
-
-
-_DUCK_WS = "string_split_regex(trim(text), '\\s+')"
 
 
 def _duck_list_lit(xs: list[str]) -> str:
@@ -57,7 +55,7 @@ def _duck_list_lit(xs: list[str]) -> str:
     "text_token_stats",
     oracle=f"""
     SELECT doc_id,
-           len({_DUCK_WS}) AS n_ws_tokens,
+           len({duck_ws_tokens("text")}) AS n_ws_tokens,
            len(regexp_extract_all(text, '{BPE_TOKEN_RE}')) AS n_bpe_tokens,
            length(text) AS n_chars_exact
     FROM documents
@@ -74,11 +72,11 @@ def duck_quality_select() -> str:
     (operators/corpus.py weighted sampling)."""
     return f"""
     WITH t AS (
-      SELECT doc_id, text, {_DUCK_WS} AS toks,
+      SELECT doc_id, text, {duck_ws_tokens("text")} AS toks,
              length(text) AS total,
              length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS alpha,
              length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS punct,
-             len(list_filter({_DUCK_WS},
+             len(list_filter({duck_ws_tokens("text")},
                  w -> list_contains({_duck_list_lit(STOPWORDS)}, lower(w)))) AS stop_hits
       FROM documents
     )
@@ -128,9 +126,9 @@ def text_langid_q(spark, sf_dir):
 
 @query(
     "text_tfidf_top_terms",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, lower(unnest(string_split_regex(trim(text), '\\s+'))) AS term
+      SELECT doc_id, lower(unnest({duck_ws_tokens("text")})) AS term
       FROM documents
     ), tf AS (
       SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term
@@ -195,11 +193,11 @@ def text_facets_q(spark, sf_dir):
 
 @query(
     "text_repetition_ratio",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             generate_subscripts(string_split_regex(trim(text), '\\s+'), 1) AS pos,
-             unnest(string_split_regex(trim(text), '\\s+')) AS w
+             generate_subscripts({duck_ws_tokens("text")}, 1) AS pos,
+             unnest({duck_ws_tokens("text")}) AS w
       FROM documents
     ), pairs AS (
       SELECT a.doc_id, a.w || ' ' || b.w AS bigram
@@ -242,13 +240,13 @@ def text_scrub_q(spark, sf_dir):
 
 @query(
     "pipeline_clean_corpus",
-    oracle="""
+    oracle=f"""
     WITH q AS (
       SELECT doc_id, text,
              0.4 * (length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) / length(text))
-             + 0.3 * (len(list_filter(string_split_regex(trim(text), '\\s+'),
+             + 0.3 * (len(list_filter({duck_ws_tokens("text")},
                          w -> list_contains(['the','a','of','to','and','in','is','it','for','on'], lower(w))))
-                      / len(string_split_regex(trim(text), '\\s+')))
+                      / len({duck_ws_tokens("text")}))
              + 0.3 * (1.0 - least((length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g'))
                                    / length(text)) * 5, 1.0)) AS quality
       FROM documents
@@ -312,9 +310,9 @@ def pipeline_clean_corpus_q(spark, sf_dir):
 
 @query(
     "text_boilerplate_scrub",
-    oracle="""
+    oracle=f"""
     WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws FROM documents
+      SELECT doc_id, {duck_ws_tokens("text")} AS ws FROM documents
     ), segs AS (
       SELECT doc_id,
              unnest(range(0, ((len(ws) - 1) // 10) + 1)) AS pos,
@@ -345,10 +343,10 @@ def text_boilerplate_scrub_q(spark, sf_dir):
 
 @query(
     "profile_corpus_facets",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT source, lang,
-             len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
+             len({duck_ws_tokens("text")}) AS n_tokens,
              n_chars
       FROM documents
     )
@@ -372,7 +370,7 @@ def profile_corpus_facets_q(spark, sf_dir):
     (the shuffle carries |facets| rows, the percentile state is the only
     non-algebraic part)."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tokens = F.size(ws_tokens(F.col("text")))
     return (
         docs.select("source", "lang", n_tokens.alias("n_tokens"), "n_chars")
         .groupBy("source", "lang")
@@ -389,16 +387,16 @@ def profile_corpus_facets_q(spark, sf_dir):
 
 @query(
     "text_gopher_filter",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT doc_id,
-             len(string_split_regex(trim(text), '\\s+')) AS n_words,
+             len({duck_ws_tokens("text")}) AS n_words,
              length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0
                / length(text) AS alpha_ratio,
              length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) * 1.0
                / length(text) AS symbol_ratio,
              length(text) * 1.0
-               / len(string_split_regex(trim(text), '\\s+')) AS mean_word_len
+               / len({duck_ws_tokens("text")}) AS mean_word_len
       FROM documents
     )
     SELECT doc_id,
@@ -440,11 +438,11 @@ def text_gopher_filter_q(spark, sf_dir):
 
 @query(
     "text_pmi_bigrams",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             generate_subscripts(string_split_regex(trim(text), '\\s+'), 1) AS pos,
-             unnest(string_split_regex(trim(text), '\\s+')) AS w
+             generate_subscripts({duck_ws_tokens("text")}, 1) AS pos,
+             unnest({duck_ws_tokens("text")}) AS w
       FROM documents
     ), pairs AS (
       SELECT a.w AS w1, b.w AS w2
@@ -475,11 +473,11 @@ def text_pmi_bigrams_q(spark, sf_dir):
 
 @query(
     "text_span_dedup",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             generate_subscripts(string_split_regex(trim(text), '\\s+'), 1) AS pos,
-             unnest(string_split_regex(trim(text), '\\s+')) AS w
+             generate_subscripts({duck_ws_tokens("text")}, 1) AS pos,
+             unnest({duck_ws_tokens("text")}) AS w
       FROM documents
     ), sp AS (
       SELECT doc_id, (pos - 1) // 8 AS span_pos,
@@ -506,9 +504,9 @@ def text_span_dedup_q(spark, sf_dir):
 
 @query(
     "text_zipf_fit",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT unnest(string_split_regex(trim(text), '\\s+')) AS w FROM documents
+      SELECT unnest({duck_ws_tokens("text")}) AS w FROM documents
     ), freq AS (
       SELECT w, count(*) AS f FROM toks GROUP BY w
     ), ranked AS (
@@ -549,9 +547,9 @@ def text_zipf_fit_q(spark, sf_dir):
 
 @query(
     "text_ngram_diversity",
-    oracle=r"""
+    oracle=rf"""
     WITH grams AS (
-      SELECT source, unnest(list_transform(range(greatest(len(string_split_regex(trim(text), '\s+')) - 3, 0) + 1), i -> array_to_string(string_split_regex(trim(text), '\s+')[i+1:i+3], ' '))) AS g
+      SELECT source, unnest(list_transform(range(greatest(len({duck_ws_tokens("text")}) - 3, 0) + 1), i -> array_to_string({duck_ws_tokens("text")}[i+1:i+3], ' '))) AS g
       FROM documents
     )
     SELECT source,
@@ -582,14 +580,14 @@ def text_ngram_diversity_q(spark, sf_dir):
 
 @query(
     "text_bm25_topk",
-    oracle="""
+    oracle=f"""
     WITH dl AS (
-      SELECT doc_id, len(string_split_regex(trim(text), '\\s+')) AS dl
+      SELECT doc_id, len({duck_ws_tokens("text")}) AS dl
       FROM documents
     ), stats AS (
       SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl
     ), toks AS (
-      SELECT doc_id, lower(unnest(string_split_regex(trim(text), '\\s+'))) AS term
+      SELECT doc_id, lower(unnest({duck_ws_tokens("text")})) AS term
       FROM documents
     ), posting AS (
       SELECT doc_id, term, count(*) AS tf FROM toks
@@ -624,10 +622,10 @@ def text_bm25_topk_q(spark, sf_dir):
 
 @query(
     "text_bigram_perplexity",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             list_transform(string_split_regex(trim(text), '\\s+'),
+             list_transform({duck_ws_tokens("text")},
                             w -> lower(w)) AS ws
       FROM documents
     ), bigrams AS (
@@ -667,10 +665,10 @@ _PPL_T2 = 0.6666666666666666
 
 @query(
     "text_perplexity_buckets",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             list_transform(string_split_regex(trim(text), '\\s+'),
+             list_transform({duck_ws_tokens("text")},
                             w -> lower(w)) AS ws
       FROM documents
     ), bigrams AS (
@@ -746,9 +744,9 @@ CMS_WIDTH = 1024  # counters per row
 
 @query(
     "sketch_countmin_freq",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT lower(unnest(string_split_regex(trim(text), '\\s+'))) AS tok
+      SELECT lower(unnest({duck_ws_tokens("text")})) AS tok
       FROM documents
     ), cms AS (
       SELECT j, idx, count(*) AS c FROM (
@@ -849,9 +847,9 @@ def sketch_countmin_freq_q(spark, sf_dir):
 
 @query(
     "text_tfidf_cosine_pairs",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, lower(unnest(string_split_regex(trim(text), '\\s+'))) AS term
+      SELECT doc_id, lower(unnest({duck_ws_tokens("text")})) AS term
       FROM documents
     ), tf AS (
       SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term
@@ -996,7 +994,7 @@ _HEAPS_BUCKET = 50  # docs per growth-curve bucket
     "text_vocab_growth_heaps",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, lower(unnest(string_split_regex(trim(text), '\\s+'))) AS term
+      SELECT doc_id, lower(unnest({duck_ws_tokens("text")})) AS term
       FROM documents
     ), per_doc AS (
       SELECT doc_id, count(*) AS n_toks FROM toks GROUP BY doc_id
@@ -1086,13 +1084,10 @@ def text_vocab_growth_heaps_q(spark, sf_dir):
     )
 
 
-_DUCK_LM_TOKS = "string_split_regex(trim(lower(text)), '\\s+')"
-
-
 def _ngram_lm_oracle() -> str:
     return f"""
     WITH d AS (
-      SELECT doc_id, {_DUCK_LM_TOKS} AS t FROM documents
+      SELECT doc_id, {duck_ws_tokens("lower(text)")} AS t FROM documents
     ),
     toks AS MATERIALIZED (
       SELECT doc_id, generate_subscripts(t, 1) AS pos, unnest(t) AS w FROM d
@@ -1175,11 +1170,11 @@ def text_hashed_classifier_q(spark, sf_dir):
 
 @query(
     "text_word_entropy",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
              unnest(list_filter(
-               string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
+               {duck_ws_tokens("lower(coalesce(text, ''))")},
                x -> x <> '')) AS w
       FROM documents
     ), wc AS (
@@ -1234,10 +1229,10 @@ def eval_filter_agreement_q(spark, sf_dir):
 
 @query(
     "text_readability",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT doc_id,
-             len(list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
+             len(list_filter({duck_ws_tokens("coalesce(text, '')")},
                              x -> x <> ''))::BIGINT AS n_words,
              greatest(1, len(regexp_extract_all(coalesce(text, ''),
                                                 '[.!?]+')))::BIGINT AS n_sentences,
@@ -1264,16 +1259,16 @@ def text_readability_q(spark, sf_dir):
 
 @query(
     "text_code_detect",
-    oracle=r"""
+    oracle=rf"""
     WITH c AS (
       SELECT doc_id, coalesce(text, '') AS t FROM documents
     ), f AS (
       SELECT doc_id,
-             (length(t) - length(regexp_replace(t, '[{}\[\]();=<>|&]', '', 'g')))::BIGINT AS n_sym,
+             (length(t) - length(regexp_replace(t, '[{{}}\[\]();=<>|&]', '', 'g')))::BIGINT AS n_sym,
              len(regexp_extract_all(t, '\b[a-z]+(?:_[a-z0-9]+|[A-Z][a-z0-9]+)\w*\b'))::BIGINT AS n_idents,
              len(regexp_extract_all(t, '(?m)^(?:    |\t)'))::BIGINT AS n_indented,
              greatest(length(t), 1)::BIGINT AS n_chars,
-             greatest(len(list_filter(string_split_regex(trim(t), '\s+'),
+             greatest(len(list_filter({duck_ws_tokens("t")},
                                       x -> x <> '')), 1)::BIGINT AS n_words
       FROM c
     )

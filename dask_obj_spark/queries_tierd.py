@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dask_obj_spark.functions.hashing import duck_ws_tokens
 from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
 
@@ -158,9 +159,9 @@ def starmap_struct_q(spark, sf_dir):
     # returns [] — without the filter the oracle would emit a phantom
     # empty-word row for such a doc (latent data-dependent crack, r14
     # review; no current doc triggers it, so hashes are unchanged)
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           unnest(list_filter(string_split_regex(trim(text), '\\s+'),
+           unnest(list_filter({duck_ws_tokens("text")},
                               w -> w <> '')) AS word
     FROM documents WHERE doc_id < 100
     """,

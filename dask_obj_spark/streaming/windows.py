@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dask_obj_spark.functions.hashing import ws_tokens
 from dask_obj_spark.sources.tables import normalize_timestamps
 
 # -- batch window operators ---------------------------------------------------
@@ -324,6 +325,18 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def run_foreach_batch(stream: DataFrame, fn, target_dir: str) -> None:
+    """Drain ``stream`` with availableNow, calling ``fn(batch_df,
+    batch_id)`` per micro-batch and checkpointing to ``<target_dir>_ckpt``."""
+    (
+        stream.writeStream.foreachBatch(fn)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", target_dir + "_ckpt")
+        .start()
+        .awaitTermination()
+    )
+
+
 def stream_dedup_upsert(
     spark: SparkSession, stream: DataFrame, target_dir: str
 ) -> None:
@@ -353,13 +366,7 @@ def stream_dedup_upsert(
             )
         batch.write.mode("append").parquet(target_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_dedup_within_watermark(
@@ -562,13 +569,7 @@ def stream_neardup_minhash(
             os.rename(tmp, bands_dir)
             shutil.rmtree(old, ignore_errors=True)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_hll_hourly_registers(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -678,7 +679,7 @@ def stream_heavy_hitters(
         if batch_id <= done_max:
             return
         toks = batch_df.select(
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("term")
+            F.explode(ws_tokens(F.col("text"))).alias("term")
         ).filter(F.col("term") != "")
         counted = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
         top, batch_n = _collect_top_terms(counted, counters + 1)
@@ -703,13 +704,7 @@ def stream_heavy_hitters(
             json.dump(state, fh)
         os.replace(tmp, mg_path)  # atomic swap: readers never see a torn state
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_heavy_hitters_confirm(
@@ -727,7 +722,7 @@ def stream_heavy_hitters_confirm(
         [(t,) for t in state["slots"]] or [(None,)], "term string"
     ).filter(F.col("term").isNotNull())
     toks = source.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("term")
+        F.explode(ws_tokens(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
     n_total = int(state["n"])
     return (
@@ -862,7 +857,7 @@ def stream_decayed_topk(
         if batch_id <= done_max:
             return  # replay: ids are strictly increasing per checkpoint
         toks = batch_df.select(
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("term")
+            F.explode(ws_tokens(F.col("text"))).alias("term")
         ).filter(F.col("term") != "")
         counted = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
         top, batch_n = _collect_top_terms(counted, counters + 1)
@@ -874,13 +869,7 @@ def stream_decayed_topk(
             json.dump(state, fh)
         os.replace(tmp, st_path)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_decayed_topk_confirm(
@@ -904,7 +893,7 @@ def stream_decayed_topk_confirm(
     ).filter(F.col("term").isNotNull())
     w_total = int(state["w"])
     toks = source.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("term"),
+        F.explode(ws_tokens(F.col("text"))).alias("term"),
         weight.cast("bigint").alias("wt"),
     ).filter(F.col("term") != "")
     return (
@@ -977,13 +966,7 @@ def stream_quality_psi_sink(
             rows, "seq bigint, bkt int, c bigint"
         ).coalesce(1).write.mode("append").parquet(target_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream, upsert, target_dir)
 
 
 def quality_psi_vs_frozen(spark: SparkSession, target_dir: str) -> DataFrame:
@@ -1098,13 +1081,7 @@ def stream_contamination_sink(
             )
         flagged.write.mode("append").parquet(target_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_source_quota_sink(
@@ -1200,13 +1177,7 @@ def stream_source_quota_sink(
             .parquet(counts_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_late_audit_sink(
@@ -1290,10 +1261,4 @@ def stream_late_audit_sink(
             row, "seq bigint, n_rows bigint, n_late bigint, max_es bigint, wm_secs bigint"
         ).coalesce(1).write.mode("append").parquet(target_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream, upsert, target_dir)
