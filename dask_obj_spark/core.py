@@ -191,6 +191,13 @@ def _spark_type(shape: Any) -> T.DataType | None:
     return T.StructType([T.StructField(n, t) for n, t in zip(shape[1], types)])
 
 
+def _is_value_frame(df: "DataFrame") -> bool:
+    """The scalar rule for a DataFrame the user built: exactly one
+    column, named ``value``.  Frames this module makes set the flag
+    themselves (``_ingest``, ``_select_value``, ``_make``)."""
+    return df.columns == [VALUE]
+
+
 def _contiguous_repartition(df: "DataFrame", npartitions: int) -> "DataFrame":
     """Order-preserving repartition: contiguous ordered slices.
 
@@ -248,13 +255,13 @@ class ObjectFrame:
         self._use_df_attrs = use_df_attrs
         from_sequence = False
         if isinstance(items, ObjectFrame):
-            df, _pickled = items._df, items._pickled
+            df, _pickled, scalar = items._df, items._pickled, items._scalar
         elif isinstance(items, DataFrame):
-            df = items
+            df, scalar = items, _is_value_frame(items)
         else:
             if spark is None:
                 raise ValueError("spark session required to build from a sequence")
-            df, _pickled = self._ingest(spark, items)
+            df, _pickled, scalar = self._ingest(spark, items)
             from_sequence = True
         if npartitions is not None:
             # sequences carry a positional contract (accumulate scans, zip,
@@ -268,12 +275,17 @@ class ObjectFrame:
             )
         self._df = df
         self._pickled = _pickled
+        self._scalar = scalar
 
     # -- construction ---------------------------------------------------------
 
     @staticmethod
-    def _ingest(spark: SparkSession, items: Sequence[Any] | Iterable[Any]) -> tuple[DataFrame, bool]:
-        """One typing rule (module docstring), one ``createDataFrame``."""
+    def _ingest(
+        spark: SparkSession, items: Sequence[Any] | Iterable[Any]
+    ) -> tuple[DataFrame, bool, bool]:
+        """One typing rule (module docstring), one ``createDataFrame``.
+        Returns the frame, whether it is pickled and whether it is scalar
+        (one ``value`` column): every element type but a struct is."""
         items = list(items)
         typ = _spark_type(_merge_all(items, element=True))
         pickled = typ is None and bool(items)
@@ -281,10 +293,11 @@ class ObjectFrame:
             # opaque / heterogeneous → pickled binary column (reference's
             # "any object" contract; SURVEY.md §1.2)
             items, typ = [_dumps(x) for x in items], T.BinaryType()
-        if not isinstance(typ, T.StructType):
+        scalar = not isinstance(typ, T.StructType)
+        if scalar:
             items = [(x,) for x in items]
             typ = T.StructType([T.StructField(VALUE, typ or T.NullType())])
-        return spark.createDataFrame(items, schema=typ), pickled
+        return spark.createDataFrame(items, schema=typ), pickled, scalar
 
     @classmethod
     def from_df(cls, df: DataFrame, **kw) -> "ObjectFrame":
@@ -294,14 +307,19 @@ class ObjectFrame:
     def read_parquet(cls, spark: SparkSession, path: str, **kw) -> "ObjectFrame":
         return cls(spark.read.parquet(path), **kw)
 
-    def _make(self, df: DataFrame, pickled: bool | None = None) -> "ObjectFrame":
+    def _make(
+        self, df: DataFrame, pickled: bool | None = None, scalar: bool | None = None
+    ) -> "ObjectFrame":
         # operator closure: every derived frame carries config/flags
-        # (reference _make_new, core.py:59-60)
+        # (reference _make_new, core.py:59-60); a pickled frame is scalar
         new = ObjectFrame.__new__(ObjectFrame)
         new._config = dict(self._config)
         new._use_df_attrs = self._use_df_attrs
         new._df = df
         new._pickled = self._pickled if pickled is None else pickled
+        if scalar is None:
+            scalar = True if pickled else self._scalar
+        new._scalar = scalar
         return new
 
     # -- introspection --------------------------------------------------------
@@ -313,7 +331,9 @@ class ObjectFrame:
 
     @property
     def is_scalar(self) -> bool:
-        return len(self._df.columns) == 1 and self._df.columns[0] == VALUE
+        """One element per row in the ``value`` column (decided where the
+        frame is made), as opposed to a struct frame of named fields."""
+        return self._scalar
 
     @property
     def is_pickled(self) -> bool:
@@ -365,7 +385,7 @@ class ObjectFrame:
         return F.col(VALUE)
 
     def _select_value(self, col: Column) -> "ObjectFrame":
-        return self._make(self._df.select(col.alias(VALUE)), pickled=False)
+        return self._make(self._df.select(col.alias(VALUE)), pickled=False, scalar=True)
 
     # -- broadcast projections (A2/A3) ---------------------------------------
 
@@ -709,7 +729,7 @@ class ObjectFrame:
                 .agg(F.collect_list(F.struct(*self._df.columns)).alias("items"))
                 .select(F.col(grouper).alias("key"), "items")
             )
-            return self._make(grouped, pickled=False)
+            return self._make(grouped, pickled=False, scalar=False)
         # python grouper over elements
         keyed = self._element_rdd().groupBy(grouper if callable(grouper) else (lambda o: o[grouper]))
         out = keyed.map(lambda kv: (_dumps((kv[0], list(kv[1]))),))
@@ -744,7 +764,8 @@ class ObjectFrame:
     def agg_by(self, keys: list[str] | str, *aggs: Column) -> "ObjectFrame":
         """Columnar foldby: named-column groupBy + Catalyst aggregates."""
         keys = [keys] if isinstance(keys, str) else list(keys)
-        return self._make(self._df.groupBy(*keys).agg(*aggs), pickled=False)
+        grouped = self._df.groupBy(*keys).agg(*aggs)
+        return self._make(grouped, pickled=False, scalar=_is_value_frame(grouped))
 
     def topk(self, k: int, key: str | Column | None = None) -> "ObjectFrame":
         """Top-k (bag.topk) → ``TakeOrderedAndProject`` (no full sort)."""
@@ -826,11 +847,13 @@ class ObjectFrame:
         right = other._df if isinstance(other, ObjectFrame) else other
         if broadcast:
             right = F.broadcast(right)
-        return self._make(self._df.join(right, on, how), pickled=False)
+        joined = self._df.join(right, on, how)
+        return self._make(joined, pickled=False, scalar=_is_value_frame(joined))
 
     def product(self, other: "ObjectFrame | DataFrame") -> "ObjectFrame":
         right = other._df if isinstance(other, ObjectFrame) else other
-        return self._make(self._df.crossJoin(right), pickled=False)
+        crossed = self._df.crossJoin(right)
+        return self._make(crossed, pickled=False, scalar=_is_value_frame(crossed))
 
     def union(self, other: "ObjectFrame") -> "ObjectFrame":
         return self._make(self._df.unionByName(other._df))

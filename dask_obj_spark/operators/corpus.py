@@ -252,7 +252,7 @@ def pack_bins(
     """Contiguous token-budget packing: within each stream (ordered by
     id), bin = exclusive-prefix token count // budget.  All integer
     arithmetic — bit-exact on any engine."""
-    n_tok = F.size(ws_tokens(F.col(text_col)))
+    n_tok = F.size(ws_tokens(text_col))
     w = (
         Window.partitionBy(stream_col)
         .orderBy(id_col)
@@ -286,7 +286,7 @@ def pack_payload(
     ordering is imposed by `array_sort` over (id, text) structs, so the
     result is deterministic regardless of partitioning/arrival order
     (never rely on collect_list order)."""
-    n_tok = F.size(ws_tokens(F.col(text_col)))
+    n_tok = F.size(ws_tokens(text_col))
     w = (
         Window.partitionBy(stream_col)
         .orderBy(id_col)
@@ -403,7 +403,7 @@ def doc_distinct_shingles(
     ncores = df.sparkSession.sparkContext.defaultParallelism
     words = df.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(ws_tokens(F.col(text_col))).alias("pos", "w"),
+        F.posexplode(ws_tokens(text_col)).alias("pos", "w"),
     ).repartition(ncores, F.col("doc_id"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     grams = [F.col("w")] + [F.lead("w", i).over(w) for i in range(1, shingle_n)]
@@ -1783,7 +1783,7 @@ def epoch_schedule(
 
     Returns (source, n_tokens, weight_x1m, epochs_x1m, eff_tokens,
     regime)."""
-    n_tok = F.size(ws_tokens(F.col(text_col)))
+    n_tok = F.size(ws_tokens(text_col))
     per = (
         df.select(F.col(source_col).alias("source"), n_tok.alias("nt"))
         .groupBy("source")
@@ -2285,7 +2285,7 @@ def pack_segments(
     chains both windows and the final aggregate behind one Exchange.
     The segment string assembles order-exactly via
     array_sort(collect_list(struct)) — never raw collect_list order."""
-    n_tok = F.size(ws_tokens(F.col(text_col)))
+    n_tok = F.size(ws_tokens(text_col))
     w = (
         Window.partitionBy(stream_col)
         .orderBy(id_col)

@@ -220,7 +220,7 @@ def simhash_fingerprint(df: DataFrame, id_col: str, text_col: str, bits: int = S
     expressions are generated, all codegen'd."""
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(ws_tokens(F.col(text_col))).alias("tok"),
+        F.explode(ws_tokens(text_col)).alias("tok"),
     ).withColumn("h", porthash(F.col("tok"), "sim"))
     votes = toks.groupBy("doc_id").agg(
         *[
@@ -491,7 +491,7 @@ def prefix_jaccard_pairs(
     candidate-bounded; the prefix guarantees no true pair is lost
     (sound, not heuristic)."""
     toks = (
-        df.select(F.col(id_col).alias("id"), F.explode_outer(F.array_distinct(ws_tokens(F.col(text_col)))).alias("w"))
+        df.select(F.col(id_col).alias("id"), F.explode_outer(F.array_distinct(ws_tokens(text_col))).alias("w"))
         .distinct()
         .localCheckpoint(eager=True)
     )

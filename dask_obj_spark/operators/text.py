@@ -293,7 +293,7 @@ def remove_boilerplate_segments(
     linear in the corpus — so it carries no broadcast hint (AQE
     broadcasts at demo scale, shuffles the anti-join beyond); the
     string form here keeps the DuckDB oracle replayable verbatim."""
-    words = ws_tokens(F.col(text_col))
+    words = ws_tokens(text_col)
     nseg = F.floor((F.size(words) - 1) / seg_words) + 1
     segs = F.transform(
         F.sequence(F.lit(0), nseg - 1),
@@ -527,7 +527,7 @@ def bigram_lm_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     AQE broadcasts it at demo scale without a hint."""
     toks = df.select(
         F.col(id_col),
-        F.transform(ws_tokens(F.col(text_col)), lambda w: F.lower(w)).alias("ws"),
+        F.transform(ws_tokens(text_col), lambda w: F.lower(w)).alias("ws"),
     )
     bigrams = toks.select(
         F.col(id_col),

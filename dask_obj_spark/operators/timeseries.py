@@ -325,8 +325,8 @@ def holt_linear(
     DuckDB 1.0's struct-state list_reduce lambdas mis-evaluate (probed
     during round 4), so the variable-length two-accumulator recurrence
     is pinned by the hand-computed unit test — but the SAME loop is
-    oracle-verified end to end by `ts_holt_grid` below, which runs it
-    over a FIXED 8-step grid the oracle replays as an unrolled CTE
+    oracle-verified end to end by `ts_holt_grid` (queries_timeseries.py),
+    which runs it over a FIXED 8-step grid the oracle replays as an unrolled CTE
     chain (the k_core/bfs/PCA fixed-unroll precedent).
 
     ``quantize=True`` emits the raw (unrounded) states floor-quantized

@@ -1,11 +1,14 @@
 """Query registry: the driver-facing catalog of implemented operators.
 
 Every operator from SURVEY.md §2 that is demonstrable as a query gets a
-``@query("name", oracle="...sql...")`` registration here or in the
-operator modules; ``__spark_entry__.py`` re-exports the registry.  The
-oracle SQL is ANSI SQL executable by DuckDB over the same parquet tables
-— the correctness gate (row count + schema + order-insensitive value
-hash at sf0.01).
+``@query("name", oracle="...sql...")`` registration.  Registrations
+live only in the ``queries_*`` modules that ``load_all_queries``
+imports (one ``queries_<module>`` per operator module, beside
+``queries_core``/``queries_relational``/``queries_tpch``/
+``queries_tierd``); operator modules compute and never register.
+``__spark_entry__.py`` re-exports the registry.  The oracle SQL is ANSI
+SQL executable by DuckDB over the same parquet tables — the correctness
+gate (row count + schema + order-insensitive value hash at sf0.01).
 
 Column-name contract: every computed/aggregate column is aliased
 IDENTICALLY in the Spark query and the oracle SQL.
@@ -143,7 +146,11 @@ def _registration_rank(name: str) -> int:
 
 
 def load_all_queries() -> None:
-    """Import every module that registers queries (idempotent)."""
+    """Import every module that registers queries (idempotent).
+
+    Import order fixes registration order within a rank: similarity's
+    rows register before queries_relational's oracles pull in
+    queries_corpus (and, through it, dedup and text)."""
     import dask_obj_spark.queries_core  # noqa: F401
     import dask_obj_spark.queries_similarity  # noqa: F401
     import dask_obj_spark.queries_relational  # noqa: F401

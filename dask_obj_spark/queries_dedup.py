@@ -91,7 +91,7 @@ def _duck_pairs_sql(
 ) -> str:
     """sig CTE + bands + cand + the est_jaccard select — the complete
     minhash_candidate_pairs() computation as DuckDB SQL (shared with the
-    connected-components oracle in operators/corpus.py).  ``shingle_n``
+    connected-components oracle in queries_corpus.py).  ``shingle_n``
     is an explicit parameter: it was previously conflated with ``bands``
     (correct only while both happened to equal 4)."""
     est = (

@@ -24,7 +24,6 @@ from dask_obj_spark.operators.retrieval import (
 from dask_obj_spark.operators.similarity import (
     CENTROID_MOD,
     DIM,
-    NPROBE,
     cosine_ranked_raw,
     cosine_topk_brute,
     cosine_topk_ivf,

@@ -370,7 +370,7 @@ def profile_corpus_facets_q(spark, sf_dir):
     (the shuffle carries |facets| rows, the percentile state is the only
     non-algebraic part)."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(ws_tokens(F.col("text")))
+    n_tokens = F.size(ws_tokens("text"))
     return (
         docs.select("source", "lang", n_tokens.alias("n_tokens"), "n_chars")
         .groupBy("source", "lang")
@@ -802,7 +802,7 @@ def sketch_countmin_freq_q(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(ws_tokens(F.col("text"))).alias("tok")
+        F.explode(ws_tokens("text")).alias("tok")
     ).withColumn("tok", F.lower(F.col("tok"))).localCheckpoint(eager=True)
     cms = None
     for j in range(CMS_DEPTH):
@@ -898,7 +898,7 @@ def text_tfidf_cosine_pairs_q(spark, sf_dir):
     table is the standing bucketed-by-term asset shared with BM25."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.explode(ws_tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(ws_tokens("text")).alias("term")
     ).withColumn("term", F.lower(F.col("term")))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     n_docs = toks.select("doc_id").distinct().count()
@@ -1043,7 +1043,7 @@ def text_vocab_growth_heaps_q(spark, sf_dir):
     over the same tiny curve."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.explode(ws_tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(ws_tokens("text")).alias("term")
     ).withColumn("term", F.lower(F.col("term"))).localCheckpoint(eager=True)
     per_doc = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_toks"))
     first_seen = toks.groupBy("term").agg(F.min("doc_id").alias("first_doc"))

@@ -115,19 +115,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalescing floor: stock 1 MB default, env-overridable for
-        # cluster tuning.  An earlier r15 attempt shipped 64 KB to stop
-        # byte-light CPU-heavy stages collapsing to 1-2 tasks, but A/B
-        # measurement (OPTIMIZATION_r15.md "Inherited state") showed it
-        # REGRESSED the bench badly (b24 9.2 s vs 1.6 s, b40 2.6 s vs
-        # 0.8 s, b19 50 s vs 18 s wall on identical code): every tiny
-        # shuffle fans out to 32 tasks whose fixed per-task cost dwarfs
-        # their work.  The real fix for the single-split-scan rows is
-        # fan_out() at the scan (sources/tables.py), which stays.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
+        # coalescing floor: Spark's 1 MB default; 64 KB regressed (OPTIMIZATION_r15.md)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -47,9 +47,8 @@ any unknown logical type) → its base type, and any unrequested
 field — however complex — is consumed and dropped (avro rows have no
 per-field offsets).  Codecs: ``null``, ``deflate``
 (raw RFC-1951 via stdlib zlib, per the spec — no zlib wrapper, no
-checksum), and ``snappy`` (pure-Python encoder/decoder per the public
-snappy format description + the spec's 4-byte big-endian CRC32 of the
-uncompressed block — interop path, not a throughput path).
+checksum), and ``snappy`` (pyarrow's raw snappy codec + the spec's
+4-byte big-endian CRC32 of the uncompressed block).
 
 Deterministic output: the sync marker is the md5 of (schema JSON,
 partition id, write id), so identical data produces identical bytes —
@@ -266,6 +265,8 @@ def _make_avro_codec():
     from datetime import timedelta as _timedelta
     from datetime import timezone as _timezone
 
+    import pyarrow as _pa
+
     _EPOCH_UTC = _datetime(1970, 1, 1, tzinfo=_timezone.utc)
     _EPOCH_NAIVE = _datetime(1970, 1, 1)
     _EPOCH_DATE = _date(1970, 1, 1)
@@ -398,123 +399,33 @@ def _make_avro_codec():
         buf += sync
         return bytes(buf)
 
-    # -- snappy (pure Python, per google/snappy format_description.txt;
-    #    for interop with snappy-coded containers, not for throughput —
-    #    the default codec stays "null") --
-
-    def _snappy_emit_literal(out, src, lo, hi):
-        n = hi - lo
-        if n <= 0:
-            return
-        if n <= 60:
-            out.append((n - 1) << 2)
-        elif n <= 256:
-            out.append(60 << 2)
-            out += (n - 1).to_bytes(1, "little")
-        else:  # fragments are <= 64 KiB, so 2 length bytes always fit
-            out.append(61 << 2)
-            out += (n - 1).to_bytes(2, "little")
-        out += src[lo:hi]
-
-    def _snappy_emit_copy(out, off, ln):
-        while ln >= 68:
-            out.append(2 | (63 << 2))  # copy-2, length 64
-            out += off.to_bytes(2, "little")
-            ln -= 64
-        if ln > 64:  # leave a >= 4-byte remainder
-            out.append(2 | (59 << 2))  # length 60
-            out += off.to_bytes(2, "little")
-            ln -= 60
-        if 4 <= ln <= 11 and off < 2048:
-            out.append(1 | ((ln - 4) << 2) | ((off >> 8) << 5))
-            out.append(off & 0xFF)
-        else:
-            out.append(2 | ((ln - 1) << 2))
-            out += off.to_bytes(2, "little")
+    # -- snappy: the raw (unframed) stream, through pyarrow's codec --
 
     def snappy_compress(data):
-        data = bytes(data)
-        out = bytearray()
-        # preamble: uncompressed length, plain little-endian base-128
-        u = len(data)
-        while u > 0x7F:
-            out.append((u & 0x7F) | 0x80)
-            u >>= 7
-        out.append(u)
-        # greedy hash matcher per 64 KiB fragment (matches never cross a
-        # fragment, so copy offsets always fit the 2-byte copy tag) —
-        # the structure of the reference C implementation, simplified
-        for frag_lo in range(0, len(data), 1 << 16):
-            src = data[frag_lo : frag_lo + (1 << 16)]
-            n = len(src)
-            table = {}
-            i = lit_start = 0
-            while i + 4 <= n:
-                key = src[i : i + 4]
-                j = table.get(key)
-                table[key] = i
-                if j is None:
-                    i += 1
-                    continue
-                ln = 4
-                while i + ln < n and src[j + ln] == src[i + ln]:
-                    ln += 1
-                _snappy_emit_literal(out, src, lit_start, i)
-                _snappy_emit_copy(out, i - j, ln)
-                i += ln
-                lit_start = i
-            _snappy_emit_literal(out, src, lit_start, n)
-        return bytes(out)
+        return _pa.compress(bytes(data), codec="snappy", asbytes=True)
 
     def snappy_decompress(data):
-        mv = memoryview(data)
-        pos, n = 0, len(data)
-        ulen = shift = 0
+        data = bytes(data)
+        # preamble: the uncompressed length, little-endian base-128
+        ulen = shift = pos = 0
         while True:
-            b = mv[pos]
+            if pos >= len(data):
+                raise ValueError("snappy: truncated length preamble")
+            b = data[pos]
             pos += 1
             ulen |= (b & 0x7F) << shift
             if not b & 0x80:
                 break
             shift += 7
-        out = bytearray()
-        while pos < n:
-            tag = mv[pos]
-            pos += 1
-            t = tag & 3
-            if t == 0:  # literal
-                ln = tag >> 2
-                if ln >= 60:
-                    nb = ln - 59
-                    ln = int.from_bytes(mv[pos : pos + nb], "little")
-                    pos += nb
-                ln += 1
-                out += mv[pos : pos + ln]
-                pos += ln
-                continue
-            if t == 1:  # copy, 1-byte offset
-                ln = 4 + ((tag >> 2) & 7)
-                off = ((tag >> 5) << 8) | mv[pos]
-                pos += 1
-            elif t == 2:  # copy, 2-byte offset
-                ln = (tag >> 2) + 1
-                off = int.from_bytes(mv[pos : pos + 2], "little")
-                pos += 2
-            else:  # copy, 4-byte offset
-                ln = (tag >> 2) + 1
-                off = int.from_bytes(mv[pos : pos + 4], "little")
-                pos += 4
-            if off == 0 or off > len(out):
-                raise ValueError("snappy: bad copy offset")
-            start = len(out) - off
-            if off >= ln:
-                out += out[start : start + ln]
-            else:  # overlapping copy: byte-wise, RLE-style
-                for k in range(ln):
-                    out.append(out[start + k])
-        if len(out) != ulen:
-            raise ValueError("snappy: declared/actual length mismatch")
-        return bytes(out)
+        if ulen > 32 * len(data):  # no tag expands > 22x: corrupt preamble
+            raise ValueError("snappy: declared length exceeds any valid stream")
+        try:
+            return _pa.decompress(
+                data, decompressed_size=ulen, codec="snappy", asbytes=True
+            )
+        except (_pa.ArrowException, OSError) as e:
+            # pyarrow reports corrupt snappy data as OSError (ArrowIOError)
+            raise ValueError(f"snappy: {e}") from e
 
     def compress(codec, block):
         if codec == "null":
@@ -1109,9 +1020,9 @@ def to_avro(
     chunked into blocks of at most ``block_rows`` so readers stay
     O(block) and big files split at sync boundaries.  ``codec`` is
     ``"null"``, ``"deflate"`` (raw zlib per the spec), or ``"snappy"``
-    (pure-Python, + big-endian CRC32 suffix per the spec).  Returns the
-    per-file stats frame (file, n_rows) — dimension-sized — after
-    materializing it (the write IS the action).
+    (pyarrow's raw codec + big-endian CRC32 suffix per the spec).
+    Returns the per-file stats frame (file, n_rows) — dimension-sized —
+    after materializing it (the write IS the action).
 
     ``mode="append"`` REQUIRES a caller-supplied ``write_id``: files are
     named ``part-{pid}-{write_id}.avro``, so distinct appends coexist

@@ -679,7 +679,7 @@ def stream_heavy_hitters(
         if batch_id <= done_max:
             return
         toks = batch_df.select(
-            F.explode(ws_tokens(F.col("text"))).alias("term")
+            F.explode(ws_tokens("text")).alias("term")
         ).filter(F.col("term") != "")
         counted = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
         top, batch_n = _collect_top_terms(counted, counters + 1)
@@ -722,7 +722,7 @@ def stream_heavy_hitters_confirm(
         [(t,) for t in state["slots"]] or [(None,)], "term string"
     ).filter(F.col("term").isNotNull())
     toks = source.select(
-        F.explode(ws_tokens(F.col("text"))).alias("term")
+        F.explode(ws_tokens("text")).alias("term")
     ).filter(F.col("term") != "")
     n_total = int(state["n"])
     return (
@@ -857,7 +857,7 @@ def stream_decayed_topk(
         if batch_id <= done_max:
             return  # replay: ids are strictly increasing per checkpoint
         toks = batch_df.select(
-            F.explode(ws_tokens(F.col("text"))).alias("term")
+            F.explode(ws_tokens("text")).alias("term")
         ).filter(F.col("term") != "")
         counted = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
         top, batch_n = _collect_top_terms(counted, counters + 1)
@@ -893,7 +893,7 @@ def stream_decayed_topk_confirm(
     ).filter(F.col("term").isNotNull())
     w_total = int(state["w"])
     toks = source.select(
-        F.explode(ws_tokens(F.col("text"))).alias("term"),
+        F.explode(ws_tokens("text")).alias("term"),
         weight.cast("bigint").alias("wt"),
     ).filter(F.col("term") != "")
     return (

@@ -366,3 +366,24 @@ def test_replay_udf_body_is_worker_safe(tmp_path):
     assert _run_elsewhere(replay_udf(fn, T.StringType()).func, "Ab", tmp_path) == "'B'"
     body = replay_udf(fn, T.StringType(), pickled=True).func
     assert _run_elsewhere(body, pickle.dumps("cDe"), tmp_path) == "'dE'"
+
+
+def test_scalar_mode_is_decided_where_the_frame_is_made(spark):
+    """A struct frame whose only field is named ``value`` stays a struct
+    frame: its elements are ``Row``s and broadcasts address the row."""
+    from pyspark.sql import Row
+
+    rows = [Row(value=1), Row(value=2)]
+    frame = ObjectFrame([{"value": 1}, {"value": 2}], spark)
+    assert not frame.is_scalar
+    assert frame.compute() == rows
+    assert frame.map(lambda r: r).compute() == rows
+    assert frame.value.compute() == [1, 2]
+    assert frame.filter(Expr().value > 1).compute() == [Row(value=2)]
+    assert frame.map(lambda r: r.value * 10).compute() == [10, 20]
+    # a projection is a scalar frame, whatever its field is called
+    assert frame.value.is_scalar
+    # ingested atoms and a user DataFrame with one `value` column are scalar
+    assert ObjectFrame([1, 2], spark).compute() == [1, 2]
+    user = ObjectFrame(spark.createDataFrame([(1,), (2,)], "value long"))
+    assert user.is_scalar and user.compute() == [1, 2]

@@ -46,8 +46,12 @@ def _rows_to_multiset(cols, rows):
     return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
-def _duck_connection(sf_dir: str):
+def _duck_connection(sf_dir: str, spill_dir) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
+    # DuckDB's default buffer pool is 80% of host RAM; one connection
+    # serves a whole sweep, so bound it and let large oracles spill
+    con.execute("SET memory_limit = '4GB'")
+    con.execute(f"SET temp_directory = '{spill_dir}'")
     for name in (
         "region nation customer supplier part orders lineitem events documents embeddings".split()
     ):
@@ -69,8 +73,8 @@ ALLOWED_EMPTY: frozenset[str] = frozenset()
 
 
 @pytest.fixture(scope="module")
-def duck(oracle_sf_dir):
-    con = _duck_connection(oracle_sf_dir)
+def duck(oracle_sf_dir, tmp_path_factory):
+    con = _duck_connection(oracle_sf_dir, tmp_path_factory.mktemp("duck_spill"))
     yield con
     con.close()
 

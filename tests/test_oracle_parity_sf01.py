@@ -19,8 +19,8 @@ SF01_DIR = "/root/testdata/sf0.1"
 
 
 @pytest.fixture(scope="module")
-def duck01():
-    con = _duck_connection(SF01_DIR)
+def duck01(tmp_path_factory):
+    con = _duck_connection(SF01_DIR, tmp_path_factory.mktemp("duck_spill"))
     yield con
     con.close()
 

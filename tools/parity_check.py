@@ -11,7 +11,9 @@ Usage:
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -37,9 +39,10 @@ def main() -> None:
 
     spark = get_spark(app_name="parity-check")
     failures = []
+    spill_dir = tempfile.mkdtemp(prefix="duck_spill_")
     for sf in sfs:
         sf_dir = f"/root/testdata/sf{sf}"
-        duck = par._duck_connection(sf_dir)
+        duck = par._duck_connection(sf_dir, spill_dir)
         for name in names:
             t0 = time.perf_counter()
             try:
@@ -51,6 +54,7 @@ def main() -> None:
             print(f"sf{sf} {name}: {status} ({time.perf_counter()-t0:.1f}s)",
                   file=sys.stderr)
         duck.close()
+    shutil.rmtree(spill_dir, ignore_errors=True)
     if failures:
         print(f"{len(failures)} FAILURES", file=sys.stderr)
         sys.exit(1)
