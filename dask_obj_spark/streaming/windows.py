@@ -325,7 +325,7 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_foreach_batch(stream: DataFrame, fn, target_dir: str) -> None:
+def _run_foreach_batch(stream: DataFrame, fn, target_dir: str) -> None:
     """Drain ``stream`` with availableNow, calling ``fn(batch_df,
     batch_id)`` per micro-batch and checkpointing to ``<target_dir>_ckpt``."""
     (
@@ -366,7 +366,7 @@ def stream_dedup_upsert(
             )
         batch.write.mode("append").parquet(target_dir)
 
-    run_foreach_batch(stream, upsert, target_dir)
+    _run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_dedup_within_watermark(
@@ -569,7 +569,7 @@ def stream_neardup_minhash(
             os.rename(tmp, bands_dir)
             shutil.rmtree(old, ignore_errors=True)
 
-    run_foreach_batch(stream, upsert, target_dir)
+    _run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_hll_hourly_registers(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -704,7 +704,7 @@ def stream_heavy_hitters(
             json.dump(state, fh)
         os.replace(tmp, mg_path)  # atomic swap: readers never see a torn state
 
-    run_foreach_batch(stream, upsert, target_dir)
+    _run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_heavy_hitters_confirm(
@@ -869,7 +869,7 @@ def stream_decayed_topk(
             json.dump(state, fh)
         os.replace(tmp, st_path)
 
-    run_foreach_batch(stream, upsert, target_dir)
+    _run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_decayed_topk_confirm(
@@ -966,7 +966,7 @@ def stream_quality_psi_sink(
             rows, "seq bigint, bkt int, c bigint"
         ).coalesce(1).write.mode("append").parquet(target_dir)
 
-    run_foreach_batch(stream, upsert, target_dir)
+    _run_foreach_batch(stream, upsert, target_dir)
 
 
 def quality_psi_vs_frozen(spark: SparkSession, target_dir: str) -> DataFrame:
@@ -1081,7 +1081,7 @@ def stream_contamination_sink(
             )
         flagged.write.mode("append").parquet(target_dir)
 
-    run_foreach_batch(stream, upsert, target_dir)
+    _run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_source_quota_sink(
@@ -1177,7 +1177,7 @@ def stream_source_quota_sink(
             .parquet(counts_dir)
         )
 
-    run_foreach_batch(stream, upsert, target_dir)
+    _run_foreach_batch(stream, upsert, target_dir)
 
 
 def stream_late_audit_sink(
@@ -1261,4 +1261,4 @@ def stream_late_audit_sink(
             row, "seq bigint, n_rows bigint, n_late bigint, max_es bigint, wm_secs bigint"
         ).coalesce(1).write.mode("append").parquet(target_dir)
 
-    run_foreach_batch(stream, upsert, target_dir)
+    _run_foreach_batch(stream, upsert, target_dir)

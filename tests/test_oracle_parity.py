@@ -49,9 +49,11 @@ def _rows_to_multiset(cols, rows):
 def _duck_connection(sf_dir: str, spill_dir) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     # DuckDB's default buffer pool is 80% of host RAM; one connection
-    # serves a whole sweep, so bound it and let large oracles spill
+    # serves a whole sweep, so bound it and let large oracles spill, to a
+    # bounded directory (an unbounded spill can fill the disk)
     con.execute("SET memory_limit = '4GB'")
     con.execute(f"SET temp_directory = '{spill_dir}'")
+    con.execute("SET max_temp_directory_size = '8GB'")
     for name in (
         "region nation customer supplier part orders lineitem events documents embeddings".split()
     ):
