@@ -55,10 +55,12 @@ from dask_obj_spark.functions.hashing import (
     ws_tokens,
 )
 from dask_obj_spark.functions.vec import fixed_dot, fixed_norm
+from dask_obj_spark.pinning import fixpoint, pin, scoped
 
 # -- connected components -----------------------------------------------------
 
 
+@scoped
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -94,18 +96,15 @@ def connected_components(
     # working edge set derive from it, and without the cut the upstream
     # plan (e.g. the full MinHash pair generation) would be re-executed
     # once per consumer (measured: 2× the pair cost before any round ran)
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=True
-    )
+    raw = pin(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     # vertex set from the RAW edges: a vertex appearing only in a
     # self-loop is still a (singleton) component
-    verts = (
+    verts = pin(
         raw.select(u.alias("id"))
         .union(raw.select(v.alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    e = raw.filter(u != v).distinct().localCheckpoint(eager=True)
+    e = pin(raw.filter(u != v).distinct())
 
     def signature(df: DataFrame):
         # bit_xor, not sum: order-insensitive over the (distinct) edge set
@@ -116,9 +115,7 @@ def connected_components(
         ).first()
         return (row["n"], row["h"])
 
-    sig = signature(e)
-    rounds = 0
-    for _ in range(max_iter):
+    def star_round(e: DataFrame) -> DataFrame:
         # -- large-star: nbrs is the symmetric view; m = min(Γ(u) ∪ {u})
         nbrs = e.union(e.select(v.alias("u"), u.alias("v")))
         mins = (
@@ -138,19 +135,15 @@ def connected_components(
             F.greatest(u, v).alias("u"), F.least(u, v).alias("v")
         ).distinct()
         smins = directed.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        return (
             directed.join(smins, "u")
             .select(v.alias("u"), F.col("m").alias("v"))
             .union(smins.select(F.col("u"), F.col("m").alias("v")))
             .filter(u != v)
             .distinct()
         )
-        e = small.localCheckpoint(eager=True)
-        rounds += 1
-        new_sig = signature(e)
-        if new_sig == sig:
-            break
-        sig = new_sig
+
+    e, rounds = fixpoint(e, star_round, signature, max_rounds=max_iter)
     if _rounds_out is not None:
         _rounds_out.append(rounds)
     # fixpoint edges are child→root stars; roots (and isolated inputs) label
@@ -165,6 +158,7 @@ def connected_components(
     )
 
 
+@scoped
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -187,34 +181,31 @@ def pagerank(
     localCheckpoint, same as connected_components."""
     # cut lineage BEFORE symmetrizing: the union references the edge
     # plan twice, so an expensive upstream (MinHash pairs) would run 2×
-    ed = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint(
-        eager=True
+    ed = pin(edges.select(F.col(src).alias("s"), F.col(dst).alias("d")))
+    sym = pin(
+        ed.union(ed.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
     )
-    sym = ed.union(
-        ed.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).distinct().localCheckpoint(eager=True)
-    verts = sym.select(F.col("s").alias("id")).distinct().localCheckpoint(eager=True)
+    verts = pin(sym.select(F.col("s").alias("id")).distinct())
     n = verts.count()
     outdeg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg"))
     ranks = verts.withColumn("rank", F.lit(1.0 / n))
     base = F.lit((1.0 - damping) / n)
-    for _ in range(n_iter):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = (
             sym.join(ranks, sym["s"] == ranks["id"])
             .join(outdeg, "s")
             .select(F.col("d"), (F.col("rank") / F.col("outdeg")).alias("c"))
         )
         sums = contrib.groupBy("d").agg(F.sum("c").alias("in_sum"))
-        ranks = (
-            verts.join(sums, verts["id"] == sums["d"], "left")
-            .select(
-                "id",
-                (base + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-            .localCheckpoint(eager=True)
+        return verts.join(sums, verts["id"] == sums["d"], "left").select(
+            "id",
+            (base + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))).alias(
+                "rank"
+            ),
         )
+
+    ranks, _ = fixpoint(ranks, step, None, rounds=n_iter)
     if round_to is None:
         return ranks.select("id", "rank")
     return ranks.select("id", F.round("rank", round_to).alias("rank"))
@@ -718,6 +709,7 @@ def _bpe_apply_round(sym: DataFrame) -> tuple[DataFrame, DataFrame]:
     return new_sym, best_df
 
 
+@scoped
 def bpe_learn_merges(
     df: DataFrame, id_col: str, text_col: str, rounds: int = 3
 ) -> DataFrame:
@@ -735,12 +727,14 @@ def bpe_learn_merges(
     per-round aggregations are not re-run by the output union, and the
     last round skips its never-consumed symbol update."""
     spark = df.sparkSession
-    sym = _bpe_pair_w2(
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(ws_tokens(text_col)).alias("i", "s"),
+    sym = pin(
+        _bpe_pair_w2(
+            df.select(
+                F.col(id_col).alias("doc_id"),
+                F.posexplode(ws_tokens(text_col)).alias("i", "s"),
+            )
         )
-    ).localCheckpoint(eager=True)
+    )
     rows = []
     for r in range(1, rounds + 1):
         best = _bpe_best_pair_rows(sym)
@@ -748,9 +742,7 @@ def bpe_learn_merges(
             break  # no adjacent pairs left: remaining rounds are empty
         rows.append((r, best[0]["w1"], best[0]["w2"], best[0]["n"]))
         if r < rounds:
-            sym = _bpe_apply_literal(
-                sym, best[0]["w1"], best[0]["w2"]
-            ).localCheckpoint(eager=True)
+            sym = pin(_bpe_apply_literal(sym, best[0]["w1"], best[0]["w2"]))
     return spark.createDataFrame(
         rows, "round INT, w1 STRING, w2 STRING, n BIGINT"
     )
@@ -759,6 +751,7 @@ def bpe_learn_merges(
 # -- triangle counting --------------------------------------------------------
 
 
+@scoped
 def triangle_counts(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> DataFrame:
     """Per-vertex triangle participation counts over an undirected edge
     list — the clustering-coefficient / community-density primitive (on
@@ -781,11 +774,10 @@ def triangle_counts(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Dat
     # kNN graph the entire brute scoring, whose r15 unrolled-kernel
     # plans are also expensive to re-ANALYZE per copy per job (measured:
     # b19 wall was ~85% driver plan time before this pin)
-    e = (
+    e = pin(
         edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("a").alias("v"))
@@ -821,6 +813,7 @@ def triangle_counts(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Dat
     return verts.groupBy("v").agg(F.count(F.lit(1)).alias("n_tri"))
 
 
+@scoped
 def bpe_apply_stats(
     df: DataFrame, id_col: str, text_col: str, rounds: int = 3
 ) -> DataFrame:
@@ -833,12 +826,14 @@ def bpe_apply_stats(
     (doc_id, i, s, w2) symbol table feeds both the per-round 1-row
     best-pair collects and the single-Exchange merge-applies; the
     before-count reads the same pin."""
-    sym = _bpe_pair_w2(
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(ws_tokens(text_col)).alias("i", "s"),
+    sym = pin(
+        _bpe_pair_w2(
+            df.select(
+                F.col(id_col).alias("doc_id"),
+                F.posexplode(ws_tokens(text_col)).alias("i", "s"),
+            )
         )
-    ).localCheckpoint(eager=True)
+    )
     before = sym.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tokens"))
     for _ in range(rounds):
         best = _bpe_best_pair_rows(sym)
@@ -848,9 +843,7 @@ def bpe_apply_stats(
             # docs only ⇒ the legacy crossJoin round emptied sym)
             sym = sym.filter(F.lit(False))
             break
-        sym = _bpe_apply_literal(
-            sym, best[0]["w1"], best[0]["w2"]
-        ).localCheckpoint(eager=True)
+        sym = pin(_bpe_apply_literal(sym, best[0]["w1"], best[0]["w2"]))
     after = sym.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_syms"))
     return (
         before.join(after, "doc_id")
@@ -881,6 +874,7 @@ def sample_k_per_group(
     )
 
 
+@scoped
 def source_overlap_matrix(
     df: DataFrame,
     key_col: str,
@@ -900,13 +894,12 @@ def source_overlap_matrix(
     sources' documents — the stop-shingle skew guard, since a
     boilerplate shingle shared by everything contributes O(sources²)
     pairs and no signal."""
-    inv = (
+    inv = pin(
         df.select(
             F.col(key_col).alias("src"),
             F.explode(word_shingles(F.col(text_col), n)).alias("sh"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     if max_shingle_freq is not None:
         hot = (
@@ -928,6 +921,7 @@ def source_overlap_matrix(
     )
 
 
+@scoped
 def hits_scores(
     edges: DataFrame,
     src: str = "src",
@@ -947,11 +941,8 @@ def hits_scores(
     round: two edge⋈score joins + two vertex-keyed sums + two 1-row
     max aggregates (broadcast) — the iterative-solver template
     (localCheckpoint per round)."""
-    ed = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct()
-    ed = ed.localCheckpoint(eager=True)
-    hubs = ed.select(F.col("s").alias("id")).distinct().withColumn(
-        "h", F.lit(1.0)
-    ).localCheckpoint(eager=True)
+    ed = pin(edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct())
+    hubs = pin(ed.select(F.col("s").alias("id")).distinct().withColumn("h", F.lit(1.0)))
     auths = None
     for _ in range(n_iter):
         a_raw = (
@@ -960,10 +951,9 @@ def hits_scores(
             .agg(F.sum("h").alias("a"))
         )
         a_max = a_raw.agg(F.max("a").alias("m"))
-        auths = (
+        auths = pin(
             a_raw.crossJoin(F.broadcast(a_max))
             .select(F.col("d").alias("id"), (F.col("a") / F.col("m")).alias("a"))
-            .localCheckpoint(eager=True)
         )
         h_raw = (
             ed.join(auths, ed["d"] == auths["id"])
@@ -971,10 +961,9 @@ def hits_scores(
             .agg(F.sum("a").alias("h"))
         )
         h_max = h_raw.agg(F.max("h").alias("m"))
-        hubs = (
+        hubs = pin(
             h_raw.crossJoin(F.broadcast(h_max))
             .select(F.col("s").alias("id"), (F.col("h") / F.col("m")).alias("h"))
-            .localCheckpoint(eager=True)
         )
     return hubs.select("id", F.lit("hub").alias("kind"), F.round("h", 6).alias("score")).union(
         auths.select("id", F.lit("authority").alias("kind"), F.round("a", 6).alias("score"))
@@ -984,6 +973,7 @@ def hits_scores(
 # -- DSIR importance resampling ----------------------------------------------
 
 
+@scoped
 def dsir_importance_weights(
     df: DataFrame,
     id_col: str,
@@ -1040,13 +1030,12 @@ def dsir_importance_weights(
     # the bucket-count table is `buckets` rows — materialize it once so
     # the totals aggregate and the ratio table both read 64 rows instead
     # of re-running the gram explode + aggregate (one fewer corpus scan)
-    bc = (
+    bc = pin(
         bg.groupBy("bucket")
         .agg(
             F.sum(F.when(F.col("tgt"), 1).otherwise(0)).alias("ct"),
             F.sum(F.when(~F.col("tgt"), 1).otherwise(0)).alias("cr"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = bc.agg(F.sum("ct").alias("tt"), F.sum("cr").alias("rr"))
     ab = float(alpha) * buckets
@@ -1837,6 +1826,7 @@ def epoch_schedule(
 # -- corpus monitoring: quality drift (PSI) and snapshot diff -----------------
 
 
+@scoped
 def quality_psi_by_source(
     df: DataFrame, id_col: str, text_col: str, source_col: str
 ) -> DataFrame:
@@ -1876,10 +1866,9 @@ def quality_psi_by_source(
     # is dimension-sized, so pin the summary (it fans out to the grid,
     # the reference distribution, and the source list — without the
     # checkpoint each branch re-runs the corpus aggregate)
-    sb = (
+    sb = pin(
         scored.groupBy("src", "bkt")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
     )
     # zero-fill the (source × decile) grid off the aggregate (tiny)
     grid = (

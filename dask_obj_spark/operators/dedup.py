@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from dask_obj_spark.functions.hashing import porthash, word_shingles, ws_tokens
 from dask_obj_spark.functions.vec import fixed_dot, fixed_norm
 from dask_obj_spark.operators.similarity import DIM as _SIM_DIM
+from dask_obj_spark.pinning import pin, scoped
 
 # -- exact dedup --------------------------------------------------------------
 
@@ -111,6 +112,7 @@ def lsh_bands(sig_df: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     )
 
 
+@scoped
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -124,7 +126,7 @@ def minhash_candidate_pairs(
     signature components).  Join is equi on (band_id, band_hash) — a hash
     join whose cost is bucket-bounded, never all-pairs."""
     rows_per_band = num_hashes // bands
-    sig = minhash_signature(df, id_col, text_col, num_hashes, shingle_n).cache()
+    sig = pin(minhash_signature(df, id_col, text_col, num_hashes, shingle_n))
     bands_df = lsh_bands(sig, bands, rows_per_band)
     a, b = bands_df.alias("a"), bands_df.alias("b")
     cand = (
@@ -367,6 +369,7 @@ def _semantic_cells(
     return cells
 
 
+@scoped
 def semantic_dedup(
     df: DataFrame,
     id_col: str,
@@ -407,7 +410,7 @@ def semantic_dedup(
         # cheap to replay, and pinning would truncate the hint out of
         # the analyzed plan (pinned by
         # test_semantic_cell_broadcast_hint_is_conditional)
-        cells = cells.localCheckpoint(eager=True)
+        cells = pin(cells)
     lower = cells.select(
         F.col("cell"),
         F.col("vid").alias("vid2"),
@@ -468,6 +471,7 @@ def fuzzy_name_pairs(
 # -- prefix-filtered set-similarity join (PPJoin-style) -----------------------
 
 
+@scoped
 def prefix_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, tau: float = 0.7
 ) -> DataFrame:
@@ -490,10 +494,9 @@ def prefix_jaccard_pairs(
     broadcasts it at demo scale on its own.  Verification is
     candidate-bounded; the prefix guarantees no true pair is lost
     (sound, not heuristic)."""
-    toks = (
+    toks = pin(
         df.select(F.col(id_col).alias("id"), F.explode_outer(F.array_distinct(ws_tokens(text_col))).alias("w"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     dfreq = toks.groupBy("w").agg(F.count(F.lit(1)).alias("dfw"))
@@ -542,6 +545,7 @@ _SN_BLOCK_LEN = 4  # coarse block = first chars of the key
 _SN_WINDOW = 2  # neighbors paired with each record (w-1 of classic SN w=3)
 
 
+@scoped
 def sorted_neighborhood_pairs(
     df: DataFrame,
     id_col: str,
@@ -609,10 +613,12 @@ def sorted_neighborhood_pairs(
     # a no-op once the scan has a split per core
     from dask_obj_spark.sources.tables import fan_out
 
-    sh = fan_out(df).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(text_col, shingle_n)).alias("shingle"),
-    ).localCheckpoint(eager=True)
+    sh = pin(
+        fan_out(df).select(
+            F.col(id_col).alias("doc_id"),
+            F.explode(word_shingles(text_col, shingle_n)).alias("shingle"),
+        )
+    )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         cand.join(sh.alias("a"), F.col("id1") == F.col("a.doc_id"))
@@ -706,6 +712,7 @@ def minhash_estimate_error(
     )
 
 
+@scoped
 def containment_pairs(
     df: DataFrame,
     id_col: str,
@@ -737,7 +744,7 @@ def containment_pairs(
         # corpus, NOT constant-bounded, so no broadcast hint: AQE picks
         # broadcast at demo scale, shuffled anti-join at 100 TB
         sh = sh.join(hot, "shingle", "left_anti")
-    sh = sh.localCheckpoint(eager=True)  # sizes + both join legs
+    sh = pin(sh)  # sizes + both join legs
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (

@@ -47,6 +47,7 @@ from dask_obj_spark.functions.vec import (
     sqdist_sql,
     sqnum_sql,
 )
+from dask_obj_spark.pinning import fixpoint, pin, scoped
 
 
 # -- brute-force top-k --------------------------------------------------------
@@ -372,6 +373,7 @@ def cosine_topk_ivf(
     )
 
 
+@scoped
 def knn_graph_ann(
     df: DataFrame,
     id_col: str,
@@ -448,7 +450,7 @@ def knn_graph_ann(
         )
         # one pass over the corpus computes both legs; materialize it so
         # the cells/pcells branches don't re-score the assignment twice
-        assign = assign.localCheckpoint(eager=True)
+        assign = pin(assign)
         cells = assign.filter(F.col("rn") == 1).select("vid", "v", "vn", "cid")
         pcells = assign.filter(
             (F.col("rn") <= nprobe) & (F.col("vid") % probe_mod == 0)
@@ -526,6 +528,7 @@ def knn_graph_ann(
 KMEANS_UNROLL_MAX = 16
 
 
+@scoped
 def kmeans_fit(
     df: DataFrame, id_col: str, vec_col: str, k: int = 8, iters: int = 3
 ) -> tuple[list[list[float]], DataFrame]:
@@ -550,13 +553,12 @@ def kmeans_fit(
     # this repartition exchange.  This is the localCheckpoint analogue
     # of MLlib KMeans caching its input; values are unchanged.
     ncores = df.sparkSession.sparkContext.defaultParallelism
-    base = (
+    base = pin(
         df.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).cast("array<double>").alias("v"),
         )
         .repartition(ncores, "vid")
-        .localCheckpoint(eager=True)
     )
     cents = [list(r.v) for r in base.orderBy("vid").limit(k).collect()]
 
@@ -615,6 +617,7 @@ KMQ_SCALE = 1000  # |x| ≤ 0.58 fixture → |xq| ≤ 578; (xq·n − s)² summe
 # over 64 dims stays < 2^63 up to n ≈ 200k rows/cell (sf10 headroom)
 
 
+@scoped
 def kmeans_fit_quantized(
     df: DataFrame,
     id_col: str,
@@ -653,7 +656,7 @@ def kmeans_fit_quantized(
     # iters+2 times; the pin stops each pass re-running the scan +
     # quantize transform + this exchange (values unchanged)
     ncores = df.sparkSession.sparkContext.defaultParallelism
-    base = (
+    base = pin(
         df.select(
             F.col(id_col).alias("vid"),
             F.expr(
@@ -662,7 +665,6 @@ def kmeans_fit_quantized(
             ).alias("xq"),
         )
         .repartition(ncores, "vid")
-        .localCheckpoint(eager=True)
     )
     init = base.orderBy("vid").limit(k).collect()
     state: list[tuple[list[int], int]] = [(list(r.xq), 1) for r in init]
@@ -804,6 +806,7 @@ def ann_recall(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
 # -- power-iteration PCA ------------------------------------------------------
 
 
+@scoped
 def pca_power_top_component(
     df: DataFrame, id_col: str, vec_col: str, rounds: int = 8
 ) -> DataFrame:
@@ -841,12 +844,11 @@ def pca_power_top_component(
     repr round-trip, bit-identical to `F.lit`).  The distributed legs
     (x*c products, the two aggregation trees) are unchanged
     expression-for-expression."""
-    mat = (
+    mat = pin(
         df.select(
             F.col(id_col).alias("vid"),
             F.posexplode(F.col(vec_col).cast("array<double>")).alias("i", "x"),
         )
-        .localCheckpoint(eager=True)
     )
     dim = mat.agg(F.max("i")).first()[0] + 1
     v = [1.0 / math.sqrt(float(dim))] * dim
@@ -887,6 +889,7 @@ def pca_power_top_component(
     )
 
 
+@scoped
 def pca_top_components(
     df: DataFrame,
     id_col: str,
@@ -928,10 +931,9 @@ def pca_top_components(
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("i", "x"),
     )
     mu = mat.groupBy("i").agg(F.avg("x").alias("mu"))
-    cmat = (
+    cmat = pin(
         mat.join(F.broadcast(mu), "i")
         .select("vid", "i", (F.col("x") - F.col("mu")).alias("x"))
-        .localCheckpoint(eager=True)
     )
     dim = cmat.agg(F.max("i")).first()[0] + 1
 
@@ -993,6 +995,7 @@ def pca_top_components(
 # -- label propagation (semi-supervised) --------------------------------------
 
 
+@scoped
 def label_propagation(
     edges: DataFrame,
     seeds: DataFrame,
@@ -1013,36 +1016,33 @@ def label_propagation(
     # materialize the symmetrized edges once: every round consumes them,
     # and an unpinned lineage would re-run the upstream edge
     # construction (e.g. brute-force kNN scoring) per round
-    sym = (
+    sym = pin(
         edges.select(F.col("u"), F.col("v"))
         .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint(eager=True)
     )
-    lab = seeds.localCheckpoint(eager=True)
-    for _ in range(rounds):
+    w = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("lab"))
+
+    def step(lab: DataFrame) -> DataFrame:
         nb = (
             sym.join(lab.select(F.col("id").alias("u"), "lab"), "u")
             .filter(F.col("lab").isNotNull())
             .groupBy(F.col("v").alias("id"), "lab")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        w = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("lab"))
         best = (
             nb.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("id", F.col("lab").alias("new_lab"))
         )
-        lab = (
-            lab.join(best, "id", "left")
-            .select(
-                "id",
-                F.when(F.col("seed") == 1, F.col("lab"))
-                .otherwise(F.coalesce(F.col("new_lab"), F.col("lab")))
-                .alias("lab"),
-                "seed",
-            )
-            .localCheckpoint(eager=True)
+        return lab.join(best, "id", "left").select(
+            "id",
+            F.when(F.col("seed") == 1, F.col("lab"))
+            .otherwise(F.coalesce(F.col("new_lab"), F.col("lab")))
+            .alias("lab"),
+            "seed",
         )
+
+    lab, _ = fixpoint(pin(seeds), step, None, rounds=rounds)
     return lab.select(
         "id", F.coalesce(F.col("lab"), F.lit(-1)).cast("long").alias("lab")
     )
@@ -1051,6 +1051,7 @@ def label_propagation(
 # -- k-core decomposition -----------------------------------------------------
 
 
+@scoped
 def k_core(edges: DataFrame, k: int, rounds: int | None = None) -> DataFrame:
     """k-core of an undirected graph by iterative peeling: drop every
     vertex with degree < k, recompute degrees on the induced subgraph,
@@ -1070,11 +1071,10 @@ def k_core(edges: DataFrame, k: int, rounds: int | None = None) -> DataFrame:
 
     Per round one degree aggregate + one semi-join on the vertex — the
     shuffle carries (vertex, degree) pairs.  Returns (id, degree)."""
-    e = (
+    e = pin(
         edges.select(F.col("u"), F.col("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def peel(e: DataFrame) -> DataFrame:
@@ -1085,20 +1085,9 @@ def k_core(edges: DataFrame, k: int, rounds: int | None = None) -> DataFrame:
             e.join(keep, "u")
             .join(keep.select(F.col("u").alias("v")), "v")
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
 
-    if rounds is None:
-        n = e.count()
-        while n:
-            e = peel(e)
-            n2 = e.count()
-            if n2 == n:
-                break
-            n = n2
-    else:
-        for _ in range(rounds):
-            e = peel(e)
+    e, _ = fixpoint(e, peel, DataFrame.count, rounds=rounds)
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     return sym.groupBy(F.col("u").alias("id")).agg(F.count(F.lit(1)).alias("degree"))
 
@@ -1106,6 +1095,7 @@ def k_core(edges: DataFrame, k: int, rounds: int | None = None) -> DataFrame:
 # -- multi-source BFS hop distances -------------------------------------------
 
 
+@scoped
 def bfs_hops(
     vertices: DataFrame,
     edges: DataFrame,
@@ -1146,15 +1136,13 @@ def bfs_hops(
     re-rank — the 100 TB path, certified by graph_bfs_ann); the brute
     builder stays only inside oracle-paired queries whose fixed-unroll
     DuckDB replay needs it."""
-    sym = (
+    sym = pin(
         edges.select("u", "v")
         .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint(eager=True)
     )
-    dist = (
+    dist = pin(
         seeds.select(F.col("id"), F.lit(0).alias("dist"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     frontier = dist
     for r in range(1, rounds + 1):
@@ -1166,7 +1154,7 @@ def bfs_hops(
         new = cand.join(dist, "id", "left_anti").select(
             "id", F.lit(r).alias("dist")
         )
-        dist = dist.union(new).localCheckpoint(eager=True)
+        dist = pin(dist.union(new))
         frontier = dist.filter(F.col("dist") == r)
     return vertices.join(dist, "id", "left").select(
         "id", F.coalesce(F.col("dist"), F.lit(-1)).cast("long").alias("dist")
@@ -1176,6 +1164,7 @@ def bfs_hops(
 # -- weighted single-source shortest paths ------------------------------------
 
 
+@scoped
 def weighted_sssp(
     vertices: DataFrame,
     edges: DataFrame,
@@ -1211,47 +1200,26 @@ def weighted_sssp(
     each round (weighted minima can improve through longer paths), the
     standard trade until delta-stepping; the edge list checkpoints once
     before the loop (shared-scan pin, see `bfs_hops`)."""
-    sym = (
+    sym = pin(
         edges.select("u", "v", "w")
         .union(
             edges.select(
                 F.col("v").alias("u"), F.col("u").alias("v"), F.col("w")
             )
         )
-        .localCheckpoint(eager=True)
     )
-    dist = (
-        seeds.select("id", F.lit(0).cast("long").alias("dist"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    dist = pin(seeds.select("id", F.lit(0).cast("long").alias("dist")).distinct())
 
     def relax(d: DataFrame) -> DataFrame:
         cand = sym.join(d.select(F.col("id").alias("u"), "dist"), "u").select(
             F.col("v").alias("id"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        return (
-            d.union(cand)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
+        return d.union(cand).groupBy("id").agg(F.min("dist").alias("dist"))
 
-    if rounds is None:
-        sig = dist.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-        ).first()
-        while True:
-            dist = relax(dist)
-            new_sig = dist.agg(
-                F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-            ).first()
-            if (new_sig["n"], new_sig["s"]) == (sig["n"], sig["s"]):
-                break
-            sig = new_sig
-    else:
-        for _ in range(rounds):
-            dist = relax(dist)
+    def witness(d: DataFrame) -> tuple:
+        return tuple(d.agg(F.count(F.lit(1)), F.sum("dist")).first())
+
+    dist, _ = fixpoint(dist, relax, witness, rounds=rounds)
     return vertices.join(dist, "id", "left").select(
         "id", F.coalesce(F.col("dist"), F.lit(-1)).cast("long").alias("dist_micro")
     )
@@ -1362,6 +1330,7 @@ def pq_encode(
     )
 
 
+@scoped
 def pq_adc_ranked(
     df: DataFrame,
     id_col: str,
@@ -1387,13 +1356,12 @@ def pq_adc_ranked(
     # pinned once: consumed by the codeword collect, the encode scan,
     # the probe expansion and the candidate surface (r16; see
     # ivfpq_topk)
-    base = (
+    base = pin(
         raw.withColumn("_vn", fixed_norm("v", dim))
         .select(
             "vid",
             F.transform(F.col("v"), lambda x: x / F.col("_vn")).alias("v"),
         )
-        .localCheckpoint(eager=True)
     )
     sub = dim // m
     # the modular codeword set collapses to ONE sorted struct-array row,
@@ -1476,6 +1444,7 @@ def pq_adc_ranked(
     return scored.withColumn("rank", F.row_number().over(rw))
 
 
+@scoped
 def matryoshka_recall(
     df: DataFrame,
     id_col: str,
@@ -1582,11 +1551,10 @@ def matryoshka_recall(
     # executed) twice — plans/r15/b39_matryoshka_after.txt shows the two
     # mirrored BroadcastNestedLoopJoin legs.  Bounded by construction:
     # ≤ len(widths)·n_probes·k rows, n_probes ≤ MAX_PROBES.
-    top = (
+    top = pin(
         melted.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("m", "id1", "id2")
-        .localCheckpoint(eager=True)
     )
     truth = top.filter(F.col("m") == full_dim).select(
         F.col("id1").alias("t1"), F.col("id2").alias("t2")
@@ -1614,6 +1582,7 @@ def matryoshka_recall(
     )
 
 
+@scoped
 def pq_adc_trained_topk(
     df: DataFrame,
     id_col: str,
@@ -1650,12 +1619,11 @@ def pq_adc_trained_topk(
     # and the normalized corpus pinned once — every downstream consumer
     # (encode, probes, re-rank join-backs) otherwise re-evaluates
     # cast+normalize inline (r16; see ivfpq_topk)
-    base = (
+    base = pin(
         raw.withColumn("_vn", fixed_norm("v", dim))
         .select(
             "vid", F.transform(F.col("v"), lambda x: x / F.col("_vn")).alias("v")
         )
-        .localCheckpoint(eager=True)
     )
 
     def _subspace_best(s: int, book) -> Column:
@@ -1743,6 +1711,7 @@ def pq_adc_trained_topk(
     )
 
 
+@scoped
 def ivfpq_topk(
     df: DataFrame,
     id_col: str,
@@ -1809,12 +1778,11 @@ def ivfpq_topk(
     # INTERPRETED with a per-term array cast (thread dump: minutes of
     # single-task Cast.castArray under BinaryArithmetic.eval).  Values
     # identical; the b13/b19 pin discipline (guide §5/§3.3).
-    base = (
+    base = pin(
         raw.withColumn("_vn", fixed_norm("v", dim))
         .select(
             "vid", F.transform(F.col("v"), lambda x: x / F.col("_vn")).alias("nv")
         )
-        .localCheckpoint(eager=True)
     )
     if centroids is None or books is None:
         # auto-sizing needs a row count; accept a caller hint (catalog
@@ -1918,6 +1886,7 @@ def ivfpq_topk(
 # -- link prediction ----------------------------------------------------------
 
 
+@scoped
 def link_prediction_jaccard(
     edges: DataFrame, min_score: float = 0.2
 ) -> DataFrame:
@@ -1937,7 +1906,7 @@ def link_prediction_jaccard(
     # four consumers (deg, both wedge legs, the anti-join) → pin the
     # input edge list once; the symmetrization/projections downstream
     # are cheap unions over the materialized table
-    edges = edges.localCheckpoint(eager=True)
+    edges = pin(edges)
     sym = edges.select("u", "v").union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

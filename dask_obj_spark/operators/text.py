@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dask_obj_spark.functions.hashing import porthash, ws_tokens
+from dask_obj_spark.pinning import pin, scoped
 
 # Shared stopword profiles (tiny on purpose: they ride inside the plan as
 # literal arrays — at 100 TB these become a broadcast dict, same plan shape).
@@ -330,6 +331,7 @@ def remove_boilerplate_segments(
 # -- PMI collocations (tokenizer/vocab prep) ----------------------------------
 
 
+@scoped
 def pmi_bigrams(
     df: DataFrame, id_col: str, text_col: str, min_count: int = 5
 ) -> DataFrame:
@@ -361,15 +363,13 @@ def pmi_bigrams(
     # count tables reduce to vocabulary size — checkpoint them so the
     # token explode runs ONCE per table (plan audit: 5 scans → 2; the
     # totals and both lookup joins reuse the materialized counts)
-    big = (
+    big = pin(
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("nxy"))
-        .localCheckpoint(eager=True)
     )
-    uni = (
+    uni = pin(
         toks.groupBy("w")
         .agg(F.count(F.lit(1)).alias("n_uni"))
-        .localCheckpoint(eager=True)
     )
     b_total = big.agg(F.sum("nxy").alias("b_total"))
     t_total = uni.agg(F.sum("n_uni").alias("t_total"))
@@ -564,6 +564,7 @@ def bigram_lm_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # -- n-gram language-model scoring (CCNet-style perplexity filter) ------------
 
 
+@scoped
 def ngram_lm_fit(
     df: DataFrame, text_col: str, top_k_bigrams: int | None = None
 ) -> tuple[DataFrame, DataFrame, int]:
@@ -622,7 +623,7 @@ def ngram_lm_fit(
         # explode+groupBy lineage up to 3x (r9 advice).  localCheckpoint
         # truncates lineage so both union branches read the cached
         # aggregate (distinct-bigram-sized, not corpus-sized).
-        big = big.localCheckpoint(eager=True)
+        big = pin(big)
         hist = big.groupBy("c2").agg(F.count(F.lit(1)).alias("nb"))
         hist = hist.withColumn(
             "cum",

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dask_obj_spark.pinning import pin, scoped
+
 
 # -- resample + gap-fill ------------------------------------------------------
 
@@ -385,6 +387,7 @@ _HOLT_ALPHA = 0.3
 _HOLT_BETA = 0.1
 
 
+@scoped
 def holt_fixed_grid(
     df: DataFrame,
     key_col: str,
@@ -427,10 +430,9 @@ def holt_fixed_grid(
     # keeps the whole operator at 2 corpus scans (bounds + counts) —
     # the quality-PSI checkpointed-summary pattern; the summary is
     # ≤ steps rows per key, i.e. output-sized
-    counts = (
+    counts = pin(
         bk.groupBy("k", "bkt")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     grid = counts.select("k").distinct().select(
         "k",

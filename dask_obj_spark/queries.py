@@ -20,6 +20,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dask_obj_spark.pinning import scoped
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 
@@ -36,7 +38,8 @@ def query(name: str, oracle: str | None = None):
                 f"registered by {QUERIES[name].__module__}."
                 f"{QUERIES[name].__qualname__}"
             )
-        QUERIES[name] = fn
+        # each call releases the pins its result does not read
+        fn = QUERIES[name] = scoped(fn)
         if oracle is not None:
             ORACLE[name] = oracle
         return fn

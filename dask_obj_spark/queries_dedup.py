@@ -30,6 +30,7 @@ from dask_obj_spark.operators.dedup import (
     sorted_neighborhood_pairs,
 )
 from dask_obj_spark.operators.similarity import DIM as _SIM_DIM
+from dask_obj_spark.pinning import pin
 from dask_obj_spark.queries import query
 from dask_obj_spark.queries_similarity import _duck_ivf_cells
 from dask_obj_spark.sources import load_table
@@ -349,12 +350,13 @@ def dedup_fuzzy_names_q(spark, sf_dir):
     ), cand AS (
       SELECT DISTINCT a.id AS id1, b.id AS id2
       FROM prefix a JOIN prefix b ON a.w = b.w AND a.id < b.id
+    ), lists AS (
+      SELECT id, list(w) AS ws FROM toks GROUP BY id
     ), inter AS (
-      SELECT c.id1, c.id2, count(*) AS i
+      SELECT c.id1, c.id2, len(list_intersect(la.ws, lb.ws)) AS i
       FROM cand c
-      JOIN toks ta ON ta.id = c.id1
-      JOIN toks tb ON tb.id = c.id2 AND tb.w = ta.w
-      GROUP BY c.id1, c.id2
+      JOIN lists la ON la.id = c.id1
+      JOIN lists lb ON lb.id = c.id2
     )
     SELECT i.id1, i.id2,
            round(i.i / (s1.sz + s2.sz - i.i), 6) AS jaccard
@@ -518,8 +520,8 @@ def dedup_lsh_precision_recall_q(spark, sf_dir):
     truth = ngram_jaccard_pairs(
         docs, "doc_id", "text", 4, 0.6, max_shingle_freq=None
     ).select("id1", "id2")
-    cand = cand.localCheckpoint(eager=True)
-    truth = truth.localCheckpoint(eager=True)
+    cand = pin(cand)
+    truth = pin(truth)
     hits = cand.join(truth, ["id1", "id2"], "left_semi")
     n_cand = cand.count()
     n_truth = truth.count()
@@ -642,7 +644,7 @@ def dedup_corpus_report_q(spark, sf_dir):
         F.countDistinct(F.md5("text")).alias("n_unique_texts"),
     )
     pairs = minhash_candidate_pairs(docs, "doc_id", "text", 16, 4, 4, 0.5)
-    pairs = pairs.localCheckpoint(eager=True)  # two consumers below
+    pairs = pin(pairs)  # two consumers below
     pairstats = pairs.agg(F.count(F.lit(1)).alias("n_near_pairs"))
     involved = (
         pairs.select(F.col("id1").alias("id"))

@@ -15,6 +15,7 @@ from dask_obj_spark.operators.ml import (
     knn_classify,
     logreg_gd_weights,
 )
+from dask_obj_spark.pinning import pin
 from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
 
@@ -75,7 +76,7 @@ def ml_logreg_gd_q(spark, sf_dir):
     quantized weights + training accuracy at the sign threshold, every
     step replayed by the unrolled oracle.  Iterative operator #10."""
     docs = load_table(spark, sf_dir, "documents")
-    feats = _docs_features(docs).localCheckpoint(eager=True)
+    feats = pin(_docs_features(docs))
     w = logreg_gd_weights(feats, ["x0", "x1", "x2"], "y")
     z = F.lit(w[0]) * F.col("x0") + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
     acc = feats.select(
@@ -138,7 +139,7 @@ def ml_calibration_bins_q(spark, sf_dir):
     bin edges are engine-exact.  Plan: score = one broadcast weight
     row against a single corpus scan, then a 10-row hash aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    feats = _docs_features(docs).localCheckpoint(eager=True)
+    feats = pin(_docs_features(docs))
     w = logreg_gd_weights(feats, ["x0", "x1", "x2"], "y")
     z = F.lit(w[0]) * F.col("x0") + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
     p = 1.0 / (1.0 + F.exp(-z))
@@ -194,10 +195,12 @@ def ml_ols_normal_equations_q(spark, sf_dir):
     (the cross-engine contract), so R² is computed from identical
     coefficients on both engines."""
     docs = load_table(spark, sf_dir, "documents")
-    feats = docs.select(
-        (F.col("n_chars") / 1000.0).alias("y"),
-        (F.size(ws_tokens("text")) / 100.0).alias("x"),
-    ).localCheckpoint(eager=True)
+    feats = pin(
+        docs.select(
+            (F.col("n_chars") / 1000.0).alias("y"),
+            (F.size(ws_tokens("text")) / 100.0).alias("x"),
+        )
+    )
     s = feats.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),

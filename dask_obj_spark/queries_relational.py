@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dask_obj_spark.pinning import pin
 from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
 
@@ -1860,7 +1861,7 @@ def basket_item_pairs(spark, sf_dir):
     dimension-sized broadcasts).  The same shape mines token
     co-occurrence or co-click graphs at 100 TB."""
     li = _t(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=True)
+    items = pin(li.select("l_orderkey", "l_partkey").distinct())
     total = items.select("l_orderkey").distinct().count()
     part_n = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
     a = items.select(F.col("l_orderkey"), F.col("l_partkey").alias("p1"))

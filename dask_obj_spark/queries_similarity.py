@@ -62,6 +62,7 @@ from dask_obj_spark.operators.similarity import (
     rbo_vs_exact,
     weighted_sssp,
 )
+from dask_obj_spark.pinning import pin
 from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
 
@@ -1493,9 +1494,11 @@ def graph_assortativity_q(spark, sf_dir):
     hint), one corr aggregate."""
     emb = load_table(spark, sf_dir, "embeddings")
     knn = cosine_topk_brute(emb, "vec_id", "embedding", probe_mod=5, k=10)
-    edges = knn.select(
-        F.least("id1", "id2").alias("u"), F.greatest("id1", "id2").alias("v")
-    ).distinct().localCheckpoint(eager=True)
+    edges = pin(
+        knn.select(
+            F.least("id1", "id2").alias("u"), F.greatest("id1", "id2").alias("v")
+        ).distinct()
+    )
     sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     da = deg.select(F.col("u"), F.col("d").alias("da"))
@@ -1568,13 +1571,15 @@ def sim_triplet_mining_q(spark, sf_dir):
         F.col("vid").alias("pid"), F.col("v").alias("pv"),
         F.col("vn").alias("pn"), F.col("label").alias("alabel"),
     )
-    scored = base.join(F.broadcast(probes), F.col("pid") != F.col("vid")).select(
-        "pid",
-        "vid",
-        (dot(F.col("pv"), F.col("v")) / (F.col("pn") * F.col("vn"))).alias("cs"),
-        "alabel",
-        F.col("label").alias("blabel"),
-    ).localCheckpoint(eager=True)  # two consumers: positives + negatives
+    scored = pin(
+        base.join(F.broadcast(probes), F.col("pid") != F.col("vid")).select(
+            "pid",
+            "vid",
+            (dot(F.col("pv"), F.col("v")) / (F.col("pn") * F.col("vn"))).alias("cs"),
+            "alabel",
+            F.col("label").alias("blabel"),
+        )
+    )  # two consumers: positives + negatives
     wp = Window.partitionBy("pid").orderBy(F.desc("cs"), F.asc("vid"))
     pos = (
         scored.filter(F.col("alabel") == F.col("blabel"))
@@ -1678,14 +1683,15 @@ def graph_label_modularity_q(spark, sf_dir):
     construction is edge-list-sized."""
     emb = load_table(spark, sf_dir, "embeddings")
     knn = cosine_topk_brute(emb, "vec_id", "embedding", probe_mod=5, k=10)
-    edges = knn.select(
-        F.least("id1", "id2").alias("u"), F.greatest("id1", "id2").alias("v")
-    ).distinct().localCheckpoint(eager=True)
+    edges = pin(
+        knn.select(
+            F.least("id1", "id2").alias("u"), F.greatest("id1", "id2").alias("v")
+        ).distinct()
+    )
     lab = emb.select(F.col("vec_id").alias("vid"), "label")
-    lab_e = (
+    lab_e = pin(
         edges.join(lab.select(F.col("vid").alias("u"), F.col("label").alias("lu")), "u")
         .join(lab.select(F.col("vid").alias("v"), F.col("label").alias("lv")), "v")
-        .localCheckpoint(eager=True)
     )
     m = edges.count()
     dsum = (

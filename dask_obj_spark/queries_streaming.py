@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dask_obj_spark.functions.hashing import duck_ws_tokens
+from dask_obj_spark.pinning import pin
 from dask_obj_spark.queries import query
 from dask_obj_spark.queries_dedup import _duck_bands_select, _duck_sig_cte
 from dask_obj_spark.sources import load_table
@@ -412,11 +413,7 @@ def stream_dedup_exact_q(spark, sf_dir):
         target = os.path.join(scratch, "target")
         stream_dedup_upsert(spark, read(), target)
         # materialize (executor-side) before the scratch dir is deleted
-        return (
-            spark.read.parquet(target)
-            .select("content_hash")
-            .localCheckpoint(eager=True)
-        )
+        return pin(spark.read.parquet(target).select("content_hash"))
 
 
 @query(
@@ -454,7 +451,7 @@ def stream_neardup_minhash_q(spark, sf_dir):
     with staged_stream(spark, "snd", batches) as (scratch, read):
         target = os.path.join(scratch, "flags")
         stream_neardup_minhash(spark, read(), target)
-        return spark.read.parquet(target).localCheckpoint(eager=True)
+        return pin(spark.read.parquet(target))
 
 
 @query(
@@ -624,7 +621,7 @@ def stream_heavy_hitters_q(spark, sf_dir):
         out = stream_heavy_hitters_confirm(
             spark, docs, target + "_mg.json", k=50
         )
-        return out.localCheckpoint(eager=True)
+        return pin(out)
 
 
 def _decayed_topk_oracle(k: int) -> str:
@@ -666,7 +663,7 @@ def stream_decayed_topk_q(spark, sf_dir):
             weight=F.expr("shiftleft(CAST(1 AS BIGINT), CAST(doc_id % 3 AS INT))"),
             k=40,
         )
-        return out.localCheckpoint(eager=True)
+        return pin(out)
 
 
 def _stream_psi_oracle() -> str:
@@ -732,7 +729,7 @@ def stream_quality_psi_q(spark, sf_dir):
     with staged_stream(spark, "sqp", batches) as (scratch, read):
         target = os.path.join(scratch, "hist")
         stream_quality_psi_sink(spark, read(), target)
-        return quality_psi_vs_frozen(spark, target).localCheckpoint(eager=True)
+        return pin(quality_psi_vs_frozen(spark, target))
 
 
 def _stream_contamination_oracle() -> str:
@@ -785,7 +782,7 @@ def stream_contamination_guard_q(spark, sf_dir):
         )
         target = os.path.join(scratch, "quarantine")
         stream_contamination_sink(spark, read(), target, inv_dir)
-        return spark.read.parquet(target).localCheckpoint(eager=True)
+        return pin(spark.read.parquet(target))
 
 
 @query(
@@ -816,7 +813,7 @@ def stream_source_quota_q(spark, sf_dir):
     with staged_stream(spark, "ssq", batches) as (scratch, read):
         target = os.path.join(scratch, "accepted")
         stream_source_quota_sink(spark, read(), target, quota=15)
-        return spark.read.parquet(target).localCheckpoint(eager=True)
+        return pin(spark.read.parquet(target))
 
 
 _LATE_DELAY = 600
@@ -868,4 +865,4 @@ def stream_late_audit_q(spark, sf_dir):
     with staged_stream(spark, "sla", batches) as (scratch, read):
         target = os.path.join(scratch, "audit")
         stream_late_audit_sink(spark, read(), target, _LATE_DELAY)
-        return spark.read.parquet(target).localCheckpoint(eager=True)
+        return pin(spark.read.parquet(target))

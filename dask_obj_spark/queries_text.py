@@ -43,6 +43,7 @@ from dask_obj_spark.operators.text import (
     winnow_fingerprints,
     word_entropy,
 )
+from dask_obj_spark.pinning import pin
 from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
 
@@ -801,9 +802,11 @@ def sketch_countmin_freq_q(spark, sf_dir):
     from dask_obj_spark.functions.hashing import porthash
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(ws_tokens("text")).alias("tok")
-    ).withColumn("tok", F.lower(F.col("tok"))).localCheckpoint(eager=True)
+    toks = pin(
+        docs.select(
+            F.explode(ws_tokens("text")).alias("tok")
+        ).withColumn("tok", F.lower(F.col("tok")))
+    )
     cms = None
     for j in range(CMS_DEPTH):
         part = toks.select(
@@ -905,14 +908,13 @@ def text_tfidf_cosine_pairs_q(spark, sf_dir):
     df_cap = max(50, n_docs // 10)
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_"))
     # the rare-term df table is VOCABULARY-sized — no broadcast hint
-    w = (
+    w = pin(  # norms + both pair legs
         tf.join(df.filter(F.col("df_") <= df_cap), "term")
         .select(
             "doc_id",
             "term",
             (F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df_"))).alias("w"),
         )
-        .localCheckpoint(eager=True)  # norms + both pair legs
     )
     norms = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
     a, b = w.alias("a"), w.alias("b")
@@ -971,9 +973,8 @@ def text_ngram_novelty_q(spark, sf_dir):
     per-doc aggregate — the same inverted-index shapes as the dedup
     family, no quadratic surface anywhere."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id", F.explode(word_shingles("text", 3)).alias("shingle")
-    ).localCheckpoint(eager=True)  # first_seen + the join-back leg
+    # first_seen + the join-back leg
+    sh = pin(docs.select("doc_id", F.explode(word_shingles("text", 3)).alias("shingle")))
     first_seen = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = (F.col("first_doc") == F.col("doc_id")).cast("int")
     return (
@@ -1042,9 +1043,11 @@ def text_vocab_growth_heaps_q(spark, sf_dir):
     window is over |buckets| rows, and the regression is one aggregate
     over the same tiny curve."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(ws_tokens("text")).alias("term")
-    ).withColumn("term", F.lower(F.col("term"))).localCheckpoint(eager=True)
+    toks = pin(
+        docs.select(
+            "doc_id", F.explode(ws_tokens("text")).alias("term")
+        ).withColumn("term", F.lower(F.col("term")))
+    )
     per_doc = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_toks"))
     first_seen = toks.groupBy("term").agg(F.min("doc_id").alias("first_doc"))
     tb = per_doc.groupBy(
@@ -1056,7 +1059,7 @@ def text_vocab_growth_heaps_q(spark, sf_dir):
     w = Window.orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    curve = (
+    curve = pin(  # curve feeds the fit AND the output
         tb.join(vb, "bucket", "left")
         .select(
             "bucket",
@@ -1065,7 +1068,6 @@ def text_vocab_growth_heaps_q(spark, sf_dir):
                 "cum_vocab"
             ),
         )
-        .localCheckpoint(eager=True)  # curve feeds the fit AND the output
     )
     lx = F.log("cum_tokens")
     ly = F.log("cum_vocab")

@@ -92,6 +92,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from dask_obj_spark.pinning import pin, scoped
+
 _PRIMS = {
     LongType: "long",
     IntegerType: "long",
@@ -1007,6 +1009,7 @@ def _make_avro_codec():
     }
 
 
+@scoped
 def to_avro(
     df: DataFrame,
     path: str,
@@ -1112,9 +1115,7 @@ def to_avro(
                 {"file": [f"part-{pid:05d}{suffix}.avro"], "n_rows": [n_rows]}
             )
 
-    stats = df.mapInArrow(
-        write_partition, "file string, n_rows bigint"
-    ).localCheckpoint(eager=True)
+    stats = pin(df.mapInArrow(write_partition, "file string, n_rows bigint"))
     return stats
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dask_obj_spark.functions.hashing import ws_tokens
+from dask_obj_spark.pinning import pin, scoped
 from dask_obj_spark.sources.tables import normalize_timestamps
 
 # -- batch window operators ---------------------------------------------------
@@ -327,9 +328,12 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _run_foreach_batch(stream: DataFrame, fn, target_dir: str) -> None:
     """Drain ``stream`` with availableNow, calling ``fn(batch_df,
-    batch_id)`` per micro-batch and checkpointing to ``<target_dir>_ckpt``."""
+    batch_id)`` per micro-batch and checkpointing to ``<target_dir>_ckpt``.
+    Each micro-batch is its own pin scope, so a sink's pins are released
+    when its batch ends and an unbounded stream holds none between
+    batches."""
     (
-        stream.writeStream.foreachBatch(fn)
+        stream.writeStream.foreachBatch(scoped(fn))
         .trigger(availableNow=True)
         .option("checkpointLocation", target_dir + "_ckpt")
         .start()
@@ -493,7 +497,7 @@ def stream_neardup_minhash(
                 F.col(event_time_col).cast("double").alias("et"),
             )
             bb = bb.join(ets, "doc_id")  # batch-sized join
-        bb = bb.localCheckpoint(eager=True)
+        bb = pin(bb)
         prior = _read_parquet_if_exists(sess, bands_dir)
         wm = None
         if retention_sec is not None and event_time_col is not None:
@@ -1155,7 +1159,7 @@ def stream_source_quota_sink(
             accepted = accepted.join(
                 existing.select("doc_id"), "doc_id", "left_anti"
             )
-        accepted = accepted.localCheckpoint(eager=True)  # one batch scan
+        accepted = pin(accepted)  # one batch scan
         accepted.write.mode("append").parquet(target_dir)
         # audit readout: one row per source PRESENT in the batch, n =
         # newly admitted (0 allowed — an all-rejected batch still gets
