@@ -365,6 +365,12 @@ class ObjectFrame:
         keep = [ORD] if ORD in self._df.columns else []
         return self._make(self._df.select(out.alias(VALUE), *keep), pickled=True)
 
+    def _from_objects(self, objs) -> "ObjectFrame":
+        """A pickled frame of an RDD of Python objects."""
+        schema = T.StructType([T.StructField(VALUE, T.BinaryType())])
+        rows = objs.map(lambda v: (_dumps(v),))
+        return self._make(self._df.sparkSession.createDataFrame(rows, schema=schema), pickled=True)
+
     def _to_pickled(self) -> "ObjectFrame":
         """The same elements, pickled: a ``Row`` per struct-frame row."""
         return self if self._pickled else self._map_objects(lambda v: v)
@@ -732,10 +738,7 @@ class ObjectFrame:
             return self._make(grouped, pickled=False, scalar=False)
         # python grouper over elements
         keyed = self._element_rdd().groupBy(grouper if callable(grouper) else (lambda o: o[grouper]))
-        out = keyed.map(lambda kv: (_dumps((kv[0], list(kv[1]))),))
-        spark = self._df.sparkSession
-        schema = T.StructType([T.StructField(VALUE, T.BinaryType())])
-        return self._make(spark.createDataFrame(out, schema=schema), pickled=True)
+        return self._from_objects(keyed.map(lambda kv: (kv[0], list(kv[1]))))
 
     def foldby(
         self,
@@ -756,10 +759,7 @@ class ObjectFrame:
             folded = rdd.aggregateByKey(initial, binop, comb)
         else:
             folded = rdd.reduceByKey(binop)
-        out = folded.map(lambda kv: (_dumps(tuple(kv)),))
-        spark = self._df.sparkSession
-        schema = T.StructType([T.StructField(VALUE, T.BinaryType())])
-        return self._make(spark.createDataFrame(out, schema=schema), pickled=True)
+        return self._from_objects(folded.map(tuple))
 
     def agg_by(self, keys: list[str] | str, *aggs: Column) -> "ObjectFrame":
         """Columnar foldby: named-column groupBy + Catalyst aggregates."""
@@ -838,10 +838,7 @@ class ObjectFrame:
                 acc = x if isinstance(acc, _EmptySentinel) else binop(acc, x)
                 yield acc
 
-        out = rdd.mapPartitionsWithIndex(scan).map(lambda v: (_dumps(v),))
-        spark = self._df.sparkSession
-        schema = T.StructType([T.StructField(VALUE, T.BinaryType())])
-        return self._make(spark.createDataFrame(out, schema=schema), pickled=True)
+        return self._from_objects(rdd.mapPartitionsWithIndex(scan))
 
     def join(self, other: "ObjectFrame | DataFrame", on: Any, how: str = "inner", broadcast: bool = False) -> "ObjectFrame":
         right = other._df if isinstance(other, ObjectFrame) else other
@@ -868,10 +865,7 @@ class ObjectFrame:
         return self.map(lambda t: func(*t))
 
     def map_partitions(self, func: Callable[[Iterable], Iterable]) -> "ObjectFrame":
-        rdd = self._element_rdd().mapPartitions(lambda it: [(_dumps(v),) for v in func(it)])
-        spark = self._df.sparkSession
-        schema = T.StructType([T.StructField(VALUE, T.BinaryType())])
-        return self._make(spark.createDataFrame(rdd, schema=schema), pickled=True)
+        return self._from_objects(self._element_rdd().mapPartitions(func))
 
     def random_sample(self, prob: float, seed: int | None = None) -> "ObjectFrame":
         return self._make(self._df.sample(fraction=prob, seed=seed))

@@ -691,22 +691,40 @@ def _bpe_apply_literal(sym_w2: DataFrame, w1: str, w2: str) -> DataFrame:
     )
 
 
-def _bpe_apply_round(sym: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """One BPE round over a (doc_id, i, s[, w2]) symbol table: find the
-    globally most frequent adjacent pair, merge every greedy occurrence,
-    return (new_sym, best_pair).  Single-round entry kept for tests;
-    the iterative drivers below call the pieces directly."""
-    spark = sym.sparkSession
-    sym_w2 = sym if "w2" in sym.columns else _bpe_pair_w2(sym)
-    best = _bpe_best_pair_rows(sym_w2)
-    best_df = spark.createDataFrame(
-        [(r["w1"], r["w2"], r["n"]) for r in best],
-        "w1 STRING, w2 STRING, n BIGINT",
+def _bpe_rounds(
+    df: DataFrame, id_col: str, text_col: str, rounds: int, apply_last: bool
+) -> tuple[DataFrame, DataFrame, list[tuple[int, str, str, int]]]:
+    """The BPE loop: `rounds` alternations of corpus-wide pair counting
+    and greedy merge application over one pinned (doc_id, i, s, w2)
+    symbol table.  Per round ONE tiny
+    pair-count job (partial agg → distinct pairs only → TakeOrdered(1)
+    → bounded 1-row collect, the PCA recipe) and ONE single-Exchange
+    merge-apply job, pinned like the other iterative operators
+    (connected_components, kmeans).  The last round's merge is applied
+    only when `apply_last` (a caller that reads just the merge table
+    skips its never-consumed symbol update).  When no adjacent pair is
+    left the loop stops and the final table is empty (every position
+    had a null w2 ⇒ single-token docs only).
+
+    Returns (initial symbols, final symbols, [(round, w1, w2, n)])."""
+    sym0 = sym = pin(
+        _bpe_pair_w2(
+            df.select(
+                F.col(id_col).alias("doc_id"),
+                F.posexplode(ws_tokens(text_col)).alias("i", "s"),
+            )
+        )
     )
-    if not best:
-        return sym_w2.filter(F.lit(False)).drop("w2"), best_df
-    new_sym = _bpe_apply_literal(sym_w2, best[0]["w1"], best[0]["w2"]).drop("w2")
-    return new_sym, best_df
+    merges = []
+    for r in range(1, rounds + 1):
+        best = _bpe_best_pair_rows(sym)
+        if not best:
+            return sym0, sym.filter(F.lit(False)), merges
+        w1, w2, n = best[0]["w1"], best[0]["w2"], best[0]["n"]
+        merges.append((r, w1, w2, n))
+        if r < rounds or apply_last:
+            sym = pin(_bpe_apply_literal(sym, w1, w2))
+    return sym0, sym, merges
 
 
 @scoped
@@ -716,35 +734,13 @@ def bpe_learn_merges(
     """Iterative BPE vocabulary learning over word symbols: `rounds`
     alternations of corpus-wide pair counting and greedy merge
     application (Sennrich et al. 2016, the tokenizer-training loop).
-    Returns the learned merge table (round, w1, w2, n).
-
-    Per round (r16, guide §2.1/§2.4/§5): ONE tiny pair-count job over
-    the pinned (doc_id, i, s, w2) symbols (partial agg → distinct pairs
-    only → TakeOrdered(1) → bounded 1-row collect, the PCA recipe) and
-    ONE single-Exchange merge-apply job pinned with localCheckpoint
-    like the other iterative operators (connected_components, kmeans).
-    The final merge table is rebuilt from the collected rows, so the
-    per-round aggregations are not re-run by the output union, and the
-    last round skips its never-consumed symbol update."""
-    spark = df.sparkSession
-    sym = pin(
-        _bpe_pair_w2(
-            df.select(
-                F.col(id_col).alias("doc_id"),
-                F.posexplode(ws_tokens(text_col)).alias("i", "s"),
-            )
-        )
-    )
-    rows = []
-    for r in range(1, rounds + 1):
-        best = _bpe_best_pair_rows(sym)
-        if not best:
-            break  # no adjacent pairs left: remaining rounds are empty
-        rows.append((r, best[0]["w1"], best[0]["w2"], best[0]["n"]))
-        if r < rounds:
-            sym = pin(_bpe_apply_literal(sym, best[0]["w1"], best[0]["w2"]))
-    return spark.createDataFrame(
-        rows, "round INT, w1 STRING, w2 STRING, n BIGINT"
+    Returns the learned merge table (round, w1, w2, n), rebuilt from
+    the collected rows of :func:`_bpe_rounds`, so the per-round
+    aggregations are not re-run by the output, and the rounds stop
+    early when no adjacent pair is left."""
+    _, _, merges = _bpe_rounds(df, id_col, text_col, rounds, apply_last=False)
+    return df.sparkSession.createDataFrame(
+        merges, "round INT, w1 STRING, w2 STRING, n BIGINT"
     )
 
 
@@ -822,28 +818,10 @@ def bpe_apply_stats(
     go/no-go metric for a tokenizer change: how many tokens a given
     merge table actually saves on the corpus).
 
-    Same r16 round structure as bpe_learn_merges: one pinned
-    (doc_id, i, s, w2) symbol table feeds both the per-round 1-row
-    best-pair collects and the single-Exchange merge-applies; the
-    before-count reads the same pin."""
-    sym = pin(
-        _bpe_pair_w2(
-            df.select(
-                F.col(id_col).alias("doc_id"),
-                F.posexplode(ws_tokens(text_col)).alias("i", "s"),
-            )
-        )
-    )
-    before = sym.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tokens"))
-    for _ in range(rounds):
-        best = _bpe_best_pair_rows(sym)
-        if not best:
-            # no adjacent pairs anywhere: the merge pass produces an
-            # empty table (every position had a null w2 ⇒ single-token
-            # docs only ⇒ the legacy crossJoin round emptied sym)
-            sym = sym.filter(F.lit(False))
-            break
-        sym = pin(_bpe_apply_literal(sym, best[0]["w1"], best[0]["w2"]))
+    The loop is :func:`_bpe_rounds`; the before-count reads its
+    initial pinned symbol table."""
+    sym0, sym, _ = _bpe_rounds(df, id_col, text_col, rounds, apply_last=True)
+    before = sym0.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tokens"))
     after = sym.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_syms"))
     return (
         before.join(after, "doc_id")

@@ -330,8 +330,8 @@ def _semantic_cells(
     # norms are computed ONCE per vector/centroid before the pair joins:
     # `dot/(‖a‖·‖b‖)` evaluates the identical sqrt-fold subexpressions,
     # so values (and the oracle hash) are bit-unchanged, but per-pair
-    # interpreted work drops from 3 folds to 1 (same trick as
-    # cosine_topk_brute; measured ~2.5× on this operator at sf0.1).
+    # interpreted work drops from 3 folds to 1 (similarity._cosine_pairs;
+    # measured ~2.5× on this operator at sf0.1).
     # r15: width-guarded unrolled kernels (functions/vec.py)
     base = df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")

@@ -30,13 +30,13 @@ from __future__ import annotations
 
 import math
 import random
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dask_obj_spark.functions.fastlit import lit_double_array, lit_double_matrix
 from dask_obj_spark.functions.vec import (
-    chain,
     chained_prefix_dots,
     dot,
     fixed_dot,
@@ -53,6 +53,60 @@ from dask_obj_spark.pinning import fixpoint, pin, scoped
 # -- brute-force top-k --------------------------------------------------------
 
 
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vid, v) with the vector cast to array<double>: every operator's
+    input projection."""
+    return df.select(
+        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
+    )
+
+
+def _cos_ranked(scored: DataFrame) -> DataFrame:
+    """Per-probe rank of scored pairs (id1, id2, cos_raw): row_number by
+    cosine descending, ties by id2 — the one ordering every exact and
+    ANN read path in this module emits."""
+    w = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
+    return scored.withColumn("rank", F.row_number().over(w))
+
+
+def _cos_topk(scored: DataFrame, k: int, raw: bool = False) -> DataFrame:
+    """Top-`k` rows per probe of scored pairs (id1, id2, cos_raw):
+    (id1, id2, cosine, rank) with the score rounded to 6 decimals, or
+    (id1, id2, cos_raw, rank) unrounded when `raw` (for callers with
+    their own quantization contract: round()'s tie semantics differ
+    across engines — Spark HALF_UP, DuckDB half-even)."""
+    score = F.col("cos_raw") if raw else F.round("cos_raw", 6).alias("cosine")
+    return (
+        _cos_ranked(scored)
+        .filter(F.col("rank") <= k)
+        .select("id1", "id2", score, "rank")
+    )
+
+
+def _cosine_pairs(pairs: DataFrame, dot_col: Column) -> DataFrame:
+    """(id1, id2, cos_raw) from probe/candidate rows (pid, pn, vid, vn):
+    `dot_col` over norms computed once per vector before the pair join.
+    The factored ``dot/(‖p‖·‖v‖)`` evaluates the same sqrt folds as the
+    3-fold form, so values (and oracle hashes) are bit-identical, but
+    per pair only one fold remains."""
+    return pairs.select(
+        F.col("pid").alias("id1"),
+        F.col("vid").alias("id2"),
+        (dot_col / (F.col("pn") * F.col("vn"))).alias("cos_raw"),
+    )
+
+
+def _candidate_cosines(cand: DataFrame, dot_col: Column) -> DataFrame:
+    """`_cosine_pairs` over candidate rows from a bucket/cell join: a
+    pair that shares several buckets or cells is scored once."""
+    return _cosine_pairs(
+        cand.filter(F.col("pid") != F.col("vid"))
+        .select("pid", "pv", "pn", "vid", "v", "vn")
+        .distinct(),
+        dot_col,
+    )
+
+
 def cosine_topk_brute(
     df: DataFrame,
     id_col: str,
@@ -65,17 +119,8 @@ def cosine_topk_brute(
     The probe side is broadcast; the corpus scans once with no shuffle
     until the final per-probe top-k (tiny: ≤ |probes|·|corpus| pairs only
     conceptually — physically a streamed nested-loop against an in-memory
-    probe table).
-
-    Norms are precomputed once per vector BEFORE the pair join (the
-    factored `dot/(‖p‖·‖v‖)` evaluates the sqrt-fold subexpressions
-    identically, so values — and the oracle hash — are bit-unchanged,
-    but the per-pair interpreted work drops from 3 folds to 1)."""
-    return (
-        cosine_ranked_raw(df, id_col, vec_col, probe_mod)
-        .filter(F.col("rank") <= k)
-        .select("id1", "id2", F.round("cos_raw", 6).alias("cosine"), "rank")
-    )
+    probe table)."""
+    return _cos_topk(_brute_pairs(df, id_col, vec_col, probe_mod), k)
 
 
 MAX_PROBES = 4096
@@ -109,11 +154,18 @@ def cosine_ranked_raw(
     probe_mod: int,
 ) -> DataFrame:
     """All probe-corpus cosine pairs with per-probe rank and the RAW
-    (unrounded) cosine — the shared kernel behind `cosine_topk_brute`
-    and the weighted-graph builders, which need `cos_raw` so derived
+    (unrounded) cosine — the pair surface of `cosine_topk_brute`, used
+    by the weighted-graph builders, which need `cos_raw` so derived
     integer edge weights can floor-quantize it without a round() in
     between (round's tie semantics differ across engines; floor on the
-    identical double does not).
+    identical double does not)."""
+    return _cos_ranked(_brute_pairs(df, id_col, vec_col, probe_mod))
+
+
+def _brute_pairs(
+    df: DataFrame, id_col: str, vec_col: str, probe_mod: int
+) -> DataFrame:
+    """(id1, id2, cos_raw) for every probe-corpus pair.
 
     Explicit fan-out (the PLANS.md compute-bound-stage rule): the
     scoring is an interpreted HOF nested-loop whose parallelism would
@@ -129,10 +181,7 @@ def cosine_ranked_raw(
     and is bounded by the MAX_PROBES contract (fails loudly when
     N/probe_mod outgrows it; see MAX_PROBES)."""
     ncores = df.sparkSession.sparkContext.defaultParallelism
-    raw0 = df.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
+    raw0 = _vectors(df, id_col, vec_col)
     # codegen'd fixed-width kernels (see `dot`): bit-identical to the
     # HOF folds, ~5x on the pair stage, 3 driver round-trips total
     base = raw0.repartition(ncores).withColumn("vn", fixed_norm("v", DIM))
@@ -153,13 +202,7 @@ def cosine_ranked_raw(
         )
     )
     pairs = base.join(F.broadcast(probes), F.col("pid") != F.col("vid"))
-    scored = pairs.select(
-        F.col("pid").alias("id1"),
-        F.col("vid").alias("id2"),
-        (fixed_dot("pv", "v", DIM) / (F.col("pn") * F.col("vn"))).alias("cos_raw"),
-    )
-    w = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
-    return scored.withColumn("rank", F.row_number().over(w))
+    return _cosine_pairs(pairs, fixed_dot("pv", "v", DIM))
 
 
 def cosine_topk_brute_numpy(
@@ -186,9 +229,7 @@ def cosine_topk_brute_numpy(
     # cores (and AQE would coalesce it further; compute-bound stages get
     # an explicit partition count, see PLANS.md)
     ncores = df.sparkSession.sparkContext.defaultParallelism
-    raw0 = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    raw0 = _vectors(df, id_col, vec_col)
     base = raw0.repartition(ncores)
     # probe matrix collected from the un-repartitioned scan (no corpus
     # exchange in the probe branch) under the MAX_PROBES contract
@@ -226,12 +267,7 @@ def cosine_topk_brute_numpy(
             )
 
     partial = base.mapInPandas(run, "id1 bigint, id2 bigint, cos_raw double")
-    w = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id1", "id2", F.round("cos_raw", 6).alias("cosine"), "rank")
-    )
+    return _cos_topk(partial, k)
 
 
 # -- random-hyperplane LSH ANN ------------------------------------------------
@@ -275,9 +311,7 @@ def cosine_topk_lsh(
     exact cosine re-rank of candidates only.  May return < k rows per
     probe (standard ANN recall trade); every returned neighbor's score is
     exact."""
-    base = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("vn", l2_norm(F.col("v")))  # 1 fold per pair, not 3
+    base = _vectors(df, id_col, vec_col).withColumn("vn", l2_norm(F.col("v")))
     keyed = base.select(
         "vid", "v", "vn", F.explode(lsh_half_keys(F.col("v"))).alias("bucket")
     )
@@ -285,29 +319,49 @@ def cosine_topk_lsh(
         F.col("vid").alias("pid"), F.col("v").alias("pv"),
         F.col("vn").alias("pn"), "bucket"
     )
-    cand = (
-        keyed.join(F.broadcast(probes), "bucket")
-        .filter(F.col("pid") != F.col("vid"))
-        .select("pid", "pv", "pn", "vid", "v", "vn")
-        .distinct()
-    )
-    scored = cand.select(
-        F.col("pid").alias("id1"),
-        F.col("vid").alias("id2"),
-        (dot(F.col("pv"), F.col("v")) / (F.col("pn") * F.col("vn"))).alias("cos_raw"),
-    )
-    w = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id1", "id2", F.round("cos_raw", 6).alias("cosine"), "rank")
-    )
+    cand = keyed.join(F.broadcast(probes), "bucket")
+    return _cos_topk(_candidate_cosines(cand, dot(F.col("pv"), F.col("v"))), k)
 
 
 # -- IVF (inverted-file) ANN --------------------------------------------------
 
 CENTROID_MOD = 61  # deterministic coarse centroids: vid % 61 == 1
 NPROBE = 2
+
+
+def _modular_assign(base: DataFrame, centroid_mod: int, dot_col: Column) -> DataFrame:
+    """Every (vid, v, vn) row against the modular centroid set (vid ≡ 1
+    mod `centroid_mod`) with its cosine ``cs`` and its per-vector rank
+    ``rn`` (ties by centroid id); `dot_col` is the dot of the vector
+    ``v`` and the centroid ``cv``.  The centroid set is a corpus
+    fraction, so this is the oracle-replay index, never the library one
+    (see knn_graph_ann)."""
+    cents = base.filter(F.col("vid") % centroid_mod == 1).select(
+        F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("vn").alias("cn")
+    )
+    aw = Window.partitionBy("vid").orderBy(F.desc("cs"), F.asc("cid"))
+    return (
+        base.join(F.broadcast(cents))
+        .select(
+            "vid", "v", "vn", "cid",
+            (dot_col / (F.col("vn") * F.col("cn"))).alias("cs"),
+        )
+        .withColumn("rn", F.row_number().over(aw))
+    )
+
+
+def _cell_legs(
+    assign: DataFrame, nprobe: int, probe_mod: int
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF candidate legs of a `_modular_assign` frame: each
+    vector's own cell, and each probe's `nprobe` nearest cells."""
+    cells = assign.filter(F.col("rn") == 1).select("vid", "v", "vn", "cid")
+    pcells = assign.filter(
+        (F.col("rn") <= nprobe) & (F.col("vid") % probe_mod == 0)
+    ).select(
+        F.col("vid").alias("pid"), F.col("v").alias("pv"), F.col("vn").alias("pn"), "cid"
+    )
+    return cells, pcells
 
 
 def cosine_topk_ivf(
@@ -331,46 +385,12 @@ def cosine_topk_ivf(
     (see operators/scale.py write_bucketed) and centroids come from
     k-means; here they are deterministic (vid % centroid_mod == 1) so
     the DuckDB oracle reproduces the index exactly."""
-    # norms computed once per vector/centroid (identical sqrt-fold
-    # subexpressions → bit-identical values vs the 3-fold form; 1
-    # interpreted fold per pair instead of 3 — same trick as
-    # cosine_topk_brute / semantic_dedup)
-    base = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("vn", l2_norm(F.col("v")))
-    cents = base.filter(F.col("vid") % centroid_mod == 1).select(
-        F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("vn").alias("cn")
-    )
-    sim = dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cn"))
-    aw = Window.partitionBy("vid").orderBy(F.desc("cs"), F.asc("cid"))
-    assign = (
-        base.join(F.broadcast(cents))
-        .select("vid", "v", "vn", "cid", sim.alias("cs"))
-        .withColumn("rn", F.row_number().over(aw))
-    )
-    cells = assign.filter(F.col("rn") == 1).select("vid", "v", "vn", "cid")
-    pcells = (
-        assign.filter((F.col("rn") <= nprobe) & (F.col("vid") % probe_mod == 0))
-        .select(F.col("vid").alias("pid"), F.col("v").alias("pv"),
-                F.col("vn").alias("pn"), "cid")
-    )
-    cand = (
-        cells.join(F.broadcast(pcells), "cid")
-        .filter(F.col("pid") != F.col("vid"))
-        .select("pid", "pv", "pn", "vid", "v", "vn")
-        .distinct()
-    )
-    scored = cand.select(
-        F.col("pid").alias("id1"),
-        F.col("vid").alias("id2"),
-        (dot(F.col("pv"), F.col("v")) / (F.col("pn") * F.col("vn"))).alias("cos_raw"),
-    )
-    w = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id1", "id2", F.round("cos_raw", 6).alias("cosine"), "rank")
-    )
+    # norms computed once per vector/centroid (see _cosine_pairs)
+    base = _vectors(df, id_col, vec_col).withColumn("vn", l2_norm(F.col("v")))
+    assign = _modular_assign(base, centroid_mod, dot(F.col("v"), F.col("cv")))
+    cells, pcells = _cell_legs(assign, nprobe, probe_mod)
+    cand = cells.join(F.broadcast(pcells), "cid")
+    return _cos_topk(_candidate_cosines(cand, dot(F.col("pv"), F.col("v"))), k)
 
 
 @scoped
@@ -429,35 +449,17 @@ def knn_graph_ann(
     # round-robin exchange plus 32-task overhead exceeds the scoring
     # parallelism it buys at this size — left as-is (the b10/b24 regex
     # chains it does help are 10x heavier per row).
-    base = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("vn", fixed_norm("v", DIM))
+    base = _vectors(df, id_col, vec_col).withColumn("vn", fixed_norm("v", DIM))
     if centroid_mod is not None:
         # oracle-replay path (quadratic; see docstring).  Scoring uses
         # the codegen'd width-guarded kernels (optimization r16, guide
         # §4.1): this corpus×centroid stage and the candidate re-rank
         # below were the two interpreted-HOF sites the r15 kernel
         # migration missed — bit-identical by the `fixed_dot` guard contract.
-        cents = base.filter(F.col("vid") % centroid_mod == 1).select(
-            F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("vn").alias("cn")
-        )
-        sim = fixed_dot("v", "cv", DIM) / (F.col("vn") * F.col("cn"))
-        aw = Window.partitionBy("vid").orderBy(F.desc("cs"), F.asc("cid"))
-        assign = (
-            base.join(F.broadcast(cents))
-            .select("vid", "v", "vn", "cid", sim.alias("cs"))
-            .withColumn("rn", F.row_number().over(aw))
-        )
         # one pass over the corpus computes both legs; materialize it so
         # the cells/pcells branches don't re-score the assignment twice
-        assign = pin(assign)
-        cells = assign.filter(F.col("rn") == 1).select("vid", "v", "vn", "cid")
-        pcells = assign.filter(
-            (F.col("rn") <= nprobe) & (F.col("vid") % probe_mod == 0)
-        ).select(
-            F.col("vid").alias("pid"), F.col("v").alias("pv"),
-            F.col("vn").alias("pn"), "cid",
-        )
+        assign = pin(_modular_assign(base, centroid_mod, fixed_dot("v", "cv", DIM)))
+        cells, pcells = _cell_legs(assign, nprobe, probe_mod)
     else:
         if centroids is None:
             # IVF sizing rule, applied so a bare call is scale-correct
@@ -495,29 +497,9 @@ def knn_graph_ann(
             F.col("vn").alias("pn"),
             F.explode(_nearest_cells("v", centroids, nprobe)).alias("cid"),
         )
-    cand = (
-        cells.join(pcells, "cid")  # plain equi-join: both sides corpus-sized
-        .filter(F.col("pid") != F.col("vid"))
-        .select("pid", "pv", "pn", "vid", "v", "vn")
-        .distinct()
-    )
-    scored = cand.select(
-        F.col("pid").alias("id1"),
-        F.col("vid").alias("id2"),
-        (fixed_dot("pv", "v", DIM) / (F.col("pn") * F.col("vn"))).alias("cos_raw"),
-    )
-    w = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
-    ranked = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    if raw:
-        # unrounded scores for callers with their own quantization
-        # contract (the oracle wrapper floor-quantizes — round()'s tie
-        # semantics differ across engines: Spark HALF_UP, DuckDB
-        # half-even)
-        return ranked.select("id1", "id2", "cos_raw", "rank")
-    return ranked.select(
-        "id1", "id2", F.round("cos_raw", 6).alias("cosine"), "rank"
+    cand = cells.join(pcells, "cid")  # plain equi-join: both sides corpus-sized
+    return _cos_topk(
+        _candidate_cosines(cand, fixed_dot("pv", "v", DIM)), k, raw=raw
     )
 
 
@@ -526,6 +508,62 @@ def knn_graph_ann(
 
 # most centroids kmeans_fit unrolls: 2·k·dim nodes bloat plan + codegen method
 KMEANS_UNROLL_MAX = 16
+
+
+def _lloyd(
+    df: DataFrame,
+    id_col: str,
+    col: str,
+    vec: Column,
+    k: int,
+    iters: int,
+    assign: Callable[[DataFrame, list], DataFrame],
+    stat: Column,
+    state_of: Callable[[list, int], Any],
+) -> tuple[list, DataFrame]:
+    """Lloyd's loop of the two k-means fits.
+
+    The working frame (vid, `col`) holds the vector expression `vec`,
+    fanned out and pinned once: the fan-out keeps the interpreted
+    argmin stage off one core (the PLANS.md compute-bound-stage rule; a
+    1-file scan would pin it there), and the pin stops each of the
+    iters+2 scans (init collect, per-iteration update, assignment)
+    re-running the caller's upstream plan plus this exchange — the
+    localCheckpoint analogue of MLlib KMeans caching its input (values
+    unchanged).  Init = the first k vectors by id.
+
+    Per iteration `assign(base, state)` gives (vid, `col`, cell), then
+    one posexplode + (cell, pos) aggregate of `stat` over the dimension
+    values ``x`` (plus the cell size ``n``) — the shuffle carries k·dim
+    partials per partition, never vectors — and ``state_of(m, n)``
+    turns a cell's per-dimension `stat` list and size into its new
+    state.  A cell the update misses keeps its previous state.
+    Returns (state per cell, assignment)."""
+    ncores = df.sparkSession.sparkContext.defaultParallelism
+    base = pin(
+        df.select(F.col(id_col).alias("vid"), vec.alias(col)).repartition(
+            ncores, "vid"
+        )
+    )
+    state = [state_of(list(r[col]), 1) for r in base.orderBy("vid").limit(k).collect()]
+    assigned = assign(base, state)
+    for _ in range(iters):
+        new_rows = (
+            assigned.select("cell", F.posexplode(col).alias("pos", "x"))
+            .groupBy("cell", "pos")
+            .agg(stat.alias("m"), F.count(F.lit(1)).alias("n"))
+            .groupBy("cell")
+            .agg(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"),
+                F.max("n").alias("n"),
+            )
+            .select("cell", F.col("pm.m").alias("m"), "n")
+            .collect()
+        )
+        by_cell = {r.cell: state_of(list(r.m), int(r.n)) for r in new_rows}
+        state = [by_cell.get(i, state[i]) for i in range(k)]
+        assigned = assign(base, state)
+    return state, assigned
 
 
 @scoped
@@ -539,30 +577,10 @@ def kmeans_fit(
 
     Per iteration: centroids (k x dim, driver-held model state — same
     contract as MLlib) broadcast into an argmin assignment (squared
-    euclidean), then new centroids via posexplode + groupBy(cell, pos)
-    avg — the shuffle carries k*dim partial sums per partition, never
-    vectors. Init = first k vectors by id (seeded/deterministic).
-    Returns (centroids, assignment df (vid, v, cell))."""
-    # fan-out before the interpreted argmin stage (the PLANS.md
-    # compute-bound-stage rule): k·dim zip_with/aggregate folds per row
-    # run interpreted, and a 1-file scan would pin them to one core.
-    # r16 (guide §5): pin the working frame once — Lloyd's re-scans it
-    # iters+2 times (init collect + per-iter update + assignment), and
-    # without the pin every job re-ran the caller's upstream plan (for
-    # the PQ/IVF callers: a parquet scan + a normalize projection) plus
-    # this repartition exchange.  This is the localCheckpoint analogue
-    # of MLlib KMeans caching its input; values are unchanged.
-    ncores = df.sparkSession.sparkContext.defaultParallelism
-    base = pin(
-        df.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .repartition(ncores, "vid")
-    )
-    cents = [list(r.v) for r in base.orderBy("vid").limit(k).collect()]
+    euclidean), then new centroids as per-(cell, dim) averages
+    (:func:`_lloyd`).  Returns (centroids, assignment df (vid, v, cell))."""
 
-    def assign_for(cent_rows: list[list[float]]) -> DataFrame:
+    def assign_for(base: DataFrame, cent_rows: list[list[float]]) -> DataFrame:
         # few-centroid models: one-parse unrolled argmin chains
         # (functions/vec.py forms), straight-line doubles per corpus
         # row.  Many-centroid models (r16, the k=64 codebook fits): the
@@ -588,21 +606,10 @@ def kmeans_fit(
             ).getField("cell")
         return base.select("vid", "v", cell.alias("cell"))
 
-    assigned = assign_for(cents)
-    for _ in range(iters):
-        new_rows = (
-            assigned.select("cell", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cell", F.col("pm.m").alias("centroid"))
-            .collect()
-        )
-        by_cell = {r.cell: list(r.centroid) for r in new_rows}
-        cents = [by_cell.get(i, cents[i]) for i in range(k)]
-        assigned = assign_for(cents)
-    return cents, assigned
+    return _lloyd(
+        df, id_col, "v", F.col(vec_col).cast("array<double>"), k, iters,
+        assign_for, F.avg("x"), lambda m, n: m,
+    )
 
 
 def kmeans_assign(
@@ -642,34 +649,15 @@ def kmeans_fit_quantized(
     IEEE op — bit-identical across engines and partitionings, ties
     broken by cell id.  Same scale contract as kmeans_fit: k×dim
     driver-held model state compiled into the assignment plan as
-    literals, updates via posexplode + (cell, pos) integer-sum
-    aggregate (k·dim partials per partition), empty cells keep their
-    previous state.  Init = first k vectors by id.
+    literals, updates via the same :func:`_lloyd` loop with integer
+    sums, empty cells keep their previous state.  Init = first k
+    vectors by id.  Local cost is dominated by the k·dim interpreted
+    fold itself (~6.8 s at sf0.1 across the 5 training jobs) — linear
+    in N with a constant 8×64 per-row term, so the plan holds at scale.
 
     Returns ([(s, n)] per cell, assignment df (vid, xq, cell))."""
-    # fan-out before the interpreted integer-argmin stage (the PLANS.md
-    # compute-bound-stage rule).  Local cost is dominated by the k·dim
-    # interpreted fold itself (~6.8 s at sf0.1 across the 5 training
-    # jobs) — linear in N with a constant 8×64 per-row term, so the
-    # plan holds at scale; the fan-out keeps it off one core.
-    # pinned like kmeans_fit (r16): Lloyd's re-scans the quantized frame
-    # iters+2 times; the pin stops each pass re-running the scan +
-    # quantize transform + this exchange (values unchanged)
-    ncores = df.sparkSession.sparkContext.defaultParallelism
-    base = pin(
-        df.select(
-            F.col(id_col).alias("vid"),
-            F.expr(
-                f"transform(cast({vec_col} as array<double>), "
-                f"x -> cast(floor(x * {scale}.0) as bigint))"
-            ).alias("xq"),
-        )
-        .repartition(ncores, "vid")
-    )
-    init = base.orderBy("vid").limit(k).collect()
-    state: list[tuple[list[int], int]] = [(list(r.xq), 1) for r in init]
 
-    def assign_for(st: list[tuple[list[int], int]]) -> DataFrame:
+    def assign_for(base: DataFrame, st: list[tuple[list[int], int]]) -> DataFrame:
         # one-parse codegen'd argmin over exact BIGINT numerators; the
         # single final division per cell stays the identical IEEE op
         arms = ", ".join(
@@ -680,24 +668,13 @@ def kmeans_fit_quantized(
         cell = F.expr(f"array_min(array({arms})).cell")
         return base.select("vid", "xq", cell.alias("cell"))
 
-    assigned = assign_for(state)
-    for _ in range(iters):
-        new_rows = (
-            assigned.select("cell", F.posexplode("xq").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.sum("x").alias("sd"), F.count(F.lit(1)).alias("n"))
-            .groupBy("cell")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "sd"))).alias("pm"),
-                F.max("n").alias("n"),
-            )
-            .select("cell", F.col("pm.sd").alias("s"), "n")
-            .collect()
-        )
-        by_cell = {r.cell: (list(r.s), int(r.n)) for r in new_rows}
-        state = [by_cell.get(i, state[i]) for i in range(k)]
-        assigned = assign_for(state)
-    return state, assigned
+    xq = F.expr(
+        f"transform(cast({vec_col} as array<double>), "
+        f"x -> cast(floor(x * {scale}.0) as bigint))"
+    )
+    return _lloyd(
+        df, id_col, "xq", xq, k, iters, assign_for, F.sum("x"), lambda s, n: (s, n)
+    )
 
 
 # -- standing IVF index (k-means centroids + bucketed cell table) -------------
@@ -769,23 +746,10 @@ def query_ann_index(
     # corpus-side norm computed once per row on the (bucketed) scan,
     # before the join — 1 fold per candidate pair instead of 3
     cells = spark.table(table).withColumn("vn", l2_norm(F.col("v")))
-    scored = (
-        cells.join(F.broadcast(pcells), "cell")
-        .filter(F.col("pid") != F.col("vid"))
-        .select(
-            F.col("pid").alias("id1"),
-            F.col("vid").alias("id2"),
-            (dot(F.col("pv"), F.col("v")) / (F.col("pn") * F.col("vn"))).alias(
-                "cos_raw"
-            ),
-        )
+    pairs = cells.join(F.broadcast(pcells), "cell").filter(
+        F.col("pid") != F.col("vid")
     )
-    w = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id1", "id2", F.round("cos_raw", 6).alias("cosine"), "rank")
-    )
+    return _cos_topk(_cosine_pairs(pairs, dot(F.col("pv"), F.col("v"))), k)
 
 
 def ann_recall(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
@@ -806,163 +770,63 @@ def ann_recall(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
 # -- power-iteration PCA ------------------------------------------------------
 
 
-@scoped
-def pca_power_top_component(
-    df: DataFrame, id_col: str, vec_col: str, rounds: int = 8
-) -> DataFrame:
-    """Dominant right-singular direction of the embedding matrix by
-    power iteration: v ← normalize(Xᵀ(X·v)), starting from the uniform
-    unit vector.  (Uncentered — the top component of the second moment;
-    mean-centering is one extra broadcast subtraction with the same
-    plan.)
-
-    Fully distributed iteration: X·v is a broadcast join of the
-    exploded (vec_id, dim, x) matrix against the 64-row v estimate and
-    a per-vector sum; Xᵀs is the mirrored join against the 500-row
-    score vector with a per-dim sum.  The shuffle never carries more
-    than (rows + dims) scalars per round — at 100 TB the matrix stays
-    put and only the d-vector circulates, which is exactly how
-    distributed Lanczos/power solvers are laid out.  Sign is fixed by
-    making the largest-|loading| coordinate positive.
-
-    Returns (i, loading) — dim rows, the unit top component.
-
-    Round structure (optimization r16, guide §1.2 step 1 / §5): the
-    r15 shape pinned ``v`` per round, so each round's one eager action
-    computed the back-projection ``w`` TWICE (once under the norm
-    broadcast, once on the streamed crossJoin leg) and paid a broadcast
-    build, a checkpoint and three jobs per round.  The iteration state
-    is dim doubles — CONSTANT-sized (the embedding width), the same
-    bound the old broadcast relied on — so instead each round runs ONE
-    job: the corpus-touching back-projection, collected as dim rows.
-    The norm fold and the division happen in driver doubles (IEEE-754,
-    the same ops Spark's codegen emits; the sum fold order was already
-    nondeterministic in Spark's partial aggregation, and the dual-SF
-    oracle gate certifies the 6-decimal outputs), and the next round's
-    estimate goes back in as an exact literal array
-    (:func:`~dask_obj_spark.functions.fastlit.lit_double_array` —
-    repr round-trip, bit-identical to `F.lit`).  The distributed legs
-    (x*c products, the two aggregation trees) are unchanged
-    expression-for-expression."""
-    mat = pin(
-        df.select(
-            F.col(id_col).alias("vid"),
-            F.posexplode(F.col(vec_col).cast("array<double>")).alias("i", "x"),
-        )
-    )
-    dim = mat.agg(F.max("i")).first()[0] + 1
-    v = [1.0 / math.sqrt(float(dim))] * dim
-    for _ in range(rounds):
-        c = F.element_at(lit_double_array(v), F.col("i") + 1)
-        s = (
-            mat.select("vid", (F.col("x") * c).alias("xc"))
-            .groupBy("vid")
-            .agg(F.sum(F.col("xc")).alias("s"))
-        )
-        w = (
-            mat.join(F.broadcast(s), "vid")
-            .groupBy("i")
-            .agg(F.sum(F.col("s") * F.col("x")).alias("w"))
-        )
-        wi = {r["i"]: r["w"] for r in w.collect()}
-        if len(wi) != dim:
-            raise ValueError(
-                "pca_power_top_component: back-projection lost a dimension "
-                f"({len(wi)} of {dim} present) — input vectors must cover "
-                "every dim index"
-            )
-        sq = 0.0
-        for i in range(dim):
-            sq += wi[i] * wi[i]
-        norm = math.sqrt(sq)
-        v = [wi[i] / norm for i in range(dim)]
-    spark = df.sparkSession
-    vfinal = spark.range(dim).select(
-        F.col("id").cast("int").alias("i"),
-        F.element_at(lit_double_array(v), F.col("id").cast("int") + 1).alias("c"),
-    )
-    sign = vfinal.orderBy(F.abs(F.col("c")).desc(), "i").limit(1).select(
-        F.when(F.col("c") < 0, F.lit(-1.0)).otherwise(F.lit(1.0)).alias("sgn")
-    )
-    return vfinal.crossJoin(F.broadcast(sign)).select(
-        "i", F.round(F.col("c") * F.col("sgn"), 6).alias("loading")
-    )
-
-
-@scoped
-def pca_top_components(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_components: int = 2,
-    rounds: int = 4,
-) -> DataFrame:
-    """Mean-centered top-k PCA by deflated power iteration — the real
-    embedding-whitening primitive (``sim_pca_power`` finds the dominant
-    direction of the UNcentered second moment; this subtracts the mean
-    first, so components are true covariance eigenvectors, then peels
-    k of them).
-
-    Layout is the same distributed-solver shape as the single-component
-    version: the (vid, i, x) matrix stays put and only dim-row vectors
-    circulate as broadcasts.  Mean-centering is one dim-row aggregate
-    broadcast-subtracted onto the stream (the centered matrix is
-    checkpointed once and reused by every round of every component).
-    Deflation is Gram-Schmidt per round: after each back-projection,
-    subtract ``(w·u_j) u_j`` for every previously-extracted component —
-    u_j is a broadcast dim-row frame and the dot product is a dim-row
-    aggregate, so orthogonalization costs no shuffle of the corpus.
-    Sign fixed per component (largest-|loading| coordinate positive).
-
-    Returns (comp, i, loading): ``n_components × dim`` rows.
-
-    Round structure (optimization r16): same rework as
-    `pca_power_top_component` — the per-round/per-component state
-    (estimate, extracted components, Gram-Schmidt dots) is dim-bounded,
-    so each round runs ONE job (the corpus-touching back-projection,
-    collected as dim rows, instead of 3+len(components) jobs through
-    the pin / GS / norm legs) and Gram-Schmidt, the norm fold and the
-    division happen in driver doubles — elementwise IEEE-754 ops
-    identical to the Spark expressions they replace; the sum-fold
-    order was already nondeterministic under partial aggregation and
-    the dual-SF oracle gate certifies the 6-decimal outputs."""
-    mat = df.select(
+def _dim_matrix(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The embedding matrix as (vid, i, x) rows, one per coordinate."""
+    return df.select(
         F.col(id_col).alias("vid"),
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("i", "x"),
     )
-    mu = mat.groupBy("i").agg(F.avg("x").alias("mu"))
-    cmat = pin(
-        mat.join(F.broadcast(mu), "i")
-        .select("vid", "i", (F.col("x") - F.col("mu")).alias("x"))
-    )
-    dim = cmat.agg(F.max("i")).first()[0] + 1
 
-    def dense_vec(frame: DataFrame, col: str, what: str) -> list[float]:
-        vals = {r["i"]: r[col] for r in frame.collect()}
-        if len(vals) != dim:
-            raise ValueError(
-                f"pca_top_components: {what} lost a dimension "
-                f"({len(vals)} of {dim} present) — input vectors must "
-                "cover every dim index"
-            )
-        return [vals[i] for i in range(dim)]
 
+def _power_components(mat: DataFrame, n_components: int, rounds: int) -> DataFrame:
+    """Top `n_components` directions of a (vid, i, x) matrix by power
+    iteration, v ← normalize(Xᵀ(X·v)) from the uniform unit vector,
+    deflated by Gram-Schmidt against the components already extracted.
+    Returns (comp, i, loading): `n_components` × dim rows, each
+    component's sign fixed so its largest-|loading| coordinate (ties by
+    i) is positive, loadings rounded to 6 decimals.
+
+    Fully distributed where the data is: the (vid, i, x) matrix is
+    pinned once and stays put; X·v is a per-vector sum over the
+    estimate as an exact literal array
+    (:func:`~dask_obj_spark.functions.fastlit.lit_double_array` — repr
+    round-trip, bit-identical to `F.lit`), and Xᵀs the mirrored join
+    against the broadcast score vector with a per-dim sum — the shuffle
+    never carries more than (rows + dims) scalars per round, the layout
+    of distributed Lanczos/power solvers.
+
+    Round structure: the iteration state is dim doubles —
+    constant-sized (the embedding width) — so each round runs ONE job,
+    the corpus-touching back-projection collected as dim rows; Gram-Schmidt, the norm fold,
+    the division and the sign fix happen in driver doubles (IEEE-754,
+    the same ops Spark's codegen emits; the sum fold order was already
+    nondeterministic under partial aggregation, and the dual-SF oracle
+    gate certifies the 6-decimal outputs)."""
+    mat = pin(mat)
+    dim = mat.agg(F.max("i")).first()[0] + 1
     components: list[list[float]] = []
     for _ in range(n_components):
         v = [1.0 / math.sqrt(float(dim))] * dim
         for _r in range(rounds):
             c = F.element_at(lit_double_array(v), F.col("i") + 1)
             s = (
-                cmat.select("vid", (F.col("x") * c).alias("xc"))
+                mat.select("vid", (F.col("x") * c).alias("xc"))
                 .groupBy("vid")
                 .agg(F.sum(F.col("xc")).alias("s"))
             )
             w = (
-                cmat.join(F.broadcast(s), "vid")
+                mat.join(F.broadcast(s), "vid")
                 .groupBy("i")
                 .agg(F.sum(F.col("s") * F.col("x")).alias("w"))
             )
-            wv = dense_vec(w, "w", "back-projection")
+            wi = {r["i"]: r["w"] for r in w.collect()}
+            if len(wi) != dim:
+                raise ValueError(
+                    "power iteration: back-projection lost a dimension "
+                    f"({len(wi)} of {dim} present) — input vectors must "
+                    "cover every dim index"
+                )
+            wv = [wi[i] for i in range(dim)]
             for u in components:  # Gram-Schmidt against extracted components
                 d = 0.0
                 for i in range(dim):
@@ -974,22 +838,46 @@ def pca_top_components(
             norm = math.sqrt(sq)
             v = [x / norm for x in wv]
         components.append(v)
-    spark = df.sparkSession
-    out = None
+    rows = []
     for ci, u in enumerate(components):
-        uf = spark.createDataFrame(
-            [(i, float(x)) for i, x in enumerate(u)], "i int, u double"
-        )
-        sign = uf.orderBy(F.abs(F.col("u")).desc(), "i").limit(1).select(
-            F.when(F.col("u") < 0, F.lit(-1.0)).otherwise(F.lit(1.0)).alias("sgn")
-        )
-        comp = uf.crossJoin(F.broadcast(sign)).select(
-            F.lit(ci).cast("int").alias("comp"),
-            "i",
-            F.round(F.col("u") * F.col("sgn"), 6).alias("loading"),
-        )
-        out = comp if out is None else out.unionByName(comp)
-    return out
+        sgn = -1.0 if u[max(range(dim), key=lambda i: abs(u[i]))] < 0 else 1.0
+        rows += [(ci, i, x * sgn) for i, x in enumerate(u)]
+    return mat.sparkSession.createDataFrame(rows, "comp int, i int, u double").select(
+        "comp", "i", F.round("u", 6).alias("loading")
+    )
+
+
+@scoped
+def pca_power_top_component(
+    df: DataFrame, id_col: str, vec_col: str, rounds: int = 8
+) -> DataFrame:
+    """Dominant right-singular direction of the embedding matrix by
+    power iteration (:func:`_power_components`, uncentred: the top
+    component of the second moment).  Returns (i, loading) — dim rows,
+    the unit top component."""
+    mat = _dim_matrix(df, id_col, vec_col)
+    return _power_components(mat, 1, rounds).select("i", "loading")
+
+
+@scoped
+def pca_top_components(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_components: int = 2,
+    rounds: int = 4,
+) -> DataFrame:
+    """Mean-centered top-k PCA by deflated power iteration
+    (:func:`_power_components`) — the real embedding-whitening
+    primitive: components are true covariance eigenvectors.  Centring
+    is one dim-row aggregate broadcast-subtracted onto the stream.
+    Returns (comp, i, loading): ``n_components × dim`` rows."""
+    mat = _dim_matrix(df, id_col, vec_col)
+    mu = mat.groupBy("i").agg(F.avg("x").alias("mu"))
+    cmat = mat.join(F.broadcast(mu), "i").select(
+        "vid", "i", (F.col("x") - F.col("mu")).alias("x")
+    )
+    return _power_components(cmat, n_components, rounds)
 
 
 # -- label propagation (semi-supervised) --------------------------------------
@@ -1240,6 +1128,129 @@ PQ_MOD = 11  # deterministic codebook: subvectors of vids with vid % 11 == 1
 PQ_CB_CAP = 512
 
 
+def _pq_sub(dim: int, m: int) -> int:
+    """Width of each of the `m` contiguous PQ subspaces of a `dim`-wide
+    vector.  A `dim` that `m` does not divide would silently drop the
+    trailing coordinates from every code, so it fails instead."""
+    if m < 1 or dim % m:
+        raise ValueError(
+            f"product quantization: dim={dim} does not split into m={m} "
+            "equal subspaces"
+        )
+    return dim // m
+
+
+def _pq_best(vec: str, s: int, sub: int, book: list[list[float]]) -> Column:
+    """Nearest codeword of subspace `s` of the array column `vec`:
+    struct(dist, cid), ties to the lower cid.  The codebook rides the
+    plan as ONE array<array<double>> Literal: per-codeword literal
+    expressions put k·sub nodes per subspace into codegen source, which
+    at k=64 × m=8 generated multi-MiB methods Janino chewed on for
+    minutes per stage; a transform over the constant matrix evaluates
+    the identical sqdist fold per codeword (index == cid in book
+    order)."""
+    sv = F.slice(F.col(vec), s * sub + 1, sub)
+    return F.array_min(
+        F.transform(
+            lit_double_matrix(book),
+            lambda c, i: F.struct(sqdist(sv, c).alias("dist"), i.alias("cid")),
+        )
+    )
+
+
+def _pq_codes(vec: str, books: list[list[list[float]]], sub: int) -> Column:
+    """The m-code array of `vec`: a fully narrow per-row argmin against
+    literal codebooks (zero joins, zero shuffles)."""
+    return F.array(
+        *[_pq_best(vec, s, sub, book).getField("cid") for s, book in enumerate(books)]
+    )
+
+
+def _adc_table(vec: str, books: list[list[list[float]]], sub: int) -> Column:
+    """A probe's ADC table as an array-of-arrays column: pt[s][cid] =
+    ‖probe_sub_s − codeword‖², computed narrowly from literal
+    codebooks."""
+    # one-argument lambda: a second parameter (even defaulted) selects
+    # pyspark's (element, index) form; transform calls it immediately,
+    # so the loop's slice is the right one
+    tables = []
+    for s, book in enumerate(books):
+        sv = F.slice(F.col(vec), s * sub + 1, sub)
+        tables.append(F.transform(lit_double_matrix(book), lambda c: sqdist(sv, c)))
+    return F.array(*tables)
+
+
+def _adc_sum(m: int) -> Column:
+    """Approximate distance of a candidate row holding the probe's ADC
+    table ``pt`` and its own m-code array ``codes``: Σ_s pt[s][code_s],
+    m `element_at` lookups added left-assoc in subspace order — the
+    pair surface needs no melt, no pivot and no exchange."""
+    terms = [
+        F.element_at(F.col("pt").getItem(s), F.col("codes").getItem(s) + 1)
+        for s in range(m)
+    ]
+    adc = terms[0]
+    for t in terms[1:]:
+        adc = adc + t
+    return adc
+
+
+def _adc_shortlist(scored: DataFrame, n: int) -> DataFrame:
+    """The `n` best candidates per probe of ADC-scored rows (probe,
+    candidate, adc), ties by candidate id: (probe, candidate) only, so
+    the window's exchange moves no dim-sized arrays."""
+    probe, cand, _ = scored.columns
+    w = Window.partitionBy(probe).orderBy(F.asc("adc"), F.asc(cand))
+    return (
+        scored.withColumn("slrank", F.row_number().over(w))
+        .filter(F.col("slrank") <= n)
+        .select(probe, cand)
+    )
+
+
+def _rerank_topk(sl: DataFrame, vecs: DataFrame, k: int) -> DataFrame:
+    """Exact top-`k` re-rank of a shortlist: the two vectors of every
+    shortlisted (probe, candidate) pair are joined back — only the
+    survivors ever touch raw floats — and scored by their dot when
+    `vecs` is (vid, v) over unit vectors, or by cosine when it is
+    (vid, v, n) over raw vectors with their norms."""
+    probe, cand = sl.columns
+    vid, vec, *norm = vecs.columns
+    p = vecs.select(*[F.col(c).alias("p" + c) for c in vecs.columns])
+    b = vecs.select(*[F.col(c).alias("b" + c) for c in vecs.columns])
+    score = dot(F.col("p" + vec), F.col("b" + vec))
+    if norm:
+        score = score / (F.col("p" + norm[0]) * F.col("b" + norm[0]))
+    scored = (
+        sl.join(p, sl[probe] == p["p" + vid])
+        .join(b, sl[cand] == b["b" + vid])
+        .select(
+            F.col(probe).alias("id1"), F.col(cand).alias("id2"), score.alias("cos_raw")
+        )
+    )
+    return _cos_topk(scored, k)
+
+
+def _unit_vectors(
+    df: DataFrame, id_col: str, vec_col: str, dim: int, out: str = "v"
+) -> DataFrame:
+    """(vid, `out`) unit-normalized vectors, pinned — euclidean on the
+    sphere is cosine ordering.  The norm rides a projected column so it
+    folds ONCE per row (an in-lambda norm re-ran the dim-term fold per
+    ELEMENT), and the pin spares every consumer (fits,
+    encode scan, probe expansion, re-rank join-backs) re-evaluating
+    cast+normalize inline: the ivfpq shortlist re-rank was once observed
+    evaluating the inlined norm chain INTERPRETED with a per-term array
+    cast (thread dump: minutes of single-task Cast.castArray).  Same
+    norm and per-element division on both engines, so every double is
+    bit-identical to the oracle's."""
+    return pin(
+        _vectors(df, id_col, vec_col)
+        .withColumn("_vn", fixed_norm("v", dim))
+        .select("vid", F.transform(F.col("v"), lambda x: x / F.col("_vn")).alias(out))
+    )
+
+
 def pq_fit(
     df: DataFrame,
     id_col: str,
@@ -1260,7 +1271,7 @@ def pq_fit(
     same contract as kmeans_fit); the corpus never re-shuffles — each
     subspace fit scans the same frame with a different slice.  Returns
     one codeword list per subspace (index = code id)."""
-    sub = dim // m
+    sub = _pq_sub(dim, m)
     books = []
     for s in range(m):
         sliced = df.select(
@@ -1298,28 +1309,11 @@ def pq_encode(
     floor-quantized to integer micro-units (the cross-engine-stable
     quantization contract shared with weighted_sssp)."""
     m = len(books)
-    sub = dim // m
-    base = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    bests = []
-    for s, book in enumerate(books):
-        # the codebook rides the plan as ONE array<array<double>>
-        # Literal (r16, guide §7.3 plan size): per-codeword literal
-        # expressions put k·sub nodes per subspace into codegen source,
-        # which at k=64 × m=8 generated multi-MiB methods Janino chewed
-        # on for minutes per stage; a transform over the constant matrix
-        # evaluates the identical sqdist fold per codeword (same
-        # struct(dist, cid) argmin, index == cid in book order)
-        sv = F.slice(F.col("v"), s * sub + 1, sub)
-        pairs = F.transform(
-            lit_double_matrix(book),
-            lambda c, i: F.struct(
-                sqdist(sv, c).alias("dist"), i.alias("cid")
-            ),
-        )
-        bests.append(F.array_min(pairs).alias(f"best{s}"))
-    enc = base.select("vid", *bests)
+    sub = _pq_sub(dim, m)
+    bests = [
+        _pq_best("v", s, sub, book).alias(f"best{s}") for s, book in enumerate(books)
+    ]
+    enc = _vectors(df, id_col, vec_col).select("vid", *bests)
     err = F.col("best0").getField("dist")
     for s in range(1, m):
         err = err + F.col(f"best{s}").getField("dist")
@@ -1343,33 +1337,15 @@ def pq_adc_ranked(
     """All probe→candidate ADC pairs with per-probe rank — the shared
     kernel behind `sim_pq_adc_topk` and `sim_pq_recall`.  See the query
     docstrings for the plan shape and the broadcast-scope caveat."""
-    raw = df.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    # unit-normalize: euclidean on the sphere = cosine ordering (the
-    # target metric); same sqrt-fold norm + per-element division on
-    # both engines keeps every double bit-identical.  The norm rides a
-    # projected column so it folds ONCE per row — the old in-lambda
-    # l2_norm re-ran the interpreted dim-term fold per ELEMENT
-    # (O(dim²) interpreted work per row; r16, guide §4.1)
-    # pinned once: consumed by the codeword collect, the encode scan,
-    # the probe expansion and the candidate surface (r16; see
-    # ivfpq_topk)
-    base = pin(
-        raw.withColumn("_vn", fixed_norm("v", dim))
-        .select(
-            "vid",
-            F.transform(F.col("v"), lambda x: x / F.col("_vn")).alias("v"),
-        )
-    )
-    sub = dim // m
+    sub = _pq_sub(dim, m)
+    # consumed by the codeword collect, the encode scan, the probe
+    # expansion and the candidate surface
+    base = _unit_vectors(df, id_col, vec_col, dim)
     # the modular codeword set collapses to ONE sorted struct-array row,
     # broadcast onto the corpus; the per-subspace argmin is a per-row
-    # HOF over that array (same zero-corpus-exchange encode plan as
-    # pq_encode — the old broadcast-join + row_number window exchanged
-    # an m·|cw|·|corpus| intermediate), then posexplode melts the m
-    # codes for the ADC code-lookup join
+    # HOF over that array (the zero-corpus-exchange encode plan of
+    # `_pq_codes` — the old broadcast-join + row_number window exchanged
+    # an m·|cw|·|corpus| intermediate)
     cwsf = F.broadcast(
         base.filter((F.col("vid") % mod == 1) & (F.col("vid") < PQ_CB_CAP))
         .select(
@@ -1397,11 +1373,9 @@ def pq_adc_ranked(
 
     # encoded corpus: ONE row per vector with its m-code ARRAY, and each
     # probe row carries its own m×|cw| ADC distance table as an
-    # array-of-arrays — the same narrow plan as pq_adc_trained_topk /
-    # ivfpq_topk: per-candidate scoring is m element_at lookups + a
-    # left-assoc m-term add, so the pair surface is never exchanged
-    # (the old melted-code equi-join + pivot groupBy shuffled
-    # |probes|·|corpus|·m rows)
+    # array-of-arrays, scored by `_adc_sum`, so the pair surface is
+    # never exchanged (the old melted-code equi-join + pivot groupBy
+    # shuffled |probes|·|corpus|·m rows)
     enc = base.join(cwsf).select(
         "vid",
         F.array(*[_subspace_code(s) for s in range(m)]).alias("codes"),
@@ -1424,11 +1398,6 @@ def pq_adc_ranked(
             F.array(*[_subspace_dists(s) for s in range(m)]).alias("pt"),
         )
     )
-    adc = F.element_at(F.col("pt").getItem(0), F.col("codes").getItem(0) + 1)
-    for s in range(1, m):
-        adc = adc + F.element_at(
-            F.col("pt").getItem(s), F.col("codes").getItem(s) + 1
-        )
     scored = (
         # no broadcast hint on probes: each row is m·|cw| doubles and
         # the probe COUNT is corpus-growing (1-in-probe_mod) — AQE
@@ -1437,7 +1406,7 @@ def pq_adc_ranked(
         enc.join(probes)
         .filter(F.col("pid") != F.col("vid"))
         .select(
-            F.col("pid").alias("id1"), F.col("vid").alias("id2"), adc.alias("adc")
+            F.col("pid").alias("id1"), F.col("vid").alias("id2"), _adc_sum(m).alias("adc")
         )
     )
     rw = Window.partitionBy("id1").orderBy(F.asc("adc"), F.asc("id2"))
@@ -1482,10 +1451,7 @@ def matryoshka_recall(
     left-assoc cosine chains."""
     ncores = df.sparkSession.sparkContext.defaultParallelism
     widths = tuple(dims) + (full_dim,)
-    raw0 = df.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
+    raw0 = _vectors(df, id_col, vec_col)
 
     def with_norms(frame: DataFrame, pfx: str) -> DataFrame:
         # codegen'd prefix norms via the CHAINED squared-sum columns
@@ -1605,110 +1571,35 @@ def pq_adc_trained_topk(
 
     Vectors are unit-normalized first (euclidean on the sphere = cosine
     ordering).  At 100 TB: encode is a fully NARROW per-row
-    literal-codebook argmin (zero joins, zero shuffles — the
-    pq_encode plan) written ONCE as a standing m-codes table; a probe
+    literal-codebook argmin (zero joins, zero shuffles — `_pq_codes`)
+    written ONCE as a standing m-codes table; a probe
     batch computes one m·k distance table; per-candidate cost is m
     lookups + an m-term add; only `shortlist` raw vectors per probe
     are ever touched."""
-    m = len(books)
-    sub = dim // m
-    raw = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    # norm as a projected column (one fold per row, not per element)
-    # and the normalized corpus pinned once — every downstream consumer
-    # (encode, probes, re-rank join-backs) otherwise re-evaluates
-    # cast+normalize inline (r16; see ivfpq_topk)
-    base = pin(
-        raw.withColumn("_vn", fixed_norm("v", dim))
-        .select(
-            "vid", F.transform(F.col("v"), lambda x: x / F.col("_vn")).alias("v")
-        )
-    )
-
-    def _subspace_best(s: int, book) -> Column:
-        # codebook as ONE matrix Literal, not k·sub expression nodes
-        # (r16 plan-size fix — see pq_encode)
-        sv = F.slice(F.col("v"), s * sub + 1, sub)
-        return F.array_min(
-            F.transform(
-                lit_double_matrix(book),
-                lambda c, i: F.struct(
-                    sqdist(sv, c).alias("dist"), i.alias("cid")
-                ),
-            )
-        ).getField("cid")
-
+    sub = _pq_sub(dim, len(books))
+    base = _unit_vectors(df, id_col, vec_col, dim)
     # encoded corpus: ONE row per vector with its m-code ARRAY (the
     # zero-exchange encode plan); probes carry their own m×k ADC
     # distance table as an array-of-arrays — both sides narrow, so the
     # ADC scan is one cross join (probe batch bounded by contract; no
     # broadcast hint — AQE picks the strategy, PLANS.md audit rule)
-    # and per-candidate scoring is m element_at lookups + a left-assoc
-    # m-term add in subspace order: the ivfpq_topk pattern, replacing
-    # the previous melted-code equi-join + pivot groupBy (one fewer
-    # shuffle of the pair surface).
-    enc = base.select(
-        "vid",
-        F.array(*[_subspace_best(s, book) for s, book in enumerate(books)]).alias(
-            "codes"
-        ),
-    )
-    # NB: transform lambdas must take exactly ONE argument (a second —
-    # even defaulted — parameter selects pyspark's (element, index)
-    # form), so the subspace offset is captured via this factory
-    def _pt_dists(s: int, book) -> Column:
-        return F.transform(
-            lit_double_matrix(book),
-            lambda c: sqdist(F.slice(F.col("v"), s * sub + 1, sub), c),
-        )
-
-    pt_arr = F.array(*[_pt_dists(s, book) for s, book in enumerate(books)])
+    # scored by `_adc_sum` (one fewer shuffle of the pair surface than
+    # the previous melted-code equi-join + pivot groupBy).
+    enc = base.select("vid", _pq_codes("v", books, sub).alias("codes"))
     probes = base.filter(F.col("vid") % probe_mod == 0).select(
-        F.col("vid").alias("pid"), pt_arr.alias("pt")
+        F.col("vid").alias("pid"), _adc_table("v", books, sub).alias("pt")
     )
-    adc = F.element_at(F.col("pt").getItem(0), F.col("codes").getItem(0) + 1)
-    for s in range(1, m):
-        adc = adc + F.element_at(
-            F.col("pt").getItem(s), F.col("codes").getItem(s) + 1
-        )
     scored = (
         enc.join(probes)
         .filter(F.col("pid") != F.col("vid"))
         .select(
-            F.col("pid").alias("id1"), F.col("vid").alias("id2"), adc.alias("adc")
+            F.col("pid").alias("id1"),
+            F.col("vid").alias("id2"),
+            _adc_sum(len(books)).alias("adc"),
         )
     )
-    slw = Window.partitionBy("id1").orderBy(F.asc("adc"), F.asc("id2"))
-    sl = (
-        scored.withColumn("slrank", F.row_number().over(slw))
-        .filter(F.col("slrank") <= shortlist)
-        .select("id1", "id2")
-    )
-    nraw = raw.withColumn("vn", l2_norm(F.col("v")))
-    p = nraw.select(
-        F.col("vid").alias("pvid"), F.col("v").alias("pv"), F.col("vn").alias("pn")
-    )
-    b = nraw.select(
-        F.col("vid").alias("bvid"), F.col("v").alias("bv"), F.col("vn").alias("bn")
-    )
-    re_scored = (
-        sl.join(p, sl["id1"] == p["pvid"])
-        .join(b, sl["id2"] == b["bvid"])
-        .select(
-            "id1",
-            "id2",
-            (dot(F.col("pv"), F.col("bv")) / (F.col("pn") * F.col("bn"))).alias(
-                "cos_raw"
-            ),
-        )
-    )
-    rw = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
-    return (
-        re_scored.withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-        .select("id1", "id2", F.round("cos_raw", 6).alias("cosine"), "rank")
-    )
+    raw = _vectors(df, id_col, vec_col).withColumn("n", l2_norm(F.col("v")))
+    return _rerank_topk(_adc_shortlist(scored, shortlist), raw, k)
 
 
 @scoped
@@ -1739,8 +1630,8 @@ def ivfpq_topk(
     Plan shape, stage by stage:
     - **index build** (encode-once at scale): one narrow scan emits per
       vector its cell id (literal-centroid argmin, `_nearest_cells`)
-      and its m-code ARRAY (literal-codebook argmin — the zero-exchange
-      pq_encode plan).  No joins, no windows, no shuffles.
+      and its m-code ARRAY (literal-codebook argmin, `_pq_codes`).
+      No joins, no windows, no shuffles.
     - **probe expansion**: each probe row computes, narrowly, its
       ``nprobe`` nearest cells and its own m×k ADC distance table as an
       array-of-arrays column — model state is plan literals, so nothing
@@ -1749,8 +1640,8 @@ def ivfpq_topk(
       bound: candidate volume is cell-sized, never all-pairs).
     - **ADC scoring**: per candidate row, ``adc = Σ_s pt[s][code_s]`` —
       m `element_at` lookups + a left-assoc m-term add, fully narrow
-      (no melt, no pivot groupBy — this improves on pq_adc_trained's
-      melted-code join).  The only exchanges after the cell join are
+      (`_adc_sum`: no melt, no pivot groupBy).  The only exchanges
+      after the cell join are
       the two per-probe top-N windows (shortlist, then final k).
     - **re-rank**: exact cosine on unit-normalized vectors for the
       shortlist only.
@@ -1766,24 +1657,10 @@ def ivfpq_topk(
     SQL-replayable; the modular-deterministic twins (sim_ivf_recall /
     sim_pq_recall) carry the hash contract, and the recall floor is
     pinned in tests/test_dedup.py."""
-    raw = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    # norm as a projected column: one fold per row, not per element
-    # (r16, guide §4.1 — see pq_adc_ranked), and the normalized corpus
-    # is PINNED once: it feeds the two fits, the encode scan, the probe
-    # expansion and both re-rank sides, and without the pin every
-    # consumer re-evaluated cast+normalize inline — the shortlist
-    # re-rank stage was observed evaluating the inlined norm chain
-    # INTERPRETED with a per-term array cast (thread dump: minutes of
-    # single-task Cast.castArray under BinaryArithmetic.eval).  Values
-    # identical; the b13/b19 pin discipline (guide §5/§3.3).
-    base = pin(
-        raw.withColumn("_vn", fixed_norm("v", dim))
-        .select(
-            "vid", F.transform(F.col("v"), lambda x: x / F.col("_vn")).alias("nv")
-        )
-    )
+    sub = _pq_sub(dim, m if books is None else len(books))
+    # the normalized corpus feeds the two fits, the encode scan, the
+    # probe expansion and both re-rank sides
+    base = _unit_vectors(df, id_col, vec_col, dim, "nv")
     if centroids is None or books is None:
         # auto-sizing needs a row count; accept a caller hint (catalog
         # statistics / known table size) so a bare call on a 100 TB
@@ -1804,83 +1681,28 @@ def ivfpq_topk(
             books = pq_fit(
                 train, "vid", "nv", m=m, k=codebook_k, iters=iters, dim=dim
             )
-    m = len(books)
-    sub = dim // m
-
-    def _code(s: int, book) -> Column:
-        # codebook as ONE matrix Literal, not k·sub expression nodes
-        # (r16 plan-size fix — see pq_encode)
-        sv = F.slice(F.col("nv"), s * sub + 1, sub)
-        return F.array_min(
-            F.transform(
-                lit_double_matrix(book),
-                lambda c, i: F.struct(
-                    sqdist(sv, c).alias("dist"), i.alias("cid")
-                ),
-            )
-        ).getField("cid")
-
     # index side carries ONLY (vid, cell, codes) — the raw/normalized
     # floats never enter the candidate surface (the whole point of ADC);
     # they are joined back for the shortlist survivors only
     cells = base.select(
         "vid",
         _nearest_cells("nv", centroids, 1).getItem(0).alias("cell"),
-        F.array(*[_code(s, book) for s, book in enumerate(books)]).alias("codes"),
+        _pq_codes("nv", books, sub).alias("codes"),
     )
-    # per-probe ADC table: pt[s][cid] = ||probe_sub_s - codeword||²,
-    # an array-of-arrays computed from literal codebooks — narrow
-    # NB: one-arg transform lambdas only (see pq_adc_trained_topk)
-    def _pt_dists(s: int, book) -> Column:
-        return F.transform(
-            lit_double_matrix(book),
-            lambda c: sqdist(F.slice(F.col("nv"), s * sub + 1, sub), c),
-        )
-
-    pt = F.array(*[_pt_dists(s, book) for s, book in enumerate(books)])
     pcells = base.filter(F.col("vid") % probe_mod == 0).select(
         F.col("vid").alias("pid"),
-        pt.alias("pt"),
+        _adc_table("nv", books, sub).alias("pt"),
         F.explode(_nearest_cells("nv", centroids, nprobe)).alias("cell"),
     )
     cand = cells.join(pcells, "cell").filter(F.col("pid") != F.col("vid"))
-    adc = F.element_at(F.col("pt").getItem(0), F.col("codes").getItem(0) + 1)
-    for s in range(1, m):
-        adc = adc + F.element_at(
-            F.col("pt").getItem(s), F.col("codes").getItem(s) + 1
-        )
     # no dedup needed: every vector lives in exactly ONE cell and a
     # probe's nprobe cells are distinct, so (pid, vid) pairs are unique
     # by construction — a dropDuplicates here would be a pure extra
     # shuffle of the candidate set.  The per-probe ADC table `pt` (m·k
     # doubles) rides the candidate rows — bounded by the model, not the
-    # corpus; candidate ordering itself is (pid, vid, adc) only, so the
-    # shortlist row_number exchange moves NO dim-sized arrays (the
-    # pq_adc_trained_topk join-back pattern).
-    scored = cand.select("pid", "vid", adc.alias("adc"))
-    slw = Window.partitionBy("pid").orderBy(F.asc("adc"), F.asc("vid"))
-    sl = (
-        scored.withColumn("slrank", F.row_number().over(slw))
-        .filter(F.col("slrank") <= shortlist)
-        .select("pid", "vid")
-    )
-    p = base.select(F.col("vid").alias("pvid"), F.col("nv").alias("pnv"))
-    b = base.select(F.col("vid").alias("bvid"), F.col("nv").alias("bnv"))
-    rescored = (
-        sl.join(p, sl["pid"] == p["pvid"])
-        .join(b, sl["vid"] == b["bvid"])
-        .select(
-            F.col("pid").alias("id1"),
-            F.col("vid").alias("id2"),
-            dot(F.col("pnv"), F.col("bnv")).alias("cos_raw"),
-        )
-    )
-    rw = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-        .select("id1", "id2", F.round("cos_raw", 6).alias("cosine"), "rank")
-    )
+    # corpus; the shortlist exchange moves (pid, vid, adc) only.
+    scored = cand.select("pid", "vid", _adc_sum(len(books)).alias("adc"))
+    return _rerank_topk(_adc_shortlist(scored, shortlist), base, k)
 
 
 # -- link prediction ----------------------------------------------------------
@@ -1947,18 +1769,19 @@ RP_PLANES: list[list[float]] = [
 ]
 
 
+def _sign_project(v: Column, signs: list[list[float]]) -> Column:
+    """Project the array column `v` through a ±1 sign matrix scaled by
+    1/√rows: one literal-sign dot fold per output coordinate, the
+    matrix shipped as plan literals."""
+    scale = F.lit(1.0 / math.sqrt(len(signs)))
+    return F.array(*[dot(v, lit_double_array(row)) * scale for row in signs])
+
+
 def random_project(v: Column) -> Column:
     """Project a DIM-vector to RP_DIM dims with the fixed ±1 matrix
-    scaled by 1/sqrt(RP_DIM) — the Johnson-Lindenstrauss sketch that
-    approximately preserves pairwise distances.  Pure codegen arithmetic
-    (RP_DIM fold-sums); the matrix ships as literals in the plan."""
-    scale = 1.0 / (RP_DIM ** 0.5)
-    return F.array(
-        *[
-            (dot(v, lit_double_array(plane)) * scale)
-            for plane in RP_PLANES
-        ]
-    )
+    RP_PLANES scaled by 1/sqrt(RP_DIM) — the Johnson-Lindenstrauss
+    sketch that approximately preserves pairwise distances."""
+    return _sign_project(v, RP_PLANES)
 
 
 # -- k-center coreset selection ----------------------------------------------
@@ -1990,11 +1813,7 @@ def kcenter_coreset(
     micro-units — every pick decision and output value replays
     bit-for-bit on the DuckDB oracle's identically-unrolled rounds.
     """
-    import math
-
-    base = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    base = _vectors(df, id_col, vec_col)
     first = base.orderBy(F.asc("vid")).limit(1).collect()[0]
     centers: list[tuple[int, list[float], float]] = [
         (first["vid"], list(first["v"]), 0.0)
@@ -2051,7 +1870,8 @@ def binary_quantize(
     ``j div 32`` — non-negative powers of two, left-assoc, exact; 32
     bits per 64-bit word so no sign-bit edge cases in either engine.
 
-    Plan shape (the pq_encode discipline): the threshold fit is ONE
+    Plan shape (the narrow-encode discipline of `_pq_codes`): the
+    threshold fit is ONE
     explode + hash-agg over (dim) — d output rows, map-side combined —
     collected as bounded model state (d BIGINTs); the encode itself is
     a zero-exchange narrow scan against literal threshold arrays.  At
@@ -2065,9 +1885,7 @@ def binary_quantize(
 
     Returns (vid, words: array<bigint> of length ceil(dim/32)).
     """
-    raw = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    raw = _vectors(df, id_col, vec_col)
     q = F.transform(F.col("v"), lambda x: F.floor(x * F.lit(1000000.0)).cast("bigint"))
     if thresholds is None or n_rows is None:
         fit = (
@@ -2131,8 +1949,8 @@ def binary_hamming_topk(
     candidate surface streams ~2 words/row against a broadcast probe
     table; ``hamming`` is a zip_with xor→popcount fold (pure integer,
     whole-stage codegen).  Raw vectors enter ONLY for the shortlist
-    re-rank via join-back (the ivfpq_topk/pq_adc_trained_topk payload
-    discipline: no dim-sized arrays ride the shortlist exchange).
+    re-rank via join-back (the `_rerank_topk` payload discipline: no
+    dim-sized arrays ride the shortlist exchange).
 
     Cross-engine exactness: Hamming is integer (xor + bit_count), the
     shortlist is (hamming asc, vid) row_number, and the re-rank orders
@@ -2253,20 +2071,9 @@ def random_projection(
 
     Returns (vid, y: array<double> of length out_dim).
     """
-    signs = _rp_signs(out_dim, dim)
-    import math
-
-    inv = 1.0 / math.sqrt(out_dim)
-    raw = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
+    return _vectors(df, id_col, vec_col).select(
+        "vid", _sign_project(F.col("v"), _rp_signs(out_dim, dim)).alias("y")
     )
-    ys = [
-        (dot(F.col("v"), lit_double_array(row)) * F.lit(inv)).alias(
-            f"y{i}"
-        )
-        for i, row in enumerate(signs)
-    ]
-    return raw.select("vid", F.array(*[y for y in ys]).alias("y"))
 
 
 # -- rank-biased overlap between two retrieval runs ----------------------------

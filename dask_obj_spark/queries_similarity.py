@@ -13,7 +13,6 @@ from dask_obj_spark.functions.vec import (
     cosine_sql,
     dot,
     dot_sql,
-    fixed_norm,
     l2_norm,
     norm_sql,
     sqdiff,
@@ -33,7 +32,11 @@ from dask_obj_spark.operators.similarity import (
     RBO_P,
     RP_DIM,
     RP_PLANES,
+    _pq_sub,
+    _rerank_topk,
     _rp_signs,
+    _unit_vectors,
+    _vectors,
     ann_recall,
     bfs_hops,
     binary_hamming_topk,
@@ -884,7 +887,7 @@ def _duck_pq_oracle(m: int, mod: int, dim: int) -> str:
     squared-distance chain against every modular codeword, argmin by
     (dist, cid), then the m-way pivot with explicit left-assoc error
     addition — every float op replayed in Spark's evaluation order."""
-    sub = dim // m
+    sub = _pq_sub(dim, m)
     arms = []
     for s in range(m):
         dist = sqdist_sql("b.v", "c.cv", sub, DUCK, lo=s * sub + 1)
@@ -929,16 +932,12 @@ def sim_pq_encode_q(spark, sf_dir):
     2.0× — and the per-row argmin is now 47 codewords, light enough
     that the corpus side keeps its zero-exchange plan contract
     pinned in test_scale.py with no repartition fan-out)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(
-        F.col("vec_id").alias("vid"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    sub = DIM // PQ_M
+    base = _vectors(load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding")
+    sub = _pq_sub(DIM, PQ_M)
     # the modular codeword set collapses to ONE row holding a sorted
     # struct array, broadcast onto the corpus — per-row HOF argmin per
-    # subspace, so the corpus side never exchanges (same zero-shuffle
-    # contract as the trained-books pq_encode; the only aggregation in
+    # subspace, so the corpus side never exchanges (the zero-shuffle
+    # contract of the trained-books `_pq_codes`; the only aggregation in
     # the plan is the tiny codeword-side collect_list)
     cws = F.broadcast(
         base.filter((F.col("vid") % PQ_MOD == 1) & (F.col("vid") < PQ_CB_CAP))
@@ -987,7 +986,7 @@ def _duck_pq_adc_ctes(m: int, mod: int, dim: int, probe_mod: int) -> str:
     (identical per-element division off the same sqrt-fold norm on
     both engines): euclidean ordering on the unit sphere IS cosine
     ordering, which is the target metric."""
-    sub = dim // m
+    sub = _pq_sub(dim, m)
     enc_arms, probe_arms = [], []
     for s in range(m):
         dist = sqdist_sql("b.v", "c.cv", sub, DUCK, lo=s * sub + 1)
@@ -1150,30 +1149,8 @@ def sim_pq_recall_q(spark, sf_dir):
     ranked = pq_adc_ranked(emb, "vec_id", "embedding", probe_mod=50)
     adc10 = ranked.filter(F.col("rank") <= 10)
     shortlist = ranked.filter(F.col("rank") <= 50).select("id1", "id2")
-    raw = emb.select(
-        F.col("vec_id").alias("vid"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    ).withColumn("vn", l2_norm(F.col("v")))
-    p = raw.select(F.col("vid").alias("pvid"), F.col("v").alias("pv"), F.col("vn").alias("pn"))
-    b = raw.select(
-        F.col("vid").alias("bvid"), F.col("v").alias("bv"), F.col("vn").alias("bn")
-    )
-    re_scored = (
-        shortlist.join(p, shortlist["id1"] == p["pvid"])
-        .join(b, shortlist["id2"] == b["bvid"])
-        .select(
-            "id1",
-            "id2",
-            (dot(F.col("pv"), F.col("bv")) / (F.col("pn") * F.col("bn"))).alias(
-                "cos_raw"
-            ),
-        )
-    )
-    rw = Window.partitionBy("id1").orderBy(F.desc("cos_raw"), F.asc("id2"))
-    rerank = (
-        re_scored.withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= 10)
-    )
+    raw = _vectors(emb, "vec_id", "embedding").withColumn("n", l2_norm(F.col("v")))
+    rerank = _rerank_topk(shortlist, raw, 10)
     r_adc = ann_recall(truth, adc10, 10).select(
         "probe_id", F.col("recall").alias("recall_adc")
     )
@@ -1288,17 +1265,8 @@ def sim_pq_tuned_recall_rowsonly_q(spark, sf_dir):
     sim_pq_recall) carry the hash contract, and the ≥ 0.6 recall floor
     is pinned in tests/test_dedup.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # norm as a projected column: one fold per row, not per element
-    # (r16, guide §4.1 — see pq_adc_ranked)
-    norm = (
-        emb.select("vec_id", F.col("embedding").cast("array<double>").alias("_v"))
-        .withColumn("_vn", fixed_norm("_v", DIM))
-        .select(
-            "vec_id",
-            F.transform(F.col("_v"), lambda x: x / F.col("_vn")).alias("nv"),
-        )
-    )
-    books = pq_fit(norm, "vec_id", "nv", m=8, k=64, iters=3)
+    norm = _unit_vectors(emb, "vec_id", "embedding", DIM, "nv")
+    books = pq_fit(norm, "vid", "nv", m=8, k=64, iters=3)
     tuned = pq_adc_trained_topk(
         emb, "vec_id", "embedding", books, probe_mod=50, k=10, shortlist=100
     )
@@ -1388,11 +1356,7 @@ def sim_random_projection_q(spark, sf_dir):
     side; the pair join is probe-broadcast like cosine_topk_brute.  The
     oracle replays the entire fixed ±1 matrix in left-assoc SQL, so
     every value is bit-identical."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(
-        F.col("vec_id").alias("vid"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
+    base = _vectors(load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding")
     a = base.filter(F.col("vid") % 50 == 0).select(
         F.col("vid").alias("id1"), F.col("v").alias("va")
     ).withColumn("pa", random_project(F.col("va")))

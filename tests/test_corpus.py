@@ -381,17 +381,25 @@ def test_contrastive_negatives_deterministic_no_self(spark, sf_dir):
 
 
 def test_bpe_greedy_overlap_runs(spark):
-    from dask_obj_spark.operators.corpus import bpe_learn_merges, _bpe_apply_round
+    from dask_obj_spark.operators.corpus import (
+        _bpe_apply_literal,
+        _bpe_pair_w2,
+        bpe_learn_merges,
+    )
     from pyspark.sql import functions as F
 
     # "b b b b b": pair (b,b) matches at 4 consecutive positions; greedy
     # left-to-right merges positions 0 and 2 of the run -> "b_b b_b b"
     df = spark.createDataFrame([(1, "b b b b b")], ["doc_id", "text"])
-    sym = df.select(
-        F.col("doc_id"), F.posexplode(F.split(F.trim("text"), r"\s+")).alias("i", "s")
+    best = bpe_learn_merges(df, "doc_id", "text", rounds=1).collect()
+    assert [tuple(r) for r in best] == [(1, "b", "b", 4)]
+    sym = _bpe_pair_w2(
+        df.select(
+            F.col("doc_id"),
+            F.posexplode(F.split(F.trim("text"), r"\s+")).alias("i", "s"),
+        )
     )
-    new_sym, best = _bpe_apply_round(sym)
-    assert [tuple(r) for r in best.collect()] == [("b", "b", 4)]
+    new_sym = _bpe_apply_literal(sym, "b", "b")
     assert [r.s for r in new_sym.orderBy("i").collect()] == ["b_b", "b_b", "b"]
 
     # two rounds on a corpus with a clear winner each round

@@ -399,6 +399,36 @@ def test_pq_fit_encode_matches_numpy(spark):
         assert abs(err_micro - int(np.floor(want_err * 1e6))) <= 1  # fp assoc slack
 
 
+def test_pq_rejects_dim_not_split_by_m(spark):
+    """A width that m does not divide would silently drop the trailing
+    coordinates from every code; every PQ entry point fails instead."""
+    from dask_obj_spark.operators.similarity import (
+        ivfpq_topk,
+        pq_adc_ranked,
+        pq_adc_trained_topk,
+        pq_encode,
+        pq_fit,
+    )
+
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0, 2.0, 3.0, 4.0]) for i in range(6)],
+        ["vec_id", "embedding"],
+    )
+    books = [[[0.0, 0.0]], [[1.0, 1.0]]]  # m=2 codebooks of 2-wide codewords
+    calls = [
+        lambda: pq_fit(df, "vec_id", "embedding", m=2, k=2, iters=1, dim=5),
+        lambda: pq_encode(df, "vec_id", "embedding", books, dim=5),
+        lambda: pq_adc_ranked(df, "vec_id", "embedding", 2, m=2, dim=5),
+        lambda: pq_adc_trained_topk(df, "vec_id", "embedding", books, 2, dim=5),
+        lambda: ivfpq_topk(
+            df, "vec_id", "embedding", 2, centroids=[[0.0] * 5], books=books, dim=5
+        ),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="does not split into m=2"):
+            call()
+
+
 def test_hll_accuracy_and_merge(spark):
     """Register mergeability is exact (max algebra) and the estimate
     lands within ~3 standard errors (1.04/sqrt(256) ≈ 6.5%) of truth."""

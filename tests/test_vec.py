@@ -281,3 +281,40 @@ def test_only_vec_builds_unrolled_kernel_chains():
         for line, text in unrolled_chain_sites(p.read_text())
     ]
     assert sites == [], "render vector kernels with functions/vec.py:\n" + "\n".join(sites)
+
+
+# each vector-search stage, by a fragment only its one helper writes
+_STAGE_FRAGMENTS = {
+    "_cos_ranked": re.compile(r'F\.desc\(\s*"cos_raw"\s*\)'),  # per-probe top-k window
+    "_unit_vectors": re.compile(r'/\s*F\.col\(\s*"_vn"\s*\)'),  # x / _vn normalize
+    "_adc_sum": re.compile(r'F\.element_at\(\s*F\.col\(\s*"pt"\s*\)'),  # ADC lookups
+}
+
+
+def vector_stage_sites(source: str) -> list[tuple[str, str]]:
+    """(helper, enclosing function) of each stage fragment in one
+    module's source."""
+    owner: dict[int, str] = {}
+    for node in ast.walk(ast.parse(source)):  # breadth-first: inner defs win
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for line in range(node.lineno, node.end_lineno + 1):
+                owner[line] = node.name
+    return [
+        (helper, owner.get(source.count("\n", 0, m.start()) + 1, "<module>"))
+        for helper, frag in _STAGE_FRAGMENTS.items()
+        for m in frag.finditer(source)
+    ]
+
+
+def test_each_vector_search_stage_is_written_once():
+    sites = sorted(
+        (helper, f"{p.relative_to(_PKG.parent)}:{fn}")
+        for p in sorted(_PKG.rglob("*.py"))
+        for helper, fn in vector_stage_sites(p.read_text())
+    )
+    want = sorted(
+        (h, f"dask_obj_spark/operators/similarity.py:{h}") for h in _STAGE_FRAGMENTS
+    )
+    assert sites == want, "call the one helper of each stage:\n" + "\n".join(
+        map(str, sites)
+    )
