@@ -834,24 +834,6 @@ def bpe_apply_stats(
     )
 
 
-def sample_k_per_group(
-    df: DataFrame, key_col: str, id_col: str, k: int, salt: str = "groupk"
-) -> DataFrame:
-    """Deterministic k-per-group sampling: rank rows inside each group
-    by a hash of their id and keep the first k — a uniform-looking,
-    RNG-free subset that is stable under retries, reshuffles, and
-    incremental reruns (new rows only displace an old pick if their
-    hash ranks earlier — bounded churn, unlike reservoir resampling).
-    One window over the group partitioning; no global sort."""
-    h = porthash(F.col(id_col).cast("string"), salt)
-    w = Window.partitionBy(key_col).orderBy(h.asc(), F.col(id_col).asc())
-    return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
 @scoped
 def source_overlap_matrix(
     df: DataFrame,
@@ -1059,7 +1041,7 @@ def weighted_sample_k_per_group(
     k largest u^(1/w) keys, which selects each item with probability
     proportional to its weight.  The per-source counterpart of
     `weighted_sample` (per-doc Bernoulli) and the weighted counterpart
-    of `sample_k_per_group` (uniform); the primitive behind
+    of `cap_per_facet` (uniform); the primitive behind
     quality-weighted mixture drawing at a fixed per-source budget.
 
     Ranking by u^(1/w) equals ranking by ln(u)/w (monotone for

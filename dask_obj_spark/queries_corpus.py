@@ -49,7 +49,6 @@ from dask_obj_spark.operators.corpus import (
     quality_psi_by_source,
     quality_quantile_norm,
     quantize_embeddings_int8,
-    sample_k_per_group,
     semantic_contamination,
     source_overlap_matrix,
     span_corruption,
@@ -59,19 +58,17 @@ from dask_obj_spark.operators.corpus import (
 )
 from dask_obj_spark.operators.similarity import DIM as _EMB_DIM
 from dask_obj_spark.queries import query
+from dask_obj_spark.queries_similarity import _duck_with
 from dask_obj_spark.sources import load_table
 
 
-def _clusters_ctes() -> str:
-    """WITH RECURSIVE chain through `comp` (id, cluster_id) — shared by
-    the cluster-assignment oracle and the pack-export capstone."""
-    from dask_obj_spark.queries_dedup import _duck_pairs_sql
+def _clusters_with(ctes: list[str], select: str) -> str:
+    """An oracle over the near-dup clusters ``comp(id, cluster_id)``
+    (MinHash-LSH pairs → connected components), then ``ctes`` and
+    ``select`` — shared by every cluster-consuming oracle."""
+    from dask_obj_spark.queries_dedup import _duck_pairs_ctes
 
-    # RECURSIVE qualifies the whole CTE list; only `reach` recurses.
-    return (
-        _duck_pairs_sql(16, 4, 0.5).replace("WITH ", "WITH RECURSIVE ", 1)
-        + """
-    , edges AS (
+    clusters = """edges AS (
       SELECT id1 AS s, id2 AS d FROM pairs
       UNION ALL
       SELECT id2 AS s, id1 AS d FROM pairs
@@ -83,19 +80,22 @@ def _clusters_ctes() -> str:
     ), comp AS (
       SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id
     )"""
+    # RECURSIVE qualifies the whole CTE list; only `reach` recurses
+    return _duck_with(
+        [_duck_pairs_ctes(16, 4, 0.5), clusters] + ctes, select, recursive=True
     )
 
 
 def _clusters_oracle() -> str:
-    return (
-        _clusters_ctes()
-        + """
+    return _clusters_with(
+        [],
+        """
     SELECT d.doc_id,
            coalesce(c.cluster_id, d.doc_id) AS cluster_id,
            CASE WHEN coalesce(c.cluster_id, d.doc_id) = d.doc_id
                 THEN 1 ELSE 0 END AS is_keeper
     FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
-    """
+    """,
     )
 
 
@@ -140,9 +140,9 @@ def corpus_pack_bins_q(spark, sf_dir):
 
 @query(
     "pipeline_pack_export",
-    oracle=_clusters_ctes()
-    + f"""
-    , keepers AS (
+    oracle=_clusters_with(
+        [
+            f"""keepers AS (
       SELECT d.doc_id, d.source, d.text
       FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
       WHERE coalesce(c.cluster_id, d.doc_id) = d.doc_id
@@ -160,12 +160,15 @@ def corpus_pack_bins_q(spark, sf_dir):
       SELECT doc_id, source, text, n_tokens,
              CAST(floor((cum_tokens - n_tokens) / 256) AS BIGINT) AS bin_id
       FROM kc
-    )
+    )"""
+        ],
+        """
     SELECT source, bin_id, count(*) AS n_docs,
            CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
            string_agg(text, chr(10) ORDER BY doc_id) AS payload
     FROM kb GROUP BY source, bin_id
     """,
+    ),
 )
 def pipeline_pack_export_q(spark, sf_dir):
     """Capstone composition: near-dup cluster keepers (iterative
@@ -363,19 +366,22 @@ def corpus_weighted_sample_q(spark, sf_dir):
     return weighted_sample(scored, "doc_id", "quality")
 
 
-@query(
-    "corpus_cap_per_source",
-    oracle=f"""
+def _cap_per_source_oracle(cap: int, seed: str) -> str:
+    """`cap_per_facet` over documents by source: the ``cap`` docs with
+    the least ``seed``-salted id hash per source, ties to the lower id."""
+    return f"""
     SELECT doc_id, source FROM (
       SELECT doc_id, source,
              row_number() OVER (
                PARTITION BY source
-               ORDER BY {duck_porthash("CAST(doc_id AS VARCHAR)", "cap")}, doc_id
+               ORDER BY {duck_porthash("CAST(doc_id AS VARCHAR)", seed)}, doc_id
              ) AS rn
       FROM documents
-    ) WHERE rn <= 10
-    """,
-)
+    ) WHERE rn <= {cap}
+    """
+
+
+@query("corpus_cap_per_source", oracle=_cap_per_source_oracle(10, "cap"))
 def corpus_cap_per_source_q(spark, sf_dir):
     """Domain balancing: at most 10 docs per source, hash-deterministic."""
     docs = load_table(spark, sf_dir, "documents")
@@ -385,10 +391,9 @@ def corpus_cap_per_source_q(spark, sf_dir):
 def _keep_best_oracle() -> str:
     from dask_obj_spark.queries_text import duck_quality_select
 
-    return (
-        _clusters_ctes()
-        + f"""
-    , q AS (
+    return _clusters_with(
+        [
+            f"""q AS (
       SELECT doc_id, quality FROM ({duck_quality_select()})
     ), lab AS (
       SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
@@ -398,9 +403,9 @@ def _keep_best_oracle() -> str:
              row_number() OVER (PARTITION BY l.cluster_id
                                 ORDER BY q.quality DESC, l.doc_id) AS rn
       FROM lab l JOIN q ON l.doc_id = q.doc_id
-    )
-    SELECT doc_id, cluster_id, quality FROM ranked WHERE rn = 1
-    """
+    )"""
+        ],
+        "SELECT doc_id, cluster_id, quality FROM ranked WHERE rn = 1",
     )
 
 
@@ -440,8 +445,7 @@ def _chunk_ctes(
     """toks → starts → chunks CTE chain replaying `chunk_windows` over
     ``src`` (a table or prior CTE), carrying ``carry`` columns (e.g.
     ", source") through — shared by the chunking oracle and the capstone
-    pipeline oracle so the replay logic exists exactly once.  Emitted
-    WITHOUT a leading WITH so it composes into larger chains."""
+    pipeline oracle so the replay logic exists exactly once."""
     return f"""toks AS (
       SELECT doc_id{carry}, str_split(text, ' ') AS t FROM {src}
     ), starts AS (
@@ -456,14 +460,13 @@ def _chunk_ctes(
 
 
 def _chunk_windows_oracle(chunk_size: int, stride: int) -> str:
-    return (
-        "\n    WITH "
-        + _chunk_ctes(chunk_size, stride)
-        + """
+    return _duck_with(
+        [_chunk_ctes(chunk_size, stride)],
+        """
     SELECT doc_id, chunk_idx, len(chunk) AS n_tokens,
            array_to_string(chunk, ' ') AS chunk_text
     FROM chunks
-    """
+    """,
     )
 
 
@@ -476,16 +479,16 @@ def corpus_chunk_windows_q(spark, sf_dir):
 
 
 def _pair_hist_oracle() -> str:
-    from dask_obj_spark.queries_dedup import _duck_pairs_sql
+    from dask_obj_spark.queries_dedup import _duck_pairs_ctes
 
-    return (
-        _duck_pairs_sql(16, 4, 0.0)
-        + """
+    return _duck_with(
+        [_duck_pairs_ctes(16, 4, 0.0)],
+        """
     SELECT floor(est_jaccard * 10) / 10 AS bucket,
            count(*) AS n_pairs
     FROM pairs
     GROUP BY floor(est_jaccard * 10) / 10
-    """
+    """,
     )
 
 
@@ -574,29 +577,31 @@ def _capstone_semantic_oracle() -> str:
     from dask_obj_spark.queries_dedup import _semantic_cells_ctes
     from dask_obj_spark.operators.similarity import DIM
 
-    return (
-        _semantic_cells_ctes(_CAPSTONE_TAU, _CAPSTONE_CELL_MOD, DIM)
-        + ", kept AS ("
-        + """
+    return _duck_with(
+        [
+            _semantic_cells_ctes(_CAPSTONE_TAU, _CAPSTONE_CELL_MOD, DIM),
+            """kept AS (
       SELECT d.doc_id, d.source, d.text
       FROM documents d
       JOIN cells c ON d.doc_id = c.vid
       LEFT JOIN dropped dr ON c.vid = dr.vid
       WHERE dr.vid IS NULL
-    ), """
-        + _chunk_ctes(_CAPSTONE_CHUNK, _CAPSTONE_STRIDE, src="kept", carry=", source")
-        + f""", cum AS (
+    )""",
+            _chunk_ctes(_CAPSTONE_CHUNK, _CAPSTONE_STRIDE, src="kept", carry=", source"),
+            """cum AS (
       SELECT doc_id, source, chunk_idx, len(chunk) AS n_tokens,
              sum(len(chunk)) OVER (PARTITION BY source ORDER BY doc_id, chunk_idx
                                    ROWS BETWEEN UNBOUNDED PRECEDING
                                    AND CURRENT ROW) AS cum_tokens
       FROM chunks
-    )
+    )""",
+        ],
+        f"""
     SELECT doc_id, chunk_idx, source, n_tokens,
            CAST(floor((cum_tokens - n_tokens) / {_CAPSTONE_BUDGET}) AS BIGINT)
              AS bin_id
     FROM cum
-    """
+    """,
     )
 
 
@@ -678,9 +683,10 @@ def corpus_contrastive_negatives_q(spark, sf_dir):
     return contrastive_negatives(docs, "doc_id", k=2, buckets=8)
 
 
-def _bpe_oracle(rounds: int) -> str:
-    """Generate the EXACT k-round BPE oracle as chained CTE stages —
-    the same windows/gaps-and-islands algorithm, unrolled."""
+def _bpe_ctes(rounds: int) -> list[str]:
+    """The EXACT k-round BPE merge loop as chained CTE stages — the same
+    windows/gaps-and-islands algorithm, unrolled: ``best{r}`` is round
+    r's merged pair, ``sym{r}`` the symbols after it."""
     ctes = [
         f"""sym0 AS (
       SELECT doc_id,
@@ -730,29 +736,34 @@ def _bpe_oracle(rounds: int) -> str:
              row_number() OVER (PARTITION BY doc_id ORDER BY i) AS i, s
       FROM kept{r} WHERE prev_m = 0
     )""")
-    unions = "\n    UNION ALL ".join(
-        f"SELECT {r} AS round, w1, w2, CAST(n AS BIGINT) AS n FROM best{r}"
-        for r in range(1, rounds + 1)
+    return ctes
+
+
+def _bpe_oracle(rounds: int) -> str:
+    """Each round's merged pair."""
+    return _duck_with(
+        _bpe_ctes(rounds),
+        "\n    UNION ALL ".join(
+            f"SELECT {r} AS round, w1, w2, CAST(n AS BIGINT) AS n FROM best{r}"
+            for r in range(1, rounds + 1)
+        ),
     )
-    return "WITH " + ",\n    ".join(ctes) + "\n    " + unions
 
 
 def _bpe_compression_oracle(rounds: int) -> str:
-    """Same unrolled BPE rounds, but the final SELECT reports per-doc
-    compression: token count before vs symbol count after."""
-    full = _bpe_oracle(rounds)
-    # keep the CTE chain, swap the final UNION of best-pairs for the
-    # per-doc before/after counts
-    ctes_part = full.split("\n    SELECT 1 AS round")[0]
-    return (
-        ctes_part
-        + f""",
-    agg0 AS (SELECT doc_id, count(*) AS n_tokens FROM sym0 GROUP BY doc_id),
-    aggk AS (SELECT doc_id, count(*) AS n_syms FROM sym{rounds} GROUP BY doc_id)
+    """Per-doc compression after the same rounds: token count before vs
+    symbol count after."""
+    return _duck_with(
+        _bpe_ctes(rounds)
+        + [
+            "agg0 AS (SELECT doc_id, count(*) AS n_tokens FROM sym0 GROUP BY doc_id)",
+            f"aggk AS (SELECT doc_id, count(*) AS n_syms FROM sym{rounds} GROUP BY doc_id)",
+        ],
+        """
     SELECT agg0.doc_id, agg0.n_tokens, aggk.n_syms,
            agg0.n_tokens - aggk.n_syms AS n_merged
     FROM agg0 JOIN aggk ON agg0.doc_id = aggk.doc_id
-    """
+    """,
     )
 
 
@@ -771,24 +782,11 @@ def corpus_bpe_compression_q(spark, sf_dir):
     return bpe_apply_stats(docs, "doc_id", "text", rounds=3)
 
 
-@query(
-    "corpus_sample_k_per_source",
-    oracle=f"""
-    WITH ranked AS (
-      SELECT doc_id, source,
-             row_number() OVER (
-               PARTITION BY source
-               ORDER BY {duck_porthash('doc_id::VARCHAR', 'groupk')}, doc_id
-             ) AS rk
-      FROM documents
-    )
-    SELECT doc_id, source FROM ranked WHERE rk <= 20
-    """,
-)
+@query("corpus_sample_k_per_source", oracle=_cap_per_source_oracle(20, "groupk"))
 def corpus_sample_k_per_source_q(spark, sf_dir):
     """Exactly-20-docs-per-source deterministic balanced sample."""
     docs = load_table(spark, sf_dir, "documents")
-    return sample_k_per_group(docs, "source", "doc_id", 20).select(
+    return cap_per_facet(docs, "doc_id", "source", 20, seed="groupk").select(
         "doc_id", "source"
     )
 
@@ -1058,14 +1056,17 @@ def _semantic_contamination_oracle(
     from dask_obj_spark.queries_dedup import _semantic_cells_ctes
 
     cos = cosine_sql("a.v", "b.v", dim, DUCK)
-    return (
-        _semantic_cells_ctes(0.35, cell_mod, dim)
-        + f""", pairs AS (
+    return _duck_with(
+        [
+            _semantic_cells_ctes(0.35, cell_mod, dim),
+            f"""pairs AS (
       SELECT a.vid AS vid, b.vid AS eval_vid,
              floor(({cos}) * 1000000.0)::BIGINT AS cos_x1m
       FROM cells a JOIN cells b ON a.cid = b.cid
       WHERE a.vid % {eval_mod} <> {eval_rem} AND b.vid % {eval_mod} = {eval_rem}
-    )
+    )""",
+        ],
+        f"""
     SELECT vid, eval_vid, cos_x1m FROM (
       SELECT vid, eval_vid, cos_x1m,
              row_number() OVER (
@@ -1073,7 +1074,7 @@ def _semantic_contamination_oracle(
              ) AS rn
       FROM pairs WHERE cos_x1m >= {tau_x1m}
     ) WHERE rn = 1
-    """
+    """,
     )
 
 
@@ -1616,13 +1617,14 @@ def corpus_kfold_exact_q(spark, sf_dir):
 
 def _leakage_split_oracle() -> str:
     # the hash_split cutoffs for {"train": .8, "val": .1, "test": .1}
-    return (
-        _clusters_ctes()
-        + """
-    , assigned AS (
+    return _clusters_with(
+        [
+            """assigned AS (
       SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
       FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
-    )
+    )"""
+        ],
+        """
     SELECT doc_id, cluster_id,
            CASE
              WHEN ('0x' || substr(md5(cluster_id::VARCHAR || '#split'), 1, 15))::BIGINT
@@ -1632,7 +1634,7 @@ def _leakage_split_oracle() -> str:
              ELSE 'test'
            END AS split
     FROM assigned
-    """
+    """,
     )
 
 

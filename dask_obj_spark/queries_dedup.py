@@ -32,7 +32,7 @@ from dask_obj_spark.operators.dedup import (
 from dask_obj_spark.operators.similarity import DIM as _SIM_DIM
 from dask_obj_spark.pinning import pin
 from dask_obj_spark.queries import query
-from dask_obj_spark.queries_similarity import _duck_ivf_cells
+from dask_obj_spark.queries_similarity import _duck_base, _duck_ivf_cells, _duck_with
 from dask_obj_spark.sources import load_table
 
 
@@ -42,8 +42,7 @@ def _duck_sig_cte(num_hashes: int, shingle_n: int) -> str:
         f"list_min(list_transform(sh, s -> {duck_porthash('s', str(i))})) AS m{i}"
         for i in range(num_hashes)
     )
-    return f"""
-    WITH shingled AS (
+    return f"""shingled AS (
       SELECT doc_id, {sh} AS sh FROM documents
     ), sig AS (
       SELECT doc_id, {mins} FROM shingled
@@ -77,7 +76,7 @@ def dedup_exact_groups_q(spark, sf_dir):
 
 @query(
     "dedup_minhash_bands",
-    oracle=_duck_sig_cte(16, 4) + _duck_bands_select(16, 4),
+    oracle=_duck_with([_duck_sig_cte(16, 4)], _duck_bands_select(16, 4)),
 )
 def dedup_minhash_bands_q(spark, sf_dir):
     """MinHash LSH banding table — the full signature pipeline is
@@ -87,12 +86,12 @@ def dedup_minhash_bands_q(spark, sf_dir):
     return lsh_bands(sig, 4, 4)
 
 
-def _duck_pairs_sql(
+def _duck_pairs_ctes(
     num_hashes: int, bands: int, threshold: float, shingle_n: int = 4
 ) -> str:
-    """sig CTE + bands + cand + the est_jaccard select — the complete
-    minhash_candidate_pairs() computation as DuckDB SQL (shared with the
-    connected-components oracle in queries_corpus.py).  ``shingle_n``
+    """sig CTE + bands + cand + ``pairs(id1, id2, est_jaccard)`` — the
+    complete minhash_candidate_pairs() computation as DuckDB SQL (shared
+    with the connected-components oracle in queries_corpus.py).  ``shingle_n``
     is an explicit parameter: it was previously conflated with ``bands``
     (correct only while both happened to equal 4)."""
     est = (
@@ -104,8 +103,7 @@ def _duck_pairs_sql(
         _duck_sig_cte(num_hashes, shingle_n)
         + ", bands AS ("
         + _duck_bands_select(num_hashes, bands)
-        + f"""
-    ), cand AS (
+        + f"""), cand AS (
       SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
       FROM bands a JOIN bands b
         ON a.band_id = b.band_id AND a.band_hash = b.band_hash
@@ -121,7 +119,9 @@ def _duck_pairs_sql(
 
 @query(
     "dedup_minhash_pairs",
-    oracle=_duck_pairs_sql(16, 4, 0.5) + "\n    SELECT id1, id2, est_jaccard FROM pairs\n",
+    oracle=_duck_with(
+        [_duck_pairs_ctes(16, 4, 0.5)], "SELECT id1, id2, est_jaccard FROM pairs"
+    ),
 )
 def dedup_minhash_pairs_q(spark, sf_dir):
     """MinHash-LSH near-dup candidate pairs (BASELINE B6 second half)."""
@@ -151,44 +151,36 @@ def _duck_shingle_sizes(n: int, max_freq: int | None = None) -> str:
     )"""
 
 
-@query(
-    "dedup_ngram_jaccard",
-    oracle="WITH "
-    + _duck_shingle_sizes(4)
-    + """, inter AS (
+# ``inter(id1, id2, n_common)``: the shingles each doc pair id1 < id2 shares
+_DUCK_INTER = """inter AS (
       SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_common
       FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
       GROUP BY a.doc_id, b.doc_id
-    )
+    )"""
+
+
+def _ngram_jaccard_oracle(max_freq: int | None) -> str:
+    """Exact 4-shingle Jaccard >= 0.6 pairs (`ngram_jaccard_pairs`)."""
+    return _duck_with(
+        [_duck_shingle_sizes(4, max_freq), _DUCK_INTER],
+        """
     SELECT id1, id2,
            round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) AS jaccard
     FROM inter JOIN sizes sa ON id1 = sa.doc_id
                JOIN sizes sb ON id2 = sb.doc_id
     WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) >= 0.6
     """,
-)
+    )
+
+
+@query("dedup_ngram_jaccard", oracle=_ngram_jaccard_oracle(None))
 def dedup_ngram_jaccard_q(spark, sf_dir):
     """Exact n-gram Jaccard pairs ≥ 0.6 (verification-grade near-dup)."""
     docs = load_table(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(docs, "doc_id", "text", 4, 0.6, max_shingle_freq=None)
 
 
-@query(
-    "dedup_ngram_jaccard_capped",
-    oracle="WITH "
-    + _duck_shingle_sizes(4, max_freq=2)
-    + """, inter AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT id1, id2,
-           round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) AS jaccard
-    FROM inter JOIN sizes sa ON id1 = sa.doc_id
-               JOIN sizes sb ON id2 = sb.doc_id
-    WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) >= 0.6
-    """,
-)
+@query("dedup_ngram_jaccard_capped", oracle=_ngram_jaccard_oracle(2))
 def dedup_ngram_jaccard_capped_q(spark, sf_dir):
     """Jaccard with the `max_shingle_freq` skew guard ON (stop-shingles
     appearing in > 2 docs dropped before the inverted-index join) — the
@@ -255,12 +247,9 @@ def dedup_simhash_pairs_q(spark, sf_dir):
 
 @query(
     "dedup_embedding_cosine",
-    oracle="""
-    WITH base AS (
-      SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-    ), probes AS (
-      SELECT vid AS pid, v AS pv FROM base WHERE vid % 50 = 0
-    )
+    oracle=_duck_with(
+        [_duck_base(50)],
+        """
     SELECT pid AS id1, vid AS id2,
            round(list_dot_product(pv, v) /
                  (sqrt(list_dot_product(pv, pv)) * sqrt(list_dot_product(v, v))), 6)
@@ -270,6 +259,7 @@ def dedup_simhash_pairs_q(spark, sf_dir):
                 (sqrt(list_dot_product(pv, pv)) * sqrt(list_dot_product(v, v))), 6)
           >= 0.2
     """,
+    ),
 )
 def dedup_embedding_cosine_q(spark, sf_dir):
     """Embedding-cosine near-dup: probe set × corpus with broadcast join."""
@@ -278,15 +268,12 @@ def dedup_embedding_cosine_q(spark, sf_dir):
 
 
 def _semantic_cells_ctes(tau: float, cell_mod: int, dim: int) -> str:
-    """The WITH-chain (base → IVF cells → dropped) replaying
-    `semantic_dedup`'s deterministic cell index — shared by the dedup
-    oracle and the capstone pipeline oracle in queries_corpus.py so the
-    replay logic exists exactly once."""
+    """The CTEs (base → IVF cells → dropped) replaying `semantic_dedup`'s
+    deterministic cell index — shared by the dedup oracle and the
+    capstone pipeline oracle in queries_corpus.py so the replay logic
+    exists exactly once."""
     cos_pair = cosine_sql("a.v", "b.v", dim, DUCK)
-    return f"""
-    WITH base AS (
-      SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-    ), {_duck_ivf_cells(cell_mod, dim)}, dropped AS (
+    return f"""{_duck_base()}, {_duck_ivf_cells(cell_mod, dim)}, dropped AS (
       SELECT DISTINCT a.vid
       FROM cells a JOIN cells b ON a.cid = b.cid AND b.vid < a.vid
       WHERE round({cos_pair}, 6) >= {tau}
@@ -294,12 +281,12 @@ def _semantic_cells_ctes(tau: float, cell_mod: int, dim: int) -> str:
 
 
 def _semantic_dedup_oracle(tau: float, cell_mod: int, dim: int) -> str:
-    return (
-        _semantic_cells_ctes(tau, cell_mod, dim)
-        + """
+    return _duck_with(
+        [_semantic_cells_ctes(tau, cell_mod, dim)],
+        """
     SELECT c.vid, c.cid AS cell, d.vid IS NULL AS keep
     FROM cells c LEFT JOIN dropped d ON c.vid = d.vid
-    """
+    """,
     )
 
 
@@ -376,8 +363,9 @@ def dedup_prefix_jaccard_q(spark, sf_dir):
 
 @query(
     "dedup_sorted_neighborhood",
-    oracle="""
-    WITH keyed AS (
+    oracle=_duck_with(
+        [
+            """keyed AS (
       SELECT doc_id,
              substr(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
                     1, """ + str(_SN_KEY_LEN) + """) AS sn_key
@@ -397,21 +385,24 @@ def dedup_prefix_jaccard_q(spark, sf_dir):
     ), cand AS (
       SELECT DISTINCT least(doc_id, nbr) AS id1, greatest(doc_id, nbr) AS id2
       FROM cand0
-    ), """
-    + _duck_shingle_sizes(4)
-    + """, inter AS (
+    )""",
+            _duck_shingle_sizes(4),
+            """inter AS (
       SELECT c.id1, c.id2, count(*) AS n_common
       FROM cand c
         JOIN sh a ON a.doc_id = c.id1
         JOIN sh b ON b.doc_id = c.id2 AND b.shingle = a.shingle
       GROUP BY c.id1, c.id2
-    )
+    )""",
+        ],
+        """
     SELECT id1, id2,
            round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) AS jaccard
     FROM inter JOIN sizes sa ON id1 = sa.doc_id
                JOIN sizes sb ON id2 = sb.doc_id
     WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) >= 0.2
     """,
+    ),
 )
 def dedup_sorted_neighborhood_q(spark, sf_dir):
     """Sorted-neighborhood candidate pairs (block on 4-char key prefix,
@@ -422,11 +413,11 @@ def dedup_sorted_neighborhood_q(spark, sf_dir):
 
 @query(
     "dedup_minhash_est_error",
-    oracle=_duck_pairs_sql(16, 4, 0.5)
-    + """
-    , """
-    + _duck_shingle_sizes(4)
-    + """, inter AS (
+    oracle=_duck_with(
+        [
+            _duck_pairs_ctes(16, 4, 0.5),
+            _duck_shingle_sizes(4),
+            """inter AS (
       SELECT p.id1, p.id2, count(*) AS n_common
       FROM pairs p
         JOIN sh a ON a.doc_id = p.id1
@@ -440,11 +431,14 @@ def dedup_sorted_neighborhood_q(spark, sf_dir):
         LEFT JOIN inter i ON i.id1 = p.id1 AND i.id2 = p.id2
         JOIN sizes sa ON p.id1 = sa.doc_id
         JOIN sizes sb ON p.id2 = sb.doc_id
-    )
+    )""",
+        ],
+        """
     SELECT id1, id2, est_jaccard, exact_jaccard,
            round(abs(est_jaccard - exact_jaccard), 6) AS abs_err
     FROM ex
     """,
+    ),
 )
 def dedup_minhash_est_error_q(spark, sf_dir):
     """Signature-estimate vs exact Jaccard on every LSH candidate pair
@@ -455,19 +449,23 @@ def dedup_minhash_est_error_q(spark, sf_dir):
 
 @query(
     "dedup_containment_pairs",
-    oracle="WITH "
-    + _duck_shingle_sizes(4)
-    + """, inter AS (
+    oracle=_duck_with(
+        [
+            _duck_shingle_sizes(4),
+            """inter AS (
       SELECT a.doc_id AS id_from, b.doc_id AS id_to, count(*) AS n_common
       FROM sh a JOIN sh b
         ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
       GROUP BY a.doc_id, b.doc_id
-    )
+    )""",
+        ],
+        """
     SELECT id_from, id_to,
            round(n_common / sa.n_sh, 6) AS containment
     FROM inter JOIN sizes sa ON id_from = sa.doc_id
     WHERE round(n_common / sa.n_sh, 6) >= 0.5
     """,
+    ),
 )
 def dedup_containment_pairs_q(spark, sf_dir):
     """Directed shingle-containment pairs >= 0.5 (doc-inside-doc
@@ -478,15 +476,12 @@ def dedup_containment_pairs_q(spark, sf_dir):
 
 @query(
     "dedup_lsh_precision_recall",
-    oracle=_duck_pairs_sql(16, 4, 0.0)
-    + """
-    , """
-    + _duck_shingle_sizes(4)
-    + """, inter AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ), truth AS (
+    oracle=_duck_with(
+        [
+            _duck_pairs_ctes(16, 4, 0.0),
+            _duck_shingle_sizes(4),
+            _DUCK_INTER,
+            """truth AS (
       SELECT id1, id2
       FROM inter JOIN sizes sa ON id1 = sa.doc_id
                  JOIN sizes sb ON id2 = sb.doc_id
@@ -496,7 +491,9 @@ def dedup_containment_pairs_q(spark, sf_dir):
     ), hits AS (
       SELECT count(*) AS n FROM cand_set c
       WHERE EXISTS (SELECT 1 FROM truth t WHERE t.id1 = c.id1 AND t.id2 = c.id2)
-    )
+    )""",
+        ],
+        """
     SELECT (SELECT count(*) FROM cand_set)::BIGINT AS n_candidates,
            (SELECT count(*) FROM truth)::BIGINT AS n_truth,
            (SELECT n FROM hits)::BIGINT AS n_hits,
@@ -505,6 +502,7 @@ def dedup_containment_pairs_q(spark, sf_dir):
            round((SELECT n FROM hits) * 1.0
                  / greatest((SELECT count(*) FROM truth), 1), 6) AS recall
     """,
+    ),
 )
 def dedup_lsh_precision_recall_q(spark, sf_dir):
     """Set-level quality of the LSH banding stage: precision and recall
@@ -605,9 +603,10 @@ def er_canonical_entities_q(spark, sf_dir):
 
 @query(
     "dedup_corpus_report",
-    oracle=_duck_pairs_sql(16, 4, 0.5)
-    + """
-    , basic AS (
+    oracle=_duck_with(
+        [
+            _duck_pairs_ctes(16, 4, 0.5),
+            """basic AS (
       SELECT count(*) AS n_docs,
              count(DISTINCT md5(text)) AS n_unique_texts
       FROM documents
@@ -617,7 +616,9 @@ def er_canonical_entities_q(spark, sf_dir):
       SELECT count(DISTINCT id) AS n_docs_in_near_pairs FROM (
         SELECT id1 AS id FROM pairs UNION SELECT id2 FROM pairs
       )
-    )
+    )""",
+        ],
+        """
     SELECT CAST(b.n_docs AS BIGINT) AS n_docs,
            CAST(b.n_unique_texts AS BIGINT) AS n_unique_texts,
            CAST(b.n_docs - b.n_unique_texts AS BIGINT) AS n_exact_extra,
@@ -626,6 +627,7 @@ def er_canonical_entities_q(spark, sf_dir):
            CAST(i.n_docs_in_near_pairs AS BIGINT) AS n_docs_in_near_pairs
     FROM basic b CROSS JOIN pairstats p CROSS JOIN involved i
     """,
+    ),
 )
 def dedup_corpus_report_q(spark, sf_dir):
     """One-row dedup health report: corpus size, exact-unique count and

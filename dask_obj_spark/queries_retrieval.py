@@ -30,7 +30,12 @@ from dask_obj_spark.operators.similarity import (
 )
 from dask_obj_spark.operators.text import bm25_topk
 from dask_obj_spark.queries import query
-from dask_obj_spark.queries_similarity import _duck_base, _duck_ivf_cells
+from dask_obj_spark.queries_similarity import (
+    _duck_base,
+    _duck_ivf_cells,
+    _duck_ranked,
+    _duck_with,
+)
 from dask_obj_spark.sources import load_table
 
 
@@ -42,8 +47,7 @@ _RRF_TOPN = 20  # depth of each leg's list entering the fusion
 def _duck_rrf_oracle() -> str:
     terms = ", ".join(f"'{t}'" for t in _RRF_TERMS)
     cos = cosine_sql("pv", "v", DIM, DUCK)
-    return f"""
-    WITH dl AS (
+    lex = f"""dl AS (
       SELECT doc_id, len({duck_ws_tokens("text")}) AS dl
       FROM documents
     ), stats AS (
@@ -75,19 +79,21 @@ def _duck_rrf_oracle() -> str:
                row_number() OVER (ORDER BY score DESC, doc_id) AS lex_rank
         FROM lex_scored
       ) WHERE lex_rank <= {_RRF_TOPN}
-    ), cbase AS (
-      SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-    ), probe AS (
-      SELECT v AS pv FROM cbase WHERE vid = 0
+    )"""
+    sem = f"""probe AS (
+      SELECT v AS pv FROM base WHERE vid = 0
     ), sem_scored AS (
-      SELECT vid, {cos} AS cos_raw FROM cbase, probe WHERE vid <> 0
+      SELECT vid, {cos} AS cos_raw FROM base, probe WHERE vid <> 0
     ), sem AS (
       SELECT vid, sem_rank FROM (
         SELECT vid,
                row_number() OVER (ORDER BY cos_raw DESC, vid) AS sem_rank
         FROM sem_scored
       ) WHERE sem_rank <= {_RRF_TOPN}
-    )
+    )"""
+    return _duck_with(
+        [lex, _duck_base(), sem],
+        """
     SELECT coalesce(l.doc_id, s.vid) AS doc_id,
            coalesce(l.lex_rank, -1)::BIGINT AS lex_rank,
            coalesce(s.sem_rank, -1)::BIGINT AS sem_rank,
@@ -95,7 +101,8 @@ def _duck_rrf_oracle() -> str:
                  + coalesce(1.0 / (60 + s.sem_rank), 0), 6) AS rrf
     FROM lex l FULL JOIN sem s ON l.doc_id = s.vid
     ORDER BY rrf DESC, doc_id LIMIT 10
-    """
+    """,
+    )
 
 
 @query("retrieval_rrf_hybrid", oracle=_duck_rrf_oracle())
@@ -123,27 +130,14 @@ def retrieval_rrf_hybrid_q(spark, sf_dir):
 
 
 def _duck_ivf_ndcg_oracle() -> str:
-    cos = cosine_sql("pv", "v", DIM, DUCK)
-    return (
-        _duck_base(50)
-        + f"""
-    , t_scored AS (
-      SELECT pid AS id1, vid AS id2, {cos} AS cos_raw
-      FROM base JOIN probes ON pid <> vid
-    ), t_ranked AS (
-      SELECT id1, id2,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM t_scored
-    ), truth AS (
-      SELECT id1, id2, rank FROM t_ranked WHERE rank <= 10
-    ), {_duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50)}, a_scored AS (
-      SELECT pid AS id1, vid AS id2, {cos} AS cos_raw
-      FROM cand
-    ), a_ranked AS (
-      SELECT id1, id2,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM a_scored
-    ), approx AS (
+    return _duck_with(
+        [
+            _duck_base(50),
+            _duck_ranked(prefix="t_"),
+            "truth AS (SELECT id1, id2, rank FROM t_ranked WHERE rank <= 10)",
+            _duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50),
+            _duck_ranked("cand", "a_"),
+            """approx AS (
       SELECT id1, id2, rank FROM a_ranked WHERE rank <= 10
     ), idcg AS (
       SELECT id1, sum(1.0 / log2(rank + 1.0)) AS idcg
@@ -152,10 +146,12 @@ def _duck_ivf_ndcg_oracle() -> str:
       SELECT a.id1, sum(1.0 / log2(a.rank + 1.0)) AS dcg
       FROM approx a JOIN truth t ON a.id1 = t.id1 AND a.id2 = t.id2
       GROUP BY a.id1
-    )
+    )""",
+        ],
+        """
     SELECT i.id1 AS probe_id, round(coalesce(d.dcg, 0) / i.idcg, 6) AS ndcg
     FROM idcg i LEFT JOIN dcg d ON i.id1 = d.id1
-    """
+    """,
     )
 
 
@@ -178,7 +174,7 @@ def _duck_mmr_oracle(probe_mod: int, cand_k: int, picks: int, lam: float) -> str
     cos = cosine_sql("pv", "v", DIM, DUCK)
     csim = cosine_sql("a.v", "b.v", DIM, DUCK)
     ctes = [
-        _duck_base(probe_mod).replace("WITH ", "").strip(),
+        _duck_base(probe_mod),
         f"""scored AS MATERIALIZED (
       SELECT pid, vid, v, {cos} AS rel
       FROM base JOIN probes ON pid <> vid
@@ -222,13 +218,12 @@ def _duck_mmr_oracle(probe_mod: int, cand_k: int, picks: int, lam: float) -> str
     ), sel{r} AS MATERIALIZED (
       SELECT * FROM sel{r-1} UNION ALL SELECT * FROM pick{r}
     )""")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
+    return _duck_with(
+        ctes,
+        f"""
     SELECT pid AS id1, cid AS id2, pick_order, round(score, 6) AS mmr_score
     FROM sel{picks}
-    """
+    """,
     )
 
 
@@ -270,8 +265,7 @@ def sim_mmr_topk_q(spark, sf_dir):
 def _duck_nb_cte(tokens: int, sub: int) -> str:
     """``nb`` CTE: per-token-normalized flattened vectors, the
     `normalize_token_array` elements in DuckDB text."""
-    return f"""
-    nb AS (
+    return f"""nb AS (
       SELECT vid, [{", ".join(_token_norm_elems("v", tokens, sub, DUCK))}] AS nv
       FROM base
     )"""
@@ -284,12 +278,11 @@ def _duck_maxsim_expr(a: str, b: str, tokens: int, sub: int) -> str:
 def _duck_maxsim_brute_oracle(probe_mod: int, k: int) -> str:
     sub = DIM // MAXSIM_TOKENS
     ms = _duck_maxsim_expr("pnv", "nv", MAXSIM_TOKENS, sub)
-    return (
-        _duck_base(probe_mod)
-        + ", "
-        + _duck_nb_cte(MAXSIM_TOKENS, sub)
-        + f"""
-    , nprobes AS (
+    return _duck_with(
+        [
+            _duck_base(probe_mod),
+            _duck_nb_cte(MAXSIM_TOKENS, sub),
+            f"""nprobes AS (
       SELECT vid AS pid, nv AS pnv FROM nb WHERE vid % {probe_mod} = 0
     ), ms_scored AS (
       SELECT pid AS id1, b.vid AS id2, {ms} AS ms
@@ -298,10 +291,12 @@ def _duck_maxsim_brute_oracle(probe_mod: int, k: int) -> str:
       SELECT id1, id2, ms,
              row_number() OVER (PARTITION BY id1 ORDER BY ms DESC, id2) AS rank
       FROM ms_scored
-    )
+    )""",
+        ],
+        f"""
     SELECT id1, id2, CAST(floor(ms * 1000000) AS BIGINT) AS maxsim_x1m, rank
     FROM ms_ranked WHERE rank <= {k}
-    """
+    """,
     )
 
 
@@ -322,25 +317,15 @@ MAXSIM_CAND = 20  # first-stage depth entering the MaxSim re-rank
 
 def _duck_maxsim_rerank_oracle() -> str:
     sub = DIM // MAXSIM_TOKENS
-    cos = cosine_sql("pv", "v", DIM, DUCK)
     ms = _duck_maxsim_expr("p.nv", "d.nv", MAXSIM_TOKENS, sub)
-    return (
-        _duck_base(50)
-        + f"""
-    , {_duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50)}, a_scored AS (
-      SELECT pid AS id1, vid AS id2, {cos} AS cos_raw
-      FROM cand
-    ), a_ranked AS (
-      SELECT id1, id2,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2)
-               AS rank
-      FROM a_scored
-    ), shortlist AS (
-      SELECT id1, id2 FROM a_ranked WHERE rank <= {MAXSIM_CAND}
-    ), """
-        + _duck_nb_cte(MAXSIM_TOKENS, sub).strip()
-        + f"""
-    , rescored AS (
+    return _duck_with(
+        [
+            _duck_base(50),
+            _duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50),
+            _duck_ranked("cand", "a_"),
+            f"shortlist AS (SELECT id1, id2 FROM a_ranked WHERE rank <= {MAXSIM_CAND})",
+            _duck_nb_cte(MAXSIM_TOKENS, sub),
+            f"""rescored AS (
       SELECT s.id1, s.id2, {ms} AS ms
       FROM shortlist s
       JOIN nb p ON p.vid = s.id1
@@ -349,10 +334,12 @@ def _duck_maxsim_rerank_oracle() -> str:
       SELECT id1, id2, ms,
              row_number() OVER (PARTITION BY id1 ORDER BY ms DESC, id2) AS rank
       FROM rescored
-    )
+    )""",
+        ],
+        f"""
     SELECT id1, id2, CAST(floor(ms * 1000000) AS BIGINT) AS maxsim_x1m, rank
     FROM rr WHERE rank <= {MAXSIM_K}
-    """
+    """,
     )
 
 

@@ -70,6 +70,14 @@ from dask_obj_spark.queries import query
 from dask_obj_spark.sources import load_table
 
 
+def _duck_with(ctes: list[str], select: str, recursive: bool = False) -> str:
+    """One oracle statement: the bare ``name AS (…)`` CTE entries of
+    ``ctes`` (what every ``_duck_*`` fragment helper returns) joined
+    into one WITH list, then ``select``."""
+    head = "WITH RECURSIVE " if recursive else "WITH "
+    return head + ",\n    ".join(ctes) + "\n    " + select.strip() + "\n"
+
+
 def _kmeans_quantized_oracle(
     k: int = 8, iters: int = 3, scale: int = KMQ_SCALE, dim: int = DIM
 ) -> str:
@@ -126,13 +134,7 @@ def _kmeans_quantized_oracle(
     for it in range(1, iters + 1):
         ctes.append(update_cte(f"c{it}", f"c{it - 1}", f"a{it - 1}"))
         ctes.append(assign_cte(f"a{it}", f"c{it}"))
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT vid, CAST(cell AS BIGINT) AS cell FROM a{iters}
-    """
-    )
+    return _duck_with(ctes, f"SELECT vid, CAST(cell AS BIGINT) AS cell FROM a{iters}")
 
 
 @query("sim_kmeans_cells_exact", oracle=_kmeans_quantized_oracle())
@@ -150,11 +152,16 @@ def sim_kmeans_cells_exact_q(spark, sf_dir):
     return assigned.select("vid", F.col("cell").cast("bigint").alias("cell"))
 
 
-def _duck_base(probe_mod: int) -> str:
-    return f"""
-    WITH base AS (
+def _duck_base(probe_mod: int | None = None, materialized: bool = False) -> str:
+    """``base(vid, v)``: every embedding as DOUBLE[]; with ``probe_mod``,
+    also ``probes(pid, pv)``, the vectors with ``vid % probe_mod = 0``."""
+    mat = " MATERIALIZED" if materialized else ""
+    base = f"""base AS{mat} (
       SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-    ), probes AS (
+    )"""
+    if probe_mod is None:
+        return base
+    return base + f""", probes AS (
       SELECT vid AS pid, v AS pv FROM base WHERE vid % {probe_mod} = 0
     )"""
 
@@ -162,14 +169,14 @@ def _duck_base(probe_mod: int) -> str:
 def _duck_ivf_cells(
     mod: int, dim: int, probe_mod: int | None = None, materialized: bool = False
 ) -> str:
-    """The IVF cell-assignment CTE chain, continuing a WITH that defines
-    ``base(vid, v)``: ``cents`` (the vectors with ``vid % mod = 1`` are
-    the centroids), ``assign``/``ranked_assign`` (each vector's
-    centroids by cosine, ties to the lower id) and ``cells(vid, v, cid)``
-    (its nearest one).  With ``probe_mod``, also ``pcells(pid, pv,
-    cid)`` — the NPROBE nearest cells of every probe — and ``cand(pid,
-    pv, vid, v)``, the vectors sharing a probed cell.  ``materialized``
-    pins ``cells`` and ``pcells`` for oracles that reuse them."""
+    """The IVF cell-assignment CTEs over ``base(vid, v)``: ``cents``
+    (the vectors with ``vid % mod = 1`` are the centroids),
+    ``assign``/``ranked_assign`` (each vector's centroids by cosine, ties
+    to the lower id) and ``cells(vid, v, cid)`` (its nearest one).  With
+    ``probe_mod``, also ``pcells(pid, pv, cid)`` — the NPROBE nearest
+    cells of every probe — and ``cand(pid, pv, vid, v)``, the vectors
+    sharing a probed cell.  ``materialized`` pins ``cells`` and
+    ``pcells`` for oracles that reuse them."""
     mat = " MATERIALIZED" if materialized else ""
     ctes = f"""cents AS (
       SELECT vid AS cid, v AS cv FROM base WHERE vid % {mod} = 1
@@ -195,30 +202,11 @@ def _duck_ivf_cells(
     )"""
 
 
-def _duck_topk_ctes() -> str:
-    cos = cosine_sql("pv", "v", DIM, DUCK)
-    return f"""
-    , scored AS (
-      SELECT pid AS id1, vid AS id2, {cos} AS cos_raw
-      FROM base JOIN probes ON pid <> vid
-    ), ranked AS (
-      SELECT id1, id2, cos_raw,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM scored
-    )"""
-
-
-def _duck_topk_select(k: int) -> str:
-    return (
-        _duck_topk_ctes()
-        + f"""
-    SELECT id1, id2, round(cos_raw, 6) AS cosine, rank
-    FROM ranked WHERE rank <= {k}
-    """
-    )
-
-
-def _duck_bits_cte() -> str:
+def _duck_lsh_cand(probe_mod: int) -> str:
+    """Hyperplane-LSH candidates over ``base(vid, v)``: ``bits`` and
+    ``keyed`` put each vector in two buckets (its low and high NBITS/2
+    sign bits), and ``cand(pid, pv, vid, v)`` pairs each ``vid %
+    probe_mod = 0`` probe with every other vector sharing a bucket."""
     half = NBITS // 2
     bit_exprs = []
     for bi, plane in enumerate(HYPERPLANES):
@@ -226,19 +214,69 @@ def _duck_bits_cte() -> str:
         bit_exprs.append(f"CASE WHEN {d} >= 0 THEN 1 ELSE 0 END AS b{bi}")
     lo = " + ".join(f"b{i} * {2 ** (half - 1 - i)}" for i in range(half))
     hi = " + ".join(f"b{half + i} * {2 ** (half - 1 - i)}" for i in range(half))
-    return f"""
-    , bits AS (
+    return f"""bits AS (
       SELECT vid, v, {", ".join(bit_exprs)} FROM base
     ), keyed AS (
       SELECT vid, v, 'l' || ({lo}) AS bucket FROM bits
       UNION ALL
       SELECT vid, v, 'h' || ({hi}) AS bucket FROM bits
+    ), cand AS (
+      SELECT DISTINCT p.pid, p.pv, c.vid, c.v
+      FROM keyed c JOIN (
+        SELECT k.vid AS pid, k.v AS pv, k.bucket FROM keyed k
+        WHERE k.vid % {probe_mod} = 0
+      ) p ON c.bucket = p.bucket AND p.pid <> c.vid
+    )"""
+
+
+def _duck_ranked(src: str = "base JOIN probes ON pid <> vid", prefix: str = "") -> str:
+    """``{prefix}scored(id1, id2, cos_raw)``, the raw cosine of each
+    ``(pid, pv, vid, v)`` row of ``src`` (by default every probe against
+    every other vector), and ``{prefix}ranked``, which adds each probe's
+    ``rank`` by cosine, ties to the lower id2."""
+    return f"""{prefix}scored AS (
+      SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
+      FROM {src}
+    ), {prefix}ranked AS (
+      SELECT id1, id2, cos_raw,
+             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
+      FROM {prefix}scored
+    )"""
+
+
+def _duck_topk_select(k: int) -> str:
+    """The top-k tail over ``ranked``: rounded cosine and rank."""
+    return f"""
+    SELECT id1, id2, round(cos_raw, 6) AS cosine, rank
+    FROM ranked WHERE rank <= {k}
+    """
+
+
+def _duck_knn_edges(ranked: str, k: int) -> str:
+    """The undirected graph of the top ``k`` of a ranked relation:
+    ``knn(u, v)`` holds each edge once with u < v, ``ed(u, v)`` both
+    directions."""
+    return f"""knn AS MATERIALIZED (
+      SELECT DISTINCT least(id1, id2) AS u, greatest(id1, id2) AS v
+      FROM {ranked} WHERE rank <= {k}
+    ), ed AS MATERIALIZED (
+      SELECT u, v FROM knn UNION ALL SELECT v, u FROM knn
+    )"""
+
+
+def _duck_recall_hits(name: str, approx: str) -> str:
+    """``{name}(id1, hits)``: per probe of ``truth(id1, id2)``, how many
+    of its pairs ``approx`` also holds (0 when none)."""
+    return f"""{name} AS (
+      SELECT t.id1, count(a.id2) AS hits
+      FROM truth t LEFT JOIN {approx} a ON t.id1 = a.id1 AND t.id2 = a.id2
+      GROUP BY t.id1
     )"""
 
 
 @query(
     "sim_cosine_topk_brute",
-    oracle=_duck_base(50) + _duck_topk_select(10),
+    oracle=_duck_with([_duck_base(50), _duck_ranked()], _duck_topk_select(10)),
 )
 def sim_cosine_topk_brute_q(spark, sf_dir):
     """Exact cosine top-10 neighbors for 1-in-50 probe vectors
@@ -249,26 +287,9 @@ def sim_cosine_topk_brute_q(spark, sf_dir):
 
 @query(
     "sim_cosine_topk_lsh",
-    oracle=_duck_base(50)
-    + _duck_bits_cte()
-    + """
-    , cand AS (
-      SELECT DISTINCT p.pid, p.pv, c.vid, c.v
-      FROM keyed c JOIN (
-        SELECT k.vid AS pid, k.v AS pv, k.bucket FROM keyed k WHERE k.vid % 50 = 0
-      ) p ON c.bucket = p.bucket AND p.pid <> c.vid
-    ), scored AS (
-      SELECT pid AS id1, vid AS id2, """
-    + cosine_sql("pv", "v", DIM, DUCK)
-    + """ AS cos_raw FROM cand
-    ), ranked AS (
-      SELECT id1, id2, cos_raw,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM scored
-    )
-    SELECT id1, id2, round(cos_raw, 6) AS cosine, rank
-    FROM ranked WHERE rank <= 10
-    """,
+    oracle=_duck_with(
+        [_duck_base(50), _duck_lsh_cand(50), _duck_ranked("cand")], _duck_topk_select(10)
+    ),
 )
 def sim_cosine_topk_lsh_q(spark, sf_dir):
     """Hyperplane-LSH ANN top-10 — the 100 TB scale path, oracle-checked
@@ -298,19 +319,14 @@ def sim_cosine_topk_numpy_q(spark, sf_dir):
 
 @query(
     "sim_cosine_topk_ivf",
-    oracle=_duck_base(50)
-    + f"""
-    , {_duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50)}, scored AS (
-      SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
-      FROM cand
-    ), rank2 AS (
-      SELECT id1, id2, cos_raw,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM scored
-    )
-    SELECT id1, id2, round(cos_raw, 6) AS cosine, rank
-    FROM rank2 WHERE rank <= 10
-    """,
+    oracle=_duck_with(
+        [
+            _duck_base(50),
+            _duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50),
+            _duck_ranked("cand"),
+        ],
+        _duck_topk_select(10),
+    ),
 )
 def sim_cosine_topk_ivf_q(spark, sf_dir):
     """IVF ANN top-10 (deterministic coarse centroids, nprobe=2) — the
@@ -319,30 +335,26 @@ def sim_cosine_topk_ivf_q(spark, sf_dir):
     return cosine_topk_ivf(emb, "vec_id", "embedding", probe_mod=50, k=10)
 
 
-def _duck_ivf_knn_ctes(probe_mod: int, k: int) -> str:
-    """IVF candidate CTE chain ending in rank2 — the oracle replay of
-    `knn_graph_ann` (deterministic centroids, nprobe cells, exact
-    re-rank).  Starts after a `base` CTE; caller appends the SELECT."""
-    return f"""
-    , {_duck_ivf_cells(CENTROID_MOD, DIM, probe_mod, materialized=True)}, scored AS (
-      SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
-      FROM cand
-    ), rank2 AS (
-      SELECT id1, id2, cos_raw,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM scored
-      QUALIFY rank <= {k}
-    )"""
+def _duck_ivf_knn_ctes(probe_mod: int) -> list[str]:
+    """The oracle replay of `knn_graph_ann`'s candidates: ``ranked``
+    over the IVF cells (deterministic centroids, nprobe cells, exact
+    re-rank) of every ``vid % probe_mod = 0`` probe."""
+    return [
+        _duck_base(probe_mod),
+        _duck_ivf_cells(CENTROID_MOD, DIM, probe_mod, materialized=True),
+        _duck_ranked("cand"),
+    ]
 
 
 @query(
     "graph_knn_ann_edges",
-    oracle=_duck_base(5)
-    + _duck_ivf_knn_ctes(5, 10)
-    + """
+    oracle=_duck_with(
+        _duck_ivf_knn_ctes(5),
+        """
     SELECT id1, id2, CAST(floor(cos_raw * 1000000) AS BIGINT) AS cosine_x1m, rank
-    FROM rank2
+    FROM ranked WHERE rank <= 10
     """,
+    ),
 )
 def graph_knn_ann_edges_q(spark, sf_dir):
     """The ANN kNN-GRAPH builder, oracle-checked exactly: every 1-in-5
@@ -388,32 +400,23 @@ def _duck_knn_bfs(
         FROM ed e JOIN d{r-1} d ON d.id = e.u
       ) GROUP BY id
     )""")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
+    return _duck_with(
+        ctes,
+        f"""
     SELECT b.vid AS id, CAST(coalesce(d.dist, -1) AS BIGINT) AS {out_col}
     FROM base b LEFT JOIN d{rounds} d ON d.id = b.vid
-    """
+    """,
     )
 
 
-def _duck_hop_bfs(
-    graph_ctes: str, knn_from: str, rounds: int, probe_mod: int, seed_mod: int
-) -> str:
+def _duck_hop_bfs(ctes: list[str], k: int, rounds: int, seed_mod: int) -> str:
     """Hop-count BFS from the ``vec_id % seed_mod = 0`` seeds over the
-    undirected kNN graph whose (id1, id2) edges come ``FROM
-    {knn_from}``, a relation of ``graph_ctes``."""
+    undirected top-``k`` graph of ``ranked``, a relation of ``ctes``."""
     return _duck_knn_bfs(
-        [
-            _duck_base(probe_mod).replace("WITH ", "").strip(),
-            graph_ctes.strip().lstrip(",").strip(),
-            f"""knn AS MATERIALIZED (
-      SELECT DISTINCT least(id1, id2) AS u, greatest(id1, id2) AS v
-      FROM {knn_from}
-    ), ed AS MATERIALIZED (
-      SELECT u, v FROM knn UNION ALL SELECT v, u FROM knn
-    ), d0 AS MATERIALIZED (
+        ctes
+        + [
+            _duck_knn_edges("ranked", k),
+            f"""d0 AS MATERIALIZED (
       SELECT vec_id AS id, 0 AS dist FROM embeddings WHERE vec_id % {seed_mod} = 0
     )""",
         ],
@@ -423,9 +426,7 @@ def _duck_hop_bfs(
 
 def _duck_bfs_ann_oracle(rounds: int, probe_mod: int, k: int, seed_mod: int) -> str:
     """BFS over the IVF-built kNN graph (`_duck_ivf_knn_ctes`)."""
-    return _duck_hop_bfs(
-        _duck_ivf_knn_ctes(probe_mod, k), "rank2", rounds, probe_mod, seed_mod
-    )
+    return _duck_hop_bfs(_duck_ivf_knn_ctes(probe_mod), k, rounds, seed_mod)
 
 
 @query("graph_bfs_ann", oracle=_duck_bfs_ann_oracle(4, 5, 10, 50))
@@ -450,31 +451,18 @@ def graph_bfs_ann_q(spark, sf_dir):
 
 @query(
     "sim_ivf_recall",
-    oracle=_duck_base(50)
-    + f"""
-    , t_scored AS (
-      SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
-      FROM base JOIN probes ON pid <> vid
-    ), t_ranked AS (
-      SELECT id1, id2,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM t_scored
-    ), truth AS (
-      SELECT id1, id2 FROM t_ranked WHERE rank <= 10
-    ), {_duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50)}, a_scored AS (
-      SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
-      FROM cand
-    ), a_ranked AS (
-      SELECT id1, id2,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM a_scored
-    ), approx AS (
-      SELECT id1, id2 FROM a_ranked WHERE rank <= 10
-    )
-    SELECT t.id1 AS probe_id, round(count(a.id2) / 10.0, 6) AS recall
-    FROM truth t LEFT JOIN approx a ON t.id1 = a.id1 AND t.id2 = a.id2
-    GROUP BY t.id1
-    """,
+    oracle=_duck_with(
+        [
+            _duck_base(50),
+            _duck_ranked(prefix="t_"),
+            "truth AS (SELECT id1, id2 FROM t_ranked WHERE rank <= 10)",
+            _duck_ivf_cells(CENTROID_MOD, DIM, probe_mod=50),
+            _duck_ranked("cand", "a_"),
+            "approx AS (SELECT id1, id2 FROM a_ranked WHERE rank <= 10)",
+            _duck_recall_hits("hits", "approx"),
+        ],
+        "SELECT id1 AS probe_id, round(hits / 10.0, 6) AS recall FROM hits",
+    ),
 )
 def sim_ivf_recall_q(spark, sf_dir):
     """Recall@10 of the IVF index against exact brute-force ground truth,
@@ -487,13 +475,9 @@ def sim_ivf_recall_q(spark, sf_dir):
 
 @query(
     "sim_norms",
-    oracle=f"""
-    WITH base AS (
-      SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-    )
-    SELECT vid, round({norm_sql("v", DIM, DUCK)}, 6) AS l2
-    FROM base
-    """,
+    oracle=_duck_with(
+        [_duck_base()], f"SELECT vid, round({norm_sql('v', DIM, DUCK)}, 6) AS l2 FROM base"
+    ),
 )
 def sim_norms_q(spark, sf_dir):
     """Per-vector L2 norm — the kernel primitive, oracle-checked over
@@ -505,22 +489,23 @@ def sim_norms_q(spark, sf_dir):
     )
 
 
-_DUCK_TRI_CTES = """
-    , knn AS (
-      SELECT DISTINCT least(id1, id2) AS a, greatest(id1, id2) AS b
-      FROM ranked WHERE rank <= 10
-    ), deg AS (
-      SELECT v, count(*) AS d FROM (
-        SELECT a AS v FROM knn UNION ALL SELECT b AS v FROM knn
-      ) GROUP BY v
+# degree-ordered triangle census of the 1-in-50-probe top-10 graph:
+# ``deg(v, d)``, each edge oriented low → high (degree, then id) and the
+# triangles ``tri(u, y, z)``
+_DUCK_TRI_CTES = [
+    _duck_base(50),
+    _duck_ranked(),
+    _duck_knn_edges("ranked", 10),
+    """deg AS (
+      SELECT u AS v, count(*) AS d FROM ed GROUP BY u
     ), orient AS (
-      SELECT CASE WHEN (da.d < db.d) OR (da.d = db.d AND k.a < k.b)
-                  THEN k.a ELSE k.b END AS u,
-             CASE WHEN (da.d < db.d) OR (da.d = db.d AND k.a < k.b)
-                  THEN k.b ELSE k.a END AS w,
-             CASE WHEN (da.d < db.d) OR (da.d = db.d AND k.a < k.b)
+      SELECT CASE WHEN (da.d < db.d) OR (da.d = db.d AND k.u < k.v)
+                  THEN k.u ELSE k.v END AS u,
+             CASE WHEN (da.d < db.d) OR (da.d = db.d AND k.u < k.v)
+                  THEN k.v ELSE k.u END AS w,
+             CASE WHEN (da.d < db.d) OR (da.d = db.d AND k.u < k.v)
                   THEN db.d ELSE da.d END AS dw
-      FROM knn k JOIN deg da ON da.v = k.a JOIN deg db ON db.v = k.b
+      FROM knn k JOIN deg da ON da.v = k.u JOIN deg db ON db.v = k.v
     ), wedges AS (
       SELECT e1.u, e1.w AS y, e2.w AS z
       FROM orient e1 JOIN orient e2 ON e2.u = e1.u
@@ -528,15 +513,15 @@ _DUCK_TRI_CTES = """
     ), tri AS (
       SELECT wd.u, wd.y, wd.z
       FROM wedges wd JOIN orient c ON c.u = wd.y AND c.w = wd.z
-    )"""
+    )""",
+]
 
 
 @query(
     "sim_knn_triangles",
-    oracle=_duck_base(50)
-    + _duck_topk_ctes()
-    + _DUCK_TRI_CTES
-    + """
+    oracle=_duck_with(
+        _DUCK_TRI_CTES,
+        """
     SELECT v, CAST(count(*) AS BIGINT) AS n_tri
     FROM (
       SELECT u AS v FROM tri
@@ -544,6 +529,7 @@ _DUCK_TRI_CTES = """
       UNION ALL SELECT z AS v FROM tri
     ) GROUP BY v
     """,
+    ),
 )
 def sim_knn_triangles_q(spark, sf_dir):
     """kNN-graph triangle census: exact cosine top-10 edges for the
@@ -582,16 +568,12 @@ def _duck_pca_oracle(rounds: int, dim: int) -> str:
       SELECT i, w / (SELECT n FROM n{t}) AS c FROM w{t}
     )""")
     last = f"v{rounds}"
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f""",
-    sgn AS (
+    ctes.append(f"""sgn AS (
       SELECT CASE WHEN c < 0 THEN -1.0 ELSE 1.0 END AS sgn
       FROM {last} ORDER BY abs(c) DESC, i LIMIT 1
-    )
-    SELECT i, round(c * sgn, 6) AS loading FROM {last} CROSS JOIN sgn
-    """
+    )""")
+    return _duck_with(
+        ctes, f"SELECT i, round(c * sgn, 6) AS loading FROM {last} CROSS JOIN sgn"
     )
 
 
@@ -657,7 +639,7 @@ def _duck_pca_topk_oracle(n_components: int, rounds: int, dim: int) -> str:
             f"SELECT CAST({c} AS INT) AS comp, i, round(u * sgn, 6) AS loading"
             f" FROM u{c} CROSS JOIN sgn{c}"
         )
-    return "WITH " + ",\n    ".join(ctes) + "\n    " + "\n    UNION ALL\n    ".join(finals)
+    return _duck_with(ctes, "\n    UNION ALL\n    ".join(finals))
 
 
 @query("sim_pca_topk", oracle=_duck_pca_topk_oracle(2, 4, DIM))
@@ -705,14 +687,10 @@ def sim_standardize_dims_q(spark, sf_dir):
 
 def _duck_lpa_oracle(rounds: int, probe_mod: int, k: int) -> str:
     ctes = [
-        _duck_base(probe_mod).replace("WITH ", "").strip(),
-        _duck_topk_ctes().strip().lstrip(',').strip(),
-        f"""knn AS MATERIALIZED (
-      SELECT DISTINCT least(id1, id2) AS a, greatest(id1, id2) AS b
-      FROM ranked WHERE rank <= {k}
-    ), ed AS MATERIALIZED (
-      SELECT a AS u, b AS v FROM knn UNION ALL SELECT b, a FROM knn
-    ), lab0 AS MATERIALIZED (
+        _duck_base(probe_mod),
+        _duck_ranked(),
+        _duck_knn_edges("ranked", k),
+        """lab0 AS MATERIALIZED (
       SELECT vec_id AS id,
              CASE WHEN vec_id % 5 = 0 THEN label END AS lab,
              CASE WHEN vec_id % 5 = 0 THEN 1 ELSE 0 END AS seed
@@ -739,11 +717,8 @@ def _duck_lpa_oracle(rounds: int, probe_mod: int, k: int) -> str:
     )""")
     # lab is NULL for never-reached vertices; coalesce to -1 and cast so
     # neither client renders the column as nullable-int-promoted float
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"\n    SELECT id, CAST(coalesce(lab, -1) AS BIGINT) AS lab"
-        + f" FROM lab{rounds}"
+    return _duck_with(
+        ctes, f"SELECT id, CAST(coalesce(lab, -1) AS BIGINT) AS lab FROM lab{rounds}"
     )
 
 
@@ -769,32 +744,23 @@ def sim_label_propagation_q(spark, sf_dir):
 
 
 def _duck_kcore_oracle(k: int, rounds: int, probe_mod: int, topk: int) -> str:
-    ctes = [
-        _duck_base(probe_mod).replace("WITH ", "").strip(),
-        _duck_topk_ctes().strip().lstrip(",").strip(),
-        f"""e0 AS MATERIALIZED (
-      SELECT DISTINCT least(id1, id2) AS u, greatest(id1, id2) AS v
-      FROM ranked WHERE rank <= {topk} AND id1 <> id2
-    )""",
-    ]
+    """Unrolled peeling over the undirected kNN graph: round r keeps the
+    edges of ``e{r-1}`` (``e0`` = ``knn``) whose ends both have degree
+    >= k in it."""
+    ctes = [_duck_base(probe_mod), _duck_ranked(), _duck_knn_edges("ranked", topk)]
+    e = ["knn"] + [f"e{r}" for r in range(1, rounds + 1)]
     for r in range(1, rounds + 1):
         ctes.append(f"""sym{r} AS MATERIALIZED (
-      SELECT u, v FROM e{r-1} UNION ALL SELECT v, u FROM e{r-1}
+      SELECT u, v FROM {e[r-1]} UNION ALL SELECT v, u FROM {e[r-1]}
     ), keep{r} AS MATERIALIZED (
       SELECT u FROM sym{r} GROUP BY u HAVING count(*) >= {k}
     ), e{r} AS MATERIALIZED (
-      SELECT e.u, e.v FROM e{r-1} e
+      SELECT e.u, e.v FROM {e[r-1]} e
       JOIN keep{r} ka ON ka.u = e.u
       JOIN keep{r} kb ON kb.u = e.v
     )""")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f""",
-    symf AS (SELECT u, v FROM e{rounds} UNION ALL SELECT v, u FROM e{rounds})
-    SELECT u AS id, count(*) AS degree FROM symf GROUP BY u
-    """
-    )
+    ctes.append(f"symf AS (SELECT u, v FROM e{rounds} UNION ALL SELECT v, u FROM e{rounds})")
+    return _duck_with(ctes, "SELECT u AS id, count(*) AS degree FROM symf GROUP BY u")
 
 
 @query("sim_knn_kcore", oracle=_duck_kcore_oracle(3, 8, 5, 10))
@@ -811,9 +777,8 @@ def sim_knn_kcore_q(spark, sf_dir):
 
 
 def _duck_bfs_oracle(rounds: int, probe_mod: int, topk: int, seed_mod: int) -> str:
-    """BFS over the brute-force kNN graph (`_duck_topk_ctes`)."""
-    knn_from = f"ranked WHERE rank <= {topk}"
-    return _duck_hop_bfs(_duck_topk_ctes(), knn_from, rounds, probe_mod, seed_mod)
+    """BFS over the brute-force kNN graph."""
+    return _duck_hop_bfs([_duck_base(probe_mod), _duck_ranked()], topk, rounds, seed_mod)
 
 
 @query("graph_bfs_hops", oracle=_duck_bfs_oracle(4, 5, 10, 50))
@@ -839,8 +804,8 @@ def _duck_sssp_oracle(rounds: int, probe_mod: int, topk: int, seed_mod: int) -> 
     double agrees across engines where round()'s tie handling would
     not, and integer path sums are exact."""
     ctes = [
-        _duck_base(probe_mod).replace("WITH ", "").strip(),
-        _duck_topk_ctes().strip().lstrip(",").strip(),
+        _duck_base(probe_mod),
+        _duck_ranked(),
         f"""knnw AS MATERIALIZED (
       SELECT least(id1, id2) AS u, greatest(id1, id2) AS v,
              CAST(floor((1.0 - cos_raw) * 1000000) AS BIGINT) AS w
@@ -882,41 +847,49 @@ def graph_weighted_sssp_q(spark, sf_dir):
     return weighted_sssp(vertices, edges, seeds, rounds=4)
 
 
-def _duck_pq_oracle(m: int, mod: int, dim: int) -> str:
-    """Unrolled PQ-encode oracle: per subspace, the identical left-assoc
-    squared-distance chain against every modular codeword, argmin by
-    (dist, cid), then the m-way pivot with explicit left-assoc error
-    addition — every float op replayed in Spark's evaluation order."""
+def _duck_pq_enc(src: str, m: int, mod: int, dim: int) -> str:
+    """PQ encode of every ``src(vid, v)`` row against the modular
+    codewords ``cw(cid, cv)`` (the ``src`` vectors with ``vid % mod = 1``
+    below PQ_CB_CAP): per subspace, ``pq_d`` holds the identical
+    left-assoc squared-distance chain to every codeword and ``pq_a`` its
+    argmin by (dist, cid); ``enc(vid, code0…, err)`` pivots the m codes
+    and adds the m distances with explicit left-assoc addition — every
+    float op replayed in Spark's evaluation order."""
     sub = _pq_sub(dim, m)
     arms = []
     for s in range(m):
         dist = sqdist_sql("b.v", "c.cv", sub, DUCK, lo=s * sub + 1)
         arms.append(
-            f"SELECT b.vid, {s} AS s, c.cid, {dist} AS dist FROM base b CROSS JOIN cw c"
+            f"SELECT b.vid, {s} AS s, c.cid, {dist} AS dist FROM {src} b CROSS JOIN cw c"
         )
-    codes = ",\n           ".join(
+    codes = ",\n             ".join(
         f"max(CASE WHEN s = {s} THEN cid END) AS code{s}" for s in range(m)
     )
-    err = f"max(CASE WHEN s = 0 THEN dist END)"
+    err = "max(CASE WHEN s = 0 THEN dist END)"
     for s in range(1, m):
         err = f"({err} + max(CASE WHEN s = {s} THEN dist END))"
-    return f"""
-    WITH base AS (
-      SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-    ), cw AS (
-      SELECT vid AS cid, v AS cv FROM base
+    return f"""cw AS (
+      SELECT vid AS cid, v AS cv FROM {src}
       WHERE vid % {mod} = 1 AND vid < {PQ_CB_CAP}
-    ), d AS (
+    ), pq_d AS (
       {" UNION ALL ".join(arms)}
-    ), a AS (
+    ), pq_a AS (
       SELECT vid, s, cid, dist,
              row_number() OVER (PARTITION BY vid, s ORDER BY dist, cid) AS rn
-      FROM d
+      FROM pq_d
+    ), enc AS (
+      SELECT vid, {codes},
+             {err} AS err
+      FROM pq_a WHERE rn = 1 GROUP BY vid
+    )"""
+
+
+def _duck_pq_oracle(m: int, mod: int, dim: int) -> str:
+    codes = ", ".join(f"code{s}" for s in range(m))
+    return _duck_with(
+        [_duck_base(), _duck_pq_enc("base", m, mod, dim)],
+        f"SELECT vid, {codes}, CAST(floor(err * 1000000) AS BIGINT) AS err_micro FROM enc",
     )
-    SELECT vid, {codes},
-           CAST(floor({err} * 1000000) AS BIGINT) AS err_micro
-    FROM a WHERE rn = 1 GROUP BY vid
-    """
 
 
 @query("sim_pq_encode", oracle=_duck_pq_oracle(PQ_M, PQ_MOD, DIM))
@@ -976,23 +949,19 @@ def sim_pq_encode_q(spark, sf_dir):
 
 
 def _duck_pq_adc_ctes(m: int, mod: int, dim: int, probe_mod: int) -> str:
-    """ADC CTE chain (requires a `base(vid, v)` CTE): encode the corpus,
-    build each probe's subspace×codeword distance table, melt the codes,
-    join, and recombine the m partial distances by PIVOTED max-case
-    arms with explicit left-assoc addition — never sum() over an
-    unordered group, whose float order differs across engines.  CTE
-    names are pq_-prefixed so the chain composes with the exact-truth
-    CTEs in the recall oracle.  Vectors are unit-normalized first
-    (identical per-element division off the same sqrt-fold norm on
+    """ADC CTEs over ``base(vid, v)``: encode the corpus
+    (`_duck_pq_enc`), build each probe's subspace×codeword distance
+    table, melt the codes, join, and recombine the m partial distances
+    by PIVOTED max-case arms with explicit left-assoc addition — never
+    sum() over an unordered group, whose float order differs across
+    engines.  CTE names are pq_-prefixed so the chain composes with the
+    exact-truth CTEs in the recall oracle.  Vectors are unit-normalized
+    first (identical per-element division off the same sqrt-fold norm on
     both engines): euclidean ordering on the unit sphere IS cosine
     ordering, which is the target metric."""
     sub = _pq_sub(dim, m)
-    enc_arms, probe_arms = [], []
+    probe_arms = []
     for s in range(m):
-        dist = sqdist_sql("b.v", "c.cv", sub, DUCK, lo=s * sub + 1)
-        enc_arms.append(
-            f"SELECT b.vid, {s} AS s, c.cid, {dist} AS dist FROM pq_nbase b CROSS JOIN cw c"
-        )
         pd = sqdist_sql("p.v", "c.cv", sub, DUCK, lo=s * sub + 1)
         probe_arms.append(
             f"SELECT p.vid AS pid, {s} AS s, c.cid, {pd} AS pd "
@@ -1005,24 +974,11 @@ def _duck_pq_adc_ctes(m: int, mod: int, dim: int, probe_mod: int) -> str:
     for s in range(1, m):
         adc2 = f"({adc2} + max(CASE WHEN pt.s = {s} THEN pd END))"
     norm = norm_sql("v", dim, DUCK)
-    return f"""
-    , pq_nbase AS (
+    return f"""pq_nbase AS (
       SELECT vid, list_transform(v, x -> x / {norm}) AS v FROM base
     ), pq_probes AS (
       SELECT vid, v FROM pq_nbase WHERE vid % {probe_mod} = 0
-    ), cw AS (
-      SELECT vid AS cid, v AS cv FROM pq_nbase
-      WHERE vid % {mod} = 1 AND vid < {PQ_CB_CAP}
-    ), pq_d AS (
-      {" UNION ALL ".join(enc_arms)}
-    ), pq_a AS (
-      SELECT vid, s, cid,
-             row_number() OVER (PARTITION BY vid, s ORDER BY dist, cid) AS rn
-      FROM pq_d
-    ), enc AS (
-      SELECT vid, {", ".join(f"max(CASE WHEN s = {s} THEN cid END) AS code{s}" for s in range(m))}
-      FROM pq_a WHERE rn = 1 GROUP BY vid
-    ), melt AS (
+    ), {_duck_pq_enc("pq_nbase", m, mod, dim)}, melt AS (
       {melt}
     ), pq_pt AS (
       {" UNION ALL ".join(probe_arms)}
@@ -1039,13 +995,13 @@ def _duck_pq_adc_ctes(m: int, mod: int, dim: int, probe_mod: int) -> str:
 
 
 def _duck_pq_adc_oracle(m: int, mod: int, dim: int, probe_mod: int, k: int) -> str:
-    return f"""
-    WITH base AS (
-      SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-    ){_duck_pq_adc_ctes(m, mod, dim, probe_mod)}
+    return _duck_with(
+        [_duck_base(), _duck_pq_adc_ctes(m, mod, dim, probe_mod)],
+        f"""
     SELECT id1, id2, CAST(floor(adc * 1000000) AS BIGINT) AS adc_micro, rank
     FROM pq_ranked WHERE rank <= {k}
-    """
+    """,
+    )
 
 
 @query("sim_pq_adc_topk", oracle=_duck_pq_adc_oracle(PQ_M, PQ_MOD, DIM, 50, 10))
@@ -1089,49 +1045,33 @@ def sim_pq_adc_topk_q(spark, sf_dir):
 
 @query(
     "sim_pq_recall",
-    oracle=_duck_base(50)
-    + f"""
-    , t_scored AS (
-      SELECT pid AS id1, vid AS id2, {cosine_sql("pv", "v", DIM, DUCK)} AS cos_raw
-      FROM base JOIN probes ON pid <> vid
-    ), t_ranked AS (
-      SELECT id1, id2,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM t_scored
-    ), truth AS (
-      SELECT id1, id2 FROM t_ranked WHERE rank <= 10
-    )"""
-    + _duck_pq_adc_ctes(PQ_M, PQ_MOD, DIM, 50)
-    + f"""
-    , approx AS (
+    oracle=_duck_with(
+        [
+            _duck_base(50),
+            _duck_ranked(prefix="t_"),
+            "truth AS (SELECT id1, id2 FROM t_ranked WHERE rank <= 10)",
+            _duck_pq_adc_ctes(PQ_M, PQ_MOD, DIM, 50),
+            """approx AS (
       SELECT id1, id2 FROM pq_ranked WHERE rank <= 10
     ), shortlist AS (
       SELECT id1, id2 FROM pq_ranked WHERE rank <= 50
-    ), re_scored AS (
-      SELECT sl.id1, sl.id2,
-             {cosine_sql("p.v", "b.v", DIM, DUCK)} AS cos_raw
+    ), re_cand AS (
+      SELECT sl.id1 AS pid, p.v AS pv, sl.id2 AS vid, b.v AS v
       FROM shortlist sl
       JOIN base p ON p.vid = sl.id1
       JOIN base b ON b.vid = sl.id2
-    ), re_ranked AS (
-      SELECT id1, id2,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM re_scored
-    ), rerank AS (
-      SELECT id1, id2 FROM re_ranked WHERE rank <= 10
-    ), r_adc AS (
-      SELECT t.id1, count(a.id2) AS hits
-      FROM truth t LEFT JOIN approx a ON t.id1 = a.id1 AND t.id2 = a.id2
-      GROUP BY t.id1
-    ), r_rr AS (
-      SELECT t.id1, count(r.id2) AS hits
-      FROM truth t LEFT JOIN rerank r ON t.id1 = r.id1 AND t.id2 = r.id2
-      GROUP BY t.id1
-    )
+    )""",
+            _duck_ranked("re_cand", "re_"),
+            "rerank AS (SELECT id1, id2 FROM re_ranked WHERE rank <= 10)",
+            _duck_recall_hits("r_adc", "approx"),
+            _duck_recall_hits("r_rr", "rerank"),
+        ],
+        """
     SELECT a.id1 AS probe_id, round(a.hits / 10.0, 6) AS recall_adc,
            round(b.hits / 10.0, 6) AS recall_rerank
     FROM r_adc a JOIN r_rr b ON b.id1 = a.id1
     """,
+    ),
 )
 def sim_pq_recall_q(spark, sf_dir):
     """Recall@10 of PQ-ADC against exact brute-force ground truth, per
@@ -1177,10 +1117,7 @@ def _matryoshka_oracle(
         for m in widths
     )
     dim_list = ", ".join(str(m) for m in dims)
-    return f"""
-    WITH base AS (
-      SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-    ), probes AS (
+    ctes = f"""probes AS (
       SELECT vid AS pid, v AS pv FROM base
       WHERE vid % {probe_mod} = 0 AND vid < {probe_cap}
     ), pairs AS (
@@ -1205,7 +1142,10 @@ def _matryoshka_oracle(
       FROM top t JOIN truth u ON t.id1 = u.id1 AND t.id2 = u.id2
       WHERE t.m <> {full_dim}
       GROUP BY t.m
-    )
+    )"""
+    return _duck_with(
+        [_duck_base(), ctes],
+        f"""
     SELECT d.m::BIGINT AS m,
            (SELECT n_probes FROM np) AS n_probes,
            coalesce(h.hits, 0)::BIGINT AS hits,
@@ -1213,7 +1153,8 @@ def _matryoshka_oracle(
             // ((SELECT n_probes FROM np) * {k}))::BIGINT AS recall_x1m
     FROM (SELECT unnest([{dim_list}]) AS m) d
     LEFT JOIN hits h ON h.m = d.m
-    """
+    """,
+    )
 
 
 @query("sim_matryoshka_recall", oracle=_matryoshka_oracle(50, (8, 16, 32), 64, 10))
@@ -1275,16 +1216,12 @@ def sim_pq_tuned_recall_rowsonly_q(spark, sf_dir):
 
 
 def _duck_linkpred_oracle(probe_mod: int, topk: int, min_score: float) -> str:
-    return (
-        _duck_base(probe_mod)
-        + _duck_topk_ctes()
-        + f"""
-    , knn AS MATERIALIZED (
-      SELECT DISTINCT least(id1, id2) AS u, greatest(id1, id2) AS v
-      FROM ranked WHERE rank <= {topk}
-    ), ed AS MATERIALIZED (
-      SELECT u, v FROM knn UNION ALL SELECT v, u FROM knn
-    ), deg AS (
+    return _duck_with(
+        [
+            _duck_base(probe_mod),
+            _duck_ranked(),
+            _duck_knn_edges("ranked", topk),
+            """deg AS (
       SELECT u, count(*) AS d FROM ed GROUP BY u
     ), wedges AS (
       SELECT e1.u AS a, e2.v AS b, count(*) AS common
@@ -1296,14 +1233,16 @@ def _duck_linkpred_oracle(probe_mod: int, topk: int, min_score: float) -> str:
       WHERE NOT EXISTS (
         SELECT 1 FROM knn k WHERE k.u = w.a AND k.v = w.b
       )
-    )
+    )""",
+        ],
+        f"""
     SELECT c.a, c.b, c.common,
            round(c.common / (da.d + db.d - c.common), 6) AS score
     FROM cand c
       JOIN deg da ON da.u = c.a
       JOIN deg db ON db.u = c.b
     WHERE round(c.common / (da.d + db.d - c.common), 6) >= {min_score}
-    """
+    """,
     )
 
 
@@ -1327,20 +1266,23 @@ def _duck_rp_oracle(probe_mod: int, other_mod: int) -> str:
 
     orig = sqdist_sql("a.v", "b.v", DIM, DUCK)
     projd = chain(map(sqdiff, proj("a.v"), proj("b.v")), DUCK.seed)
-    return f"""
-    WITH base AS (
-      SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-    ), a AS (
+    return _duck_with(
+        [
+            _duck_base(),
+            f"""a AS (
       SELECT vid, v FROM base WHERE vid % {probe_mod} = 0
     ), b AS (
       SELECT vid, v FROM base WHERE vid % {other_mod} = 0
-    )
+    )""",
+        ],
+        f"""
     SELECT a.vid AS id1, b.vid AS id2,
            round({orig}, 6) AS orig_d2,
            round({projd}, 6) AS proj_d2,
            round({projd} / {orig}, 6) AS ratio
     FROM a JOIN b ON a.vid <> b.vid
-    """
+    """,
+    )
 
 
 @query("sim_random_projection", oracle=_duck_rp_oracle(50, 11))
@@ -1428,22 +1370,20 @@ def sim_gram_matrix_q(spark, sf_dir):
 
 @query(
     "graph_assortativity",
-    oracle=_duck_base(5)
-    + _duck_topk_ctes()
-    + """
-    , knn AS MATERIALIZED (
-      SELECT DISTINCT least(id1, id2) AS u, greatest(id1, id2) AS v
-      FROM ranked WHERE rank <= 10
-    ), ed AS (
-      SELECT u, v FROM knn UNION ALL SELECT v, u FROM knn
-    ), deg AS (
-      SELECT u, count(*) AS d FROM ed GROUP BY u
-    )
+    oracle=_duck_with(
+        [
+            _duck_base(5),
+            _duck_ranked(),
+            _duck_knn_edges("ranked", 10),
+            "deg AS (SELECT u, count(*) AS d FROM ed GROUP BY u)",
+        ],
+        """
     SELECT CAST(count(*) AS BIGINT) AS n_directed_edges,
            round(avg(da.d), 6) AS mean_deg,
            round(corr(da.d, db.d), 6) AS assortativity
     FROM ed e JOIN deg da ON da.u = e.u JOIN deg db ON db.u = e.v
     """,
+    ),
 )
 def graph_assortativity_q(spark, sf_dir):
     """Degree assortativity of the kNN graph: the Pearson correlation
@@ -1481,9 +1421,10 @@ def graph_assortativity_q(spark, sf_dir):
 
 @query(
     "sim_triplet_mining",
-    oracle=_duck_base(25)
-    + f"""
-    , lab AS (
+    oracle=_duck_with(
+        [
+            _duck_base(25),
+            f"""lab AS (
       SELECT vec_id AS vid, label FROM embeddings
     ), scored AS (
       SELECT p.pid, b.vid, {cosine_sql("p.pv", "b.v", DIM, DUCK)} AS cs,
@@ -1504,13 +1445,16 @@ def graph_assortativity_q(spark, sf_dir):
                                 ORDER BY s.cs DESC, s.vid) AS rn
       FROM scored s JOIN pos p ON p.pid = s.pid
       WHERE s.alabel <> s.blabel AND s.cs < p.pos_cos
-    )
+    )""",
+        ],
+        """
     SELECT p.pid AS anchor_id, p.pos_id, n.neg_id,
            round(p.pos_cos, 6) AS pos_cos,
            round(n.neg_cos, 6) AS neg_cos,
            round(p.pos_cos - n.neg_cos, 6) AS margin
     FROM pos p JOIN neg n ON n.pid = p.pid AND n.rn = 1
     """,
+    ),
 )
 def sim_triplet_mining_q(spark, sf_dir):
     """Semi-hard triplet mining for metric learning: for each anchor
@@ -1573,13 +1517,14 @@ def sim_triplet_mining_q(spark, sf_dir):
 
 @query(
     "sim_knn_outlier_scores",
-    oracle=_duck_base(5)
-    + _duck_topk_ctes()
-    + """
+    oracle=_duck_with(
+        [_duck_base(5), _duck_ranked()],
+        """
     SELECT id1 AS vid, round(cos_raw, 6) AS cos_at_k,
            round(1.0 - round(cos_raw, 6), 6) AS outlier_score
     FROM ranked WHERE rank = 10
     """,
+    ),
 )
 def sim_knn_outlier_scores_q(spark, sf_dir):
     """Distance-to-kth-neighbor outlier scores: a vector whose 10th-
@@ -1602,23 +1547,22 @@ def sim_knn_outlier_scores_q(spark, sf_dir):
 
 @query(
     "graph_label_modularity",
-    oracle=_duck_base(5)
-    + _duck_topk_ctes()
-    + """
-    , knn AS MATERIALIZED (
-      SELECT DISTINCT least(id1, id2) AS u, greatest(id1, id2) AS v
-      FROM ranked WHERE rank <= 10
-    ), lab AS (
+    oracle=_duck_with(
+        [
+            _duck_base(5),
+            _duck_ranked(),
+            _duck_knn_edges("ranked", 10),
+            """lab AS (
       SELECT vec_id AS vid, label FROM embeddings
     ), lab_e AS (
       SELECT k.u, k.v, lu.label AS lu, lv.label AS lv
       FROM knn k JOIN lab lu ON lu.vid = k.u JOIN lab lv ON lv.vid = k.v
     ), m AS (
       SELECT count(*) AS m FROM knn
-    ), ed AS (
+    ), ends AS (
       SELECT u AS x, lu AS l FROM lab_e UNION ALL SELECT v, lv FROM lab_e
     ), dsum AS (
-      SELECT l, count(*) AS d FROM ed GROUP BY l
+      SELECT l, count(*) AS d FROM ends GROUP BY l
     ), within AS (
       SELECT lu AS l, count(*) AS mc FROM lab_e WHERE lu = lv GROUP BY lu
     ), per AS (
@@ -1626,12 +1570,15 @@ def sim_knn_outlier_scores_q(spark, sf_dir):
              coalesce(w.mc, 0) * 1.0 / m.m
                - (d.d / (2.0 * m.m)) * (d.d / (2.0 * m.m)) AS q
       FROM dsum d LEFT JOIN within w ON w.l = d.l CROSS JOIN m
-    )
+    )""",
+        ],
+        """
     SELECT CAST((SELECT m FROM m) AS BIGINT) AS n_edges,
            CAST(count(*) AS BIGINT) AS n_labels,
            round(sum(q), 6) AS modularity
     FROM per
     """,
+    ),
 )
 def graph_label_modularity_q(spark, sf_dir):
     """Newman modularity of the TRUE label partition over the kNN
@@ -1684,32 +1631,13 @@ def graph_label_modularity_q(spark, sf_dir):
 
 @query(
     "sim_recall_curve_lsh",
-    oracle=_duck_base(50)
-    + _duck_bits_cte()
-    + """
-    , cand AS (
-      SELECT DISTINCT p.pid, p.pv, c.vid, c.v
-      FROM keyed c JOIN (
-        SELECT k.vid AS pid, k.v AS pv, k.bucket FROM keyed k WHERE k.vid % 50 = 0
-      ) p ON c.bucket = p.bucket AND p.pid <> c.vid
-    ), a_scored AS (
-      SELECT pid AS id1, vid AS id2, """
-    + cosine_sql("pv", "v", DIM, DUCK)
-    + """ AS cos_raw FROM cand
-    ), a_ranked AS (
-      SELECT id1, id2,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM a_scored
-    ), t_scored AS (
-      SELECT pid AS id1, vid AS id2, """
-    + cosine_sql("pv", "v", DIM, DUCK)
-    + """ AS cos_raw
-      FROM base JOIN probes ON pid <> vid
-    ), t_ranked AS (
-      SELECT id1, id2,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM t_scored
-    ), ks AS (
+    oracle=_duck_with(
+        [
+            _duck_base(50),
+            _duck_lsh_cand(50),
+            _duck_ranked("cand", "a_"),
+            _duck_ranked(prefix="t_"),
+            """ks AS (
       SELECT unnest([1, 5, 10]) AS k
     ), probeset AS (
       SELECT DISTINCT id1 FROM t_ranked
@@ -1723,12 +1651,15 @@ def graph_label_modularity_q(spark, sf_dir):
       SELECT kk.k, coalesce(h.h, 0) * 1.0 / kk.k AS r
       FROM probeset p CROSS JOIN ks kk
       LEFT JOIN hits h ON h.id1 = p.id1 AND h.k = kk.k
-    )
+    )""",
+        ],
+        """
     SELECT CAST(k AS BIGINT) AS k,
            CAST(count(*) AS BIGINT) AS n_probes,
            round(avg(r), 6) AS mean_recall
     FROM per GROUP BY k
     """,
+    ),
 )
 def sim_recall_curve_lsh_q(spark, sf_dir):
     """LSH recall CURVE — mean recall@k of the hyperplane index against
@@ -1804,23 +1735,25 @@ def graph_effective_diameter_q(spark, sf_dir):
 
 @query(
     "graph_clustering_coeff",
-    oracle=_duck_base(50)
-    + _duck_topk_ctes()
-    + _DUCK_TRI_CTES
-    + """
-    , tcount AS (
+    oracle=_duck_with(
+        _DUCK_TRI_CTES
+        + [
+            """tcount AS (
       SELECT v, count(*) AS n_tri FROM (
         SELECT u AS v FROM tri
         UNION ALL SELECT y AS v FROM tri
         UNION ALL SELECT z AS v FROM tri
       ) GROUP BY v
-    )
+    )"""
+        ],
+        """
     SELECT d.v AS id, CAST(d.d AS BIGINT) AS degree,
            CAST(coalesce(t.n_tri, 0) AS BIGINT) AS n_tri,
            round(2.0 * coalesce(t.n_tri, 0) / (d.d * (d.d - 1)), 6) AS coeff
     FROM deg d LEFT JOIN tcount t ON t.v = d.v
     WHERE d.d >= 2
     """,
+    ),
 )
 def graph_clustering_coeff_q(spark, sf_dir):
     """Local clustering coefficient per vertex of the kNN graph —
@@ -1883,9 +1816,7 @@ def _duck_kcenter_sql(k: int, dim: int) -> str:
     """Identically-unrolled greedy k-center rounds (MATERIALIZED CTEs:
     DuckDB would otherwise inline each round's chain exponentially)."""
     ctes = [
-        """base AS MATERIALIZED (
-      SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-    )""",
+        _duck_base(materialized=True),
         "p1 AS MATERIALIZED (SELECT vid, v FROM base ORDER BY vid LIMIT 1)",
     ]
     for r in range(2, k + 1):
@@ -1906,7 +1837,7 @@ def _duck_kcenter_sql(k: int, dim: int) -> str:
         f"SELECT CAST({r} AS INTEGER), vid, CAST(floor(1000000.0 * mind) AS BIGINT) FROM p{r}"
         for r in range(2, k + 1)
     ]
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(selects)
+    return _duck_with(ctes, "\nUNION ALL ".join(selects))
 
 
 @query("sim_kcenter_coreset", oracle=_duck_kcenter_sql(6, DIM))
@@ -1921,11 +1852,7 @@ def sim_kcenter_coreset_q(spark, sf_dir):
 def _duck_binary_hamming_oracle(probe_mod: int, k: int, shortlist: int, dim: int) -> str:
     nwords = (dim + 31) // 32
     cos = cosine_sql("p.v", "c.v", dim, DUCK)
-    return f"""
-WITH base AS MATERIALIZED (
-  SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-),
-qd AS MATERIALIZED (
+    ctes = f"""qd AS MATERIALIZED (
   SELECT vid, i, floor(v[i] * 1000000.0)::BIGINT AS q
   FROM base, range(1, {dim + 1}) t(i)
 ),
@@ -1955,12 +1882,16 @@ rr AS (
   SELECT sl.pid, sl.vid, sl.hamming,
          floor({cos} * 1000000.0)::BIGINT AS cos_x1m
   FROM sl JOIN base p ON sl.pid = p.vid JOIN base c ON sl.vid = c.vid
-)
+)"""
+    return _duck_with(
+        [_duck_base(materialized=True), ctes],
+        f"""
 SELECT pid AS id1, vid AS id2, hamming, cos_x1m,
        row_number() OVER (PARTITION BY pid ORDER BY cos_x1m DESC, vid ASC) AS rank
 FROM rr
 QUALIFY rank <= {k}
-"""
+""",
+    )
 
 
 @query(
@@ -1981,14 +1912,13 @@ def _duck_random_projection_oracle(out_dim: int, dim: int) -> str:
     signs = _rp_signs(out_dim, dim)
     inv = repr(1.0 / math.sqrt(out_dim))
     ys = ", ".join(f"(({dot_sql('v', row, dim, DUCK)}) * {inv})" for row in signs)
-    return f"""
-WITH base AS (
-  SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-),
-proj AS (SELECT vid, [{ys}] AS y FROM base)
+    return _duck_with(
+        [_duck_base(), f"proj AS (SELECT vid, [{ys}] AS y FROM base)"],
+        f"""
 SELECT vid, i - 1 AS j, floor(y[i] * 1000000.0)::BIGINT AS y_x1m
 FROM proj, range(1, {out_dim + 1}) t(i)
-"""
+""",
+    )
 
 
 @query("sim_jl_projection_coords", oracle=_duck_random_projection_oracle(16, DIM))
@@ -2015,44 +1945,32 @@ def sim_jl_projection_coords_q(spark, sf_dir):
 
 
 def _rbo_oracle(k: int = 10, p: float = RBO_P) -> str:
-    base = _duck_base(50)
-    exact_ctes = _duck_topk_ctes()
-    lsh = _duck_bits_cte()
     terms = []
     for d in range(1, k + 1):
         terms.append(
             f"{p ** (d - 1)!r} * (len(list_intersect(ea[1:{d}], aa[1:{d}]))::DOUBLE / {float(d)!r})"
         )
     chain = "(0.0 + " + " + ".join(terms) + f") * {1.0 - p!r}"
-    return (
-        base
-        + exact_ctes
-        + lsh
-        + f"""
-    , exact_lists AS (
+    return _duck_with(
+        [
+            _duck_base(50),
+            _duck_ranked(),
+            f"""exact_lists AS (
       SELECT id1, list(id2 ORDER BY rank) AS ea
       FROM ranked WHERE rank <= {k} GROUP BY id1
-    ), cand AS (
-      SELECT DISTINCT pp.pid, pp.pv, c.vid, c.v
-      FROM keyed c JOIN (
-        SELECT kk.vid AS pid, kk.v AS pv, kk.bucket FROM keyed kk
-        WHERE kk.vid % 50 = 0
-      ) pp ON c.bucket = pp.bucket AND pp.pid <> c.vid
-    ), lsh_scored AS (
-      SELECT pid AS id1, vid AS id2, {cosine_sql('pv', 'v', DIM, DUCK)} AS cos_raw
-      FROM cand
-    ), lsh_ranked AS (
-      SELECT id1, id2,
-             row_number() OVER (PARTITION BY id1 ORDER BY cos_raw DESC, id2) AS rank
-      FROM lsh_scored
-    ), lsh_lists AS (
+    )""",
+            _duck_lsh_cand(50),
+            _duck_ranked("cand", "lsh_"),
+            f"""lsh_lists AS (
       SELECT id1, list(id2 ORDER BY rank) AS aa
       FROM lsh_ranked WHERE rank <= {k} GROUP BY id1
-    )
+    )""",
+        ],
+        f"""
     SELECT e.id1 AS probe_id,
            floor(({chain}) * 1000000.0)::BIGINT AS rbo_x1m
     FROM exact_lists e JOIN lsh_lists l ON e.id1 = l.id1
-    """
+    """,
     )
 
 

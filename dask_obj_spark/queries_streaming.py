@@ -20,6 +20,7 @@ from dask_obj_spark.functions.hashing import duck_ws_tokens
 from dask_obj_spark.pinning import pin
 from dask_obj_spark.queries import query
 from dask_obj_spark.queries_dedup import _duck_bands_select, _duck_sig_cte
+from dask_obj_spark.queries_similarity import _duck_with
 from dask_obj_spark.sources import load_table
 from dask_obj_spark.sources.tables import normalize_timestamps
 from dask_obj_spark.streaming.windows import (
@@ -418,16 +419,15 @@ def stream_dedup_exact_q(spark, sf_dir):
 
 @query(
     "stream_neardup_minhash",
-    oracle=_duck_sig_cte(16, 4)
-    + ", bands AS ("
-    + _duck_bands_select(16, 4)
-    + """
-    )
+    oracle=_duck_with(
+        [_duck_sig_cte(16, 4), f"bands AS ({_duck_bands_select(16, 4)})"],
+        """
     SELECT DISTINCT a.doc_id
     FROM bands a JOIN bands b
       ON a.band_id = b.band_id AND a.band_hash = b.band_hash
      AND b.doc_id < a.doc_id
     """,
+    ),
 )
 def stream_neardup_minhash_q(spark, sf_dir):
     """Streaming MinHash near-dup detection under at-least-once

@@ -291,7 +291,9 @@ _STAGE_FRAGMENTS = {
 }
 
 
-def vector_stage_sites(source: str) -> list[tuple[str, str]]:
+def vector_stage_sites(
+    source: str, fragments: dict[str, re.Pattern] = _STAGE_FRAGMENTS
+) -> list[tuple[str, str]]:
     """(helper, enclosing function) of each stage fragment in one
     module's source."""
     owner: dict[int, str] = {}
@@ -301,7 +303,7 @@ def vector_stage_sites(source: str) -> list[tuple[str, str]]:
                 owner[line] = node.name
     return [
         (helper, owner.get(source.count("\n", 0, m.start()) + 1, "<module>"))
-        for helper, frag in _STAGE_FRAGMENTS.items()
+        for helper, frag in fragments.items()
         for m in frag.finditer(source)
     ]
 
@@ -318,3 +320,42 @@ def test_each_vector_search_stage_is_written_once():
     assert sites == want, "call the one helper of each stage:\n" + "\n".join(
         map(str, sites)
     )
+
+
+# each DuckDB oracle stage, by a fragment only its one helper in
+# queries_similarity.py writes
+_ORACLE_FRAGMENTS = {
+    "_duck_base": re.compile(r"vec_id AS vid, embedding::DOUBLE\[\] AS v FROM embeddings"),
+    "_duck_ranked": re.compile(r"cos_raw DESC, id2"),  # per-probe top-k window
+    "_duck_lsh_cand": re.compile(r"SELECT DISTINCT p\.pid, p\.pv, c\.vid, c\.v\s+FROM keyed"),
+    "_duck_knn_edges": re.compile(r"SELECT DISTINCT least\(id1, id2\)"),
+    "_duck_pq_enc": re.compile(r"vid, s ORDER BY dist, cid"),  # PQ subspace argmin
+    "_duck_recall_hits": re.compile(r"count\(a\.id2\)"),
+}
+# string surgery on rendered SQL: fragments return bare CTE entries and
+# `_duck_with` alone writes the WITH
+_WITH_SURGERY = {
+    "replace": re.compile(r"""\.replace\(\s*["']WITH """),
+    "lstrip": re.compile(r"""\.lstrip\(\s*["'],"""),
+}
+
+
+def test_each_oracle_stage_is_written_once():
+    files = [(p, p.read_text()) for p in sorted(_PKG.rglob("*.py"))]
+    sites = sorted(
+        (helper, f"{p.relative_to(_PKG.parent)}:{fn}")
+        for p, text in files
+        for helper, fn in vector_stage_sites(text, _ORACLE_FRAGMENTS)
+    )
+    want = sorted(
+        (h, f"dask_obj_spark/queries_similarity.py:{h}") for h in _ORACLE_FRAGMENTS
+    )
+    assert sites == want, "call the one helper of each oracle stage:\n" + "\n".join(
+        map(str, sites)
+    )
+    surgery = [
+        f"{p.relative_to(_PKG.parent)}:{fn}: {kind}"
+        for p, text in files
+        for kind, fn in vector_stage_sites(text, _WITH_SURGERY)
+    ]
+    assert surgery == [], "compose with _duck_with:\n" + "\n".join(surgery)

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Quick oracle-parity harness for optimization iterations: run named
-queries (or all queries importing from a module) against the DuckDB
-oracle at one or more scale factors, using the same comparison the
-driver and tests/test_oracle_parity.py use.
+"""Quick oracle-parity harness for optimization iterations: run the
+queries named on the command line against their DuckDB oracles at one
+or more scale factors (default sf0.01), on the bounded DuckDB
+connection and with the comparison tests/test_oracle_parity.py uses.
+Exits 1 if any query fails.
 
 Usage:
     python tools/parity_check.py [--sf 0.01,0.1] name1 name2 ...
